@@ -676,10 +676,7 @@ private[graft] object ResolvedScan {
                   committer: CommitProtocol): Option[String] =
     committer.resolve(fs, leaf).orElse {
       val p = new HPath(leaf)
-      if (fs.exists(p) && fs.listStatus(p).exists(s => s.isFile && {
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          })) Some(leaf)
+      if (fs.exists(p) && DayDirs.dataFiles(fs, leaf).nonEmpty) Some(leaf)
       else None
     }
 
@@ -785,10 +782,7 @@ private[graft] object ResolvedScan {
             .map(v => s"$leaf/$v").filter(x => fs.exists(new HPath(x)))
             .orElse {
               // same bulk-written-plain fallback as resolveLeaf
-              if (fs.exists(p) && fs.listStatus(p).exists(s => s.isFile && {
-                    val n = s.getPath.getName
-                    !n.startsWith("_") && !n.startsWith(".")
-                  })) Some(leaf)
+              if (fs.exists(p) && DayDirs.dataFiles(fs, leaf).nonEmpty) Some(leaf)
               else None
             }
         }.flatten

@@ -2,28 +2,19 @@ package graft.sources
 
 import java.time.Instant
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.parquet.column.statistics.BinaryStatistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Ops
 import graft.schema.CanonicalSchema
 
-/** Minute-lake reader (reference `aggregator/source_reader.py:13-78`,
-  * `live_data_api_service/repository.py:22-52`).
-  *
-  * The reference builds explicit partition paths by hand; here a plain
-  * `spark.read.parquet(root)` plus partition-column predicates lets
-  * Catalyst prune `symbol=/year=/month=/day=/hour=` directories — the
-  * same I/O, no path math (SURVEY §4). Timestamp predicates additionally
-  * push into parquet row-group statistics.
-  */
-/** HTF-lake reader (S4's higher-timeframe half — reference
-  * `live_data_api_service/repository.py:79-122`): bucket-window read
-  * with the complete-bucket filter and latest-wins dedup, bucket_start
-  * re-keyed as `timestamp` so downstream consumes HTF bars and 1m bars
-  * through the same column. Partition pruning comes from the Hive
-  * layout + timestamp predicates (no manual path math). */
 /** Metadata walks over a day-wide tree's `year=/month=/day=` partition
   * directories — O(depth) directory statuses, never a file listing.
   * Shared by the minute and HTF readers so bounded window reads touch
@@ -118,6 +109,15 @@ private[graft] object DayDirs {
     } yield d.toString
   }
 
+  /** The data files directly under `dir`: names starting `_` or `.`
+    * (commit markers, checksums, hidden versions) are skipped, as Spark
+    * skips them when it reads the directory. */
+  def dataFiles(fs: FileSystem, dir: String): Seq[FileStatus] =
+    fs.listStatus(new HPath(dir)).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
   /** The k deepest day directories by descending (year, month, day) —
     * visits only the years/months it needs. */
   def deepest(fs: FileSystem, base: String, k: Int): Seq[String] = {
@@ -143,6 +143,12 @@ private[graft] object DayDirs {
   }
 }
 
+/** HTF-lake reader (S4's higher-timeframe half — reference
+  * `live_data_api_service/repository.py:79-122`): bucket-window read
+  * with the complete-bucket filter and latest-wins dedup, bucket_start
+  * re-keyed as `timestamp` so downstream consumes HTF bars and 1m bars
+  * through the same column. The hourly tree reads the symbol's subtree;
+  * the day-wide tree reads the window's day dirs ([[DayDirs]]). */
 class HtfLakeReader(root: String, committer: CommitProtocol = RenameCommit) {
 
   private def dir(timeframe: String, symbol: String) =
@@ -227,6 +233,20 @@ class HtfLakeReader(root: String, committer: CommitProtocol = RenameCommit) {
   }
 }
 
+/** Minute-lake reader (reference `aggregator/source_reader.py:13-78`,
+  * `live_data_api_service/repository.py:22-52`).
+  *
+  * Reads name the directories they need instead of reading the lake
+  * root under partition predicates, because a root read LISTS every
+  * file in the lake before pruning. On the hourly layout a single-symbol
+  * read scopes to the symbol's `symbol=X/` subtree. On the day-wide
+  * layout a bounded read names the window's day dirs ([[DayDirs]]),
+  * filters `symbol` as a data column (files are symbol-sorted, so
+  * parquet min/max stats skip row groups), and overlays the late-repair
+  * delta files (see `overlayDeltas`). Unbounded scans read the root,
+  * since they need every file; of the bounded reads only the hourly
+  * all-symbols window read still does, pruned on the hour partition key.
+  */
 class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
                        committer: CommitProtocol = RenameCommit) {
 
@@ -306,33 +326,77 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
     else DayDirs.ascending(fs, deltaRoot).map(p => DayDirs.ymdOf(p) -> p).toMap
   }
 
-  /** The delta rows of `days`, collapsed last-wins per
-    * (symbol, timestamp) by `__delta_seq` — one fresh row per key. */
-  private def collapsedDeltas(spark: SparkSession, days: Seq[String]): DataFrame =
+  /** The delta rows under `paths` (day dirs or files), collapsed
+    * last-wins per (symbol, timestamp) by `__delta_seq` — one fresh row
+    * per key. */
+  private def collapsedDeltas(spark: SparkSession, paths: Seq[String]): DataFrame =
     Ops.dedupKeepLast(
-      spark.read.option("basePath", deltaRoot).parquet(days: _*)
+      spark.read.option("basePath", deltaRoot).parquet(paths: _*)
         .drop("year", "month", "day"),
       Seq("symbol", "timestamp"), Seq(col("__delta_seq")))
       .drop("__delta_seq")
 
-  /** Overlay the window's deltas onto a base wide read. With
-    * `symbol = Some(s)` both sides are single-symbol frames without the
-    * symbol column (merge keyed by timestamp); otherwise multi-symbol
-    * (keyed by (symbol, timestamp)). No deltas → base unchanged, so the
-    * steady-state plan (and its inputFiles bound) is untouched. */
+  /** The data files under the delta day dirs `days` that the skipping
+    * rule of [[overlayDeltas]] keeps for `symbol`. `probeDays` (behind
+    * `inspectRange`/`latestMinute`) selects through it too, so every
+    * single-symbol overlay shares one rule. Costs one LIST per day and
+    * one footer read per file (compaction keeps both few); an unreadable
+    * footer fails the read, as it would fail the scan. */
+  private def deltaFilesHolding(spark: SparkSession, days: Seq[String],
+                                symbol: String): Seq[String] = {
+    val fs = fsOf(spark)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val s = Binary.fromString(symbol.toUpperCase)
+    def spans(b: BinaryStatistics): Boolean =
+      !b.hasNonNullValue || (b.compareMinToValue(s) <= 0 && b.compareMaxToValue(s) >= 0)
+    def mayHold(st: FileStatus): Boolean = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getRowGroups.asScala.exists { rg =>
+        rg.getColumns.asScala.find(_.getPath.toDotString == "symbol")
+          .forall(_.getStatistics match {
+            case b: BinaryStatistics => spans(b)
+            case _ => true
+          })
+      } finally reader.close()
+    }
+    days.flatMap(DayDirs.dataFiles(fs, _)).filter(mayHold).map(_.getPath.toString)
+  }
+
+  /** Overlay the window's deltas onto a base wide read.
+    *
+    * With `symbol = Some(s)` both sides are single-symbol frames without
+    * the symbol column (merge keyed by timestamp), and delta files are
+    * skipped on their footer statistics: a file is overlaid only if one
+    * of its row groups has `symbol` min ≤ S ≤ max, S the upper-cased
+    * symbol the readers filter on, compared with the statistics' own
+    * comparator. The rule is exact — a skipped file holds no row that
+    * `symbol === S` keeps, and the last-wins collapse is keyed per
+    * symbol — and conservative: a row group whose `symbol` stats are
+    * missing, empty or all-null (or a file without the column) keeps the
+    * file. When no file is kept the base plan is returned unchanged, the
+    * plan (and inputFiles bound) of a lake with no deltas. `timestamp`
+    * cannot prune: Spark writes it as INT96, for which parquet-mr writes
+    * no statistics, so time pruning stays at day grain.
+    *
+    * With `symbol = None` (multi-symbol, keyed by (symbol, timestamp))
+    * every delta day is overlaid; only an empty `deltaDays` leaves the
+    * base unchanged. */
   private def overlayDeltas(spark: SparkSession, base: DataFrame,
                             deltaDays: Seq[String],
-                            symbol: Option[String]): DataFrame = {
-    if (deltaDays.isEmpty) return base
-    val all = collapsedDeltas(spark, deltaDays)
+                            symbol: Option[String]): DataFrame =
     symbol match {
       case Some(sym) =>
-        val d = all.where(col("symbol") === sym.toUpperCase).drop("symbol")
-        MinuteLakeWriter.mergeKeyed(base, d, Seq("timestamp"))
+        val files = deltaFilesHolding(spark, deltaDays, sym)
+        if (files.isEmpty) base
+        else MinuteLakeWriter.mergeKeyed(base,
+          collapsedDeltas(spark, files)
+            .where(col("symbol") === sym.toUpperCase).drop("symbol"),
+          Seq("timestamp"))
       case None =>
-        MinuteLakeWriter.mergeKeyed(base, all, Seq("symbol", "timestamp"))
+        if (deltaDays.isEmpty) base
+        else MinuteLakeWriter.mergeKeyed(base,
+          collapsedDeltas(spark, deltaDays), Seq("symbol", "timestamp"))
     }
-  }
 
   /** Single-symbol scan, scoped to the symbol's OWN directory subtree.
     * Reading the lake root and filtering `symbol === X` prunes the
@@ -400,8 +464,8 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
     if (!hasData(spark)) return None
     val df =
       if (isWide(spark)) {
-        // pruning floor is a DAY here (the layout's documented trade);
-        // row-group timestamp stats still skip within the day's files.
+        // pruning floor is a DAY here (the layout's documented trade;
+        // INT96 timestamps carry no row-group stats to skip within it).
         // The touched day dirs are read EXPLICITLY — `spark.read(root)`
         // + a partition predicate still LISTS every file in the lake
         // before pruning, so bounded windows paid O(depth) listing
@@ -597,9 +661,10 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
   /** First non-null `agg` over `symbol`'s rows, probing `order`ed day
     * dirs in batches of 1, 2, 4, … — at most O(log depth) jobs, and the
     * total files read across ALL probes is ≤ 2× the files before the
-    * terminating batch. Each slice also reads its days' delta files
-    * (delta days ⊆ base days by writer invariant) so a patched minute
-    * bounds the range exactly like a base one. */
+    * terminating batch. Each slice also reads those of its days' delta
+    * files that can hold `symbol` ([[deltaFilesHolding]]; delta days ⊆
+    * base days by writer invariant) so a patched minute bounds the range
+    * exactly like a base one. */
   private def probeDays(spark: SparkSession, order: Seq[String], symbol: String,
                         agg: Column,
                         deltaByYmd: Map[(Int, Int, Int), String] = Map.empty)
@@ -611,7 +676,8 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
       var df = spark.read.option("basePath", lakeDir).parquet(slice: _*)
         .where(col("symbol") === symbol.toUpperCase)
         .select("timestamp")
-      val extra = slice.map(DayDirs.ymdOf).flatMap(deltaByYmd.get)
+      val extra = deltaFilesHolding(spark,
+        slice.map(DayDirs.ymdOf).flatMap(deltaByYmd.get), symbol)
       if (extra.nonEmpty)
         df = df.unionByName(
           spark.read.parquet(extra: _*)

@@ -1091,11 +1091,7 @@ object MinuteLakeWriter {
 
   def contentHashOfDir(fs: FileSystem, dir: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
-    val files = fs.listStatus(new HPath(dir)).filter(_.isFile)
-      .map(_.getPath).filter { p =>
-        val n = p.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.getName)
+    val files = DayDirs.dataFiles(fs, dir).map(_.getPath).sortBy(_.getName)
     val buf = new Array[Byte](1024 * 1024)
     files.foreach { p =>
       digest.update(p.getName.getBytes(StandardCharsets.UTF_8))

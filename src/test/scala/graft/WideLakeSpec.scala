@@ -130,6 +130,20 @@ class WideLakeSpec extends SparkSpec {
     assert(wr.inspectRange(spark, "FFFUSDT") == (None, None))
     assert(wr.latestMinute(spark, "FFFUSDT").isEmpty)
 
+    // an AAAUSDT delta on the edge day carrying a later minute: every
+    // other symbol's probe skips the file and answers as before, while
+    // AAAUSDT's own probe reads it and reports the later minute
+    new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 3)).writeDeltaPatch(minutes(Seq("AAAUSDT"),
+        hours = 1, dayStart = instant("2026-01-16T02:00:00Z")))
+    for (s <- Seq("BBBUSDT", "EEEUSDT")) {
+      assert(wr.inspectRange(spark, s) == hr.inspectRange(spark, s), s)
+      assert(wr.latestMinute(spark, s) == hr.latestMinute(spark, s), s)
+    }
+    assert(wr.latestMinute(spark, "AAAUSDT").contains(instant("2026-01-16T02:59:00Z")))
+    assert(wr.inspectRange(spark, "AAAUSDT") ==
+      (Some(Day1), Some(instant("2026-01-16T02:59:00Z"))))
+
     // windows that touch NO day partition (explicit-day read path's
     // empty case): schema preserved, zero rows, both window forms
     val before = instant("2025-12-01T00:00:00Z")
@@ -332,7 +346,12 @@ class WideLakeSpec extends SparkSpec {
     val wRoot = Files.createTempDirectory("graft-wide-bounded").toString
     val writer = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3))
-    writer.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 72))
+    // coverage flags written false, as MinuteBuilder writes them ("False
+    // when unavailable"): the overlay's merge reads a null flag as false,
+    // so the row-equality checks below need in-contract flags
+    writer.writeDaysWide(Seq("has_ws_latency", "has_depth", "has_liq")
+      .foldLeft(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 72))(
+        (df, c) => df.withColumn(c, lit(false))))
     val reader = new MinuteLakeReader(wRoot)
     val spec = Timeframes.parse("1h")
     AggregatorRunner.runBackfillAll(spark, reader,
@@ -354,6 +373,16 @@ class WideLakeSpec extends SparkSpec {
           instant("2026-01-16T09:00:00Z")).get.inputFiles.toSeq,
       "HtfLakeReader.readWindow")
 
+    // BBBUSDT's single-symbol reads before any patch: the reference rows
+    // for the delta-skipping cases below
+    def rows(df: DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+        .collect().map(_.toString).sorted.toIndexedSeq
+    def bWindow() = reader.readWindow(spark, "BBBUSDT", lo, hi)
+    def bScan() = reader.scanSymbol(spark, "BBBUSDT")
+    val bWindowRows = rows(bWindow())
+    val bScanRows = rows(bScan())
+
     // with a delta patch present the bound still holds: the overlay adds
     // ONLY the window's delta day files, and a window over a different
     // day plans over zero delta files
@@ -367,6 +396,26 @@ class WideLakeSpec extends SparkSpec {
     assert(otherDay.nonEmpty && otherDay.forall(f =>
       f.contains("/day=17/") && !f.contains("/_delta/")),
       s"day-17 window read outside its base day: ${otherDay.take(3)}")
+
+    // the AAAUSDT-only delta file's footer symbol range excludes BBBUSDT:
+    // BBBUSDT's single-symbol reads skip it and plan over zero delta files
+    def deltaFiles(df: DataFrame) = df.inputFiles.toSeq.filter(_.contains("/_delta/"))
+    for ((what, df, before) <- Seq(("readWindow", bWindow(), bWindowRows),
+                                   ("scanSymbol", bScan(), bScanRows))) {
+      assert(deltaFiles(df).isEmpty, s"BBBUSDT $what planned another symbol's delta")
+      assert(rows(df) == before, s"BBBUSDT $what rows moved under an AAAUSDT patch")
+    }
+
+    // skipping is by footer RANGE, not membership: an AAAUSDT + CCCUSDT
+    // patch spans BBBUSDT, so BBBUSDT's reads keep that file (and still
+    // skip the AAAUSDT-only one) — and their rows stay unchanged
+    writer.writeDeltaPatch(minutes(Seq("AAAUSDT", "CCCUSDT"), hours = 1,
+      dayStart = instant("2026-01-16T11:00:00Z"), openBase = 800.0))
+    for ((what, df, before) <- Seq(("readWindow", bWindow(), bWindowRows),
+                                   ("scanSymbol", bScan(), bScanRows))) {
+      assert(deltaFiles(df).size == 1, s"BBBUSDT $what delta files: ${deltaFiles(df)}")
+      assert(rows(df) == before, s"BBBUSDT $what rows moved under an A..C patch")
+    }
   }
 
   test("lake retention drops aged days on both layouts; audit and backfill stay clean") {
@@ -738,6 +787,22 @@ class WideLakeSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
     val h = bars(hRoot); val w = bars(wRoot)
     assert(h == w && h.size == 12, s"hourly=${h.size} wide=${w.size}")
+
+    // a delta patch of ANOTHER symbol on the same day leaves BBBUSDT's
+    // served output — every field of the bars, and the indicators —
+    // exactly as it was
+    val wr = new MinuteLakeReader(wRoot)
+    def served() = (
+      graft.service.QueryService.candleBars(spark, wr, "BBBUSDT", "15m", lo, hi,
+        limit = 12).collect().map(_.toString).toSeq,
+      graft.service.QueryService.indicatorPayload(spark, wr, "BBBUSDT", "15m", 3,
+        "1h", hi))
+    val before = served()
+    assert(before._1.size == 12 && before._2.ema.nonEmpty && before._2.pivots.nonEmpty)
+    new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 4)).writeDeltaPatch(minutes(Seq("AAAUSDT"),
+        hours = 1, dayStart = instant("2026-01-15T02:00:00Z"), openBase = 700.0))
+    assert(served() == before)
   }
 
   test("LakeMigrate: hourly lake migrates to day-wide with parity verified") {
