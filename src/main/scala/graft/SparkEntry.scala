@@ -2724,9 +2724,9 @@ object SparkEntry {
         // lookback spans the whole corpus so the FIRST tick backfills
         // (no stored high-water yet → blind window); the patched tick
         // ignores it — its window comes from the ledger's patch bounds
-        def tick() = AggregatorRunner.runIncrementalAll(s, reader, hw, state,
-          s"$root/htf", spec, allowIncomplete = true,
-          repairLookbackMinutes = 200000L, sourceLedger = Some(ledger))
+        def tick() = AggregatorRunner.runFleetTick(s, reader, hw, state,
+          s"$root/htf", Seq(spec), allowIncomplete = true,
+          repairLookbackMinutes = 200000L, sourceLedger = Some(ledger)).head._2
         tick()              // backfill: aggregates + writes the window
         val steady = tick() // unchanged ledger: MUST token-skip
         // late repair: the last event-day's error minutes, bumped +1000
@@ -2805,10 +2805,10 @@ object SparkEntry {
         val mm = evw.agg(min(col("minute")), max(col("minute"))).collect()(0)
         val lookback = java.time.temporal.ChronoUnit.MINUTES.between(
           mm.getTimestamp(0).toInstant, mm.getTimestamp(1).toInstant)
-        def tick() = AggregatorRunner.runIncrementalAll(s, reader, hw, state,
-          s"$root/htf", spec, allowIncomplete = true,
+        def tick() = AggregatorRunner.runFleetTick(s, reader, hw, state,
+          s"$root/htf", Seq(spec), allowIncomplete = true,
           repairLookbackMinutes = lookback, sourceLedger = Some(ledger),
-          maxBucketsPerTick = Cap)
+          maxBucketsPerTick = Cap).head._2
         val tickKey = s"1m|ai=true|lb=$lookback|cap=$Cap"
         // capped drain loop: poll until the carried cursor clears. Keys
         // on pendingFrom, not scanned==0 — a capped span of pure

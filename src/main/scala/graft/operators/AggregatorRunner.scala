@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.time.temporal.ChronoUnit
-import java.time.{Instant, ZoneOffset}
+import java.time.Instant
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,12 +14,17 @@ import graft.sources.{HtfLakeWriter, MinuteLakeReader, PartitionLedger,
 
 /** Aggregator lifecycle — the backfill / incremental daemons' logic
   * (reference `aggregator/backfill.py:41-121`, `incremental.py:43-104`,
-  * `validator.py:17-72`, `main.py:102-137`): idempotent, watermarked,
-  * late-arrival-repairing HTF materialization over the minute lake.
+  * `validator.py:17-52`): idempotent, watermarked, late-arrival-repairing
+  * HTF materialization over the minute lake. Two verbs, both whole-lake:
   *
-  * All bucket detection runs as Spark plans (anti join + completeness
-  * agg); only the coalesced repair-window list is collected — windows
-  * are small by construction (they shrink to the missing set).
+  *  - [[runBackfillAll]] finds every missing complete (symbol, bucket)
+  *    with an anti join and a completeness aggregate, bounds the source
+  *    read to the missing set's min/max and restricts it with a
+  *    distributed semi-join; only scalar bounds and one row per symbol
+  *    reach the driver.
+  *  - [[runFleetTick]] polls any number of timeframe specs: a ledger
+  *    token skip, per-symbol repair windows, write-skip of unchanged
+  *    buckets, and an optional bounded drain.
   */
 object AggregatorRunner {
 
@@ -30,24 +35,29 @@ object AggregatorRunner {
                                      incompleteSkipped: Long, repaired: Long,
                                      lagMinutes: Option[Long])
 
-  final case class Window(start: Instant, end: Instant)
-
   /** Per-(symbol, timeframe) aggregator checkpoint (reference
     * `aggregator/state_store.py:35-105`). */
   final class AggregatorStateStore(
       dir: String,
       committer: graft.sources.CommitProtocol = graft.sources.RenameCommit) {
     private val wm = new graft.sources.WatermarkStore(dir, committer)
+
+    /** Store key of (symbol, timeframe). The watermark store upper-cases
+      * whole keys, which would fold the minute frame `1m` and the month
+      * frame `1M` into one key. A capital letter in the timeframe
+      * is written as `^` plus the letter, so it survives the fold; every
+      * all-lower-case timeframe keeps the key earlier stores wrote. */
+    private def key(symbol: String, timeframe: String): String =
+      s"$symbol|${timeframe.flatMap(c => if (c.isUpper) s"^$c" else c.toString)}"
+
     def get(symbol: String, timeframe: String): Option[Instant] =
-      wm.get(s"$symbol|$timeframe")
-    def set(symbol: String, timeframe: String, lastCompleted: Instant): Unit =
-      wm.set(s"$symbol|$timeframe", lastCompleted)
+      wm.get(key(symbol, timeframe))
 
     /** All symbols' watermarks for one timeframe in ONE file read —
       * the per-symbol [[get]] re-parses the whole store per call, which
       * a width-10k driver loop turns into O(width²) work. */
     def getAll(timeframe: String): Map[String, Instant] = {
-      val suffix = s"|$timeframe".toUpperCase
+      val suffix = key("", timeframe).toUpperCase
       wm.read().collect {
         case (k, v) if k.endsWith(suffix) =>
           k.dropRight(suffix.length) -> Instant.parse(v)
@@ -63,12 +73,12 @@ object AggregatorRunner {
       val ahead = candidates.filter { case (sym, c) =>
         current.get(sym.toUpperCase).forall(_.isBefore(c))
       }
-      wm.setAll(ahead.map { case (sym, c) => s"$sym|$timeframe" -> c })
+      wm.setAll(ahead.map { case (sym, c) => key(sym, timeframe) -> c })
     }
 
     // -------- per-tick source-change state (the ledger gate) --------
-    // One small JSON map keyed by tick identity (timeframe [+symbol]
-    // [+config]); value = the minute-lake ledger token the last FULL
+    // One small JSON map keyed by tick identity (timeframe +
+    // config); value = the minute-lake ledger token the last FULL
     // tick accounted for, its committed-at high-water mark, and the
     // lag that tick reported (returned verbatim on a token skip —
     // data lag is latest-vs-watermark and neither moved). Kept apart
@@ -301,17 +311,14 @@ object AggregatorRunner {
   /** No reliable answer (unparseable rows, or nothing newer than the
     * high-water despite a token change) → blind lookback, no skip. */
   case object ChangeUnknown extends ChangeScope
-  /** The token moved but none of the changed entries concern this
-    * tick's symbol (single-symbol scope only) → safe skip. */
-  case object ChangeNone extends ChangeScope
   /** Everything written since `since` has event time ≥ `lo` — the
     * tick's repair window need not reach further back (and MUST reach
     * this far back, even past the blind lookback: a late write to an
     * old partition is exactly the repair the blind window misses). */
   final case class ChangeFrom(lo: Instant) extends ChangeScope
 
-  def changedSince(snap: SourceSnapshot, since: Instant, sinceTies: Int,
-                   symbolFilter: Option[String] = None): ChangeScope = {
+  def changedSince(snap: SourceSnapshot, since: Instant,
+                   sinceTies: Int): ChangeScope = {
     // A compaction that dropped superseded lines stamped AT or after
     // `since` left holes in the change history this tick can't account
     // for — the version-derived window would be too narrow. AT matters
@@ -323,7 +330,7 @@ object AggregatorRunner {
     // resolution, so a later commit CAN tie `since` to the nanosecond;
     // a strict filter alone would silently drop it, while >= would
     // re-include the already-accounted boundary batch every time
-    // (defeating ChangeNone and re-widening windows). The recorded
+    // (re-widening windows). The recorded
     // tie COUNT disambiguates: more entries at exactly `since` than
     // the last tick saw means unaccounted same-stamp commits — include
     // the whole tie batch (which of them is new is unknowable).
@@ -334,32 +341,20 @@ object AggregatorRunner {
       (if (tiesNow.size > sinceTies) tiesNow else Seq.empty)
     if (changed.isEmpty) ChangeUnknown // token moved yet nothing newer: distrust
     else {
-      val relevant = symbolFilter match {
-        case Some(sym) => changed.filter(e =>
-          e.symbol == sym.toUpperCase || e.symbol == "__ALL__" ||
-            e.symbol == "__DELTA__")
-        case None => changed
-      }
-      if (relevant.isEmpty) ChangeNone
-      else {
-        // per-write touched range when the writer recorded it (patch
-        // bounds); the partition's content bounds otherwise — wider,
-        // never wrong (pre-r16 rows, hourly hour-grain entries)
-        val los = relevant.map(e =>
-          parseLedgerTs(e.patchMinTs).orElse(parseLedgerTs(e.minTs)))
-        if (los.exists(_.isEmpty)) ChangeUnknown // tombstones etc.: blind
-        else ChangeFrom(los.flatten.minBy(_.toEpochMilli))
-      }
+      // per-write touched range when the writer recorded it (patch
+      // bounds); the partition's content bounds otherwise — wider,
+      // never wrong (pre-r16 rows, hourly hour-grain entries)
+      val los = changed.map(e =>
+        parseLedgerTs(e.patchMinTs).orElse(parseLedgerTs(e.minTs)))
+      if (los.exists(_.isEmpty)) ChangeUnknown // tombstones etc.: blind
+      else ChangeFrom(los.flatten.minBy(_.toEpochMilli))
     }
   }
 
   private def tickKey(spec: TimeframeSpec, allowIncomplete: Boolean,
-                      repairLookbackMinutes: Long,
-                      symbol: Option[String] = None,
-                      maxBucketsPerTick: Int = 0,
-                      pollBudgetMs: Long = 0): String =
-    s"${spec.name}${symbol.map("#" + _.toUpperCase).getOrElse("")}" +
-      s"|ai=$allowIncomplete|lb=$repairLookbackMinutes" +
+                      repairLookbackMinutes: Long, maxBucketsPerTick: Int,
+                      pollBudgetMs: Long): String =
+    s"${spec.name}|ai=$allowIncomplete|lb=$repairLookbackMinutes" +
       // cap joins the key only when set, so existing uncapped
       // deployments keep their recorded tick state across the upgrade.
       // A budget-derived deployment keys by the BUDGET, not the cap it
@@ -368,106 +363,8 @@ object AggregatorRunner {
       (if (pollBudgetMs > 0) s"|budget=$pollBudgetMs"
        else if (maxBucketsPerTick > 0) s"|cap=$maxBucketsPerTick" else "")
 
-  /** Monotone watermark advance: repairing an OLD gap must never move a
-    * symbol's watermark backward (that would make the next incremental
-    * re-scan the lake from the gap to now). */
-  private def advanceWatermark(state: AggregatorStateStore, symbol: String,
-                               spec: TimeframeSpec, candidate: Instant): Unit =
-    state.advanceAll(spec.name, Map(symbol -> candidate))
-
-  /** HTF lake index scan: (bucket_start, bucket_complete) only —
-    * columnar parquet makes this a 2-column metadata-light scan. */
-  def scanExistingIndex(spark: SparkSession, htfRoot: String,
-                        timeframe: String, symbol: String,
-                        committer: graft.sources.CommitProtocol =
-                          graft.sources.RenameCommit): DataFrame = {
-    val dir = s"$htfRoot/timeframe=$timeframe/symbol=${symbol.toUpperCase}"
-    val fs = FileSystem.get(new java.net.URI(htfRoot),
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new HPath(dir))) {
-      // manifest deployment (r15 #1): the live day versions sit behind
-      // each leaf's pointer — resolve before scanning
-      if (committer.readThroughResolve) {
-        val leaves = graft.sources.ResolvedScan.resolvedLeaves(fs, dir, committer)
-        if (leaves.isEmpty)
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("bucket_start",
-                org.apache.spark.sql.types.TimestampType),
-              org.apache.spark.sql.types.StructField("bucket_complete",
-                org.apache.spark.sql.types.BooleanType))))
-        return spark.read.option("basePath", dir).parquet(leaves: _*)
-          .select("bucket_start", "bucket_complete")
-      }
-      return spark.read.parquet(dir).select("bucket_start", "bucket_complete")
-    }
-    // day-wide HTF tree: no per-symbol directory — symbol is a sorted
-    // data column under timeframe=T/year=/month=/day= (file-stat pruned)
-    val tfDir = s"$htfRoot/timeframe=$timeframe"
-    if (graft.sources.LakeLayout.detect(fs, tfDir)
-        .exists(_.isInstanceOf[graft.sources.LakeLayout.DayWide]))
-      return spark.read.parquet(tfDir)
-        .where(col("symbol") === symbol.toUpperCase)
-        .select("bucket_start", "bucket_complete")
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket_start",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("bucket_complete",
-          org.apache.spark.sql.types.BooleanType))))
-  }
-
-  /** Window-bounded [[scanExistingIndex]] (r15): everything the
-    * incremental tick consults the index FOR — repaired-bucket counting
-    * and the freshly-completable watermark advance — concerns buckets
-    * inside the tick's repair window, so reading the WHOLE HTF history
-    * per tick (O(depth) directory LISTs + an O(history) scan, growing
-    * forever) was waste. Descends only the day dirs from `from`
-    * forward via `DayDirs.inRange` — 1 + touchedYears + touchedMonths
-    * LISTs at any tree depth, same request-economics bound as the
-    * minute-lake reads. Rows of `from`'s own day that precede `from`
-    * may be included (day granularity); every consumer is insensitive
-    * to extras below the window (semi-joins and monotone maxima). */
-  def scanExistingIndexFrom(spark: SparkSession, htfRoot: String,
-                            timeframe: String, symbol: String,
-                            from: Instant,
-                            committer: graft.sources.CommitProtocol =
-                              graft.sources.RenameCommit): DataFrame = {
-    val fs = FileSystem.get(new java.net.URI(htfRoot),
-      spark.sparkContext.hadoopConfiguration)
-    val farEnd = Instant.parse("9999-01-01T00:00:00Z")
-    def empty() = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket_start",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("bucket_complete",
-          org.apache.spark.sql.types.BooleanType))))
-    val symDir = s"$htfRoot/timeframe=$timeframe/symbol=${symbol.toUpperCase}"
-    if (fs.exists(new HPath(symDir))) {
-      var days = graft.sources.DayDirs.inRange(fs, symDir, from, farEnd)
-      if (committer.readThroughResolve)
-        days = graft.sources.ResolvedScan.resolveLeaves(fs, days, committer)
-      if (days.isEmpty) empty()
-      else spark.read.option("basePath", symDir).parquet(days: _*)
-        .select("bucket_start", "bucket_complete")
-    } else {
-      val tfDir = s"$htfRoot/timeframe=$timeframe"
-      if (graft.sources.LakeLayout.detect(fs, tfDir)
-          .exists(_.isInstanceOf[graft.sources.LakeLayout.DayWide])) {
-        val days = graft.sources.DayDirs.inRange(fs, tfDir, from, farEnd)
-        if (days.isEmpty) empty()
-        else spark.read.option("basePath", tfDir).parquet(days: _*)
-          .where(col("symbol") === symbol.toUpperCase)
-          .select("bucket_start", "bucket_complete")
-      } else empty()
-    }
-  }
-
   /** Rows of `kept` whose content FINGERPRINT differs from the stored
-    * row with the same key — the write-skip compare shared by the
-    * single-symbol and fleet ticks (r21 unification, VERDICT r20 #5).
+    * row with the same key — the fleet tick's write-skip compare.
     * Returns kept's columns plus `__complete_old`: whether a superseded
     * stored row was complete — the `repaired` counter's flag, carried
     * through the SAME shuffle the compare already pays so no separate
@@ -525,166 +422,28 @@ object AggregatorRunner {
       .drop("__fp", "__fp_lo", "__fp_hi", "__n_old")
   }
 
-  /** Full-row, window-bounded read of one symbol's stored HTF buckets
-    * (the comparison side of [[changedWithOldCompleteness]]); None when the window
-    * holds no stored days. Same explicit day-dir descent as
-    * [[scanExistingIndexFrom]]. */
-  private def readExistingWindowRows(spark: SparkSession, htfRoot: String,
-                                     timeframe: String, symbol: String,
-                                     from: Instant,
-                                     committer: graft.sources.CommitProtocol =
-                                       graft.sources.RenameCommit): Option[DataFrame] = {
-    val fs = FileSystem.get(new java.net.URI(htfRoot),
-      spark.sparkContext.hadoopConfiguration)
-    val farEnd = Instant.parse("9999-01-01T00:00:00Z")
-    val symDir = s"$htfRoot/timeframe=$timeframe/symbol=${symbol.toUpperCase}"
-    if (fs.exists(new HPath(symDir))) {
-      var days = graft.sources.DayDirs.inRange(fs, symDir, from, farEnd)
-      if (committer.readThroughResolve)
-        days = graft.sources.ResolvedScan.resolveLeaves(fs, days, committer)
-      if (days.isEmpty) None
-      else Some(spark.read.option("basePath", symDir).parquet(days: _*)
-        .drop("year", "month", "day"))
-    } else {
-      val tfDir = s"$htfRoot/timeframe=$timeframe"
-      if (graft.sources.LakeLayout.detect(fs, tfDir)
-          .exists(_.isInstanceOf[graft.sources.LakeLayout.DayWide])) {
-        val days = graft.sources.DayDirs.inRange(fs, tfDir, from, farEnd)
-        if (days.isEmpty) None
-        else Some(spark.read.option("basePath", tfDir).parquet(days: _*)
-          .where(col("symbol") === symbol.toUpperCase)
-          .drop("year", "month", "day"))
-      } else None
-    }
-  }
-
-  /** Complete buckets available in the source minus complete buckets
-    * already written (reference `validator.py:17-52`). */
-  def detectMissingBuckets(minuteTimestamps: DataFrame, existingIndex: DataFrame,
-                           spec: TimeframeSpec): DataFrame = {
-    val available = minuteTimestamps
-      .withColumn("bucket_start", spec.bucketStart(col("timestamp")))
-      .groupBy("bucket_start")
-      .agg(count(lit(1)).as("observed"))
-      .where(col("observed") === spec.expectedMinutes(col("bucket_start")))
-      .select("bucket_start")
-    Ops.antiByKeys(available,
-      existingIndex.where(col("bucket_complete")), Seq("bucket_start"))
-      .orderBy("bucket_start")
-  }
-
-  /** Coalesce consecutive missing buckets into contiguous repair windows
-    * (gaps-and-islands — reference `validator.py:55-72`). Public utility
-    * for window-oriented callers; the backfill itself now bounds its
-    * scan with min/max + a distributed semi-join instead. */
-  def coalesceBucketWindows(bucketStarts: Seq[Instant], spec: TimeframeSpec): Seq[Window] =
-    bucketStarts.sorted(Ordering.by[Instant, Long](_.toEpochMilli))
-      .foldLeft(Vector.empty[Window]) { (acc, b) =>
-        acc.lastOption match {
-          case Some(w) if spec.addBuckets(w.end) == b =>
-            acc.init :+ w.copy(end = b)
-          case _ => acc :+ Window(b, b)
-        }
-      }
-
-  /** Startup backfill for one (symbol, timeframe) (reference
-    * `backfill.py:41-102`), re-planned for a cluster:
+  /** Whole-lake startup backfill (reference `backfill.py:41-102`):
+    * EVERY symbol in ONE pipeline — missing (symbol, bucket) detection,
+    * a single multi-symbol aggregation (`byCols = symbol`), and one
+    * all-symbols bulk write. The driver never loops symbols; per-symbol
+    * watermarks are the only O(symbols) driver state (collected as one
+    * small result).
     *
-    *  - the missing-bucket set stays a DataFrame end to end — the source
-    *    read is bounded to [min(missing), max(missing)] (partition
-    *    pruning) and restricted to exactly the missing buckets with a
-    *    distributed semi-join, so the driver never materializes
-    *    O(buckets) lists (only 3 scalar bounds + 2 metric rows);
-    *  - ONE aggregation plan and ONE bulk dynamic-partition-overwrite
-    *    write cover the whole backfill, vs a per-window × per-day job
-    *    loop that re-ran the aggregation once per day;
-    *  - the watermark advances to the last bucket actually WRITTEN
-    *    complete — a trailing incomplete (skipped) bucket stays in front
-    *    of the watermark so [[runIncremental]] revisits it once its
-    *    remaining minutes arrive.
-    */
-  def runBackfill(spark: SparkSession, reader: MinuteLakeReader,
-                  writer: HtfLakeWriter, state: AggregatorStateStore,
-                  htfRoot: String, symbol: String, spec: TimeframeSpec,
-                  allowIncomplete: Boolean = false): BackfillResult =
-    // Re-resolve-on-miss (VERDICT r17 #2): a backfill window/index read
-    // under ManifestCommit that outlives the grace window dies on a
-    // vanished `.v_*` dir; every read below resolves fresh per call, so
-    // re-running the pass re-resolves. The pass is re-run-SAFE as a
-    // whole: its writes are the engine's own repair contract — atomic
-    // per-partition publishes of recomputed content plus monotone
-    // watermark advance — so a retry converges to the identical state
-    // (the same property every scheduled re-run of this verb relies on).
-    graft.sources.ResolvedScan.retryOnVanishedVersion() {
-      runBackfillOnce(spark, reader, writer, state, htfRoot, symbol, spec,
-        allowIncomplete)
-    }
-
-  private def runBackfillOnce(spark: SparkSession, reader: MinuteLakeReader,
-                  writer: HtfLakeWriter, state: AggregatorStateStore,
-                  htfRoot: String, symbol: String, spec: TimeframeSpec,
-                  allowIncomplete: Boolean): BackfillResult = {
-    val existing = scanExistingIndex(spark, htfRoot, spec.name, symbol,
-      writer.committer)
-    val missing = detectMissingBuckets(
-      reader.scanAvailableMinutes(spark, symbol), existing, spec).persist()
-    try {
-      val bounds = missing
-        .agg(count(lit(1)).as("n"), min("bucket_start").as("lo"), max("bucket_start").as("hi"))
-        .collect()(0)
-      if (bounds.getLong(0) == 0L) return BackfillResult(0, 0, 0, 0)
-      val nMissing = bounds.getLong(0)
-      val lo = bounds.getTimestamp(1).toInstant
-      val hiExclusive = spec.addBuckets(bounds.getTimestamp(2).toInstant)
-
-      val source = reader
-        .readWindow(spark, symbol, lo, hiExclusive.minus(1, ChronoUnit.MINUTES))
-        .withColumn("__bucket", spec.bucketStart(col("timestamp")))
-        .join(missing.withColumnRenamed("bucket_start", "__bucket"),
-              Seq("__bucket"), "left_semi")
-        .drop("__bucket")
-      val aggregated = HtfAggregator.aggregateMinutes(source, spec, symbol).persist()
-      try {
-        val kept =
-          if (allowIncomplete) aggregated
-          else aggregated.where(col("bucket_complete"))
-        val m = aggregated.agg(
-          count(lit(1)).as("total"),
-          sum(when(col("bucket_complete"), 1L).otherwise(0L)).as("n_complete"),
-          max(when(col("bucket_complete"), col("bucket_start"))).as("last_complete"))
-          .collect()(0)
-        val total = m.getLong(0)
-        val nComplete = if (m.isNullAt(1)) 0L else m.getLong(1)
-        val written = if (allowIncomplete) total else nComplete
-        val skipped = if (allowIncomplete) 0L else total - nComplete
-
-        // repaired is 0 BY CONSTRUCTION: kept ⊆ missing, and missing was
-        // anti-joined against the existing-complete set — backfill only
-        // writes buckets the lake didn't have (repairs are incremental's
-        // job), so no join is spent computing a constant
-        if (written > 0)
-          // kept filters the PERSISTED aggregation — the writer's
-          // actions hit the cache, so no staging round-trip is needed
-          writer.writeBucketsBulk(spark, spec.name, symbol, kept,
-            callerPinned = true)
-        if (!m.isNullAt(2))
-          advanceWatermark(state, symbol, spec, m.getTimestamp(2).toInstant)
-        BackfillResult(nMissing, written, skipped, repaired = 0)
-      } finally aggregated.unpersist()
-    } finally missing.unpersist()
-  }
-
-  /** Whole-lake startup backfill: EVERY symbol in ONE pipeline —
-    * missing (symbol, bucket) detection, a single multi-symbol
-    * aggregation (`byCols = symbol`), and one all-symbols
-    * dynamic-partition-overwrite write. This is the 1000-symbol plan:
-    * the driver never loops symbols; per-symbol watermarks are the only
-    * O(symbols) driver state (collected as one small result). */
+    * Each symbol's watermark advances to its last bucket actually
+    * WRITTEN complete — a trailing incomplete (skipped) bucket stays in
+    * front of the watermark, so [[runFleetTick]] revisits it once its
+    * remaining minutes arrive. */
   def runBackfillAll(spark: SparkSession, reader: MinuteLakeReader,
                      writer: HtfLakeWriter, state: AggregatorStateStore,
                      htfRoot: String, spec: TimeframeSpec,
                      allowIncomplete: Boolean = false): BackfillResult =
-    // re-run-safe as a whole — see runBackfill's wrap rationale
+    // Re-resolve-on-miss (VERDICT r17 #2): a window/index read under
+    // ManifestCommit that outlives the grace window dies on a vanished
+    // `.v_*` dir; every read below resolves fresh per call, so re-running
+    // the pass re-resolves. The pass is re-run-SAFE as a whole: its
+    // writes are the engine's own repair contract — atomic per-partition
+    // publishes of recomputed content plus monotone watermark advance —
+    // so a retry converges to the identical state.
     graft.sources.ResolvedScan.retryOnVanishedVersion() {
       runBackfillAllOnce(spark, reader, writer, state, htfRoot, spec,
         allowIncomplete)
@@ -697,29 +456,17 @@ object AggregatorRunner {
     val minutesOpt = reader.scanAllSymbols(spark)
     if (minutesOpt.isEmpty) return BackfillResult(0, 0, 0, 0)
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(htfRoot),
+    val fs = FileSystem.get(new java.net.URI(htfRoot),
       spark.sparkContext.hadoopConfiguration)
     val tfDir = s"$htfRoot/timeframe=${spec.name}"
+    // manifest deployment: per-day versions hide behind pointers
+    val leaves: Seq[String] =
+      if (!fs.exists(new HPath(tfDir))) Nil
+      else if (writer.committer.readThroughResolve)
+        graft.sources.ResolvedScan.resolvedLeaves(fs, tfDir, writer.committer)
+      else Seq(tfDir)
     val existing =
-      if (fs.exists(new HPath(tfDir)) && writer.committer.readThroughResolve) {
-        // manifest deployment: per-day versions hide behind pointers
-        val leaves = graft.sources.ResolvedScan.resolvedLeaves(
-          fs, tfDir, writer.committer)
-        if (leaves.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("symbol",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("bucket_start",
-                org.apache.spark.sql.types.TimestampType),
-              org.apache.spark.sql.types.StructField("bucket_complete",
-                org.apache.spark.sql.types.BooleanType))))
-        else spark.read.option("basePath", tfDir).parquet(leaves: _*)
-          .select("symbol", "bucket_start", "bucket_complete")
-      }
-      else if (fs.exists(new HPath(tfDir)))
-        spark.read.parquet(tfDir).select("symbol", "bucket_start", "bucket_complete")
-      else
+      if (leaves.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("symbol",
@@ -728,10 +475,11 @@ object AggregatorRunner {
               org.apache.spark.sql.types.TimestampType),
             org.apache.spark.sql.types.StructField("bucket_complete",
               org.apache.spark.sql.types.BooleanType))))
+      else spark.read.option("basePath", tfDir).parquet(leaves: _*)
+        .select("symbol", "bucket_start", "bucket_complete")
 
     // distinct BEFORE counting — duplicate row versions for one minute
     // must not inflate/deflate the observed-minutes completeness check
-    // (mirrors scanAvailableMinutes().distinct() on the per-symbol path)
     val available = minutesOpt.get.select("symbol", "timestamp").distinct()
       .withColumn("bucket_start", spec.bucketStart(col("timestamp")))
       .groupBy("symbol", "bucket_start")
@@ -765,8 +513,7 @@ object AggregatorRunner {
         // ONE action over the persisted aggregation serves the global
         // counters, the per-symbol watermarks, AND the touched-day set
         // the bulk writer would otherwise re-derive with its own
-        // distinct pass (r21, fleet-tick parity — the backfill verb
-        // kept the r19 three-action shape). The collect is
+        // distinct pass (r21, fleet-tick parity). The collect is
         // width-bounded (one row per symbol, day structs per written
         // day); day derivation matches the writer's date_format
         // partition columns (both session-TZ).
@@ -784,8 +531,10 @@ object AggregatorRunner {
         val written = if (allowIncomplete) total else nComplete
         val skipped = if (allowIncomplete) 0L else total - nComplete
 
-        // repaired is 0 by construction (kept ⊆ missing, which excluded
-        // every existing-complete bucket) — see runBackfill
+        // repaired is 0 BY CONSTRUCTION: kept ⊆ missing, and missing
+        // was anti-joined against the existing-complete set — backfill
+        // only writes buckets the lake didn't have (repairs are the
+        // tick's job), so no join is spent computing a constant
         if (written > 0) {
           val days = perSym.iterator
             .flatMap(_.getSeq[org.apache.spark.sql.Row](4))
@@ -806,250 +555,213 @@ object AggregatorRunner {
     } finally missing.unpersist()
   }
 
-  /** Continuous incremental run: recompute from
-    * min(next-after-last-completed, now - repair_lookback) so late
-    * minutes repair recent buckets idempotently (reference
-    * `incremental.py:43-104`; lookback default 120 min,
-    * `aggregator/config.py:19`). */
-  def runIncremental(spark: SparkSession, reader: MinuteLakeReader,
-                     writer: HtfLakeWriter, state: AggregatorStateStore,
-                     htfRoot: String, symbol: String, spec: TimeframeSpec,
-                     allowIncomplete: Boolean = false,
-                     repairLookbackMinutes: Long = 120,
-                     sourceLedger: Option[PartitionLedger] = None)
-      : IncrementalResult =
-    // gated ticks re-resolve on a vanished version (VERDICT r17 #2);
-    // re-run-safe as a whole — see runBackfill's wrap rationale (the
-    // tick IS the scheduled repair re-run: write-skip + atomic
-    // publishes + monotone watermarks make a retry converge)
+  /** One fleet poll: EVERY timeframe spec ticks against the same
+    * minute lake (the production deployment shape — reference
+    * `aggregator/config.py:17-21` runs 12 specs on a 30 s poll; a
+    * one-spec fleet is the plain incremental daemon, `incremental.py:
+    * 43-104`). Each symbol's window starts at
+    * min(next-after-its-watermark, its-latest-minute − lookback), so
+    * late minutes repair recent buckets idempotently (lookback default
+    * 120 min, `aggregator/config.py:19`). Per spec, the per-symbol
+    * bounds are a tiny broadcast frame joined against the lake scan, so
+    * the driver never loops symbols for Spark work. Across specs the
+    * poll shares:
+    *
+    *  1. ONE ledger snapshot decides every spec's token skip — a
+    *     no-news poll is `specs.size` file reads, zero Spark jobs
+    *     (an ungated 12-spec poll at width 10k measured 109–121 s
+    *     against a 30 s budget, r16);
+    *  2. ONE `latestMinuteAllSymbols` scan serves every live spec;
+    *  3. with two or more scanning specs, ONE minute-lake read over the
+    *     UNION of their repair windows, persisted and re-filtered per
+    *     spec (a single spec reads its own window directly).
+    *
+    * Returns results in `specs` order. */
+  def runFleetTick(spark: SparkSession, reader: MinuteLakeReader,
+                   writer: HtfLakeWriter, state: AggregatorStateStore,
+                   htfRoot: String, specs: Seq[TimeframeSpec],
+                   sourceLedger: Option[PartitionLedger] = None,
+                   allowIncomplete: Boolean = false,
+                   repairLookbackMinutes: Long = 120,
+                   maxBucketsPerTick: Int = 0,
+                   pollBudgetMs: Long = 0)
+      : Seq[(String, IncrementalResult)] =
+    // Re-resolve-on-miss (VERDICT r17 #2), re-run-safe as a whole — see
+    // runBackfillAll. The poll IS the scheduled repair re-run: write-skip,
+    // atomic publishes and monotone watermarks make a retry converge,
+    // and a spec that finished before the failure recorded its token,
+    // so the retry skips it. Every read below (snapshot, latest scan,
+    // shared union read) is planned fresh per attempt.
     graft.sources.ResolvedScan.retryOnVanishedVersion() {
-      runIncrementalOnce(spark, reader, writer, state, htfRoot, symbol,
-        spec, allowIncomplete, repairLookbackMinutes, sourceLedger)
+      fleetTickOnce(spark, reader, writer, state, htfRoot, specs,
+        sourceLedger, allowIncomplete, repairLookbackMinutes,
+        maxBucketsPerTick, pollBudgetMs)
     }
 
-  private def runIncrementalOnce(spark: SparkSession, reader: MinuteLakeReader,
-                     writer: HtfLakeWriter, state: AggregatorStateStore,
-                     htfRoot: String, symbol: String, spec: TimeframeSpec,
-                     allowIncomplete: Boolean,
-                     repairLookbackMinutes: Long,
-                     sourceLedger: Option[PartitionLedger])
-      : IncrementalResult = {
-    // ledger gate + data-driven repair window — see incrementalAllExec
-    // for the reasoning. The single-symbol tick additionally skips on
-    // ChangeNone: an hourly-layout ledger attributes writes to
-    // symbols, so commits that touched only OTHER symbols cannot move
-    // this symbol's buckets (wide-layout day writes are "__ALL__" and
-    // always relevant).
-    val key = tickKey(spec, allowIncomplete, repairLookbackMinutes,
-      Some(symbol))
+  /** One live spec's poll, planned once: its tick key, its watermarks
+    * before the poll, and each symbol's window (symbol, start, latest
+    * minute) before any cap. */
+  private final case class SpecPlan(spec: TimeframeSpec, key: String,
+                                    watermarks: Map[String, Instant],
+                                    windows: Seq[(String, Instant, Instant)])
+
+  private def fleetTickOnce(spark: SparkSession, reader: MinuteLakeReader,
+                            writer: HtfLakeWriter, state: AggregatorStateStore,
+                            htfRoot: String, specs: Seq[TimeframeSpec],
+                            sourceLedger: Option[PartitionLedger],
+                            allowIncomplete: Boolean,
+                            repairLookbackMinutes: Long,
+                            maxBucketsPerTick: Int, pollBudgetMs: Long)
+      : Seq[(String, IncrementalResult)] = {
+    val t0 = System.nanoTime()
+    // an explicit cap wins over a budget (the budget exists to replace
+    // hand-tuned caps, not to second-guess one the deployment chose)
+    val effBudget = if (maxBucketsPerTick > 0) 0L else pollBudgetMs
+    def keyOf(sp: TimeframeSpec) = tickKey(sp, allowIncomplete,
+      repairLookbackMinutes, maxBucketsPerTick, effBudget)
+    // ---- ledger gate (r16): if the minute lake's partition ledger is
+    // bit-identical to what a spec's last FULL tick accounted for,
+    // re-running would re-aggregate the lookback window across the
+    // whole width only to write-skip every row (bucket completeness is
+    // data-driven, so an unchanged lake can complete no bucket and move
+    // no watermark). Skip at the cost of one small file read, returning
+    // the last run's lag (data lag is latest-vs-watermark; neither
+    // moved). A recorded pendingFrom means the last capped tick drained
+    // only part of its window — an unchanged token must NOT skip until
+    // the carried remainder is drained (VERDICT r16 #4).
     val snap = sourceLedger.flatMap(sourceSnapshot)
-    val stored = if (snap.isDefined) state.getTickState(key) else None
-    if (snap.isDefined && stored.exists(_.token == snap.get.token))
-      return IncrementalResult(0, 0, 0, 0, stored.get.lagMinutes)
-    val scope = for {
-      s <- snap; st <- stored; hw <- st.highWater
-    } yield changedSince(s, hw, st.hwTies, symbolFilter = Some(symbol))
-    if (scope.contains(ChangeNone)) {
-      val lag = stored.flatMap(_.lagMinutes)
-      snap.foreach(s => state.setTickState(key,
-        TickState(s.token, s.highWater, s.hwTies, lag)))
-      return IncrementalResult(0, 0, 0, 0, lag)
-    }
-    val changedFloor: Option[Instant] = scope.flatMap {
-      case ChangeFrom(lo) => Some(spec.floorInstant(lo))
-      case _ => None
-    }
-    def recordTick(lag: Option[Long]): Unit = snap.foreach(s =>
-      state.setTickState(key, TickState(s.token, s.highWater, s.hwTies, lag)))
+    val recordedBy = specs.map { sp =>
+      sp.name -> (if (snap.isDefined) state.getTickState(keyOf(sp)) else None)
+    }.toMap
+    def skipResult(sp: TimeframeSpec) =
+      IncrementalResult(0, 0, 0, 0, recordedBy(sp.name).flatMap(_.lagMinutes))
+    val live = specs.filterNot(sp =>
+      snap.isDefined && recordedBy(sp.name).exists(st =>
+        st.token == snap.get.token && st.pendingFrom.isEmpty))
+    if (live.isEmpty) return specs.map(sp => sp.name -> skipResult(sp))
 
-    val latestMinuteOpt = reader.latestMinute(spark, symbol)
-    if (latestMinuteOpt.isEmpty) return IncrementalResult(0, 0, 0, 0, None)
-    val latestMinute = latestMinuteOpt.get
+    // ONE store read per spec (per-symbol get() re-parses the whole
+    // watermark file per call — O(width²) at width 10k)
+    val watermarksBy = live.map(sp => sp.name -> state.getAll(sp.name)).toMap
+    // per-symbol latest via partition-directory descent (reads ONE hour
+    // partition per symbol, not the lake's history — the steady-state
+    // tick must not scale with lake depth). Watermarked symbols absent
+    // from the wide layout's recent-day scan (idle > 2 days) are
+    // end-probed so their trailing buckets still finalize (ADVICE r13);
+    // the union of the live specs' watermark keys covers every spec.
+    val latest = reader.latestMinuteAllSymbols(spark,
+      watermarksBy.values.flatMap(_.keySet).toSet)
+    if (latest.isEmpty)
+      return specs.map(sp => sp.name ->
+        (if (live.contains(sp)) IncrementalResult(0, 0, 0, 0, None)
+         else skipResult(sp)))
 
-    val repairStart = changedFloor.getOrElse(spec.floorInstant(
-      latestMinute.minus(repairLookbackMinutes, ChronoUnit.MINUTES)))
-    val wmBefore = state.get(symbol, spec.name)
-    val start = wmBefore match {
-      case Some(lastCompleted) =>
-        val next = spec.addBuckets(lastCompleted)
-        if (next.isBefore(repairStart)) next else repairStart
-      case None => repairStart
+    val plans = live.map(sp => planSpec(sp, keyOf(sp), recordedBy(sp.name),
+      watermarksBy(sp.name), snap, latest, state, repairLookbackMinutes))
+    // Completable-bucket gate (long/calendar frames): when no symbol's
+    // window can contain a complete bucket — mid-bucket on a 1d/1w/1M
+    // spec, the common case for every tick but the one after a bucket
+    // boundary — the scan+aggregation would produce zero writable rows,
+    // so the spec launches no scan, pays no cap, and stays out of the
+    // union read. Repairs are unaffected: a window reaching back across
+    // the boundary still aggregates. Gating on the uncapped window is
+    // exact: starts are bucket-aligned, so a capped window of ≥1 whole
+    // bucket completes a bucket iff the uncapped one does.
+    def gated(p: SpecPlan) = !allowIncomplete && p.windows.forall {
+      case (_, start, lm) =>
+        p.spec.latestCompleteBucketStart(lm).forall(_.isBefore(start))
     }
+    val scanning = plans.filterNot(gated)
+    val effCap =
+      if (effBudget <= 0) maxBucketsPerTick
+      else budgetCap(state, effBudget, scanning, latest.size, live.size)
+    val capped = plans.map(p => p.spec.name -> capWindows(p, effCap)).toMap
 
-    // Completable-bucket gate (long/calendar frames): when no bucket
-    // overlapping [start, latest] can be complete — mid-bucket on a
-    // 1d/1w/1M spec, the common case for every tick but the one after
-    // a bucket boundary — the aggregation would compute only
-    // incomplete buckets and write nothing, so skip the scan entirely.
-    // A 1M tick otherwise re-aggregates month-to-date × symbols every
-    // poll for zero output. Repairs are unaffected: a window reaching
-    // back across the boundary (start ≤ last completable bucket) still
-    // aggregates.
-    if (!allowIncomplete &&
-        spec.latestCompleteBucketStart(latestMinute).forall(_.isBefore(start))) {
-      val lag = wmBefore.map { lc =>
-        math.max((latestMinute.toEpochMilli - spec.addBuckets(lc).toEpochMilli
-          + 60000L) / 60000L, 0L)
+    // shared source: with ≥2 scanning specs, the union of their capped
+    // windows is read once and persisted; each spec re-narrows it via
+    // its bounds join. A single spec reads its own window — a persisted
+    // copy would only add a cache layer under its one consumer.
+    val shared: Option[DataFrame] =
+      if (scanning.size < 2) None
+      else {
+        val bounds = scanning.flatMap(p => capped(p.spec.name)._1)
+        Some(reader.readWindowAllSymbols(spark,
+          bounds.map(_._2).minBy(_.toEpochMilli),
+          bounds.map(_._3).maxBy(_.toEpochMilli)).get.persist())
       }
-      recordTick(lag)
-      return IncrementalResult(0, 0, 0, 0, lag)
-    }
-
-    val source = reader.readWindow(spark, symbol, start, latestMinute)
-    val aggregated = HtfAggregator.aggregateMinutes(source, spec, symbol).persist()
-    val (scanned, written, skipped, repaired, windowCompleted) =
-      try {
-        val kept =
-          if (allowIncomplete) aggregated else aggregated.where(col("bucket_complete"))
-        // ONE action over the persisted aggregation serves the counters
-        // AND the watermark (r21, fleet-path parity): the observed
-        // window's last complete bucket replaces the post-write index
-        // re-read the tick used to pay — the watermark's meaning is
-        // "last bucket OBSERVED complete", written or skipped-as-
-        // unchanged, exactly the fleet path's perSym basis.
-        val m = aggregated.agg(
-          count(lit(1)).as("total"),
-          sum(when(col("bucket_complete"), 1L).otherwise(0L)).as("n_complete"),
-          max(when(col("bucket_complete"), col("bucket_start"))).as("last_complete"))
-          .collect()(0)
-        val total = m.getLong(0)
-        val nComplete = if (m.isNullAt(1)) 0L else m.getLong(1)
-        val lastComplete =
-          if (m.isNullAt(2)) None else Some(m.getTimestamp(2).toInstant)
-        val nKept = if (allowIncomplete) total else nComplete
-        var rep = 0L
-        var nWritten = 0L
-        if (nKept > 0) {
-          // write-skip parity with the fleet path (r15, unified r21):
-          // the repair window re-AGGREGATES every tick (the
-          // late-correction contract) but only buckets whose CONTENT
-          // differs from the stored row re-WRITE — a steady per-symbol
-          // tick otherwise rewrites lookback/bucket partitions per poll
-          // forever. `__complete_old` rides the compare's shuffle, so
-          // the repaired counter no longer needs its own index read +
-          // semi-join action per writing tick.
-          val changed = readExistingWindowRows(spark, htfRoot, spec.name,
-              symbol, start, writer.committer) match {
-            case None => kept.withColumn("__complete_old",
-              lit(null).cast("boolean"))
-            case Some(ef) =>
-              changedWithOldCompleteness(kept, ef, Seq("bucket_start"))
+    try {
+      val results = specs.map { sp =>
+        sp.name -> plans.find(_.spec.name == sp.name).fold(skipResult(sp)) { p =>
+          val (windows, pendingNext, nextCursors) = capped(sp.name)
+          def recordTick(lag: Option[Long]): Unit = snap.foreach { s =>
+            // cursors land BEFORE the tick state: a crash between the
+            // two putStates must never leave a visible pendingFrom
+            // without its cursor map (the reverse — a stale cursor file
+            // under a cleared/absent pendingFrom — is ignored by
+            // construction)
+            state.setDrainCursors(p.key,
+              if (pendingNext.isEmpty) Map.empty else nextCursors)
+            state.setTickState(p.key,
+              TickState(s.token, s.highWater, s.hwTies, lag, pendingNext))
           }
-          val changedP = changed.persist()
-          try {
-            val cnt = changedP.agg(
-              count(lit(1)).as("n"),
-              count(when(col("__complete_old"), lit(1))).as("rep"))
-              .collect()(0)
-            nWritten = cnt.getLong(0)
-            if (nWritten > 0) {
-              rep = cnt.getLong(1)
-              writer.writeBucketsBulk(spark, spec.name, symbol,
-                changedP.drop("__complete_old"), callerPinned = true)
-            }
-          } finally { changedP.unpersist(); () }
+          if (gated(p)) {
+            // the gate-skip is a COMPLETE account of this lake state for
+            // this tick: nothing completable exists, so nothing ever
+            // will until the ledger moves — record the token so the next
+            // poll skips at file-read cost (with the drain cursor
+            // preserved if a cap truncated us here)
+            val lag = fleetLag(sp, latest, p.watermarks)
+            recordTick(lag)
+            IncrementalResult(0, 0, 0, 0, lag)
+          } else {
+            val res = aggregateWindows(spark, reader, writer, state, htfRoot,
+              sp, allowIncomplete, windows, shared)
+            val lag = fleetLag(sp, latest, state.getAll(sp.name))
+            recordTick(lag)
+            res.copy(lagMinutes = lag)
+          }
         }
-        (total, nWritten, if (allowIncomplete) 0L else total - nComplete, rep,
-          lastComplete)
-      } finally aggregated.unpersist()
-
-    // watermark advance from the window's OBSERVED complete buckets,
-    // monotone against the stored value — a bounded read cannot see
-    // pre-window completes, and the watermark must never regress
-    // (re-scanning the lake from an old gap to now would otherwise
-    // follow)
-    val lastCompleted = (windowCompleted.toSeq ++ wmBefore.toSeq)
-      .maxOption(Ordering.by[Instant, Long](_.toEpochMilli))
-    lastCompleted.filter(lc => !wmBefore.contains(lc))
-      .foreach(state.set(symbol, spec.name, _))
-
-    val lag = lastCompleted.map { lc =>
-      val lagMs = latestMinute.toEpochMilli - spec.addBuckets(lc).toEpochMilli + 60000L
-      math.max(lagMs / 60000L, 0L)
-    }
-    recordTick(lag)
-    IncrementalResult(scanned, written, skipped, repaired, lag)
+      }
+      // close the budget loop: record this poll's (scanning-specs,
+      // scanned, wall) observation for the two-term fit, and keep the
+      // legacy single-term EWMA updated — it remains the marginal-term
+      // fallback until the model has ≥2 non-collinear observations
+      // (and the explicit seeding knob for deployments that know
+      // their hardware).
+      if (effBudget > 0 && scanning.nonEmpty) {
+        // record every poll that actually launched spec scans — a capped
+        // poll whose window held only calendar gap (scanned = 0, sparse
+        // corpus) still paid the per-spec fixed machinery, and its
+        // (liveSpecs, 0, wall) triple anchors the two-term fit's FIXED
+        // term directly (gating on scanned > 0 starves the model of its
+        // second observation on sparse corpora). Token-skip polls never
+        // reach here. The EWMA marginal estimate still needs
+        // scanned > 0.
+        val scanned = results.map(_._2.bucketsScanned).sum
+        val elapsedMs = (System.nanoTime() - t0) / 1e6
+        state.addCostObservation(scanning.size.toLong, scanned, elapsedMs)
+        if (scanned > 0) {
+          val measured = math.min(100.0, math.max(0.01,
+            math.max(elapsedMs - SteadyFloorMs, 1.0) / scanned))
+          val prev = state.getCostPerBucketMs.getOrElse(DefaultBucketCostMs)
+          state.setCostPerBucketMs(0.5 * prev + 0.5 * measured)
+        }
+      }
+      results
+    } finally shared.foreach { df => df.unpersist(); () }
   }
 
-  /** Whole-lake incremental run: EVERY symbol's repair window in ONE
-    * pipeline. Each symbol's window starts at
-    * min(next-after-its-watermark, its-latest-minute − lookback) — the
-    * per-symbol bounds are a tiny broadcast frame joined against the
-    * lake scan, so the driver never loops symbols; only the per-symbol
-    * watermark map (already O(symbols) state) crosses the driver. */
-  def runIncrementalAll(spark: SparkSession, reader: MinuteLakeReader,
-                        writer: HtfLakeWriter, state: AggregatorStateStore,
-                        htfRoot: String, spec: TimeframeSpec,
-                        allowIncomplete: Boolean = false,
-                        repairLookbackMinutes: Long = 120,
-                        sourceLedger: Option[PartitionLedger] = None,
-                        maxBucketsPerTick: Int = 0)
-      : IncrementalResult =
-    incrementalAllExec(spark, reader, writer, state, htfRoot, spec,
-      allowIncomplete, repairLookbackMinutes,
-      sourceLedger.flatMap(sourceSnapshot), latestOverride = None,
-      sourceOverride = None, maxBucketsPerTick = maxBucketsPerTick)
-
-  private def incrementalAllExec(
-      spark: SparkSession, reader: MinuteLakeReader,
-      writer: HtfLakeWriter, state: AggregatorStateStore,
-      htfRoot: String, spec: TimeframeSpec,
-      allowIncomplete: Boolean, repairLookbackMinutes: Long,
-      snap: Option[SourceSnapshot],
-      latestOverride: Option[Map[String, Instant]],
-      sourceOverride: Option[DataFrame],
-      maxBucketsPerTick: Int = 0,
-      pollBudgetMs: Long = 0): IncrementalResult =
-    // gated fleet ticks re-resolve on a vanished version (VERDICT r17
-    // #2); re-run-safe as a whole — see runBackfill's wrap rationale.
-    // A caller-supplied sourceOverride is already eagerly pinned by
-    // runFleetTick (see its union-read materialization), so the retry
-    // never needs to re-resolve through a stale override plan.
-    graft.sources.ResolvedScan.retryOnVanishedVersion() {
-      incrementalAllOnce(spark, reader, writer, state, htfRoot, spec,
-        allowIncomplete, repairLookbackMinutes, snap, latestOverride,
-        sourceOverride, maxBucketsPerTick, pollBudgetMs)
-    }
-
-  private def incrementalAllOnce(
-      spark: SparkSession, reader: MinuteLakeReader,
-      writer: HtfLakeWriter, state: AggregatorStateStore,
-      htfRoot: String, spec: TimeframeSpec,
-      allowIncomplete: Boolean, repairLookbackMinutes: Long,
-      snap: Option[SourceSnapshot],
-      latestOverride: Option[Map[String, Instant]],
-      sourceOverride: Option[DataFrame],
-      maxBucketsPerTick: Int,
-      pollBudgetMs: Long = 0): IncrementalResult = {
-    import spark.implicits._
-    // ---- ledger gate (r16, forced by FleetTickProbe): if the minute
-    // lake's partition ledger is bit-identical to what this tick's
-    // last FULL run accounted for, re-running would re-aggregate the
-    // lookback window across the whole width only to write-skip every
-    // row (bucket completeness is data-driven, so an unchanged lake
-    // can complete no bucket and move no watermark). Skip at the cost
-    // of one small file read, returning the last run's lag (data lag
-    // is latest-vs-watermark; neither moved).
-    val key = tickKey(spec, allowIncomplete, repairLookbackMinutes,
-      maxBucketsPerTick = maxBucketsPerTick, pollBudgetMs = pollBudgetMs)
-    val stored = if (snap.isDefined) state.getTickState(key) else None
-    // a recorded pendingFrom means the last capped tick drained only
-    // part of its window — an unchanged token must NOT skip until the
-    // carried remainder is drained (VERDICT r16 #4)
-    if (snap.isDefined && stored.exists(st =>
-          st.token == snap.get.token && st.pendingFrom.isEmpty))
-      return IncrementalResult(0, 0, 0, 0, stored.get.lagMinutes)
-    def recordTick(lag: Option[Long], pending: Option[Instant] = None,
-                   cursors: Map[String, Instant] = Map.empty): Unit =
-      snap.foreach { s =>
-        // cursors land BEFORE the tick state: a crash between the two
-        // putStates must never leave a visible pendingFrom without its
-        // cursor map (the reverse — a stale cursor file under a
-        // cleared/absent pendingFrom — is ignored by construction)
-        state.setDrainCursors(key, if (pending.isEmpty) Map.empty else cursors)
-        state.setTickState(key,
-          TickState(s.token, s.highWater, s.hwTies, lag, pending))
-      }
+  /** Per-symbol windows of one live spec. Window lo per symbol = the
+    * earliest of its changed-floor (or blind lookback), its carried
+    * drain cursor, and the bucket after its watermark; hi = its latest
+    * minute. */
+  private def planSpec(sp: TimeframeSpec, key: String,
+                       recorded: Option[TickState],
+                       watermarks: Map[String, Instant],
+                       snap: Option[SourceSnapshot],
+                       latest: Map[String, Instant],
+                       state: AggregatorStateStore,
+                       repairLookbackMinutes: Long): SpecPlan = {
     // Data-driven repair window (r16): the blind lookback exists to
     // catch late minutes landing behind the watermark — but the ledger
     // KNOWS where writes landed since the last tick. When every commit
@@ -1059,22 +771,10 @@ object AggregatorRunner {
     // late write to an old partition extends the window BACK past the
     // blind lookback (the repair it would have missed).
     val changedFloor: Option[Instant] = (for {
-      s <- snap; st <- stored; hw <- st.highWater
-    } yield changedSince(s, hw, st.hwTies)).flatMap {
-      case ChangeFrom(lo) => Some(spec.floorInstant(lo))
-      case _ => None // ChangeUnknown/ChangeNone: blind lookback
+      s <- snap; st <- recorded; hw <- st.highWater
+    } yield changedSince(s, hw, st.hwTies)).collect {
+      case ChangeFrom(lo) => sp.floorInstant(lo)
     }
-    // ONE store read for all symbols (per-symbol get() re-parses the
-    // whole watermark file per call — O(width²) at width 10k)
-    val wmAll = state.getAll(spec.name)
-    // per-symbol latest via partition-directory descent (reads ONE hour
-    // partition per symbol, not the lake's history — the steady-state
-    // tick must not scale with lake depth). Watermarked symbols absent
-    // from the wide layout's recent-day scan (idle > 2 days) are
-    // end-probed so their trailing buckets still finalize (ADVICE r13).
-    val latest = latestOverride.getOrElse(
-      reader.latestMinuteAllSymbols(spark, wmAll.keySet))
-    if (latest.isEmpty) return IncrementalResult(0, 0, 0, 0, None)
     // carried drain cursor: a previous capped tick stopped here — this
     // tick's windows must pick up at it. On a PURE resume (unchanged
     // token) the cursor IS the start: nothing landed since the cursor's
@@ -1083,15 +783,13 @@ object AggregatorRunner {
     // already drained, and the cursor would never advance. When the
     // token moved too, the window floor is the EARLIER of the cursor
     // and the ledger-derived floor (old backlog ∪ new writes).
-    val resumeFloor = stored.flatMap(_.pendingFrom).map(spec.floorInstant)
+    val resumeFloor = recorded.flatMap(_.pendingFrom).map(sp.floorInstant)
     val pureResume = resumeFloor.isDefined &&
-      snap.exists(s => stored.exists(_.token == s.token))
+      snap.exists(s => recorded.exists(_.token == s.token))
     // Per-symbol drain cursors (VERDICT r17 #3): the tick state's
     // pendingFrom is the fleet-wide MIN of un-drained starts, and
     // resuming EVERY symbol there re-scanned already-drained symbols
-    // on each capped poll (write-skipped, so correct — but the
-    // scan/aggregate cost recurred and skewed backlogs drained in more
-    // polls than needed). The cursor STORE carries each pending
+    // on each capped poll. The cursor STORE carries each pending
     // symbol's own first un-drained bucket start; a symbol ABSENT from
     // a non-empty map is drained — its capped window reached its
     // then-head, and a pure resume (unchanged token) means nothing
@@ -1100,7 +798,7 @@ object AggregatorRunner {
     // back to the global floor (the legacy shape).
     val drainCursors: Map[String, Instant] =
       if (resumeFloor.isDefined) state.getDrainCursors(key) else Map.empty
-    val boundsSeq = latest.toSeq.map { case (sym, latestMinute) =>
+    val windows = latest.toSeq.map { case (sym, latestMinute) =>
       val cursor = drainCursors.get(sym.toUpperCase)
       val start =
         if (pureResume)
@@ -1108,10 +806,10 @@ object AggregatorRunner {
             if (drainCursors.nonEmpty)
               // drained symbol: first bucket past its head — an empty
               // window (its latest cannot reach it)
-              spec.addBuckets(spec.floorInstant(latestMinute))
+              sp.addBuckets(sp.floorInstant(latestMinute))
             else resumeFloor.get)
         else {
-          val repairStart0 = changedFloor.getOrElse(spec.floorInstant(
+          val repairStart0 = changedFloor.getOrElse(sp.floorInstant(
             latestMinute.minus(repairLookbackMinutes, ChronoUnit.MINUTES)))
           // token moved mid-drain: the floor is the EARLIER of this
           // symbol's own backlog cursor and the ledger-derived repair
@@ -1121,77 +819,83 @@ object AggregatorRunner {
             cursor.orElse(if (drainCursors.nonEmpty) None else resumeFloor)
           val repairStart =
             drainFloor.filter(_.isBefore(repairStart0)).getOrElse(repairStart0)
-          wmAll.get(sym.toUpperCase) match {
+          watermarks.get(sym.toUpperCase) match {
             case Some(lastCompleted) =>
-              val next = spec.addBuckets(lastCompleted)
+              val next = sp.addBuckets(lastCompleted)
               if (next.isBefore(repairStart)) next else repairStart
             case None => repairStart
           }
         }
       (sym, start, latestMinute)
     }
-    // Bounded drain (VERDICT r16 #4): cap each symbol's window at
-    // `maxBucketsPerTick` buckets and carry the first un-drained
-    // bucket start forward as the next tick's cursor. A cold daemon
-    // behind a day of backlog then drains in budget-bounded polls
-    // (each ≤ cap buckets × width) instead of one 25-minute poll;
-    // cap = 0 keeps the uncapped single-poll drain.
-    val (drainBounds, pendingNext, nextCursors) =
-      if (maxBucketsPerTick <= 0)
-        (boundsSeq, None, Map.empty[String, Instant])
-      else {
-        val capped = boundsSeq.map { case (sym, start, lm) =>
-          val capEnd = spec.addBuckets(start, maxBucketsPerTick)
-            .minus(1, ChronoUnit.MINUTES) // last minute of bucket cap-1
-          if (capEnd.isBefore(lm)) ((sym, start, capEnd), Some(spec.addBuckets(start, maxBucketsPerTick)))
-          else ((sym, start, lm), None)
-        }
-        (capped.map(_._1),
-          capped.flatMap(_._2).minByOption(_.toEpochMilli),
-          // per-symbol resume points: pending symbols only — drained
-          // symbols leave the map, which IS their drained signal
-          capped.collect { case ((sym, _, _), Some(next)) =>
-            sym.toUpperCase -> next }.toMap)
+    SpecPlan(sp, key, watermarks, windows)
+  }
+
+  /** Bounded drain (VERDICT r16 #4): cap each symbol's window at `cap`
+    * buckets and carry the first un-drained bucket start forward as the
+    * next tick's cursor. A cold daemon behind a day of backlog then
+    * drains in budget-bounded polls (each ≤ cap buckets × width)
+    * instead of one 25-minute poll; cap = 0 keeps the uncapped
+    * single-poll drain. Returns the capped windows, the fleet-wide
+    * resume floor, and the per-symbol resume points — pending symbols
+    * only; drained symbols leave the map, which IS their drained
+    * signal. */
+  private def capWindows(p: SpecPlan, cap: Int)
+      : (Seq[(String, Instant, Instant)], Option[Instant], Map[String, Instant]) =
+    if (cap <= 0) (p.windows, None, Map.empty)
+    else {
+      val capped = p.windows.map { case (sym, start, lm) =>
+        val next = p.spec.addBuckets(start, cap)
+        val capEnd = next.minus(1, ChronoUnit.MINUTES) // last minute of bucket cap-1
+        if (capEnd.isBefore(lm)) ((sym, start, capEnd), Some(next))
+        else ((sym, start, lm), None)
       }
-    // Completable-bucket gate, fleet-wide (see runIncremental): if NO
-    // symbol's window can contain a complete bucket, the whole tick's
-    // scan+aggregation would produce zero writable rows — skip it. The
-    // check is O(symbols) driver arithmetic on the bounds already in
-    // hand.
-    if (!allowIncomplete && drainBounds.forall { case (_, start, lm) =>
-          spec.latestCompleteBucketStart(lm).forall(_.isBefore(start)) }) {
-      val perSymbolLag = boundsSeq.map { case (sym, _, lm) =>
-        wmAll.get(sym.toUpperCase).map { lc =>
-          math.max((lm.toEpochMilli - spec.addBuckets(lc).toEpochMilli
-            + 60000L) / 60000L, 0L)
-        }
-      }
-      val lag =
-        if (perSymbolLag.exists(_.isEmpty)) None
-        else perSymbolLag.flatten.maxOption
-      // the gate-skip is a COMPLETE account of this lake state for
-      // this tick: nothing completable exists, so nothing ever will
-      // until the ledger moves — record the token so the next poll
-      // skips at file-read cost instead of re-deriving the gate
-      // (with the drain cursor preserved if a cap truncated us here)
-      recordTick(lag, pendingNext, nextCursors)
-      return IncrementalResult(0, 0, 0, 0, lag)
+      (capped.map(_._1),
+        capped.flatMap(_._2).minByOption(_.toEpochMilli),
+        capped.collect { case ((sym, _, _), Some(next)) =>
+          sym.toUpperCase -> next }.toMap)
     }
-    val bounds = drainBounds
+
+  /** Fleet lag = worst symbol's distance from its own latest minute; a
+    * symbol with minutes but NO completed bucket yet has unbounded lag,
+    * so the metric is unknown (None), not a healthy number computed
+    * only from caught-up symbols. */
+  private def fleetLag(sp: TimeframeSpec, latest: Map[String, Instant],
+                       watermarks: Map[String, Instant]): Option[Long] = {
+    val perSymbol = latest.toSeq.map { case (sym, lm) =>
+      watermarks.get(sym.toUpperCase).map { lc =>
+        math.max((lm.toEpochMilli - sp.addBuckets(lc).toEpochMilli + 60000L)
+          / 60000L, 0L)
+      }
+    }
+    if (perSymbol.exists(_.isEmpty)) None else perSymbol.flatten.maxOption
+  }
+
+  /** Aggregate one spec over its per-symbol windows, write the buckets
+    * whose content changed, and advance the watermarks. `shared`, when
+    * given, is a persisted read covering every window. The result's lag
+    * is left for the caller. */
+  private def aggregateWindows(spark: SparkSession, reader: MinuteLakeReader,
+                               writer: HtfLakeWriter,
+                               state: AggregatorStateStore, htfRoot: String,
+                               spec: TimeframeSpec, allowIncomplete: Boolean,
+                               windows: Seq[(String, Instant, Instant)],
+                               shared: Option[DataFrame]): IncrementalResult = {
+    import spark.implicits._
+    val bounds = windows
       .map { case (s, st, lt) =>
         (s, java.sql.Timestamp.from(st), java.sql.Timestamp.from(lt)) }
       .toDF("symbol", "__start", "__latest")
-
     // global bounds come from the driver-local seq — no Spark job needed
-    val globalLo = drainBounds.map(_._2).minBy(_.toEpochMilli)
-    val globalHi = drainBounds.map(_._3).maxBy(_.toEpochMilli)
-    val source = sourceOverride
+    val globalLo = windows.map(_._2).minBy(_.toEpochMilli)
+    val globalHi = windows.map(_._3).maxBy(_.toEpochMilli)
+    val source = shared
       .getOrElse(reader.readWindowAllSymbols(spark, globalLo, globalHi).get)
       .join(broadcast(bounds), Seq("symbol"))
       .where(col("timestamp").between(col("__start"), col("__latest")))
       .drop("__start", "__latest")
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(htfRoot),
+    val fs = FileSystem.get(new java.net.URI(htfRoot),
       spark.sparkContext.hadoopConfiguration)
     val tfDir = s"$htfRoot/timeframe=${spec.name}"
     val farEnd = Instant.parse("9999-01-01T00:00:00Z")
@@ -1228,11 +932,9 @@ object AggregatorRunner {
         if (allowIncomplete) aggregated else aggregated.where(col("bucket_complete"))
       // ONE action over the persisted aggregation serves BOTH the
       // global counters and the per-symbol complete-bucket watermarks
-      // advanceAll needs below (r20): the busy tick previously paid a
-      // second full stage over the cached frame for the watermark
-      // collect — at width 10k that is a second 10k-group aggregation
-      // per spec per poll. The collect is width-bounded (one row per
-      // symbol), the same bound advanceAll's collect already had.
+      // advanceAll needs below — a separate watermark collect would be
+      // a second width-sized aggregation per spec per poll. The collect
+      // is width-bounded (one row per symbol).
       val perSym = aggregated.groupBy("symbol").agg(
         count(lit(1)).as("n"),
         sum(when(col("bucket_complete"), 1L).otherwise(0L)).as("nc"),
@@ -1250,19 +952,13 @@ object AggregatorRunner {
         // no-news tick over a 1000-symbol lake otherwise rewrites
         // lookback/bucket buckets per symbol per cadence — measured
         // 3000 bucket writes per no-op tick at width 1000 (HtfWidthProbe).
-        // Fingerprint = md5 of to_json(struct(cmpCols)): keyed fields and
-        // JSON escaping make the encoding unambiguous (a '|'-joined cast
-        // collides on values containing the separator), and nulls stay
-        // explicit so ("x", null) != (null, "x").
         val tfDirPath = new HPath(tfDir)
-        // `__complete_old` rides the fingerprint compare (r20): the
-        // repaired count used to be a SECOND action — a semi-join of
-        // the changed rows against a separate window read of the
-        // existing index — paid on every writing poll. One aggregate
-        // action below yields nWritten AND repaired together. The
-        // stored side is summarized per key inside the shared compare
-        // (r21), so a duplicate-keyed tree cannot fan the counters out
-        // and is healed by the forced rewrite.
+        // `__complete_old` rides the fingerprint compare, so one
+        // aggregate action below yields nWritten AND repaired together
+        // (no separate index read + semi-join per writing poll). The
+        // stored side is summarized per key inside the compare, so a
+        // duplicate-keyed tree cannot fan the counters out and is
+        // healed by the forced rewrite.
         val changed =
           if (!fs.exists(tfDirPath) || (wideTf && windowDays.isEmpty) ||
               (mustResolve && !wideTf && hourlyResolvedWindowLeaves.isEmpty))
@@ -1276,7 +972,7 @@ object AggregatorRunner {
             // int-inferred values) scan-prunes to the lookback days —
             // a data-column-only filter on bucket_start would walk the
             // whole table history on every tick.
-            val lo = spec.floorInstant(globalLo)
+            val lo = loBound
             val existingFull =
               if (wideTf)
                 spark.read.option("basePath", tfDir).parquet(windowDays: _*)
@@ -1335,300 +1031,83 @@ object AggregatorRunner {
             .filter(!_.isNullAt(3))
             .map(r => r.getString(0) -> r.getTimestamp(3).toInstant).toMap)
       }
-      // lag = worst symbol's distance from its own latest minute; a
-      // symbol with minutes but NO completed bucket yet has unbounded
-      // lag, so the fleet metric is unknown (None), not a healthy number
-      // computed only from caught-up symbols
-      val wmAfter = state.getAll(spec.name)
-      val perSymbolLag = latest.toSeq.map { case (sym, lm) =>
-        wmAfter.get(sym.toUpperCase).map { lc =>
-          math.max((lm.toEpochMilli - spec.addBuckets(lc).toEpochMilli + 60000L)
-            / 60000L, 0L)
-        }
-      }
-      val lag =
-        if (perSymbolLag.exists(_.isEmpty)) None
-        else perSymbolLag.flatten.maxOption
-      recordTick(lag, pendingNext, nextCursors)
       IncrementalResult(total, nWritten,
-        if (allowIncomplete) 0L else total - nComplete, repaired, lag)
+        if (allowIncomplete) 0L else total - nComplete, repaired, None)
     } finally aggregated.unpersist()
   }
 
-  /** One fleet poll: EVERY timeframe spec ticks against the same
-    * minute lake, sharing what is shareable (the production deployment
-    * shape — reference `aggregator/config.py:17-21` runs 12 specs on a
-    * 30 s poll). Per spec this is exactly [[runIncrementalAll]]'s
-    * semantics; across specs it shares three costs the per-spec loop
-    * pays `specs.size` times over:
-    *
-    *  1. ONE ledger snapshot decides every spec's token skip — a
-    *     no-news poll is `specs.size` file reads, zero Spark jobs
-    *     (FleetTickProbe r16 measured the ungated loop at 109–121 s
-    *     per steady poll at width 10k × 12 specs vs a 30 s budget);
-    *  2. ONE `latestMinuteAllSymbols` scan serves every non-skipped
-    *     spec (the per-spec loop re-derives the identical map);
-    *  3. ONE minute-lake read over the UNION of the live specs'
-    *     repair windows, persisted and re-filtered per spec (the
-    *     per-spec loop re-reads overlapping windows from parquet).
-    *
-    * Returns results in `specs` order. */
-  def runFleetTick(spark: SparkSession, reader: MinuteLakeReader,
-                   writer: HtfLakeWriter, state: AggregatorStateStore,
-                   htfRoot: String, specs: Seq[TimeframeSpec],
-                   sourceLedger: Option[PartitionLedger] = None,
-                   allowIncomplete: Boolean = false,
-                   repairLookbackMinutes: Long = 120,
-                   maxBucketsPerTick: Int = 0,
-                   pollBudgetMs: Long = 0)
-      : Seq[(String, IncrementalResult)] = {
-    val t0 = System.nanoTime()
-    // an explicit cap wins over a budget (the budget exists to replace
-    // hand-tuned caps, not to second-guess one the deployment chose)
-    val effBudget = if (maxBucketsPerTick > 0) 0L else pollBudgetMs
-    val snap = sourceLedger.flatMap(sourceSnapshot)
-    val storedBy = specs.map { sp =>
-      sp.name -> (if (snap.isDefined)
-        state.getTickState(tickKey(sp, allowIncomplete, repairLookbackMinutes,
-          maxBucketsPerTick = maxBucketsPerTick, pollBudgetMs = effBudget))
-      else None)
-    }.toMap
-    // a spec with a carried drain cursor stays live on an unchanged
-    // token — its capped predecessor left backlog behind (r16 #4)
-    val live = specs.filterNot(sp =>
-      snap.isDefined && storedBy(sp.name).exists(st =>
-        st.token == snap.get.token && st.pendingFrom.isEmpty))
-    if (live.isEmpty)
-      return specs.map(sp => sp.name ->
-        IncrementalResult(0, 0, 0, 0, storedBy(sp.name).flatMap(_.lagMinutes)))
-
-    // shared latest: union of the live specs' watermark key sets, so
-    // every spec's end-probe reconciliation set is covered
-    val wmKeys = live.flatMap(sp => state.getAll(sp.name).keySet).toSet
-    val latest = reader.latestMinuteAllSymbols(spark, wmKeys)
-    val latestFor = if (latest.isEmpty) None else Some(latest)
-
-    // Pre-pass: every live spec's UNCAPPED per-symbol windows. Window
-    // lo per symbol = its changed-floor (or blind lookback, or its
-    // carried drain cursor) — the same math the per-spec core applies;
-    // hi = the symbol's latest minute. Computed BEFORE the cap so the
-    // budget sizer sees the REAL per-symbol backlogs (r19: the
-    // cap × width × live-specs volume estimate overstates scan cost by
-    // the deep-to-shallow backlog ratio — a 1h spec has 20× fewer
-    // pending buckets than 3m over the same lag). Gating here uses the
-    // uncapped end, which is equivalent: starts are bucket-aligned, so
-    // a capped window of ≥1 whole bucket completes a bucket iff the
-    // uncapped one does. Gated specs drop out — they launch no scan,
-    // pay no cap, and must not drag the union read backward.
-    val specWindows: Seq[(graft.schema.TimeframeSpec,
-                          Seq[(String, Instant, Instant)])] =
-      if (latest.isEmpty) Nil
-      else live.flatMap { sp =>
-        val wmAll = state.getAll(sp.name)
-        val cf = (for {
-          s <- snap; st <- storedBy(sp.name); hw <- st.highWater
-        } yield changedSince(s, hw, st.hwTies)).flatMap {
-          case ChangeFrom(lo) => Some(sp.floorInstant(lo))
-          case _ => None
+  /** Budget-derived cap (VERDICT r17 #4; two-term + backlog-aware
+    * since r19): with a fitted model (wall ≈ fixed × scanning-specs +
+    * marginal × scanned — see fitCostModel), the cap is the largest c
+    * whose PREDICTED wall fits the budget, where predicted scan volume
+    * is Σ_spec Σ_sym min(c, backlog) over the scanning specs' real
+    * windows — not cap × width × live-specs, which overstates volume
+    * whenever spec backlogs are shallower than the cap (a 1h spec has
+    * 20× fewer pending buckets than 3m over the same lag). Before the
+    * model exists (cold start, <2 non-collinear observations) the r18
+    * seeded closed form applies unchanged, so explicitly-seeded
+    * deployments derive the same first cap. FLOOR at the r17-validated
+    * amortization cap either way: below ~20 buckets/symbol/poll fixed
+    * costs dominate and every poll gets SLOWER per unit of progress; an
+    * infeasible budget is reported loudly WITH the measured minimum
+    * feasible budget. */
+  private def budgetCap(state: AggregatorStateStore, budgetMs: Long,
+                        scanning: Seq[SpecPlan], width: Int,
+                        liveSpecs: Int): Int =
+    fitCostModel(state.getCostObservations) match {
+      case Some((fSpec, mMs)) =>
+        val backlogs: Seq[Array[Long]] = scanning.map(p =>
+          p.windows.map { case (_, start, lmEnd) =>
+            bucketsSpanned(p.spec, start, lmEnd) }.toArray)
+        val nScanning = math.max(scanning.size, 1)
+        def predicted(c: Long): Double =
+          fSpec * nScanning + mMs * backlogs.iterator.map(arr =>
+            arr.iterator.map(b => math.min(b, c)).sum).sum
+        val maxBacklog = backlogs.iterator.flatMap(_.iterator)
+          .foldLeft(MinBudgetCap.toLong)(math.max)
+        BudgetTelemetry.lastModel = (fSpec, mMs)
+        if (predicted(MinBudgetCap.toLong) > budgetMs) {
+          BudgetTelemetry.lastDerivedCap = 0 // sub-floor: infeasible
+          System.err.println(s"[graft][AggregatorRunner] poll budget " +
+            s"$budgetMs ms is infeasible at width=$width x " +
+            s"scanning-specs=$nScanning (model fixed=${fSpec.toLong} " +
+            "ms/spec + " +
+            String.format(java.util.Locale.ROOT, "%.3f", Double.box(mMs)) +
+            s" ms/bucket): measured minimum feasible budget is " +
+            s"~${predicted(MinBudgetCap.toLong).toLong} ms; raise the " +
+            "budget, shrink the spec set, or accept floor-cap drains")
+          MinBudgetCap
+        } else {
+          var lo = MinBudgetCap.toLong
+          var hi = maxBacklog
+          while (lo < hi) {
+            val mid = (lo + hi + 1) / 2
+            if (predicted(mid) <= budgetMs) lo = mid else hi = mid - 1
+          }
+          BudgetTelemetry.lastDerivedCap = lo.toInt
+          lo.toInt
         }
-        val resume = storedBy(sp.name).flatMap(_.pendingFrom).map(sp.floorInstant)
-        val pureResume = resume.isDefined &&
-          snap.exists(s => storedBy(sp.name).exists(_.token == s.token))
-        // per-symbol drain cursors (VERDICT r17 #3) — the union bound
-        // must not drag every symbol's window back to the fleet-wide
-        // cursor; same resume semantics as the per-spec core
-        val drainCursors: Map[String, Instant] =
-          if (resume.isDefined)
-            state.getDrainCursors(tickKey(sp, allowIncomplete,
-              repairLookbackMinutes, maxBucketsPerTick = maxBucketsPerTick,
-              pollBudgetMs = effBudget))
-          else Map.empty
-        val spans = latest.toSeq.map { case (sym, latestMinute) =>
-          val cursor = drainCursors.get(sym.toUpperCase)
-          val start = if (pureResume)
-            cursor.getOrElse(
-              if (drainCursors.nonEmpty)
-                sp.addBuckets(sp.floorInstant(latestMinute)) // drained
-              else resume.get)
-          else {
-            val repairStart0 = cf.getOrElse(sp.floorInstant(
-              latestMinute.minus(repairLookbackMinutes, ChronoUnit.MINUTES)))
-            val drainFloor =
-              cursor.orElse(if (drainCursors.nonEmpty) None else resume)
-            val repairStart =
-              drainFloor.filter(_.isBefore(repairStart0)).getOrElse(repairStart0)
-            wmAll.get(sym.toUpperCase) match {
-              case Some(lastCompleted) =>
-                val next = sp.addBuckets(lastCompleted)
-                if (next.isBefore(repairStart)) next else repairStart
-              case None => repairStart
-            }
-          }
-          (sym, start, latestMinute)
+      case None =>
+        // cold start: the r18 seeded closed form
+        val w = math.max(width, 1)
+        val margMs = state.getCostPerBucketMs.getOrElse(DefaultBucketCostMs)
+        val denom = margMs * w.toDouble * math.max(liveSpecs, 1)
+        val derived = ((budgetMs.toDouble - SteadyFloorMs) / denom).toInt
+        BudgetTelemetry.lastModel = (SteadyFloorMs.toDouble, margMs)
+        BudgetTelemetry.lastDerivedCap = derived
+        if (derived < MinBudgetCap) {
+          val minFeasibleMs = (SteadyFloorMs + denom * MinBudgetCap).toLong
+          System.err.println(s"[graft][AggregatorRunner] poll budget " +
+            s"$budgetMs ms is infeasible at width=$w x " +
+            s"live-specs=$liveSpecs (derived cap $derived < floor " +
+            s"$MinBudgetCap at seeded " +
+            String.format(java.util.Locale.ROOT, "%.3f", Double.box(margMs)) +
+            s" ms/bucket): measured minimum feasible budget is " +
+            s"~$minFeasibleMs ms; raise the budget, shrink the spec " +
+            "set, or accept floor-cap drains")
         }
-        val gated = !allowIncomplete && spans.forall {
-          case (_, start, lmEnd) =>
-            sp.latestCompleteBucketStart(lmEnd).forall(_.isBefore(start))
-        }
-        if (gated) None else Some(sp -> spans)
-      }
-
-    // Budget-derived cap (VERDICT r17 #4; two-term + backlog-aware
-    // since r19): with a fitted model (wall ≈ fixed × scanning-specs +
-    // marginal × scanned — see fitCostModel), the cap is the largest c
-    // whose PREDICTED wall fits the budget, where predicted scan
-    // volume is Σ_spec Σ_sym min(c, backlog) over the pre-pass's real
-    // windows — not cap × width × live-specs, which overstates volume
-    // whenever spec backlogs are shallower than the cap and made the
-    // r19 probe's first feasible-budget leg land every poll far under
-    // budget. Before the model exists (cold start, <2 non-collinear
-    // observations) the r18 seeded closed form applies unchanged, so
-    // explicitly-seeded deployments derive the same first cap. FLOOR
-    // at the r17-validated amortization cap either way: below ~20
-    // buckets/symbol/poll fixed costs dominate and every poll gets
-    // SLOWER per unit of progress; an infeasible budget is reported
-    // loudly WITH the measured minimum feasible budget.
-    val effCap =
-      if (effBudget <= 0) maxBucketsPerTick
-      else fitCostModel(state.getCostObservations) match {
-        case Some((fSpec, mMs)) =>
-          val backlogs: Seq[Array[Long]] = specWindows.map { case (sp, spans) =>
-            spans.map { case (_, start, lmEnd) =>
-              bucketsSpanned(sp, start, lmEnd) }.toArray
-          }
-          val nScanning = math.max(specWindows.size, 1)
-          def predicted(c: Long): Double =
-            fSpec * nScanning + mMs * backlogs.iterator.map(arr =>
-              arr.iterator.map(b => math.min(b, c)).sum).sum
-          val maxBacklog = backlogs.iterator.flatMap(_.iterator)
-            .foldLeft(MinBudgetCap.toLong)(math.max)
-          BudgetTelemetry.lastModel = (fSpec, mMs)
-          if (predicted(MinBudgetCap.toLong) > effBudget) {
-            BudgetTelemetry.lastDerivedCap = 0 // sub-floor: infeasible
-            System.err.println(s"[graft][AggregatorRunner] poll budget " +
-              s"${effBudget} ms is infeasible at width=${latest.size} x " +
-              s"scanning-specs=$nScanning (model fixed=${fSpec.toLong} " +
-              "ms/spec + " +
-              String.format(java.util.Locale.ROOT, "%.3f", Double.box(mMs)) +
-              s" ms/bucket): measured minimum feasible budget is " +
-              s"~${predicted(MinBudgetCap.toLong).toLong} ms; raise the " +
-              "budget, shrink the spec set, or accept floor-cap drains")
-            MinBudgetCap
-          } else {
-            var lo = MinBudgetCap.toLong
-            var hi = maxBacklog
-            while (lo < hi) {
-              val mid = (lo + hi + 1) / 2
-              if (predicted(mid) <= effBudget) lo = mid else hi = mid - 1
-            }
-            BudgetTelemetry.lastDerivedCap = lo.toInt
-            lo.toInt
-          }
-        case None =>
-          // cold start: the r18 seeded closed form
-          val width = math.max(latest.size, 1)
-          val margMs = state.getCostPerBucketMs.getOrElse(DefaultBucketCostMs)
-          val denom = margMs * width.toDouble * math.max(live.size, 1)
-          val derived = ((effBudget.toDouble - SteadyFloorMs) / denom).toInt
-          BudgetTelemetry.lastModel = (SteadyFloorMs.toDouble, margMs)
-          BudgetTelemetry.lastDerivedCap = derived
-          if (derived < MinBudgetCap) {
-            val minFeasibleMs = (SteadyFloorMs + denom * MinBudgetCap).toLong
-            System.err.println(s"[graft][AggregatorRunner] poll budget " +
-              s"${effBudget} ms is infeasible at width=$width x " +
-              s"live-specs=${live.size} (derived cap $derived < floor " +
-              s"$MinBudgetCap at seeded " +
-              String.format(java.util.Locale.ROOT, "%.3f", Double.box(margMs)) +
-              s" ms/bucket): measured minimum feasible budget is " +
-              s"~$minFeasibleMs ms; raise the budget, shrink the spec " +
-              "set, or accept floor-cap drains")
-          }
-          math.max(MinBudgetCap, derived)
-      }
-
-    // shared source: the union of live windows — the pre-pass spans
-    // with each end capped at effCap buckets; the per-spec core
-    // re-narrows via its bounds join.
-    val shared: Option[DataFrame] = latestFor.flatMap { _ =>
-      val bounds = specWindows.map { case (sp, spans) =>
-        val capped = spans.map { case (_, start, lmEnd) =>
-          val end =
-            if (effCap <= 0) lmEnd
-            else {
-              val capEnd = sp.addBuckets(start, effCap)
-                .minus(1, ChronoUnit.MINUTES)
-              if (capEnd.isBefore(lmEnd)) capEnd else lmEnd
-            }
-          (start, end)
-        }
-        (capped.map(_._1).minBy(_.toEpochMilli),
-          capped.map(_._2).maxBy(_.toEpochMilli))
-      }
-      for {
-        unionLo <- bounds.map(_._1).minByOption(_.toEpochMilli)
-        unionHi <- bounds.map(_._2).maxByOption(_.toEpochMilli)
-      } yield {
-        if (!writer.committer.readThroughResolve)
-          // identity deployments: paths never vanish; keep the lazy
-          // persist (the first spec's tick materializes the cache)
-          reader.readWindowAllSymbols(spark, unionLo, unionHi).get.persist()
-        else
-          // manifest deployments (VERDICT r17 #2): the shared union
-          // plan has resolved `.v_*` paths baked in and is consumed by
-          // EVERY spec's tick — a version GC'd after the first tick
-          // materialized part of the cache would die inside a later
-          // tick, whose own retry cannot re-resolve a caller-owned
-          // plan. Materialize the cache eagerly INSIDE the retry (the
-          // same single parquet pass the first tick would have paid);
-          // later ticks read only the pinned cache.
-          graft.sources.ResolvedScan.retryOnVanishedVersion() {
-            val df = reader.readWindowAllSymbols(spark, unionLo, unionHi)
-              .get.persist()
-            try { df.count(); df }
-            catch { case e: Throwable => df.unpersist(); throw e }
-          }
-      }
+        math.max(MinBudgetCap, derived)
     }
-    try {
-      val results = specs.map { sp =>
-        sp.name -> (
-          if (live.exists(_.name == sp.name))
-            incrementalAllExec(spark, reader, writer, state, htfRoot, sp,
-              allowIncomplete, repairLookbackMinutes, snap,
-              latestOverride = latestFor, sourceOverride = shared,
-              maxBucketsPerTick = effCap, pollBudgetMs = effBudget)
-          else IncrementalResult(0, 0, 0, 0,
-            storedBy(sp.name).flatMap(_.lagMinutes)))
-      }
-      // close the budget loop: record this poll's (scanning-specs,
-      // scanned, wall) observation for the two-term fit, and keep the
-      // legacy single-term EWMA updated — it remains the marginal-term
-      // fallback until the model has ≥2 non-collinear observations
-      // (and the explicit seeding knob for deployments that know
-      // their hardware).
-      if (effBudget > 0 && specWindows.nonEmpty) {
-        // record every poll that actually launched spec scans — a capped
-        // poll whose window held only calendar gap (scanned = 0, sparse
-        // corpus) still paid the per-spec fixed machinery, and its
-        // (liveSpecs, 0, wall) triple anchors the two-term fit's FIXED
-        // term directly (r20: the old scanned>0 gate starved the model
-        // of its second observation on sparse corpora — one scan poll +
-        // one gap poll left cost_obs_present=false). Token-skip polls
-        // never reach here (specWindows is empty for them). The EWMA
-        // marginal estimate still needs scanned > 0.
-        val scanned = results.map(_._2.bucketsScanned).sum
-        val elapsedMs = (System.nanoTime() - t0) / 1e6
-        state.addCostObservation(specWindows.size.toLong, scanned, elapsedMs)
-        if (scanned > 0) {
-          val measured = math.min(100.0, math.max(0.01,
-            math.max(elapsedMs - SteadyFloorMs, 1.0) / scanned))
-          val prev = state.getCostPerBucketMs.getOrElse(DefaultBucketCostMs)
-          state.setCostPerBucketMs(0.5 * prev + 0.5 * measured)
-        }
-      }
-      results
-    } finally shared.foreach { df => df.unpersist(); () }
-  }
 
   /** Budget-derived cap constants (VERDICT r17 #4): the cost seed is
     * the r17 FleetTickProbe measurement (0.11–0.18 ms per scanned
@@ -1708,10 +1187,4 @@ object AggregatorRunner {
     * unfloored spiral reached cap=1 polls doing 50k buckets in
     * 160–190 s). The r17-validated amortization point. */
   private[graft] val MinBudgetCap = 20
-
-  /** Partition-change detection (reference `aggregator/main.py:102-137`):
-    * diff of partition-directory snapshots; any change re-triggers
-    * backfill. */
-  def partitionChange(previous: Set[String], current: Set[String]): Boolean =
-    previous != current
 }

@@ -547,7 +547,7 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
       // the symbols they track (watermark store / ledger) and each
       // missing one is reconciled through the per-symbol end-probe —
       // O(log depth) jobs per IDLE symbol only, zero in the steady state
-      // (ADVICE r13: without this, runIncrementalAll silently never
+      // (ADVICE r13: without this, the fleet tick silently never
       // finalizes an idle symbol's trailing buckets on the wide layout).
       val days = DayDirs.deepest(fs, lakeDir, 2)
       if (days.isEmpty) return Map.empty

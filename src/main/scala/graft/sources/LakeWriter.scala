@@ -1184,96 +1184,19 @@ class HtfLakeWriter(root: String,
     f"$root/timeframe=$timeframe/symbol=${symbol.toUpperCase}/year=${day.getYear}%04d/" +
       f"month=${day.getMonthValue}%02d/day=${day.getDayOfMonth}%02d"
 
-  def symbolDir(timeframe: String, symbol: String): String =
-    s"$root/timeframe=$timeframe/symbol=${symbol.toUpperCase}"
-
   /** Bulk path (reference `target_writer.py:59-69`, re-planned for a
-    * cluster): merge-dedup the incoming buckets against ONLY the touched
-    * day partitions and rewrite them all in ONE dynamic-partition-
-    * overwrite job — O(1) Spark jobs in the number of days, vs the
-    * per-day loop of [[writeBuckets]] which re-ran the upstream plan
-    * once per day.
-    *
-    * Existing sibling buckets inside a touched day that are not in
-    * `buckets` survive via the merge (last-wins on `bucket_start`,
-    * incoming wins). Because the merged plan reads the same directory it
-    * overwrites, the merge is staged through a `.tmp` parquet dir
-    * (2 sequential jobs); a fresh lake skips the staging (1 job).
-    */
-  def writeBucketsBulk(spark: SparkSession, timeframe: String, symbol: String,
-                       buckets: DataFrame, callerPinned: Boolean = false): Unit = {
-    layout match {
-      case LakeLayout.DayWide(f) =>
-        // aggregateMinutes output always carries `symbol`, so the
-        // per-symbol call is just a width-1 slice of the wide path
-        writeBucketsBulkAllSymbolsWide(spark, timeframe, buckets, f,
-          callerPinned = callerPinned); return
-      case LakeLayout.HourlySymbol => ()
-    }
-    if (committer.readThroughResolve) {
-      // manifest deployment: dynamic-partition overwrite lands PLAIN
-      // day dirs, which a resolving reader would shadow behind any
-      // pointer already committed for that day — bulk writes must go
-      // through the committer too (see writeBucketsBulkCommitted)
-      writeBucketsBulkCommitted(spark, timeframe, buckets, Some(symbol))
-      return
-    }
-    val dir = symbolDir(timeframe, symbol)
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-    def withDayCols(df: DataFrame): DataFrame = df
-      .withColumn("year", date_format(col("bucket_start"), "yyyy"))
-      .withColumn("month", date_format(col("bucket_start"), "MM"))
-      .withColumn("day", date_format(col("bucket_start"), "dd"))
-
-    val hasExisting = fs.exists(new HPath(dir)) && fs.listStatus(new HPath(dir)).nonEmpty
-    val merged =
-      if (!hasExisting) buckets
-      else {
-        // Semi-join on the INFERRED partition columns (ints) so Catalyst
-        // can partition-prune the existing scan down to touched days.
-        val touchedDays = withDayCols(buckets)
-          .select(col("year").cast("int").as("year"),
-                  col("month").cast("int").as("month"),
-                  col("day").cast("int").as("day"))
-          .distinct()
-        val existingTouched = spark.read.parquet(dir)
-          .join(broadcast(touchedDays), Seq("year", "month", "day"), "left_semi")
-          .drop("year", "month", "day")
-        Ops.dedupKeepLast(
-          existingTouched.withColumn("__src", lit(0))
-            .unionByName(buckets.withColumn("__src", lit(1)), allowMissingColumns = true),
-          Seq("bucket_start"), Seq(col("__src"))).drop("__src")
-      }
-
-    // stage through .tmp when merging: Spark refuses to overwrite a path
-    // its own plan reads from, and readers never list dot-dirs
-    val tmp =
-      if (!hasExisting) None
-      else Some(s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val stage = tmp match {
-      case None => merged
-      case Some(t) =>
-        merged.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(t)
-        spark.read.parquet(t)
-    }
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      withDayCols(stage)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("year", "month", "day")
-        .option("compression", "zstd")
-        .parquet(dir)
-    } finally tmp.foreach(t => fs.delete(new HPath(t), true))
-  }
-
-  /** All-symbols bulk path: `buckets` carries a `symbol` column; ONE
+    * cluster): `buckets` carries a `symbol` column; ONE
     * dynamic-partition-overwrite job rewrites every touched
     * (symbol, day) partition across the whole timeframe — the shape a
-    * 1000-symbol backfill needs (no per-symbol driver loop). Merge
-    * semantics match [[writeBucketsBulk]], with the semi-join keyed by
-    * (symbol, year, month, day). */
+    * 1000-symbol backfill needs (no per-symbol driver loop).
+    *
+    * Existing sibling buckets inside a touched partition that are not in
+    * `buckets` survive via the merge (last-wins on (symbol,
+    * bucket_start), incoming wins). The merge reads only the touched
+    * partitions (semi-join on the inferred (symbol, year, month, day)
+    * partition columns) and, because its plan reads the directory it
+    * overwrites, is staged through a `.tmp` parquet dir; a fresh tree
+    * skips the staging. */
   def writeBucketsBulkAllSymbols(spark: SparkSession, timeframe: String,
                                  buckets: DataFrame,
                                  touchedDays: Option[Seq[(Int, Int, Int)]] = None,
@@ -1285,7 +1208,11 @@ class HtfLakeWriter(root: String,
       case LakeLayout.HourlySymbol => ()
     }
     if (committer.readThroughResolve) {
-      writeBucketsBulkCommitted(spark, timeframe, buckets, None)
+      // manifest deployment: dynamic-partition overwrite lands PLAIN
+      // day dirs, which a resolving reader would shadow behind any
+      // pointer already committed for that day — bulk writes must go
+      // through the committer too (see writeBucketsBulkCommitted)
+      writeBucketsBulkCommitted(spark, timeframe, buckets)
       return
     }
     val dir = s"$root/timeframe=$timeframe"
@@ -1476,18 +1403,14 @@ class HtfLakeWriter(root: String,
     * stays batched: one pointer PUT per parent dir under
     * [[DayManifestCommit]]; other committers publish per leaf. */
   private def writeBucketsBulkCommitted(spark: SparkSession, timeframe: String,
-                                        buckets: DataFrame,
-                                        symbolOverride: Option[String]): Unit = {
+                                        buckets: DataFrame): Unit = {
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
     buckets.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
     val tmpTree = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
     try {
       val staged = spark.read.parquet(stageDir)
-      val symCol = symbolOverride match {
-        case Some(sym) => lit(sym.toUpperCase)
-        case None      => upper(col("symbol"))
-      }
+      val symCol = upper(col("symbol"))
       val touched = staged
         .select(symCol.as("__sym"), to_date(col("bucket_start")).as("__day"))
         .distinct().collect()
@@ -1514,11 +1437,11 @@ class HtfLakeWriter(root: String,
           // (r19 advice)
           val df = spark.read.option("mergeSchema", "true")
             .parquet(resolvedExisting: _*)
-          if (symbolOverride.isEmpty && !df.columns.contains("symbol"))
+          if (!df.columns.contains("symbol"))
             // legacy leaf content without a symbol column can't be
             // re-attributed in a shared scan — impossible via this
-            // writer (the all-symbols path always carries `symbol`),
-            // guarded for hand-built lakes
+            // writer (bucket frames always carry `symbol`), guarded for
+            // hand-built lakes
             throw new IllegalStateException(
               "existing HTF leaf content lacks a symbol column; " +
                 "cannot batch-merge an all-symbols bulk write over it")
@@ -1569,38 +1492,5 @@ class HtfLakeWriter(root: String,
       fs.delete(new HPath(stageDir), true)
       fs.delete(new HPath(tmpTree), true)
     }
-  }
-
-  /** Merge `buckets` with the (resolved) existing day content and stage
-    * the result under a tmp dir; returns (tmpDir, finalDir) for the
-    * committer to publish. */
-  private def stageBuckets(spark: SparkSession, timeframe: String,
-                           symbol: String, day: java.time.LocalDate,
-                           buckets: DataFrame): (String, String) = {
-    val dir = partitionDir(timeframe, symbol, day)
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val existingDir = committer.resolve(fs, dir)
-      .filter(d => fs.listStatus(new HPath(d)).exists(_.isFile))
-    val effective = existingDir match {
-      case Some(d) =>
-        val existing = spark.read.parquet(d)
-        Ops.dedupKeepLast(
-          existing.withColumn("__src", lit(0))
-            .unionByName(buckets.withColumn("__src", lit(1)), allowMissingColumns = true),
-          Seq("bucket_start"), Seq(col("__src"))).drop("__src")
-      case None => buckets
-    }
-    val tmp = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    effective.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(tmp)
-    (tmp, dir)
-  }
-
-  def writeBuckets(spark: SparkSession, timeframe: String, symbol: String,
-                   day: java.time.LocalDate, buckets: DataFrame): String = {
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val (tmp, dir) = stageBuckets(spark, timeframe, symbol, day, buckets)
-    committer.publish(fs, tmp, dir)
-    dir
   }
 }

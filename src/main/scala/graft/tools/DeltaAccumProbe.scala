@@ -46,7 +46,7 @@ object DeltaAccumProbe {
       LakeLayout.DayWide(32))
     val reader = new MinuteLakeReader(tmp)
 
-    // reuse PointRepairProbe's frame shape via a local copy (perf synth)
+    // synthetic dense day: every symbol × every minute (perf synth)
     def dayFrame(nSymbols: Int, dayStart: Instant, openBase: Double,
                  hours: Int) = {
       val base = spark.range(nSymbols.toLong)

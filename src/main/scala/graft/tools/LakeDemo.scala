@@ -55,8 +55,8 @@ object LakeDemo {
     writer.writeHourPartition("BTCUSDT", h, tenMinutes)
     val htfWriter = new graft.sources.HtfLakeWriter(s"$dir/htf")
     val state = new graft.operators.AggregatorRunner.AggregatorStateStore(s"$dir/_aggstate")
-    val bf = graft.operators.AggregatorRunner.runBackfill(spark, reader, htfWriter,
-      state, s"$dir/htf", "BTCUSDT", graft.schema.Timeframes.parse("5m"))
+    val bf = graft.operators.AggregatorRunner.runBackfillAll(spark, reader,
+      htfWriter, state, s"$dir/htf", graft.schema.Timeframes.parse("5m"))
     println(s"BACKFILL scanned=${bf.bucketsScanned} written=${bf.bucketsWritten}")
     val bars = graft.service.QueryService.candleBars(spark, reader, "BTCUSDT",
       "5m", h, h.plusSeconds(9 * 60))

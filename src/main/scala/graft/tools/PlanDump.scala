@@ -6,8 +6,7 @@ import org.apache.spark.sql.SparkSession
   * optimization-round evidence artifact (`plans/rNN/<query>_<tag>.txt`).
   * Engine-roundtrip rows (s16–s20) are skipped: their returned frame is
   * a collected summary whose plan says nothing about the lifecycle the
-  * row actually prices (the EnginePhaseProbe job ledger is their
-  * evidence).
+  * row actually prices (count their jobs with a listener instead).
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> [q1,q2,...|all]
   */

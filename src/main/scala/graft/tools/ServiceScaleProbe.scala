@@ -9,7 +9,7 @@ import graft.service.{QueryService, ResultCache}
 import graft.sources.MinuteLakeReader
 
 /** Service-layer scale probe — the 1000-symbol question for the API READ
-  * path (VERDICT r7 #5). `runBackfillAll`/`runIncrementalAll` already
+  * path (VERDICT r7 #5). `runBackfillAll`/`runFleetTick` already
   * prove the all-symbols WRITE path is ONE Spark job (never a driver
   * loop); this probes the per-request read path (`candleBars`) as the
   * lake grows in symbol count:

@@ -3,11 +3,13 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AggregatorRunner, MinuteBuilder}
 import graft.operators.AggregatorRunner.AggregatorStateStore
-import graft.schema.Timeframes
+import graft.schema.{TimeframeSpec, Timeframes}
 import graft.sources.{HtfLakeWriter, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
 
 /** Lifecycle semantics from reference `tests/test_aggregator.py:130-258`. */
@@ -38,22 +40,42 @@ class AggregatorRunnerSpec extends SparkSpec {
     (dir, minuteWriter, reader, htfWriter, state)
   }
 
+  /** A one-spec fleet poll — the incremental daemon's tick. */
+  private def tick(reader: MinuteLakeReader, hw: HtfLakeWriter,
+                   state: AggregatorStateStore, htfRoot: String,
+                   spec: TimeframeSpec,
+                   sourceLedger: Option[PartitionLedger] = None,
+                   allowIncomplete: Boolean = false,
+                   repairLookbackMinutes: Long = 120,
+                   maxBucketsPerTick: Int = 0) =
+    AggregatorRunner.runFleetTick(spark, reader, hw, state, htfRoot, Seq(spec),
+      sourceLedger, allowIncomplete, repairLookbackMinutes, maxBucketsPerTick)
+      .head._2
+
+  /** One symbol's stored HTF index, (bucket_start, bucket_complete) in
+    * bucket order, read straight from the tree (either layout). */
+  private def htfIndex(htfRoot: String, timeframe: String,
+                       symbol: String): Seq[(Instant, Boolean)] =
+    spark.read.parquet(s"$htfRoot/timeframe=$timeframe")
+      .where(col("symbol") === symbol)
+      .orderBy("bucket_start").select("bucket_start", "bucket_complete")
+      .collect().map(r => (r.getTimestamp(0).toInstant, r.getBoolean(1))).toSeq
+
   test("backfill writes only complete buckets; incomplete skipped (test_aggregator.py:130,352)") {
     val (dir, mw, reader, hw, state) = newEnv()
     // 14 minutes: two complete 5m buckets + 4 dangling
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 14))
-    val res = AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    val res = AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", Timeframes.parse("5m"))
     assert(res.bucketsScanned == 2 && res.bucketsWritten == 2)
-    val idx = AggregatorRunner.scanExistingIndex(spark, s"$dir/htf", "5m", "BTCUSDT")
-      .orderBy("bucket_start").collect()
-    assert(idx.map(_.getTimestamp(0).toInstant).toSeq ==
+    val idx = htfIndex(s"$dir/htf", "5m", "BTCUSDT")
+    assert(idx.map(_._1) ==
       Seq(instant("2026-01-01T00:00:00Z"), instant("2026-01-01T00:05:00Z")))
-    assert(idx.forall(_.getBoolean(1)))
+    assert(idx.forall(_._2))
     // second run is a no-op (idempotent)
-    val res2 = AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    val res2 = AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", Timeframes.parse("5m"))
     assert(res2.bucketsScanned == 0 && res2.bucketsWritten == 0)
   }
 
@@ -61,16 +83,14 @@ class AggregatorRunnerSpec extends SparkSpec {
     val (dir, mw, reader, hw, state) = newEnv()
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 5))
-    AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", Timeframes.parse("5m"))
     // five more minutes arrive → next bucket completes
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 10))
-    val inc = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    val inc = tick(reader, hw, state, s"$dir/htf", Timeframes.parse("5m"))
     assert(inc.bucketsWritten >= 1)
-    val idx = AggregatorRunner.scanExistingIndex(spark, s"$dir/htf", "5m", "BTCUSDT")
-    assert(idx.count() == 2)
+    assert(htfIndex(s"$dir/htf", "5m", "BTCUSDT").size == 2)
     assert(inc.lagMinutes.contains(0L))
   }
 
@@ -78,16 +98,15 @@ class AggregatorRunnerSpec extends SparkSpec {
     val (dir, mw, reader, hw, state) = newEnv()
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 10))
-    AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", Timeframes.parse("5m"))
     val before = spark.read.parquet(s"$dir/htf/timeframe=5m/symbol=BTCUSDT")
       .where(col("bucket_start") === ts("2026-01-01T00:00:00Z"))
       .select("close").head.getDouble(0)
     // a late correction rewrites minute 00:04 with different prices
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:04:00Z", 1, baseOpen = 500.0))
-    val inc = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    val inc = tick(reader, hw, state, s"$dir/htf", Timeframes.parse("5m"))
     assert(inc.repaired >= 1)
     val after = spark.read.parquet(s"$dir/htf/timeframe=5m/symbol=BTCUSDT")
       .where(col("bucket_start") === ts("2026-01-01T00:00:00Z"))
@@ -103,17 +122,13 @@ class AggregatorRunnerSpec extends SparkSpec {
     // zeros WITHOUT creating the htf tree (no scan, no aggregation)
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T10:00:00Z"),
       canonicalMinutes("2026-01-01T10:00:00Z", 60))
-    val skipped = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec1d)
+    val skipped = tick(reader, hw, state, s"$dir/htf", spec1d)
     assert(skipped == AggregatorRunner.IncrementalResult(0, 0, 0, 0, None))
-    val skippedAll = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec1d)
-    assert(skippedAll == AggregatorRunner.IncrementalResult(0, 0, 0, 0, None))
     assert(!new java.io.File(s"$dir/htf/timeframe=1d").exists(),
       "gate skipped before any aggregation or write")
     // allowIncomplete callers bypass the gate (they WANT the partial bucket)
-    val partial = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec1d, allowIncomplete = true)
+    val partial = tick(reader, hw, state, s"$dir/htf", spec1d,
+      allowIncomplete = true)
     assert(partial.bucketsScanned == 1 && partial.bucketsWritten == 1)
 
     // complete the day + one next-day hour: the boundary tick's window
@@ -126,20 +141,16 @@ class AggregatorRunnerSpec extends SparkSpec {
     }
     mw.writeHourPartition("BTCUSDT", instant("2026-01-02T00:00:00Z"),
       canonicalMinutes("2026-01-02T00:00:00Z", 60))
-    val boundary = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec1d)
+    val boundary = tick(reader, hw, state, s"$dir/htf", spec1d)
     assert(boundary.bucketsWritten >= 1)
-    val idx = AggregatorRunner.scanExistingIndex(spark, s"$dir/htf", "1d", "BTCUSDT")
-      .where(col("bucket_complete")).collect()
-    assert(idx.map(_.getTimestamp(0).toInstant).toSeq ==
+    assert(htfIndex(s"$dir/htf", "1d", "BTCUSDT").filter(_._2).map(_._1) ==
       Seq(instant("2026-01-01T00:00:00Z")))
     // once the tick's lookback has cleared the boundary (repairs of the
     // closed bucket are no longer in-window), mid-bucket ticks skip
     // again — with the watermark set, lag is still reported
     mw.writeHourPartition("BTCUSDT", instant("2026-01-02T03:00:00Z"),
       canonicalMinutes("2026-01-02T03:00:00Z", 60))
-    val again = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec1d)
+    val again = tick(reader, hw, state, s"$dir/htf", spec1d)
     assert(again.bucketsScanned == 0 && again.bucketsWritten == 0 &&
       again.lagMinutes.isDefined)
   }
@@ -149,20 +160,19 @@ class AggregatorRunnerSpec extends SparkSpec {
     // 7 minutes: one complete 5m bucket + an incomplete trailing bucket
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 7))
-    AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"))
+    AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", Timeframes.parse("5m"))
     // the skipped 00:05 bucket must stay ahead of the watermark…
     assert(state.get("BTCUSDT", "5m").contains(instant("2026-01-01T00:00:00Z")))
     // …so when its minutes arrive (even past any repair lookback) the
     // incremental run still materializes it
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 10))
-    val inc = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", Timeframes.parse("5m"), repairLookbackMinutes = 0)
+    val inc = tick(reader, hw, state, s"$dir/htf", Timeframes.parse("5m"),
+      repairLookbackMinutes = 0)
     assert(inc.bucketsWritten >= 1)
-    assert(AggregatorRunner.scanExistingIndex(spark, s"$dir/htf", "5m", "BTCUSDT")
-      .where(col("bucket_start") === ts("2026-01-01T00:05:00Z"))
-      .count() == 1)
+    assert(htfIndex(s"$dir/htf", "5m", "BTCUSDT")
+      .count(_._1 == instant("2026-01-01T00:05:00Z")) == 1)
   }
 
   test("whole-lake backfill aggregates every symbol in one pipeline") {
@@ -186,9 +196,6 @@ class AggregatorRunnerSpec extends SparkSpec {
     val res2 = AggregatorRunner.runBackfillAll(spark, reader, hw, state,
       s"$dir/htf", Timeframes.parse("5m"))
     assert(res2.bucketsScanned == 0 && res2.bucketsWritten == 0)
-    // the per-symbol reader sees the same lake (interop with single paths)
-    assert(AggregatorRunner.scanExistingIndex(spark, s"$dir/htf", "5m", "BTCUSDT")
-      .count() == 2)
   }
 
   test("whole-lake incremental repairs every symbol in one pipeline") {
@@ -206,8 +213,7 @@ class AggregatorRunnerSpec extends SparkSpec {
       canonicalMinutes("2026-01-01T00:04:00Z", 1, baseOpen = 900.0))
     mw.writeHourPartition("ETHUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 10, baseOpen = 2000.0))
-    val inc = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", Timeframes.parse("5m"))
+    val inc = tick(reader, hw, state, s"$dir/htf", Timeframes.parse("5m"))
     // content-aware write-skip: BTC 00:00 is rewritten (the late
     // correction changed its close), both symbols' new 00:05 buckets
     // are written, but ETH 00:00 re-aggregates to IDENTICAL content and
@@ -230,37 +236,21 @@ class AggregatorRunnerSpec extends SparkSpec {
   test("bulk write preserves sibling buckets in a partially-rewritten day") {
     val (dir, _, _, hw, _) = newEnv()
     def bucketRow(iso: String, close: Double) =
-      Seq((java.sql.Timestamp.from(instant(iso)), close, true))
-        .toDF("bucket_start", "close", "bucket_complete")
-    hw.writeBucketsBulk(spark, "1h", "BTCUSDT",
+      Seq(("BTCUSDT", java.sql.Timestamp.from(instant(iso)), close, true))
+        .toDF("symbol", "bucket_start", "close", "bucket_complete")
+    hw.writeBucketsBulkAllSymbols(spark, "1h",
       bucketRow("2026-01-01T00:00:00Z", 1.0)
         .unionByName(bucketRow("2026-01-01T05:00:00Z", 2.0)))
     // rewrite only the 05:00 bucket; 00:00 (same day partition) must survive
-    hw.writeBucketsBulk(spark, "1h", "BTCUSDT", bucketRow("2026-01-01T05:00:00Z", 9.0))
+    hw.writeBucketsBulkAllSymbols(spark, "1h", bucketRow("2026-01-01T05:00:00Z", 9.0))
     val rows = spark.read.parquet(s"$dir/htf/timeframe=1h/symbol=BTCUSDT")
       .orderBy("bucket_start").select("close").collect().map(_.getDouble(0)).toSeq
     assert(rows == Seq(1.0, 9.0))
   }
 
-  test("coalesceBucketWindows groups contiguous runs (validator.py:55-72)") {
-    val spec = Timeframes.parse("5m")
-    val buckets = Seq("00:00", "00:05", "00:10", "00:25", "00:30", "01:00")
-      .map(m => instant(s"2026-01-01T$m:00Z"))
-    val windows = AggregatorRunner.coalesceBucketWindows(buckets, spec)
-    assert(windows.map(w => (w.start, w.end)) == Seq(
-      (instant("2026-01-01T00:00:00Z"), instant("2026-01-01T00:10:00Z")),
-      (instant("2026-01-01T00:25:00Z"), instant("2026-01-01T00:30:00Z")),
-      (instant("2026-01-01T01:00:00Z"), instant("2026-01-01T01:00:00Z"))))
-  }
-
-  test("partition-change detection via directory snapshot diff (main.py:102-137)") {
-    assert(AggregatorRunner.partitionChange(Set("a"), Set("a", "b")))
-    assert(!AggregatorRunner.partitionChange(Set("a"), Set("a")))
-  }
-
-  // ---- ledger-gated ticks (r16, forced by FleetTickProbe: an ungated
-  // no-news 12-spec fleet poll at width 10k cost 109–121 s of pure
-  // re-scan + write-skip against a 30 s poll budget) ----
+  // ---- ledger-gated ticks (r16: an ungated no-news 12-spec fleet poll
+  // at width 10k cost 109–121 s of pure re-scan + write-skip against a
+  // 30 s poll budget) ----
 
   test("ledger gate: an unchanged lake token-skips the tick; new data re-arms it") {
     val (dir, mw, reader, hw, state) = newEnv()
@@ -268,28 +258,24 @@ class AggregatorRunnerSpec extends SparkSpec {
     val spec = Timeframes.parse("5m")
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 14))
-    val full = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = ledger)
+    val full = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
     assert(full.bucketsWritten >= 2)
     // steady: same lake bytes, token matches → zeros, lag verbatim
-    val skip = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = ledger)
+    val skip = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
     assert(skip == AggregatorRunner.IncrementalResult(0, 0, 0, 0, full.lagMinutes))
     // parity: the ungated tick on the same lake also finds nothing to
     // write — the skip elides work, never results
-    val ungated = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec)
+    val ungated = tick(reader, hw, state, s"$dir/htf", spec)
     assert(ungated.bucketsWritten == 0)
     // new minutes land → the ledger moves → the gated tick runs
     Thread.sleep(10) // committedAt high-water must strictly advance
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 20))
-    val rearmed = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = ledger)
+    val rearmed = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
     assert(rearmed.bucketsWritten >= 1)
     // a different poll configuration never reuses this token
-    val otherCfg = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, repairLookbackMinutes = 60, sourceLedger = ledger)
+    val otherCfg = tick(reader, hw, state, s"$dir/htf", spec,
+      sourceLedger = ledger, repairLookbackMinutes = 60)
     assert(otherCfg.bucketsScanned > 0)
   }
 
@@ -307,63 +293,69 @@ class AggregatorRunnerSpec extends SparkSpec {
     seed(mw); seed(mw2)
     // backfill owns history; the incremental tick then accounts for the
     // current lake state (and records the ledger token)
-    AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec)
-    AggregatorRunner.runBackfill(spark, reader2, hw2, state2,
-      s"$dir2/htf", "BTCUSDT", spec)
-    AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = ledger)
-    AggregatorRunner.runIncrementalAll(spark, reader2, hw2, state2,
-      s"$dir2/htf", spec)
+    AggregatorRunner.runBackfillAll(spark, reader, hw, state, s"$dir/htf", spec)
+    AggregatorRunner.runBackfillAll(spark, reader2, hw2, state2, s"$dir2/htf", spec)
+    tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
+    tick(reader2, hw2, state2, s"$dir2/htf", spec)
     Thread.sleep(10)
     // a correction lands 3 DAYS back — far outside the 120-min lookback
     def late(w: graft.sources.MinuteLakeWriter): Unit =
       w.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
         canonicalMinutes("2026-01-01T00:04:00Z", 1, baseOpen = 500.0))
     late(mw); late(mw2)
-    val gated = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = ledger)
+    val gated = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
     assert(gated.bucketsWritten >= 1, "ledger window reaches the late write")
     def closeOf(d: String): Double =
       spark.read.parquet(s"$d/htf/timeframe=5m/symbol=BTCUSDT")
         .where(col("bucket_start") === ts("2026-01-01T00:00:00Z"))
         .select("close").head.getDouble(0)
     assert(closeOf(dir) == 500.5)
-    AggregatorRunner.runIncrementalAll(spark, reader2, hw2, state2,
-      s"$dir2/htf", spec)
+    tick(reader2, hw2, state2, s"$dir2/htf", spec)
     // documents the gap the ledger closes: the blind window cannot see
     // a repair older than its lookback (backfill's job until now)
     assert(closeOf(dir2) == 104.5)
   }
 
   test("single-symbol gate: commits touching only OTHER symbols skip this symbol's tick") {
+    // Fleet form: a commit that touched only ETHUSDT makes the tick
+    // write only ETHUSDT's buckets. BTCUSDT is re-aggregated inside the
+    // ledger window but write-skipped, so its HTF files and watermark
+    // stay byte-identical.
     val (dir, mw, reader, hw, state) = newEnv()
     val ledger = Some(new PartitionLedger(s"$dir/_state"))
     val spec = Timeframes.parse("5m")
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 10))
-    val first = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec, sourceLedger = ledger)
-    assert(first.bucketsWritten >= 1)
+    val first = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
+    assert(first.bucketsWritten == 2)
+    val btcDir = java.nio.file.Paths.get(s"$dir/htf/timeframe=5m/symbol=BTCUSDT")
+    def btcFiles(): Map[String, Seq[Byte]] = {
+      val walk = Files.walk(btcDir)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => btcDir.relativize(p).toString ->
+          Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val btcBefore = btcFiles()
+    val btcWm = state.get("BTCUSDT", spec.name)
+    assert(btcBefore.nonEmpty && btcWm.isDefined)
     Thread.sleep(10)
-    // another symbol's data lands: token moves, but the hourly ledger
-    // attributes it → ChangeNone for BTC → skip with preserved lag
+    // another symbol's data lands: the token moves
     mw.writeHourPartition("ETHUSDT", instant("2026-01-01T00:00:00Z"),
-      canonicalMinutes("2026-01-01T00:00:00Z", 10))
-    val skip = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec, sourceLedger = ledger)
-    assert(skip == AggregatorRunner.IncrementalResult(0, 0, 0, 0, first.lagMinutes))
-    // ETH's own tick is NOT skipped
-    val eth = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "ETHUSDT", spec, sourceLedger = ledger)
-    assert(eth.bucketsWritten >= 1)
+      canonicalMinutes("2026-01-01T00:00:00Z", 10, baseOpen = 2000.0))
+    val eth = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
+    assert(eth.bucketsWritten == 2, s"only ETHUSDT's two buckets are written: $eth")
+    assert(eth.repaired == 0)
+    assert(htfIndex(s"$dir/htf", "5m", "ETHUSDT").size == 2)
+    assert(btcFiles() == btcBefore, "BTCUSDT's HTF files must not be rewritten")
+    assert(state.get("BTCUSDT", spec.name) == btcWm)
     // BTC's own data re-arms BTC
     Thread.sleep(10)
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 15))
-    val rearmed = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec, sourceLedger = ledger)
-    assert(rearmed.bucketsWritten >= 1)
+    val rearmed = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
+    assert(rearmed.bucketsWritten == 1)
+    assert(htfIndex(s"$dir/htf", "5m", "BTCUSDT").size == 3)
   }
 
   test("runFleetTick matches per-spec ticks; an unchanged lake skips the whole poll") {
@@ -379,15 +371,12 @@ class AggregatorRunnerSpec extends SparkSpec {
     val fleet = AggregatorRunner.runFleetTick(spark, reader, hw, state,
       s"$dir/htf", specs, sourceLedger = ledger).toMap
     val perSpec = specs.map(sp => sp.name ->
-      AggregatorRunner.runIncrementalAll(spark, reader2, hw2, state2,
-        s"$dir2/htf", sp)).toMap
+      tick(reader2, hw2, state2, s"$dir2/htf", sp)).toMap
     specs.foreach { sp =>
       assert(fleet(sp.name).bucketsWritten == perSpec(sp.name).bucketsWritten,
         s"${sp.name}: fleet=${fleet(sp.name)} perSpec=${perSpec(sp.name)}")
-      def index(d: String) = AggregatorRunner
-        .scanExistingIndex(spark, s"$d/htf", sp.name, "BTCUSDT").collect()
-        .map(r => (r.getTimestamp(0).toInstant, r.getBoolean(1))).toSet
-      assert(index(dir) == index(dir2), sp.name)
+      assert(htfIndex(s"$dir/htf", sp.name, "BTCUSDT") ==
+        htfIndex(s"$dir2/htf", sp.name, "BTCUSDT"), sp.name)
       assert(state.getAll(sp.name) == state2.getAll(sp.name), sp.name)
     }
     assert(fleet("1d").bucketsWritten == 1L) // Jan 1 closed by the Jan 2 hour
@@ -429,19 +418,17 @@ class AggregatorRunnerSpec extends SparkSpec {
     // day 1: 1000 minutes (00:00–16:39), then the accounting tick
     mw.writeDaysWide(wideMinutes("2026-01-01T00:00:00Z", 1000))
     AggregatorRunner.runBackfillAll(spark, reader, hw, state, s"$dir/htf", spec)
-    AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg)
+    tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg)
     // one poll later, five fresh minutes merge INTO the same day: the
     // day's content bounds now span 00:00–16:44, but the write touched
     // only 16:40+ — the tick must scan just the new bucket, not the
     // 200 day-to-date buckets
     Thread.sleep(10)
     mw.writeDaysWide(wideMinutes("2026-01-01T16:40:00Z", 5), merge = true)
-    val tick = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg)
-    assert(tick.bucketsWritten == 1, s"the 16:40 bucket completes: $tick")
-    assert(tick.bucketsScanned <= 2,
-      s"window must start at the patch floor (16:40), not day start: $tick")
+    val res = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg)
+    assert(res.bucketsWritten == 1, s"the 16:40 bucket completes: $res")
+    assert(res.bucketsScanned <= 2,
+      s"window must start at the patch floor (16:40), not day start: $res")
 
     // TWO same-key writes between polls: a mid-day value repair AND a
     // fresh append — the version log carries both patch ranges, so ONE
@@ -451,8 +438,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     mw.writeDaysWide(wideMinutes("2026-01-01T00:04:00Z", 1, baseOpen = 500.0),
       merge = true)
     mw.writeDaysWide(wideMinutes("2026-01-01T16:45:00Z", 5), merge = true)
-    val both = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg)
+    val both = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg)
     assert(both.bucketsWritten == 2 && both.repaired >= 1,
       s"both the 00:00 repair and the 16:45 append must land: $both")
     val repaired = spark.read.parquet(s"$dir/htf/timeframe=5m")
@@ -474,8 +460,8 @@ class AggregatorRunnerSpec extends SparkSpec {
     Thread.sleep(10)
     mw.writeDaysWide(wideMinutes("2026-01-01T16:55:00Z", 5), merge = true)
     ledger.compact() // drops the 16:50 write's line — a real hole
-    val afterCompact = AggregatorRunner.runIncrementalAll(spark, reader, hw,
-      state, s"$dir/htf", spec, sourceLedger = lg)
+    val afterCompact = tick(reader, hw, state, s"$dir/htf", spec,
+      sourceLedger = lg)
     assert(afterCompact.bucketsWritten == 2,
       s"16:45 and 16:50 buckets complete: $afterCompact")
     assert(afterCompact.bucketsScanned >= 20,
@@ -503,8 +489,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     val lg = Some(ledger)
     // 10 minutes → buckets 00:00 and 00:05, both complete, indexed
     mw.writeDaysWide(wideMinutes("2026-01-01T00:00:00Z", 10))
-    val first = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg)
+    val first = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg)
     assert(first.bucketsWritten == 2)
     // crashed-publish simulation: an EXACT copy of the 00:00 bucket row
     // appended straight into the day dir — content identical, key now
@@ -520,13 +505,12 @@ class AggregatorRunnerSpec extends SparkSpec {
     Thread.sleep(10)
     mw.writeDaysWide(wideMinutes("2026-01-01T00:04:00Z", 1, baseOpen = 104.0),
       merge = true)
-    val tick = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg)
+    val res = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg)
     // one bucket written (the dup-keyed one), counted ONCE — the r20
     // left join counted it per stored copy; and it was stored complete,
     // so repaired counts it once too
-    assert(tick.bucketsWritten == 1, s"dup key must not inflate counters: $tick")
-    assert(tick.repaired == 1, s"repaired counts the bucket once: $tick")
+    assert(res.bucketsWritten == 1, s"dup key must not inflate counters: $res")
+    assert(res.repaired == 1, s"repaired counts the bucket once: $res")
     // the rewrite healed the tree: exactly one row per key again
     val healed = spark.read.parquet(s"$dir/htf/timeframe=5m")
       .groupBy("symbol", "bucket_start").count()
@@ -539,15 +523,15 @@ class AggregatorRunnerSpec extends SparkSpec {
     val (dir, mw, ledger, reader, hw, state) = wideEnv()
     val lg = Some(ledger)
     val spec = Timeframes.parse("5m")
-    def tick() = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg, maxBucketsPerTick = 20)
+    def capped() = tick(reader, hw, state, s"$dir/htf", spec,
+      sourceLedger = lg, maxBucketsPerTick = 20)
     // day 1: 1000 dense minutes (00:00–16:39 → 200 5m buckets), indexed
     mw.writeDaysWide(wideMinutes("2026-01-01T00:00:00Z", 1000))
     AggregatorRunner.runBackfillAll(spark, reader, hw, state, s"$dir/htf", spec)
     // accounting polls under the capped deployment until steady
     var guard = 0
-    while (tick().bucketsScanned > 0 && guard < 20) guard += 1
-    assert(tick() == AggregatorRunner.IncrementalResult(0, 0, 0, 0,
+    while (capped().bucketsScanned > 0 && guard < 20) guard += 1
+    assert(capped() == AggregatorRunner.IncrementalResult(0, 0, 0, 0,
       state.getTickState(s"5m|ai=false|lb=120|cap=20").get.lagMinutes),
       "capped deployment reaches the steady token skip")
     // a BIG late repair: minutes 00:04–08:03 rewritten (97 buckets of
@@ -560,7 +544,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     var steady = false
     var i = 0
     while (!steady && i < 15) {
-      val r = tick()
+      val r = capped()
       steady = r.bucketsScanned == 0 && r.bucketsWritten == 0
       if (!steady) polls += r
       i += 1
@@ -585,8 +569,8 @@ class AggregatorRunnerSpec extends SparkSpec {
     val spec = Timeframes.parse("5m")
     def symMinutes(s: String, startIso: String, n: Int, base: Double = 100.0) =
       canonicalMinutes(startIso, n, base).withColumn("symbol", lit(s))
-    def tick() = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec, sourceLedger = lg, maxBucketsPerTick = 20)
+    def capped() = tick(reader, hw, state, s"$dir/htf", spec,
+      sourceLedger = lg, maxBucketsPerTick = 20)
     // heterogeneous frontiers: AAA indexed to its head (16:35), BBB
     // indexed only through 08:35 — then BBB's remaining 8 h lands, so
     // the capped deployment wakes COLD (no token under the cap key)
@@ -601,7 +585,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     var steady = false
     var i = 0
     while (!steady && i < 15) {
-      val r = tick()
+      val r = capped()
       steady = r.bucketsScanned == 0 && r.bucketsWritten == 0
       if (!steady) polls += r
       i += 1
@@ -802,4 +786,111 @@ class AggregatorRunnerSpec extends SparkSpec {
     // and strictly-after stays blind (the pre-r17 behavior)
     assert(scope(Some(since.plusSeconds(60))) == AggregatorRunner.ChangeUnknown)
   }
+
+  /** `n` dense canonical minutes of one symbol, generated by Spark. */
+  private def denseMinutes(symbol: String, startIso: String, n: Long) = {
+    val t = timestamp_seconds(lit(instant(startIso).getEpochSecond) + col("id") * 60)
+    MinuteBuilder.finalizeSchema(spark.range(n).select(t.as("timestamp"),
+      (col("id") % 100 + 100.0).as("open"), (col("id") % 100 + 101.0).as("high"),
+      (col("id") % 100 + 99.0).as("low"), (col("id") % 100 + 100.5).as("close"),
+      lit(1.0).as("volume_btc"), lit(100000.0).as("volume_usdt"),
+      lit(10L).as("trade_count"), lit(100.0).as("mark_price_open"),
+      lit(100.5).as("mark_price_close"), lit(100.0).as("index_price_open"),
+      lit(100.4).as("index_price_close")))
+      .withColumn("symbol", lit(symbol))
+  }
+
+  test("1m and 1M keep separate watermarks; the month closes in a fleet that also ticks 1m") {
+    // The watermark store upper-cases its keys. `1m` and `1M` once
+    // shared one key, so the month read the minute's watermark, its
+    // window started at the current month, and a closed month was
+    // never written.
+    val (dir, mw, _, reader, hw, state) = wideEnv()
+    val specs = Seq(Timeframes.parse("1m"), Timeframes.parse("1M"))
+    // Jan 1 00:00 – Feb 28 22:59: January complete, February one hour short
+    mw.writeDaysWide(denseMinutes("BTCUSDT", "2026-01-01T00:00:00Z", 59L * 1440 - 60))
+    specs.foreach(sp =>
+      AggregatorRunner.runBackfillAll(spark, reader, hw, state, s"$dir/htf", sp))
+    assert(state.get("BTCUSDT", "1m").contains(instant("2026-02-28T22:59:00Z")))
+    assert(state.get("BTCUSDT", "1M").contains(instant("2026-01-01T00:00:00Z")))
+    // the rest of February plus three hours of March: the lookback
+    // window starts in March, so only the month's own watermark can
+    // reach back to the closed February
+    mw.writeDaysWide(denseMinutes("BTCUSDT", "2026-02-28T23:00:00Z", 240), merge = true)
+    val res = AggregatorRunner.runFleetTick(spark, reader, hw, state,
+      s"$dir/htf", specs).toMap
+    assert(res("1m").bucketsWritten == 240)
+    assert(res("1M").bucketsWritten == 1, s"February closes: ${res("1M")}")
+    assert(htfIndex(s"$dir/htf", "1M", "BTCUSDT") == Seq(
+      instant("2026-01-01T00:00:00Z") -> true,
+      instant("2026-02-01T00:00:00Z") -> true))
+    assert(state.get("BTCUSDT", "1m").contains(instant("2026-03-01T02:59:00Z")))
+    assert(state.get("BTCUSDT", "1M").contains(instant("2026-02-01T00:00:00Z")))
+    assert(state.getAll("1m").keySet == Set("BTCUSDT") &&
+      state.getAll("1M").keySet == Set("BTCUSDT"))
+
+    // keys an older store wrote (whole key upper-cased) still read back
+    // for every timeframe whose name has no capital letter
+    val legacyDir = Files.createTempDirectory("graft-wm-legacy")
+    Files.writeString(legacyDir.resolve("watermarks.json"),
+      """{"BTCUSDT|1H":"2026-01-01T05:00:00Z","BTCUSDT|5M":"2026-01-01T05:55:00Z"}""")
+    val legacy = new AggregatorStateStore(legacyDir.toString)
+    assert(legacy.get("btcusdt", "5m").contains(instant("2026-01-01T05:55:00Z")))
+    assert(legacy.getAll("1h") == Map("BTCUSDT" -> instant("2026-01-01T05:00:00Z")))
+  }
+
+  test("fleet tick Spark job counts (wide layout): a token-skip poll launches none, a one-spec busy tick a fixed number") {
+    val dir = Files.createTempDirectory("graft-agg-jobs").toString
+    val ledger = new PartitionLedger(s"$dir/_state")
+    val layout = graft.sources.LakeLayout.DayWide(filesPerDay = 2)
+    val mw = new MinuteLakeWriter(dir, ledger, layout)
+    val reader = new MinuteLakeReader(dir)
+    val hw = new HtfLakeWriter(s"$dir/htf", layout)
+    val state = new AggregatorStateStore(s"$dir/_aggstate")
+    val spec = Timeframes.parse("15m")
+    val lg = Some(ledger)
+    mw.writeDaysWide(denseMinutes("AAAUSDT", "2026-01-01T00:00:00Z", 600)
+      .unionByName(denseMinutes("BBBUSDT", "2026-01-01T00:00:00Z", 600)))
+    AggregatorRunner.runBackfillAll(spark, reader, hw, state, s"$dir/htf", spec)
+    tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg) // accounting poll
+
+    def jobsOf[T](body: => T): (T, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = body
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        (r, jobs.get())
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (steady, steadyJobs) = jobsOf(
+      tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg))
+    assert(steady.bucketsScanned == 0 && steady.bucketsWritten == 0)
+    assert(steadyJobs == 0, s"a token-skip poll must launch no Spark job: $steadyJobs")
+
+    Thread.sleep(10)
+    mw.writeDaysWide(denseMinutes("AAAUSDT", "2026-01-01T10:00:00Z", 60)
+      .unionByName(denseMinutes("BBBUSDT", "2026-01-01T10:00:00Z", 60)), merge = true)
+    val (busy, busyJobs) = jobsOf(
+      tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg))
+    assert(busy.bucketsWritten == 8, s"four fresh 15m buckets per symbol: $busy")
+    assert(busyJobs == BusyTickJobs,
+      s"a one-spec busy tick launches $BusyTickJobs Spark jobs, saw $busyJobs")
+  }
+
+  /** Jobs of the busy tick above: the latest scan, the aggregation with
+    * its per-symbol collect, the write-skip compare and the bulk write.
+    * Measured as 20 for the same lifecycle on the single-spec
+    * incremental verb this tick replaced (a one-spec fleet tick then
+    * cost 21: its persisted shared read added a job). A larger count
+    * means a pass came back (a shared read under one spec, a second
+    * collect, a re-derived touched-day set). */
+  private val BusyTickJobs = 20
 }

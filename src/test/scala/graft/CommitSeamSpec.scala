@@ -373,31 +373,34 @@ class CommitSeamSpec extends SparkSpec {
     // through the committer (bulk path routes per-day via the pointer)
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:00:00Z", 14))
-    val res = AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec5m)
+    val res = AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", spec5m)
     assert(res.bucketsScanned == 2 && res.bucketsWritten == 2)
 
-    // the index scan resolves the manifest leaves
-    val idx = AggregatorRunner.scanExistingIndex(spark, s"$dir/htf", "5m",
-      "BTCUSDT", ManifestCommit).orderBy("bucket_start").collect()
+    // the HTF index resolves through the manifest leaves
+    val symDir = s"$dir/htf/timeframe=5m/symbol=BTCUSDT"
+    val leaves = ResolvedScan.resolvedLeaves(localFs(), symDir, ManifestCommit)
+    val idx = spark.read.option("basePath", symDir).parquet(leaves: _*)
+      .orderBy("bucket_start").select("bucket_start", "bucket_complete").collect()
     assert(idx.map(_.getTimestamp(0).toInstant).toSeq ==
       Seq(instant("2026-01-01T00:00:00Z"), instant("2026-01-01T00:05:00Z")))
+    assert(idx.forall(_.getBoolean(1)))
 
     // idempotent second backfill: nothing new
-    val res2 = AggregatorRunner.runBackfill(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec5m)
+    val res2 = AggregatorRunner.runBackfillAll(spark, reader, hw, state,
+      s"$dir/htf", spec5m)
     assert(res2.bucketsScanned == 0 && res2.bucketsWritten == 0)
 
     // incremental completes the third bucket as its minute arrives
     mw.writeHourPartition("BTCUSDT", instant("2026-01-01T00:00:00Z"),
       canonicalMinutes("2026-01-01T00:14:00Z", 6))
-    val inc = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec5m)
+    def tick() = AggregatorRunner.runFleetTick(spark, reader, hw, state,
+      s"$dir/htf", Seq(spec5m)).head._2
+    val inc = tick()
     assert(inc.bucketsWritten >= 1)
 
     // no-news tick: write-skip parity through resolved window reads
-    val inc2 = AggregatorRunner.runIncremental(spark, reader, hw, state,
-      s"$dir/htf", "BTCUSDT", spec5m)
+    val inc2 = tick()
     assert(inc2.bucketsWritten == 0, "unchanged buckets must not rewrite")
 
     // the HTF reader serves the buckets through the pointers
@@ -641,8 +644,8 @@ class CommitSeamSpec extends SparkSpec {
       }
     }
 
-    val res = AggregatorRunner.runIncrementalAll(spark, reader, hw, state,
-      s"$dir/htf", spec5m)
+    val res = AggregatorRunner.runFleetTick(spark, reader, hw, state,
+      s"$dir/htf", Seq(spec5m)).head._2
     assert(readCalls == 2,
       s"first window read must die vanished, the retry re-resolves: $readCalls")
     // the completed tick saw the LIVE version: all 20 minutes → four
@@ -698,13 +701,14 @@ class CommitSeamSpec extends SparkSpec {
           "volume_usdt", "trade_count", "bucket_complete",
           "observed_minutes_in_bucket")
         .withColumn("vwap_bucket", L(openBase))
+        .withColumn("symbol", L("BTCUSDT"))
     }
-    hw.writeBucketsBulk(spark, spec.name, "BTCUSDT", bucketRows(100.0))
+    hw.writeBucketsBulkAllSymbols(spark, spec.name, bucketRows(100.0))
     val served = new HtfLakeReader(s"$root/htf", mc)
       .readWindow(spark, "5m", "BTCUSDT",
         instant("2026-01-01T00:00:00Z"), instant("2026-01-01T00:05:00Z")).get
     // competing rewrite sweeps the version the served plan resolved
-    hw.writeBucketsBulk(spark, spec.name, "BTCUSDT", bucketRows(200.0))
+    hw.writeBucketsBulkAllSymbols(spark, spec.name, bucketRows(200.0))
     val opens = served.select("open").collect().map(_.getDouble(0)).toSeq
     assert(opens == Seq(100.0), s"pinned HTF window must survive GC: $opens")
     served.unpersist()

@@ -403,9 +403,9 @@ class QueryServiceSpec extends SparkSpec {
     // lake lags the minute lake by an hour (12 vs 24 complete buckets)
     mw.writeHourPartition("BTCUSDT", start, canonical.where(
       col("timestamp") < java.sql.Timestamp.from(start.plusSeconds(3600))))
-    AggregatorRunner.runBackfill(spark, reader, hw,
+    AggregatorRunner.runBackfillAll(spark, reader, hw,
       new AggregatorRunner.AggregatorStateStore(s"$dir/_agg"),
-      s"$dir/htf", "BTCUSDT", graft.schema.Timeframes.parse("5m"))
+      s"$dir/htf", graft.schema.Timeframes.parse("5m"))
     mw.writeHourPartition("BTCUSDT", start.plusSeconds(3600), canonical.where(
       col("timestamp") >= java.sql.Timestamp.from(start.plusSeconds(3600))))
 

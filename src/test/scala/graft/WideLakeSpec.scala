@@ -297,8 +297,8 @@ class WideLakeSpec extends SparkSpec {
       val state = new AggregatorStateStore(s"$root/_aggstate")
       val bf = AggregatorRunner.runBackfillAll(spark, reader, writer, state,
         s"$root/htf", spec)
-      val noop = AggregatorRunner.runIncrementalAll(spark, reader, writer, state,
-        s"$root/htf", spec)
+      val noop = AggregatorRunner.runFleetTick(spark, reader, writer, state,
+        s"$root/htf", Seq(spec)).head._2
       val buckets = spark.read.parquet(s"$root/htf/timeframe=1h")
         .select("symbol", "bucket_start", "open", "close", "bucket_complete")
       (bf.bucketsWritten, noop.bucketsWritten, buckets)
@@ -503,7 +503,7 @@ class WideLakeSpec extends SparkSpec {
     // IDLUSDT stops writing on day 1 of a 4-day lake — outside the
     // 2-deepest-day scan. Without the knownSymbols hint it's absent
     // (documented trade); with it, the per-symbol probe finds its true
-    // latest, so runIncrementalAll can finalize its trailing buckets.
+    // latest, so the fleet tick can finalize its trailing buckets.
     val wRoot = Files.createTempDirectory("graft-wide-idle").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3))
