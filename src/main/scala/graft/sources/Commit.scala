@@ -34,11 +34,13 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *    reader still scanning version N while N+1 and N+2 publish; the
   *    window is time-based, sized to the longest expected scan).
   *
-  * The remaining two §4.1 seams are configuration, not code: bulk
-  * dynamic-partition writes commit through Hadoop's committer (swap to
-  * the S3A magic/manifest committer via conf), and
-  * [[MinuteLakeWriter.writeDeltaPatch]] is already append-only-new-
-  * objects (object-store-native as written).
+  * The remaining two §4.1 seams sit outside this trait: the day-wide
+  * trees write each batch once into `.tmp` (through Hadoop's output
+  * committer, swappable to the S3A magic/manifest committer via conf)
+  * and publish every touched day by a rename-aside directory swap
+  * ([[WideDayPublish]]: day-granular, copy-then-delete on an object
+  * store), and [[MinuteLakeWriter.writeDeltaPatch]] is already
+  * append-only-new-objects (object-store-native as written).
   *
   * Pinned by CommitSeamSpec: a write+crash+read matrix over an
   * injected filesystem whose DIRECTORY rename is copy-then-delete with

@@ -18,20 +18,22 @@ import graft.validation.DQValidator
   * Layout: `futures/um/minute/symbol=S/year=YYYY/month=MM/day=DD/hour=HH/`
   * (Hive-style, so Catalyst partition pruning is automatic on read).
   *
-  * Two write paths:
+  * Write paths, one publish each:
   *  - [[writeHourPartition]] — the exact semantic port: read existing
   *    partition, last-wins merge with LIVE_ONLY preservation (bool-OR
   *    for coverage flags, coalesce for the rest), DQ-validate, rewrite
-  *    the single partition (write-to-tmp + rename keeps readers atomic).
-  *  - [[writePartitionedBulk]] — the lake-scale path: one job writes many
-  *    partitions at once with `partitionOverwriteMode=dynamic`; use for
-  *    backfills where per-hour loops would serialize.
+  *    the single partition (write-to-tmp + `committer.publish` keeps
+  *    readers atomic). On the day-wide layout it routes to the two
+  *    paths below.
   *  - [[writeDaysWide]] — the WIDTH-scalable path ([[LakeLayout.DayWide]]):
   *    day-level partitions, symbol as a data column, files
-  *    range-partitioned + sorted by (symbol, timestamp). Same last-wins +
+  *    range-partitioned + sorted by (symbol, timestamp), written once
+  *    and swapped in per day by [[WideDayPublish.write]]. Same last-wins +
   *    LIVE_ONLY-preserve merge semantics, keyed by (symbol, timestamp).
   *    Use at lake width ≥10k where the hourly layout's file population
   *    (width × 24 files/day) is the measured constraint (SURVEY §8.15).
+  *  - [[writeDeltaPatch]] — day-wide point repairs as append-only delta
+  *    files, folded back by [[compactWideDeltas]].
   */
 /** When the ingestion tick folds accumulated day-wide delta patches
   * into their base days — threshold OR age, whichever trips first
@@ -54,83 +56,6 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val z = hourStart.atZone(ZoneOffset.UTC)
     f"$root/futures/um/minute/symbol=${symbol.toUpperCase}/year=${z.getYear}%04d/" +
       f"month=${z.getMonthValue}%02d/day=${z.getDayOfMonth}%02d/hour=${z.getHour}%02d"
-  }
-
-  /** Last-wins merge with LIVE_ONLY preservation (reference
-    * `atomic.py:65-97`): new rows win on timestamp collision, but
-    * existing LIVE_ONLY values survive — coverage flags (has_ws_latency /
-    * has_depth / has_liq) are bool-OR'd, every other LIVE_ONLY column is
-    * coalesce(merged, existing). */
-  def mergePartitionFrames(existing: DataFrame, fresh: DataFrame): DataFrame =
-    mergePartitionFramesKeyed(existing, fresh, Seq("timestamp"))
-
-  /** Keyed generalization of the merge: the hourly layout merges one
-    * symbol's partition on `timestamp` alone; the day-wide layout holds
-    * every symbol in one partition and merges on (symbol, timestamp).
-    * Identical policy either way — the layouts share ONE merge
-    * implementation so their semantics cannot drift (it also serves the
-    * READ-time delta overlay, so pre- and post-compaction results are
-    * the same plan by construction). */
-  def mergePartitionFramesKeyed(existing: DataFrame, fresh: DataFrame,
-                                keys: Seq[String]): DataFrame =
-    MinuteLakeWriter.mergeKeyed(existing, fresh, keys)
-
-  /** Bulk hourly ingest (VERDICT r17 #5): merge+stage every hour, then
-    * commit the batch — under [[DayManifestCommit]] ONE pointer PUT per
-    * touched day instead of one per hour leaf (the r17 ManifestCostProbe
-    * priced per-leaf publish at 12.8 ms and one billable PUT per leaf;
-    * a 24-hour day batches to 1/24th the PUTs). Identity and per-leaf
-    * manifest committers publish leaf-by-leaf through the same staging
-    * (same result, per-leaf cost). Merge semantics, DQ validation, and
-    * ledger bookkeeping are exactly [[writeHourPartition]]'s; the
-    * day-wide layout has no hour leaves to batch and delegates. */
-  def writeHourPartitionsBatched(symbol: String,
-      hours: Seq[(Instant, DataFrame)]): Seq[String] = {
-    if (hours.isEmpty) return Seq.empty
-    layout match {
-      case LakeLayout.DayWide(_) =>
-        return hours.map { case (h, f) => writeHourPartition(symbol, h, f) }
-      case LakeLayout.HourlySymbol => ()
-    }
-    val spark = hours.head._2.sparkSession
-    val fs = FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration)
-    val staged = hours.map { case (hourStart, frame) =>
-      val finalDir = partitionDir(symbol, hourStart)
-      val existingDir = committer.resolve(fs, finalDir)
-        .filter(d => fs.listStatus(new HPath(d)).exists(_.isFile))
-      val effective = existingDir match {
-        case Some(d) => mergePartitionFrames(spark.read.parquet(d), frame)
-        case None    => frame
-      }
-      val dq = DQValidator.validate(effective)
-      val tmpDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      effective.coalesce(1).write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(tmpDir)
-      (hourStart, finalDir, tmpDir, dq)
-    }
-    committer match {
-      case b: DayManifestCommit =>
-        b.publishBatch(fs, staged.map(s => s._3 -> s._2))
-      case c =>
-        staged.foreach(s => c.publish(fs, s._3, s._2))
-    }
-    staged.map { case (hourStart, finalDir, _, dq) =>
-      ledger.upsert(PartitionLedgerEntry(
-        symbol = symbol.toUpperCase,
-        day = hourStart.atZone(ZoneOffset.UTC).toLocalDate.toString,
-        hour = hourStart.atZone(ZoneOffset.UTC).getHour,
-        path = finalDir,
-        rowCount = dq.rowCount,
-        minTs = dq.minTs,
-        maxTs = dq.maxTs,
-        schemaHash = CanonicalSchema.schemaHash,
-        status = "COMMITTED",
-        committedAtUtc = Instant.now.toString,
-        contentHash = MinuteLakeWriter.contentHashOfDir(fs,
-          committer.resolve(fs, finalDir).getOrElse(finalDir))))
-      finalDir
-    }
   }
 
   /** Write (merge if present) one symbol-hour partition. Atomicity =
@@ -172,8 +97,8 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
           committedAtUtc = Instant.now.toString,
           // content hash is per-PARTITION; a day-wide partition is
           // rewritten by later symbols' writes, so this per-symbol-hour
-          // row is bookkeeping only — the audit surface is the day-grain
-          // "__ALL__" row writeDaysWide commits (distributed hash)
+          // row is bookkeeping only — auditPartitions audits the
+          // day-grain rows writeDaysWide / writeDeltaPatch commit
           contentHash = ""))
         return dayDir
       case LakeLayout.HourlySymbol => ()
@@ -187,7 +112,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val existingDir = committer.resolve(fs, finalDir)
       .filter(d => fs.listStatus(new HPath(d)).exists(_.isFile))
     val effective = existingDir match {
-      case Some(d) => mergePartitionFrames(spark.read.parquet(d), frame)
+      case Some(d) => MinuteLakeWriter.mergeKeyed(spark.read.parquet(d), frame, Seq("timestamp"))
       case None    => frame
     }
 
@@ -315,7 +240,14 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def isIoFailure(t: Throwable): Boolean =
       t != null && (t.isInstanceOf[java.io.IOException] || isIoFailure(t.getCause))
-    val entries = ledger.all().filter(_.status == "COMMITTED")
+    // a day-wide lake's audit surface is its day-grain rows (hour < 0);
+    // the per-(symbol, hour) rows writeHourPartition records there are
+    // bookkeeping without a hash
+    val auditable: PartitionLedgerEntry => Boolean = layout match {
+      case LakeLayout.DayWide(_)   => _.hour < 0
+      case LakeLayout.HourlySymbol => _ => true
+    }
+    val entries = ledger.all().filter(e => e.status == "COMMITTED" && auditable(e))
       .sortBy(e => (e.symbol, e.day, e.hour))
     // Day-grain entries recompute DISTRIBUTED, and hashing them per
     // entry launched one binaryFile job per committed day — O(days)
@@ -369,119 +301,30 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       }
   }
 
-  /** Bulk path: write a multi-hour canonical frame in one
-    * dynamic-partition-overwrite job. With `merge = true` the touched
-    * hour partitions are first read back (semi-join on the inferred
-    * partition columns so Catalyst prunes the scan) and merged with the
-    * same last-wins + LIVE_ONLY-preserve policy as
-    * [[writeHourPartition]], staged through `.tmp` because the plan
-    * reads the directory it overwrites — O(1) Spark jobs in the number
-    * of hours either way. */
-  def writePartitionedBulk(frame: DataFrame, symbol: String,
-                           merge: Boolean = false): Unit = {
-    if (committer.readThroughResolve) {
-      // manifest deployment: every hour leaf must be committed through
-      // the pointer — a dynamic-partition overwrite would land plain
-      // dirs that resolving readers shadow behind any stale pointer.
-      // Stage once, then publish per touched hour (cheap filtered
-      // re-reads of the staged parquet, not upstream plan re-runs).
-      writePartitionedBulkCommitted(frame, symbol, merge)
-      return
-    }
-    val spark = frame.sparkSession
-    val lakeDir = s"$root/futures/um/minute"
-    val symbolDir = s"$lakeDir/symbol=${symbol.toUpperCase}"
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-    def withPartCols(df: DataFrame): DataFrame = df
-      .withColumn("symbol", lit(symbol.toUpperCase))
-      .withColumn("year", date_format(col("timestamp"), "yyyy"))
-      .withColumn("month", date_format(col("timestamp"), "MM"))
-      .withColumn("day", date_format(col("timestamp"), "dd"))
-      .withColumn("hour", date_format(col("timestamp"), "HH"))
-
-    val hasExisting = merge && fs.exists(new HPath(symbolDir)) &&
-      fs.listStatus(new HPath(symbolDir)).nonEmpty
-    val tmp =
-      if (!hasExisting) None
-      else Some(s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val effective = tmp match {
-      case None => frame
-      case Some(t) =>
-        val touched = withPartCols(frame)
-          .select(col("year").cast("int").as("year"),
-                  col("month").cast("int").as("month"),
-                  col("day").cast("int").as("day"),
-                  col("hour").cast("int").as("hour"))
-          .distinct()
-        val existingTouched = spark.read.parquet(symbolDir)
-          .join(broadcast(touched), Seq("year", "month", "day", "hour"), "left_semi")
-          .drop("year", "month", "day", "hour")
-        mergePartitionFrames(existingTouched, frame)
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(t)
-        spark.read.parquet(t)
-    }
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      withPartCols(effective)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("symbol", "year", "month", "day", "hour")
-        .option("compression", "zstd")
-        .parquet(lakeDir)
-    } finally tmp.foreach(t => fs.delete(new HPath(t), true))
-  }
-
-  /** Manifest-deployment form of [[writePartitionedBulk]] — see the
-    * fallback note there. `merge = true` routes each hour through
-    * [[writeHourPartition]] (manifest-resolved read-merge + publish);
-    * `merge = false` keeps replace semantics: the slice is published
-    * as the partition's whole new version. */
-  private def writePartitionedBulkCommitted(frame: DataFrame, symbol: String,
-                                            merge: Boolean): Unit = {
-    val spark = frame.sparkSession
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    frame.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
-    try {
-      val staged = spark.read.parquet(stageDir)
-      val hours = staged.select(date_trunc("hour", col("timestamp")).as("h"))
-        .distinct().collect().map(_.getTimestamp(0)).sortBy(_.getTime)
-      hours.foreach { h =>
-        val slice = staged.where(date_trunc("hour", col("timestamp")) === h)
-        if (merge) writeHourPartition(symbol, h.toInstant, slice)
-        else {
-          val tmp = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-          slice.coalesce(1).write.mode(SaveMode.Overwrite)
-            .option("compression", "zstd").parquet(tmp)
-          committer.publish(fs, tmp, partitionDir(symbol, h.toInstant))
-        }
-      }
-    } finally fs.delete(new HPath(stageDir), true)
-  }
-
   /** Day-wide bulk write ([[LakeLayout.DayWide]]): a multi-symbol,
-    * multi-day canonical frame (must carry a `symbol` column) lands as
-    * ONE dynamic-partition-overwrite job into `year=/month=/day=`
-    * partitions, each day's data range-partitioned and sorted by
-    * (symbol, timestamp) into `filesPerDay` files — so the file
-    * population is O(days × filesPerDay) regardless of lake width, and
-    * parquet min/max stats on the sorted symbol column give per-symbol
-    * file skipping that replaces the per-symbol directory tree.
+    * multi-day canonical frame (must carry a `symbol` column) lands in
+    * `year=/month=/day=` partitions, each day's data range-partitioned
+    * and sorted by (symbol, timestamp) into `filesPerDay` files — so the
+    * file population is O(days × filesPerDay) regardless of lake width,
+    * and parquet min/max stats on the sorted symbol column give
+    * per-symbol file skipping that replaces the per-symbol directory
+    * tree. The days are written once into `.tmp` and each touched day
+    * is swapped in ([[WideDayPublish.write]]); `merge = false` replaces
+    * the touched days with `frame`'s rows.
     *
-    * `merge = true` reads back ONLY the touched day partitions
-    * (semi-join on the inferred partition ints, Catalyst prunes) and
+    * `merge = true` reads back ONLY the touched day dirs that exist and
     * applies the SAME last-wins + LIVE_ONLY-preserve policy as the
-    * hourly paths, keyed by (symbol, timestamp); symbols present in a
-    * touched day but absent from `frame` survive the rewrite because the
-    * merge read is keyed by day, not by symbol.
+    * hourly path ([[MinuteLakeWriter.mergeKeyed]]), keyed by (symbol,
+    * timestamp); symbols present in a touched day but absent from
+    * `frame` survive the rewrite because the merge read is keyed by
+    * day, not by symbol.
     *
     * The incoming frame is always staged through `.tmp` parquet first:
-    * the day-count, the range-partitioner's sampling pass, and the final
-    * write would otherwise each re-evaluate an arbitrary upstream plan
-    * (and the merge plan reads the directory it overwrites). One extra
-    * columnar materialization of the increment buys single-evaluation
-    * semantics — the standard shape on an object store too. */
+    * the day stats, the range-partitioner's sampling pass, and the final
+    * write would otherwise each re-evaluate an arbitrary upstream plan.
+    * One extra columnar materialization of the increment buys
+    * single-evaluation semantics — the standard shape on an object
+    * store too. */
   def writeDaysWide(frame: DataFrame, merge: Boolean = false): Unit = {
     val filesPerDay = layout match {
       case LakeLayout.DayWide(f) => f
@@ -492,11 +335,6 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val spark = frame.sparkSession
     val lakeDir = s"$root/futures/um/minute"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-    def withPartCols(df: DataFrame): DataFrame = df
-      .withColumn("year", date_format(col("timestamp"), "yyyy"))
-      .withColumn("month", date_format(col("timestamp"), "MM"))
-      .withColumn("day", date_format(col("timestamp"), "dd"))
 
     // stage the increment through .tmp parquet once (see Scaladoc): day
     // stats, range sampling, the merge read, and the final write must
@@ -509,10 +347,9 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     // (guide §5). Parquet staging also guarantees a recompute-free read:
     // a persisted block lost mid-write on a cluster would recompute from
     // the caller's plan, which for merge writes reads the very lake
-    // directory the dynamic-partition overwrite is replacing (r20
-    // ADVICE #2). Reverted r21; the r20 stats-pass fusion stays.
+    // days being replaced (r20 ADVICE #2). Reverted r21; the r20
+    // stats-pass fusion stays.
     val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    var mergeTmpDir: Option[String] = None
     frame.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
     try {
       val staged = spark.read.parquet(stageDir)
@@ -523,42 +360,16 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       // staged parquet, pure fixed cost per bulk write. The per-day
       // symbol sets are width-bounded (strings per day), the same bound
       // the registry write already carries.
-      val stagedStats = withPartCols(staged)
-        .groupBy(col("year").cast("int").as("y"),
-                 col("month").cast("int").as("m"),
-                 col("day").cast("int").as("d"))
+      val stagedStats = staged
+        .groupBy(year(col("timestamp")).as("y"),
+                 month(col("timestamp")).as("m"),
+                 dayofmonth(col("timestamp")).as("d"))
         .agg(count(lit(1)).as("n"),
              unix_micros(min(col("timestamp"))).as("mn"),
              unix_micros(max(col("timestamp"))).as("mx"),
              collect_set(upper(col("symbol"))).as("syms"))
         .collect()
-      val touched = stagedStats.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
-      val nDays = touched.length.max(1)
-
-      val hasExisting = merge && fs.exists(new HPath(lakeDir)) &&
-        fs.listStatus(new HPath(lakeDir)).nonEmpty
-      val mergeTmp =
-        if (!hasExisting) None
-        else Some(s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      mergeTmpDir = mergeTmp
-      val effective = mergeTmp match {
-        case None => staged
-        case Some(t) =>
-          // read the touched day dirs EXPLICITLY — a root-read +
-          // partition semi-join still LISTS every file in the lake
-          // before pruning, so merging one day into a years-deep lake
-          // paid O(depth) listing (same fix as the reader paths); the
-          // walk itself descends only the touched years/months
-          val touchedDirs = DayDirs.matching(fs, lakeDir, touched.toSet)
-          if (touchedDirs.isEmpty) staged
-          else {
-            val existingTouched = spark.read.option("basePath", lakeDir)
-              .parquet(touchedDirs: _*).drop("year", "month", "day")
-            mergePartitionFramesKeyed(existingTouched, staged, Seq("symbol", "timestamp"))
-              .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(t)
-            spark.read.parquet(t)
-          }
-      }
+      val touched = stagedStats.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
 
       // register BEFORE publishing data (r15 advice #2): a reader
       // racing the gap between data commit and a late registration
@@ -567,22 +378,10 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       registerSymbolSet(fs,
         stagedStats.iterator.flatMap(_.getSeq[String](6)).toSet)
 
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // sort by the PARTITION columns first: FileFormatWriter's required
-      // ordering for a dynamic-partition write is (year, month, day), and
-      // a sort that doesn't already satisfy it gets an extra SortExec on
-      // just those columns inserted above the write — which is not
-      // guaranteed stable, so the (symbol, timestamp) clustering the
-      // layout's file-stat pruning depends on could silently scramble.
-      // Leading with them makes the writer's requirement already met.
-      withPartCols(effective)
-        .repartitionByRange(nDays * filesPerDay,
-          col("year"), col("month"), col("day"), col("symbol"), col("timestamp"))
-        .sortWithinPartitions("year", "month", "day", "symbol", "timestamp")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("year", "month", "day")
-        .option("compression", "zstd")
-        .parquet(lakeDir)
+      val mergedExisting = WideDayPublish.write(fs, root, lakeDir, staged, touched,
+        filesPerDay, "timestamp",
+        if (merge) Some(MinuteLakeWriter.mergeKeyed(_, _, Seq("symbol", "timestamp")))
+        else None)
 
       // S13 at day grain: commit one ledger row per touched day
       // (symbol = "__ALL__", hour = -1) with row bounds and a content
@@ -595,26 +394,27 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       // bounds via unix_micros + driver-side UTC render: the strings are
       // windowed on by the incremental tick, so they must not depend on
       // the session time zone (ADVICE r16 #1; see LedgerBounds). When
-      // nothing was merged, effective IS staged and the stats pass above
-      // already holds its per-day bounds — no second job. When a merge
-      // DID produce a bounds job, it is independent of the content-hash
-      // read (merge tmp rows vs committed raw bytes), so the two jobs
-      // overlap (guide §2.6) and the write pays max, not sum.
+      // no existing day was merged, the published days hold exactly the
+      // staged rows and the stats pass above already has their per-day
+      // bounds — no second job. After a merge the bounds job reads the
+      // published days; it is independent of the content-hash read
+      // (decoded rows vs raw bytes), so the two jobs overlap (guide
+      // §2.6) and the write pays max, not sum.
       val (hashes, bounds) = MinuteLakeWriter.overlap(
         MinuteLakeWriter.dayContentHashes(spark, committedDirs.values.toSeq)) {
-        if (mergeTmp.isEmpty || (effective eq staged))
-          stagedStats.toSeq.map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)),
-            r.getLong(3), r.getLong(4), r.getLong(5)))
-        else withPartCols(effective)
-          .groupBy(col("year").cast("int").as("y"),
-                   col("month").cast("int").as("m"),
-                   col("day").cast("int").as("d"))
-          .agg(count(lit(1)).as("n"),
-               unix_micros(min(col("timestamp"))).as("mn"),
-               unix_micros(max(col("timestamp"))).as("mx"))
-          .collect().toSeq
-          .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)),
-            r.getLong(3), r.getLong(4), r.getLong(5)))
+        val rows =
+          if (!mergedExisting) stagedStats.toSeq
+          else spark.read.option("basePath", lakeDir)
+            .parquet(committedDirs.values.toSeq: _*)
+            .groupBy(col("year").cast("int").as("y"),
+                     col("month").cast("int").as("m"),
+                     col("day").cast("int").as("d"))
+            .agg(count(lit(1)).as("n"),
+                 unix_micros(min(col("timestamp"))).as("mn"),
+                 unix_micros(max(col("timestamp"))).as("mx"))
+            .collect().toSeq
+        rows.map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)),
+          r.getLong(3), r.getLong(4), r.getLong(5)))
       }
       // patch bounds: what THIS write touched, per day — the staged
       // increment's bounds, not the merged day's (both come from the
@@ -669,11 +469,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
             patchMaxTs = patch.map(_._2).getOrElse("")))
         }
       }
-    } finally {
-      // stage + merge tmp both cleaned on failure too
-      fs.delete(new HPath(stageDir), true)
-      mergeTmpDir.foreach(t => fs.delete(new HPath(t), true))
-    }
+    } finally fs.delete(new HPath(stageDir), true) // cleaned on failure too
   }
 
   /** Bounded POINT repair for the day-wide layout (VERDICT r13 #1): a
@@ -828,7 +624,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
   /** Fold accumulated deltas back into the day-wide base — the
     * threshold companion of [[writeDeltaPatch]]: delta days holding at
     * least `minFilesPerDay` delta files are merged into their base day
-    * partitions through ONE [[writeDaysWide]]`(merge = true)` job
+    * partitions through one [[writeDaysWide]]`(merge = true)` call
     * (same last-wins + LIVE_ONLY-preserve policy the read overlay
     * applies, so compaction never changes what a reader sees), then
     * the folded delta dirs are deleted and their `__DELTA__` ledger
@@ -1103,41 +899,89 @@ object MinuteLakeWriter {
     }
     digest.digest().map("%02x".format(_)).mkString
   }
-
-  /** Atomic publish (reference `atomic.py:38-44`): rename the previous
-    * partition directory aside (into the dot-prefixed tmp area, which
-    * readers never list), rename the freshly-written tmp directory into
-    * place, then delete the aside copy. Readers see the old or the new
-    * partition except during the instant between the two renames (a
-    * brief missing-partition window); a crash in that window leaves the
-    * old data recoverable under `.tmp` rather than lost.
-    *
-    * OBJECT-STORE SEAM: rename is copy+delete on S3 — the
-    * [[CommitProtocol]] trait is the executable seam (this method is
-    * its rename-default, kept as the writers' shared shorthand); a
-    * cluster deployment constructs the writers with [[ManifestCommit]]
-    * instead (manifest pointer swap; see SURVEY §4.1 and
-    * CommitSeamSpec's crash matrix). */
-  def publishAtomically(fs: FileSystem, tmpDir: String, finalDir: String): Unit =
-    RenameCommit.publish(fs, tmpDir, finalDir)
 }
 
-/** One staged day directory swapped into place with rename-ASIDE
-  * semantics (r21, r20 ADVICE #1): the live day moves into the
-  * dot-prefixed tmp area (readers never list it) BEFORE the
-  * replacement renames in, and is restored if the promote fails — by a
-  * false return OR an in-JVM exception — so a transient rename failure
-  * is never day-level data loss. After a failed promote the target is
-  * either absent (atomic-rename FS: the old content was already moved
-  * aside) or a partial copy of the NEW data (object-store
-  * copy-then-delete rename) — never the superseded content — so the
-  * restore may delete it before renaming the aside back. A process
-  * death mid-swap leaves the superseded day recoverable under the
-  * aside dir in `.tmp` (the r20 delete→promote shape destroyed it).
-  * Day-granular, non-atomic across days, same as the
-  * dynamic-partition commit this path replaced; the manifest committer
-  * remains the atomicity answer. */
+/** The one publish path of the day-wide trees (minute base and HTF):
+  * [[write]] writes the touched days once into `.tmp` and [[swap]]s
+  * each day directory into place. Day-granular, non-atomic across
+  * days; the manifest committers remain the atomicity answer. */
 private[graft] object WideDayPublish {
+
+  /** Write the staged increment's days under `dir` (a
+    * `year=/month=/day=` tree) and publish them. With a `merge` policy
+    * the touched day dirs that exist are read back and merged as
+    * `merge(existing, staged)`; without one the touched days are
+    * replaced by `staged`'s rows. The (merged) rows are written ONCE —
+    * range-partitioned and sorted by (year, month, day, symbol,
+    * `timeCol`) into `filesPerDay` files per touched day — into
+    * `root/.tmp/<uuid>`, then every written day is swapped in. Absent
+    * days (fresh trees, new days) publish by one rename. The write's
+    * tmp tree is removed on success and on failure; the aside copies of
+    * superseded days are dropped only once every day published, since
+    * until then they are the restore source.
+    *
+    * @return whether any existing day was read and merged */
+  private[sources] def write(fs: FileSystem, root: String, dir: String,
+                             staged: DataFrame, touched: Seq[(Int, Int, Int)],
+                             filesPerDay: Int, timeCol: String,
+                             merge: Option[(DataFrame, DataFrame) => DataFrame]): Boolean = {
+    val spark = staged.sparkSession
+    // explicit touched-day read — a root read + partition filter still
+    // LISTS every file in the tree before pruning; the walk descends
+    // only the touched years/months
+    val existing =
+      if (merge.isEmpty) Seq.empty else DayDirs.matching(fs, dir, touched.toSet)
+    val effective = merge match {
+      case Some(policy) if existing.nonEmpty =>
+        policy(spark.read.option("basePath", dir).parquet(existing: _*)
+          .drop("year", "month", "day"), staged)
+      case _ => staged
+    }
+    val tmp = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val asideRoot = s"$tmp-aside"
+    try {
+      // partition columns lead the sort: the partitioned writer requires
+      // (year, month, day) ordering and would otherwise insert its own,
+      // not necessarily stable, sort above the (symbol, time) clustering
+      // that the layout's file-stat pruning depends on. The range
+      // sample's pass over a merge plan reuses the merge shuffle's map
+      // output (same query), so the merge computes once.
+      effective
+        .withColumn("year", date_format(col(timeCol), "yyyy"))
+        .withColumn("month", date_format(col(timeCol), "MM"))
+        .withColumn("day", date_format(col(timeCol), "dd"))
+        .repartitionByRange(touched.length.max(1) * filesPerDay,
+          col("year"), col("month"), col("day"), col("symbol"), col(timeCol))
+        .sortWithinPartitions("year", "month", "day", "symbol", timeCol)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("year", "month", "day")
+        .option("compression", "zstd")
+        .parquet(tmp)
+      DayDirs.ascending(fs, tmp).foreach { srcDay =>
+        // walked paths come back fs-qualified — rebuild the
+        // year=/month=/day= tail instead of string-stripping the tmp
+        // prefix (same technique as DayDirs.ymdOf)
+        val rel = srcDay.split('/').takeRight(3).mkString("/")
+        swap(fs, srcDay, new HPath(s"$dir/$rel"), new HPath(s"$asideRoot/$rel"))
+      }
+      fs.delete(new HPath(asideRoot), true)
+    } finally fs.delete(new HPath(tmp), true)
+    existing.nonEmpty
+  }
+
+  /** One staged day directory swapped into place with rename-ASIDE
+    * semantics (r21, r20 ADVICE #1): the live day moves into the
+    * dot-prefixed tmp area (readers never list it) BEFORE the
+    * replacement renames in, and is restored if the promote fails — by
+    * a false return OR an in-JVM exception — so a transient rename
+    * failure is never day-level data loss. After a failed promote the
+    * target is either absent (atomic-rename FS: the old content was
+    * already moved aside) or a partial copy of the NEW data
+    * (object-store copy-then-delete rename) — never the superseded
+    * content — so the restore may delete it before renaming the aside
+    * back. A process death mid-swap leaves the superseded day
+    * recoverable under the aside dir in `.tmp` (the r20
+    * delete→promote shape destroyed it). */
   def swap(fs: FileSystem, srcDay: String, target: HPath, aside: HPath): Unit = {
     val hadOld = fs.exists(target)
     if (hadOld) {
@@ -1175,7 +1019,11 @@ private[graft] object WideDayPublish {
   * directory level disappears (`timeframe=T/year=/month=/day=/`, symbol
   * as a sorted data column, `filesPerDay` files per day per timeframe)
   * — at width 10k the hourly-era HTF tree is 10k files/day/timeframe,
-  * the same file-count wall the minute lake hit (SURVEY §8.15). */
+  * the same file-count wall the minute lake hit (SURVEY §8.15).
+  *
+  * One publish per layout: hourly (symbol, day) leaves publish through
+  * `committer.publish` (batched under [[DayManifestCommit]]); day-wide
+  * days publish through [[WideDayPublish.write]]. */
 class HtfLakeWriter(root: String,
                     val layout: LakeLayout = LakeLayout.HourlySymbol,
                     val committer: CommitProtocol = RenameCommit) {
@@ -1185,93 +1033,48 @@ class HtfLakeWriter(root: String,
       f"month=${day.getMonthValue}%02d/day=${day.getDayOfMonth}%02d"
 
   /** Bulk path (reference `target_writer.py:59-69`, re-planned for a
-    * cluster): `buckets` carries a `symbol` column; ONE
-    * dynamic-partition-overwrite job rewrites every touched
-    * (symbol, day) partition across the whole timeframe — the shape a
-    * 1000-symbol backfill needs (no per-symbol driver loop).
+    * cluster): `buckets` carries a `symbol` column and may span every
+    * symbol and day of the timeframe — the shape a 1000-symbol backfill
+    * needs (no per-symbol driver loop). Existing sibling buckets inside
+    * a touched partition that are not in `buckets` survive: rows dedup
+    * last-wins on (symbol, bucket_start), incoming wins.
     *
-    * Existing sibling buckets inside a touched partition that are not in
-    * `buckets` survive via the merge (last-wins on (symbol,
-    * bucket_start), incoming wins). The merge reads only the touched
-    * partitions (semi-join on the inferred (symbol, year, month, day)
-    * partition columns) and, because its plan reads the directory it
-    * overwrites, is staged through a `.tmp` parquet dir; a fresh tree
-    * skips the staging. */
+    * `touchedDays` and `callerPinned` apply to the day-wide layout:
+    * a caller that already knows the increment's day set skips the
+    * distinct pass, and a caller that persisted (and owns) `buckets`
+    * skips the `.tmp` staging. */
   def writeBucketsBulkAllSymbols(spark: SparkSession, timeframe: String,
                                  buckets: DataFrame,
                                  touchedDays: Option[Seq[(Int, Int, Int)]] = None,
-                                 callerPinned: Boolean = false): Unit = {
+                                 callerPinned: Boolean = false): Unit =
     layout match {
       case LakeLayout.DayWide(f) =>
         writeBucketsBulkAllSymbolsWide(spark, timeframe, buckets, f, touchedDays,
-          callerPinned); return
-      case LakeLayout.HourlySymbol => ()
+          callerPinned)
+      case LakeLayout.HourlySymbol =>
+        writeBucketsBulkCommitted(spark, timeframe, buckets)
     }
-    if (committer.readThroughResolve) {
-      // manifest deployment: dynamic-partition overwrite lands PLAIN
-      // day dirs, which a resolving reader would shadow behind any
-      // pointer already committed for that day — bulk writes must go
-      // through the committer too (see writeBucketsBulkCommitted)
-      writeBucketsBulkCommitted(spark, timeframe, buckets)
-      return
-    }
-    val dir = s"$root/timeframe=$timeframe"
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
-    def withPartCols(df: DataFrame): DataFrame = df
-      .withColumn("year", date_format(col("bucket_start"), "yyyy"))
-      .withColumn("month", date_format(col("bucket_start"), "MM"))
-      .withColumn("day", date_format(col("bucket_start"), "dd"))
-
-    val hasExisting = fs.exists(new HPath(dir)) && fs.listStatus(new HPath(dir)).nonEmpty
-    val tmp =
-      if (!hasExisting) None
-      else Some(s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val stage = tmp match {
-      case None => buckets
-      case Some(t) =>
-        val touched = withPartCols(buckets)
-          .select(col("symbol"),
-                  col("year").cast("int").as("year"),
-                  col("month").cast("int").as("month"),
-                  col("day").cast("int").as("day"))
-          .distinct()
-        val existingTouched = spark.read.parquet(dir)
-          .join(broadcast(touched), Seq("symbol", "year", "month", "day"), "left_semi")
-          .drop("year", "month", "day")
-        Ops.dedupKeepLast(
-          existingTouched.withColumn("__src", lit(0))
-            .unionByName(buckets.withColumn("__src", lit(1)), allowMissingColumns = true),
-          Seq("symbol", "bucket_start"), Seq(col("__src"))).drop("__src")
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(t)
-        spark.read.parquet(t)
-    }
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      withPartCols(stage)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("symbol", "year", "month", "day")
-        .option("compression", "zstd")
-        .parquet(dir)
-    } finally tmp.foreach(t => fs.delete(new HPath(t), true))
-  }
+  /** Last-wins union of `fresh` over `existing` on `keys` (incoming
+    * wins); columns missing on either side read as null. */
+  private def lastWins(existing: DataFrame, fresh: DataFrame,
+                       keys: Seq[String]): DataFrame =
+    Ops.dedupKeepLast(
+      existing.withColumn("__src", lit(0))
+        .unionByName(fresh.withColumn("__src", lit(1)), allowMissingColumns = true),
+      keys, Seq(col("__src"))).drop("__src")
 
   /** Day-wide HTF bulk write: `timeframe=T/year=/month=/day=` with
-    * symbol as a sorted data column. Merge is keyed by day (the rewrite
-    * unit), so sibling symbols' buckets in a touched day survive; rows
-    * dedup last-wins on (symbol, bucket_start), incoming wins. */
+    * symbol as a sorted data column, written and published by
+    * [[WideDayPublish.write]]. Merge is keyed by day (the rewrite unit),
+    * so sibling symbols' buckets in a touched day survive. */
   private def writeBucketsBulkAllSymbolsWide(spark: SparkSession, timeframe: String,
                                              buckets: DataFrame,
                                              filesPerDay: Int,
-                                             touchedDays: Option[Seq[(Int, Int, Int)]] = None,
-                                             callerPinned: Boolean = false): Unit = {
+                                             touchedDays: Option[Seq[(Int, Int, Int)]],
+                                             callerPinned: Boolean): Unit = {
     val dir = s"$root/timeframe=$timeframe"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-    def withPartCols(df: DataFrame): DataFrame = df
-      .withColumn("year", date_format(col("bucket_start"), "yyyy"))
-      .withColumn("month", date_format(col("bucket_start"), "MM"))
-      .withColumn("day", date_format(col("bucket_start"), "dd"))
 
     // Evaluate the increment once: day count + range sampling + final
     // write must not re-run the upstream aggregation plan (see
@@ -1292,7 +1095,6 @@ class HtfLakeWriter(root: String,
     val stageDir =
       if (callerPinned) None
       else Some(s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    var mergeTmpDir: Option[String] = None
     stageDir.foreach(d =>
       buckets.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(d))
     try {
@@ -1301,97 +1103,24 @@ class HtfLakeWriter(root: String,
       // from the fused count action — accept it and skip the distinct
       // pass (r20); cold callers still derive it here
       val touched: Seq[(Int, Int, Int)] = touchedDays.getOrElse(
-        withPartCols(staged)
-          .select(col("year").cast("int").as("year"),
-                  col("month").cast("int").as("month"),
-                  col("day").cast("int").as("day"))
+        staged
+          .select(year(col("bucket_start")), month(col("bucket_start")),
+                  dayofmonth(col("bucket_start")))
           .distinct().collect().toSeq
           .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))))
-      val nDays = touched.length.max(1)
-
-      val hasExisting = fs.exists(new HPath(dir)) && fs.listStatus(new HPath(dir)).nonEmpty
-      val mergeTmp =
-        if (!hasExisting) None
-        else Some(s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      mergeTmpDir = mergeTmp
-      mergeTmp match {
-        case None =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          // partition columns lead the sort — see writeDaysWide:
-          // satisfies the dynamic-partition writer's required ordering
-          // so no unstable extra sort is inserted above the
-          // (symbol, bucket_start) clustering
-          withPartCols(staged)
-            .repartitionByRange(nDays * filesPerDay,
-              col("year"), col("month"), col("day"), col("symbol"), col("bucket_start"))
-            .sortWithinPartitions("year", "month", "day", "symbol", "bucket_start")
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("year", "month", "day")
-            .option("compression", "zstd")
-            .parquet(dir)
-        case Some(t) =>
-          // explicit touched-day read — same no-root-listing rule as
-          // writeDaysWide's merge; descends only touched years/months
-          val touchedDirs = DayDirs.matching(fs, dir, touched.toSet)
-          val merged =
-            if (touchedDirs.isEmpty) withPartCols(staged)
-            else {
-              val existingTouched = spark.read.option("basePath", dir)
-                .parquet(touchedDirs: _*).drop("year", "month", "day")
-              withPartCols(Ops.dedupKeepLast(
-                existingTouched.withColumn("__src", lit(0))
-                  .unionByName(staged.withColumn("__src", lit(1)), allowMissingColumns = true),
-                Seq("symbol", "bucket_start"), Seq(col("__src"))).drop("__src"))
-            }
-          // ONE clustered write into the merge tmp, published by a
-          // per-day directory swap (r20): the old shape wrote the
-          // merged days to tmp, then re-sampled and re-WROTE them
-          // through the dynamic-partition committer — the merged data
-          // crossed parquet twice on every busy poll. The range
-          // sample's second pass over the merge plan reuses the dedup
-          // shuffle's map output (same query), so the merge itself
-          // still computes once. Publish is rename-ASIDE, not
-          // delete→rename (r21, r20 ADVICE #1): the live day dir moves
-          // into the dot-prefixed tmp area (readers never list it)
-          // before the replacement renames in, and is restored if that
-          // rename fails — a transient rename failure is no longer
-          // day-level data loss. Day-granular, non-atomic across days,
-          // same as the dynamic-partition commit it replaced; the
-          // manifest committer remains the atomicity answer.
-          merged
-            .repartitionByRange(nDays * filesPerDay,
-              col("year"), col("month"), col("day"), col("symbol"), col("bucket_start"))
-            .sortWithinPartitions("year", "month", "day", "symbol", "bucket_start")
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("year", "month", "day")
-            .option("compression", "zstd")
-            .parquet(t)
-          val asideRoot = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}-aside"
-          DayDirs.ascending(fs, t).foreach { srcDay =>
-            // walked paths come back fs-qualified — rebuild the
-            // year=/month=/day= tail instead of string-stripping the tmp
-            // prefix (same technique as DayDirs.ymdOf)
-            val rel = srcDay.split('/').takeRight(3).mkString("/")
-            WideDayPublish.swap(fs, srcDay,
-              new HPath(s"$dir/$rel"), new HPath(s"$asideRoot/$rel"))
-          }
-          // superseded day copies are garbage only once every touched
-          // day published; until then they are the restore source
-          fs.delete(new HPath(asideRoot), true)
-      }
+      WideDayPublish.write(fs, root, dir, staged, touched, filesPerDay, "bucket_start",
+        Some(lastWins(_, _, Seq("symbol", "bucket_start"))))
+      ()
     } finally {
-      // stage + merge tmp both cleaned on failure too (a caller-owned
-      // pin stays the caller's to release)
+      // a caller-owned pin stays the caller's to release
       stageDir.foreach(d => fs.delete(new HPath(d), true))
-      mergeTmpDir.foreach(t => fs.delete(new HPath(t), true))
     }
   }
 
-  /** Manifest-deployment bulk write (r15 #1, r19 batched staging —
-    * VERDICT r18 #4): every leaf must be committed through the
-    * POINTER, never dynamic-partition overwrite (a plain rewrite of a
-    * day that already has a manifest leaves the stale pointer in
-    * force — resolving readers would keep serving the old version).
+  /** Hourly-layout bulk write (r15 #1, r19 batched staging — VERDICT
+    * r18 #4): every (symbol, day) leaf is committed through the
+    * committer, so a manifest deployment's pointer always names the
+    * live version.
     *
     * Staging is ONE partitioned Spark write for the whole batch, not
     * one job per leaf (the r18 probe measured the per-leaf shape at
@@ -1437,14 +1166,6 @@ class HtfLakeWriter(root: String,
           // (r19 advice)
           val df = spark.read.option("mergeSchema", "true")
             .parquet(resolvedExisting: _*)
-          if (!df.columns.contains("symbol"))
-            // legacy leaf content without a symbol column can't be
-            // re-attributed in a shared scan — impossible via this
-            // writer (bucket frames always carry `symbol`), guarded for
-            // hand-built lakes
-            throw new IllegalStateException(
-              "existing HTF leaf content lacks a symbol column; " +
-                "cannot batch-merge an all-symbols bulk write over it")
           // Existing rows re-key from the LEAF DIR they were read from,
           // not from to_date(bucket_start): the session timezone at
           // write time may differ from the one that placed the row, and
@@ -1452,10 +1173,17 @@ class HtfLakeWriter(root: String,
           // partition that is never published — silently dropping the
           // row from its republished leaf (r19 advice). The dir names
           // are zero-padded by partitionDir, so string assembly matches
-          // the touched key exactly.
+          // the touched key exactly. Leaves written by the retired
+          // dynamic-partition path carry the symbol only in their path,
+          // so a missing or null `symbol` is taken from the leaf too.
           val file = input_file_name()
+          val pathSym = upper(regexp_extract(file, "symbol=([^/]+)", 1))
+          val symbol =
+            if (df.columns.contains("symbol")) coalesce(col("symbol"), pathSym)
+            else pathSym
           Some(df
-            .withColumn("__sym", upper(regexp_extract(file, "symbol=([^/]+)", 1)))
+            .withColumn("symbol", symbol)
+            .withColumn("__sym", pathSym)
             .withColumn("__day", concat_ws("-",
               regexp_extract(file, "/year=(\\d{4})/", 1),
               regexp_extract(file, "/month=(\\d{2})/", 1),
@@ -1465,13 +1193,7 @@ class HtfLakeWriter(root: String,
         .withColumn("__day", to_date(col("bucket_start")).cast("string"))
       val merged = existingAttr match {
         case None => incomingAttr
-        case Some(ex) =>
-          Ops.dedupKeepLast(
-            ex.withColumn("__src", lit(0))
-              .unionByName(incomingAttr.withColumn("__src", lit(1)),
-                allowMissingColumns = true),
-            Seq("__sym", "__day", "bucket_start"), Seq(col("__src")))
-            .drop("__src")
+        case Some(ex) => lastWins(ex, incomingAttr, Seq("__sym", "__day", "bucket_start"))
       }
       // ONE staging job: hash-clustered so each leaf lands as one file
       // (the per-leaf coalesce(1) parity), partition dirs named by the

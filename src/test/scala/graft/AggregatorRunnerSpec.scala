@@ -248,6 +248,35 @@ class AggregatorRunnerSpec extends SparkSpec {
     assert(rows == Seq(1.0, 9.0))
   }
 
+  test("hourly HTF leaf with the symbol only in its path merges through the committer path") {
+    val (dir, _, _, hw, _) = newEnv()
+    def bucketRow(iso: String, close: Double) =
+      Seq(("BTCUSDT", java.sql.Timestamp.from(instant(iso)), close, true, 60L))
+        .toDF("symbol", "bucket_start", "close", "bucket_complete",
+          "observed_minutes_in_bucket")
+    // a leaf as the retired dynamic-partition writer left it: partitioned
+    // by symbol too, so its files carry no `symbol` column
+    bucketRow("2026-01-01T00:00:00Z", 1.0)
+      .withColumn("year", date_format(col("bucket_start"), "yyyy"))
+      .withColumn("month", date_format(col("bucket_start"), "MM"))
+      .withColumn("day", date_format(col("bucket_start"), "dd"))
+      .write.partitionBy("symbol", "year", "month", "day")
+      .parquet(s"$dir/htf/timeframe=1h")
+    val leaf = s"$dir/htf/timeframe=1h/symbol=BTCUSDT/year=2026/month=01/day=01"
+    assert(!spark.read.parquet(leaf).columns.contains("symbol"))
+
+    hw.writeBucketsBulkAllSymbols(spark, "1h", bucketRow("2026-01-01T05:00:00Z", 2.0))
+    val served = new graft.sources.HtfLakeReader(s"$dir/htf")
+      .readWindow(spark, "1h", "BTCUSDT",
+        instant("2026-01-01T00:00:00Z"), instant("2026-01-01T23:00:00Z")).get
+    assert(served.orderBy("timestamp").select("close").collect()
+      .map(_.getDouble(0)).toSeq == Seq(1.0, 2.0))
+    val files = new java.io.File(leaf).listFiles()
+      .filter(f => f.getName.endsWith(".parquet"))
+    assert(files.length == 1, s"merged leaf holds one file: ${files.map(_.getName).toSeq}")
+    assert(spark.read.parquet(leaf).where(col("symbol") === "BTCUSDT").count() == 2)
+  }
+
   // ---- ledger-gated ticks (r16: an ungated no-news 12-spec fleet poll
   // at width 10k cost 109–121 s of pure re-scan + write-skip against a
   // 30 s poll budget) ----

@@ -916,7 +916,7 @@ class CommitSeamSpec extends SparkSpec {
     }
   }
 
-  test("day-batched manifest: grace window holds per leaf; writeHourPartitionsBatched round-trips through the reader") {
+  test("day-batched manifest: grace window holds per leaf; three staged hour leaves publish as one batch and round-trip through the reader") {
     // grace: a reader holding a leaf's version N survives a later batch
     val root = Files.createTempDirectory("graft-seam-daygrace").toString
     val fs = localFs()
@@ -930,18 +930,26 @@ class CommitSeamSpec extends SparkSpec {
       "held version torn out inside the grace window")
     assert(readVia(DayManifestCommit, fs, leaf).contains(Seq(3)))
 
-    // writer integration: a 3-hour batch lands as one day-level PUT and
-    // the minute reader serves it through resolveLeaf
+    // lake integration: three staged hour leaves publish as one
+    // day-level PUT, and the minute reader serves them through the
+    // day manifest
     val lake = Files.createTempDirectory("graft-seam-daylake").toString
     val dm = new DayManifestCommit(3600000L)
     val w = new MinuteLakeWriter(lake, new PartitionLedger(s"$lake/_state"),
       LakeLayout.HourlySymbol, dm)
     val h0 = instant("2024-03-01T10:00:00Z")
-    val dirs = w.writeHourPartitionsBatched("BTCUSDT", Seq(
+    val staged = Seq(
       h0 -> canonical("2024-03-01T10:00:00Z", 100.0),
       h0.plusSeconds(3600) -> canonical("2024-03-01T11:00:00Z", 110.0),
-      h0.plusSeconds(7200) -> canonical("2024-03-01T12:00:00Z", 120.0)))
-    assert(dirs.size == 3)
+      h0.plusSeconds(7200) -> canonical("2024-03-01T12:00:00Z", 120.0)
+    ).map { case (hour, frame) =>
+      val tmp = s"$lake/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      frame.coalesce(1).write.parquet(tmp)
+      tmp -> w.partitionDir("BTCUSDT", hour)
+    }
+    dm.publishBatch(fs, staged)
+    val dirs = staged.map(_._2)
+    assert(dirs.distinct.size == 3)
     val dayDir = new HPath(dirs.head).getParent
     val puts = fs.listStatus(dayDir)
       .filter(s => s.isFile && s.getPath.getName.startsWith("_MANIFEST"))

@@ -84,29 +84,6 @@ class LakeWriterSpec extends SparkSpec {
     assert(v("price_impact_100k") == 0.0002)
   }
 
-  test("bulk merge-write preserves siblings and LIVE_ONLY across hours in one job") {
-    val (writer, reader, _) = newLake()
-    // two hours on disk: 10:00 has a live-covered minute, 11:00 a plain one
-    writer.writeHourPartition("BTCUSDT", instant("2026-01-15T10:00:00Z"),
-      canonicalRow("2026-01-15T10:00:00Z", 100.0, Map("has_liq" -> true))
-        .unionByName(canonicalRow("2026-01-15T10:01:00Z", 101.0)))
-    writer.writeHourPartition("BTCUSDT", instant("2026-01-15T11:00:00Z"),
-      canonicalRow("2026-01-15T11:00:00Z", 110.0))
-    // bulk rewrite: a correction for 10:00 (without live flags) plus a
-    // new 11:30 minute — one dynamic-partition-overwrite write
-    writer.writePartitionedBulk(
-      canonicalRow("2026-01-15T10:00:00Z", 500.0)
-        .unionByName(canonicalRow("2026-01-15T11:30:00Z", 111.0)),
-      "BTCUSDT", merge = true)
-    val rows = reader.readWindow(spark, "BTCUSDT",
-      instant("2026-01-15T10:00:00Z"), instant("2026-01-15T11:59:00Z"))
-      .orderBy("timestamp")
-      .select("timestamp", "open", "has_liq").collect()
-    assert(rows.map(_.getDouble(1)).toSeq == Seq(500.0, 101.0, 110.0, 111.0))
-    assert(rows(0).getBoolean(2)) // LIVE_ONLY coverage flag survived the rewrite
-    assert(!rows(3).getBoolean(2))
-  }
-
   test("DQ validator rejects duplicate timestamps and hard-required nulls (dq.py:22-63)") {
     val dup = canonicalRow("2026-01-15T10:00:00Z", 100.0)
       .unionByName(canonicalRow("2026-01-15T10:00:00Z", 101.0))

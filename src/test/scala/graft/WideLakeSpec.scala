@@ -14,12 +14,17 @@ import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader
   * width-≥10k answer to the width-10k probe's file-count wall, SURVEY
   * §8.15) must be indistinguishable from the reference-inherited hourly
   * layout through the reader API and the HTF pipeline — same merge
-  * policy (one shared `mergePartitionFramesKeyed`), same query results,
+  * policy (one shared `MinuteLakeWriter.mergeKeyed`), same query results,
   * different physics (files/day O(filesPerDay), not O(width × 24)). */
 class WideLakeSpec extends SparkSpec {
   import spark.implicits._
 
   private val Day1 = instant("2026-01-15T00:00:00Z")
+
+  /** Spark jobs of a one-day `writeDaysWide(merge = true)` and of a
+    * one-day `compactWideDeltas`, measured on this suite's session. */
+  private val MergeWriteJobs = 15
+  private val CompactJobs = 16
 
   /** Multi-symbol canonical minutes spanning `hours` hours. */
   private def minutes(symbols: Seq[String], hours: Int,
@@ -838,5 +843,137 @@ class WideLakeSpec extends SparkSpec {
       MinuteLakeWriter.overlap { Thread.sleep(5000); 1 } { throw fgBoom }
     }
     assert(caughtFg eq fgBoom)
+  }
+
+  test("lake writes leave the caller's partitionOverwriteMode unchanged") {
+    // a writer that flips this session conf to dynamic turns every later
+    // static overwrite by the caller into a silent partial overwrite
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "STATIC")
+    def unchanged(what: String)(body: => Unit): Unit = {
+      body
+      assert(spark.conf.get(key) == "STATIC", s"$what changed $key")
+    }
+    try {
+      val wRoot = Files.createTempDirectory("graft-wide-conf").toString
+      val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+        LakeLayout.DayWide(filesPerDay = 2))
+      unchanged("writeDaysWide")(
+        w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 2)))
+      unchanged("writeDaysWide(merge = true)")(
+        w.writeDaysWide(minutes(Seq("AAAUSDT"), hours = 1, openBase = 500.0), merge = true))
+      w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 700.0))
+      unchanged("compactWideDeltas")(assert(w.compactWideDeltas(spark).size == 1))
+
+      def buckets(close: Double) =
+        Seq(("AAAUSDT", ts("2026-01-15T00:00:00Z"), close, true))
+          .toDF("symbol", "bucket_start", "close", "bucket_complete")
+      Seq(LakeLayout.HourlySymbol, LakeLayout.DayWide(filesPerDay = 2)).foreach { l =>
+        val hRoot = Files.createTempDirectory("graft-htf-conf").toString
+        val hw = new HtfLakeWriter(hRoot, l)
+        unchanged(s"writeBucketsBulkAllSymbols ($l, fresh)")(
+          hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(1.0)))
+        unchanged(s"writeBucketsBulkAllSymbols ($l, merge)")(
+          hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(2.0)))
+      }
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("wide audit is clean after writeHourPartition into an existing and a new day; tamper still detected") {
+    val wRoot = Files.createTempDirectory("graft-wide-hour-audit").toString
+    val ledger = new PartitionLedger(s"$wRoot/_state")
+    val w = new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 2))
+    w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
+    // into the existing day: a delta; into a new day: a bulk base write
+    val hour = instant("2026-01-15T10:00:00Z")
+    w.writeHourPartition("AAAUSDT", hour,
+      minutes(Seq("AAAUSDT"), hours = 1, dayStart = hour, openBase = 777.0).drop("symbol"))
+    val nextDay = instant("2026-01-16T00:00:00Z")
+    w.writeHourPartition("AAAUSDT", nextDay,
+      minutes(Seq("AAAUSDT"), hours = 1, dayStart = nextDay).drop("symbol"))
+    // the per-(symbol, hour) rows are still recorded, hash-less
+    assert(ledger.all().count(e => e.hour >= 0 && e.contentHash.isEmpty) == 2)
+
+    val audit = w.auditPartitions(spark)
+    assert(audit.nonEmpty && audit.forall(_.ok), s"wide audit not clean: $audit")
+    assert(audit.map(r => (r.day, r.hour)).toSet ==
+      Set(("2026-01-15", -1), ("2026-01-16", -1), ("2026-01-15", -2)))
+
+    // tampering with the delta file is still caught
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(wRoot),
+      spark.sparkContext.hadoopConfiguration)
+    val deltaDay = new org.apache.hadoop.fs.Path(ledger.all().filter(_.hour == -2).head.path)
+    val victim = fs.listStatus(deltaDay).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).head
+    val out = fs.create(victim, true); out.write(Array[Byte](1, 2, 3)); out.close()
+    val issues = w.auditPartitions(spark).map(r => (r.day, r.hour) -> r.issue).toMap
+    assert(issues(("2026-01-15", -2)) == "hash_mismatch", s"got $issues")
+    assert(issues.values.count(_ == "ok") == 2, s"got $issues")
+  }
+
+  /** (all jobs, jobs whose tasks wrote output bytes) launched by `body`. */
+  private def writeJobs(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.add(js.jobId)
+        js.stageIds.foreach(stageJob.put(_, js.jobId))
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null && te.taskMetrics.outputMetrics.bytesWritten > 0 &&
+            stageJob.containsKey(te.stageId))
+          writing.add(stageJob.get(te.stageId))
+    }
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      (jobs.size, writing.size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def tmpEntries(root: String): Seq[String] = {
+    val tmp = new java.io.File(s"$root/.tmp")
+    if (tmp.exists) tmp.list().toSeq else Seq.empty
+  }
+
+  test("wide merge write stages once and writes the merged days once (job counts)") {
+    val wRoot = Files.createTempDirectory("graft-wide-jobs").toString
+    val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 2))
+    w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
+    val (total, writing) = writeJobs(
+      w.writeDaysWide(minutes(Seq("AAAUSDT"), hours = 1, openBase = 500.0), merge = true))
+    // the staging write and the clustered write
+    assert(writing == 2, s"output-writing jobs: $writing")
+    assert(total == MergeWriteJobs, s"jobs: $total")
+    assert(tmpEntries(wRoot).isEmpty, s".tmp left behind: ${tmpEntries(wRoot)}")
+    val a = new MinuteLakeReader(wRoot).scanSymbol(spark, "AAAUSDT")
+    assert(a.count() == 24 * 60)
+    assert(a.where(col("timestamp") === ts("2026-01-15T00:00:00Z"))
+      .select("open").head.getDouble(0) == 500.0)
+  }
+
+  test("delta compaction stages once and writes the folded days once (job counts)") {
+    val wRoot = Files.createTempDirectory("graft-compact-jobs").toString
+    val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 2))
+    w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
+    w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 700.0))
+    val (total, writing) = writeJobs(assert(w.compactWideDeltas(spark).size == 1))
+    assert(writing == 2, s"output-writing jobs: $writing")
+    assert(total == CompactJobs, s"jobs: $total")
+    assert(tmpEntries(wRoot).isEmpty, s".tmp left behind: ${tmpEntries(wRoot)}")
+    assert(new MinuteLakeReader(wRoot).scanSymbol(spark, "AAAUSDT")
+      .where(col("timestamp") === ts("2026-01-15T00:00:00Z"))
+      .select("open").head.getDouble(0) == 700.0)
   }
 }
