@@ -2585,8 +2585,8 @@ object SparkEntry {
     // write (writeDaysWide), a point-repair delta patch
     // (writeDeltaPatch), then a windowed read (readWindowAllSymbols)
     // whose base∪delta overlay must equal the oracle's declarative
-    // merge. The DayWide layout is the designated 100 TB layout; this
-    // row upgrades it from spec-pinned to DuckDB-oracle-pinned
+    // merge. The day-wide layout is the lake's one layout; this row
+    // pins it against DuckDB as well as the specs
     // (VERDICT r13 #3). Canonical minutes derive from events (symbol =
     // user_id mod 7, one row per (symbol, minute)); the patch overlays
     // the error-typed minutes with open+1000. The result is collected
@@ -2716,8 +2716,8 @@ object SparkEntry {
         val writer = new MinuteLakeWriter(root, ledger, LakeLayout.DayWide(filesPerDay = 4))
         writer.writeDaysWide(wideCanon(evw, 0.0))
         val reader = new MinuteLakeReader(root)
-        // wide HTF layout: the backfill writes its buckets as ONE bulk
-        // job — the hourly layout would pay one job per symbol-day leaf
+        // the backfill writes its buckets as ONE bulk job per day set,
+        // whatever the width
         val hw = new HtfLakeWriter(s"$root/htf", LakeLayout.DayWide(filesPerDay = 4))
         val state = new AggregatorRunner.AggregatorStateStore(s"$root/_aggstate")
         val spec = graft.schema.Timeframes.parse("15m")

@@ -343,7 +343,7 @@ object AggregatorRunner {
     else {
       // per-write touched range when the writer recorded it (patch
       // bounds); the partition's content bounds otherwise — wider,
-      // never wrong (pre-r16 rows, hourly hour-grain entries)
+      // never wrong (pre-r16 rows, writeHourPartition's hour rows)
       val los = changed.map(e =>
         parseLedgerTs(e.patchMinTs).orElse(parseLedgerTs(e.minTs)))
       if (los.exists(_.isEmpty)) ChangeUnknown // tombstones etc.: blind
@@ -378,7 +378,7 @@ object AggregatorRunner {
     * The stored side is aggregated PER KEY before the join (r21,
     * VERDICT r20 #3): the HTF tree is keyed-unique by construction
     * (every writer path merges keyed last-wins), but a crashed
-    * non-manifest publish or a hand-repaired day can violate that — a
+    * day swap or a hand-repaired day can violate that — a
     * plain left join would fan kept rows out and inflate
     * nWritten/repaired, and the write itself would duplicate rows. The
     * per-key summary cannot fan out, and a duplicated stored key always
@@ -436,37 +436,15 @@ object AggregatorRunner {
   def runBackfillAll(spark: SparkSession, reader: MinuteLakeReader,
                      writer: HtfLakeWriter, state: AggregatorStateStore,
                      htfRoot: String, spec: TimeframeSpec,
-                     allowIncomplete: Boolean = false): BackfillResult =
-    // Re-resolve-on-miss (VERDICT r17 #2): a window/index read under
-    // ManifestCommit that outlives the grace window dies on a vanished
-    // `.v_*` dir; every read below resolves fresh per call, so re-running
-    // the pass re-resolves. The pass is re-run-SAFE as a whole: its
-    // writes are the engine's own repair contract — atomic per-partition
-    // publishes of recomputed content plus monotone watermark advance —
-    // so a retry converges to the identical state.
-    graft.sources.ResolvedScan.retryOnVanishedVersion() {
-      runBackfillAllOnce(spark, reader, writer, state, htfRoot, spec,
-        allowIncomplete)
-    }
-
-  private def runBackfillAllOnce(spark: SparkSession, reader: MinuteLakeReader,
-                     writer: HtfLakeWriter, state: AggregatorStateStore,
-                     htfRoot: String, spec: TimeframeSpec,
-                     allowIncomplete: Boolean): BackfillResult = {
+                     allowIncomplete: Boolean = false): BackfillResult = {
     val minutesOpt = reader.scanAllSymbols(spark)
     if (minutesOpt.isEmpty) return BackfillResult(0, 0, 0, 0)
 
     val fs = FileSystem.get(new java.net.URI(htfRoot),
       spark.sparkContext.hadoopConfiguration)
     val tfDir = s"$htfRoot/timeframe=${spec.name}"
-    // manifest deployment: per-day versions hide behind pointers
-    val leaves: Seq[String] =
-      if (!fs.exists(new HPath(tfDir))) Nil
-      else if (writer.committer.readThroughResolve)
-        graft.sources.ResolvedScan.resolvedLeaves(fs, tfDir, writer.committer)
-      else Seq(tfDir)
     val existing =
-      if (leaves.isEmpty)
+      if (!fs.exists(new HPath(tfDir)))
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("symbol",
@@ -475,7 +453,7 @@ object AggregatorRunner {
               org.apache.spark.sql.types.TimestampType),
             org.apache.spark.sql.types.StructField("bucket_complete",
               org.apache.spark.sql.types.BooleanType))))
-      else spark.read.option("basePath", tfDir).parquet(leaves: _*)
+      else spark.read.parquet(tfDir)
         .select("symbol", "bucket_start", "bucket_complete")
 
     // distinct BEFORE counting — duplicate row versions for one minute
@@ -555,6 +533,13 @@ object AggregatorRunner {
     } finally missing.unpersist()
   }
 
+  /** One live spec's poll, planned once: its tick key, its watermarks
+    * before the poll, and each symbol's window (symbol, start, latest
+    * minute) before any cap. */
+  private final case class SpecPlan(spec: TimeframeSpec, key: String,
+                                    watermarks: Map[String, Instant],
+                                    windows: Seq[(String, Instant, Instant)])
+
   /** One fleet poll: EVERY timeframe spec ticks against the same
     * minute lake (the production deployment shape — reference
     * `aggregator/config.py:17-21` runs 12 specs on a 30 s poll; a
@@ -585,33 +570,6 @@ object AggregatorRunner {
                    repairLookbackMinutes: Long = 120,
                    maxBucketsPerTick: Int = 0,
                    pollBudgetMs: Long = 0)
-      : Seq[(String, IncrementalResult)] =
-    // Re-resolve-on-miss (VERDICT r17 #2), re-run-safe as a whole — see
-    // runBackfillAll. The poll IS the scheduled repair re-run: write-skip,
-    // atomic publishes and monotone watermarks make a retry converge,
-    // and a spec that finished before the failure recorded its token,
-    // so the retry skips it. Every read below (snapshot, latest scan,
-    // shared union read) is planned fresh per attempt.
-    graft.sources.ResolvedScan.retryOnVanishedVersion() {
-      fleetTickOnce(spark, reader, writer, state, htfRoot, specs,
-        sourceLedger, allowIncomplete, repairLookbackMinutes,
-        maxBucketsPerTick, pollBudgetMs)
-    }
-
-  /** One live spec's poll, planned once: its tick key, its watermarks
-    * before the poll, and each symbol's window (symbol, start, latest
-    * minute) before any cap. */
-  private final case class SpecPlan(spec: TimeframeSpec, key: String,
-                                    watermarks: Map[String, Instant],
-                                    windows: Seq[(String, Instant, Instant)])
-
-  private def fleetTickOnce(spark: SparkSession, reader: MinuteLakeReader,
-                            writer: HtfLakeWriter, state: AggregatorStateStore,
-                            htfRoot: String, specs: Seq[TimeframeSpec],
-                            sourceLedger: Option[PartitionLedger],
-                            allowIncomplete: Boolean,
-                            repairLookbackMinutes: Long,
-                            maxBucketsPerTick: Int, pollBudgetMs: Long)
       : Seq[(String, IncrementalResult)] = {
     val t0 = System.nanoTime()
     // an explicit cap wins over a budget (the budget exists to replace
@@ -900,29 +858,14 @@ object AggregatorRunner {
     val tfDir = s"$htfRoot/timeframe=${spec.name}"
     val farEnd = Instant.parse("9999-01-01T00:00:00Z")
     val loBound = spec.floorInstant(globalLo)
-    // wide HTF tree: every index consumer below is window-bounded
-    // (repaired-count semi-join, fingerprint compare), so read ONLY the
-    // window's day dirs — explicit descent, never a root read + a
-    // partition predicate, which lists every file in the tree before
-    // pruning and scans history that grows forever (r15; the hourly
-    // layout keeps the plain read — it is the ≤1000-width regime and
-    // its tree is per-symbol). An empty day set reads as an empty frame.
-    val wideTf = graft.sources.LakeLayout.detect(fs, tfDir)
-      .exists(_.isInstanceOf[graft.sources.LakeLayout.DayWide])
+    // every index consumer below is window-bounded (repaired-count
+    // semi-join, fingerprint compare), so read ONLY the window's day
+    // dirs — explicit descent, never a root read + a partition
+    // predicate, which lists every file in the tree before pruning and
+    // scans history that grows forever (r15). An absent tree or an
+    // empty day set reads as no stored rows.
     lazy val windowDays =
       graft.sources.DayDirs.inRange(fs, tfDir, loBound, farEnd)
-    // hourly tree under a manifest deployment: window-bound each
-    // symbol's day walk, then resolve each leaf through the pointer
-    lazy val hourlyResolvedWindowLeaves: Seq[String] = {
-      val windowLeafDirs = fs.listStatus(new HPath(tfDir)).iterator
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("symbol="))
-        .flatMap(st => graft.sources.DayDirs.inRange(fs, st.getPath.toString,
-          loBound, farEnd))
-        .toSeq
-      graft.sources.ResolvedScan.resolveLeaves(fs, windowLeafDirs,
-        writer.committer)
-    }
-    val mustResolve = writer.committer.readThroughResolve
 
     val aggregated = HtfAggregator
       .aggregateMinutes(source, spec, symbol = "", byCols = Seq("symbol"))
@@ -952,7 +895,6 @@ object AggregatorRunner {
         // no-news tick over a 1000-symbol lake otherwise rewrites
         // lookback/bucket buckets per symbol per cadence — measured
         // 3000 bucket writes per no-op tick at width 1000 (HtfWidthProbe).
-        val tfDirPath = new HPath(tfDir)
         // `__complete_old` rides the fingerprint compare, so one
         // aggregate action below yields nWritten AND repaired together
         // (no separate index read + semi-join per writing poll). The
@@ -960,41 +902,13 @@ object AggregatorRunner {
         // duplicate-keyed tree cannot fan the counters out and is
         // healed by the forced rewrite.
         val changed =
-          if (!fs.exists(tfDirPath) || (wideTf && windowDays.isEmpty) ||
-              (mustResolve && !wideTf && hourlyResolvedWindowLeaves.isEmpty))
+          if (windowDays.isEmpty)
             kept.withColumn("__complete_old", lit(null).cast("boolean"))
           else {
-            // bound the comparison read to the lookback window. Wide
-            // tree: explicit window day dirs (a
-            // root read + partition predicate would still LIST every
-            // file in the tree first). Hourly tree: the year/month/day
-            // PARTITION-column predicate (lpad-normalized, robust to
-            // int-inferred values) scan-prunes to the lookback days —
-            // a data-column-only filter on bucket_start would walk the
-            // whole table history on every tick.
-            val lo = loBound
             val existingFull =
-              if (wideTf)
-                spark.read.option("basePath", tfDir).parquet(windowDays: _*)
-                  .drop("year", "month", "day")
-                  .where(col("bucket_start") >= java.sql.Timestamp.from(lo))
-              else if (mustResolve)
-                spark.read.option("basePath", tfDir)
-                  .parquet(hourlyResolvedWindowLeaves: _*)
-                  .drop("year", "month", "day")
-                  .where(col("bucket_start") >= java.sql.Timestamp.from(lo))
-              else {
-                val dayKey = concat(
-                  lpad(col("year").cast("string"), 4, "0"),
-                  lpad(col("month").cast("string"), 2, "0"),
-                  lpad(col("day").cast("string"), 2, "0"))
-                val loDay = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd")
-                  .withZone(java.time.ZoneOffset.UTC).format(lo)
-                spark.read.parquet(tfDir)
-                  .where(dayKey >= loDay)
-                  .drop("year", "month", "day")
-                  .where(col("bucket_start") >= java.sql.Timestamp.from(lo))
-              }
+              spark.read.option("basePath", tfDir).parquet(windowDays: _*)
+                .drop("year", "month", "day")
+                .where(col("bucket_start") >= java.sql.Timestamp.from(loBound))
             changedWithOldCompleteness(kept, existingFull,
               Seq("symbol", "bucket_start"))
           }

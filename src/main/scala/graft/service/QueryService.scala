@@ -168,52 +168,18 @@ object QueryService {
     def complete: Boolean = expectedMinutes == observedMinutes
   }
 
-  /** A loaded canonical window plus its release handle.
-    * @param release unpersists the pinned window cache — EVERY serving
-    *                caller must invoke it once `frame` (or anything
-    *                derived from it) has been materialized. A no-op on
-    *                identity deployments (nothing was pinned). */
-  final case class PinnedWindow(frame: DataFrame, coverage: WindowCoverage,
-                                release: () => Unit)
+  /** A loaded canonical window (lazy) and its minute coverage. */
+  final case class CanonicalWindow(frame: DataFrame, coverage: WindowCoverage)
 
   /** Load [start, end] canonical minutes with latest-wins dedup and
     * coverage check (reference `service.py:1036-1117`). */
   def loadCanonicalWindow(spark: SparkSession, reader: MinuteLakeReader,
-                          symbol: String, start: Instant, end: Instant): PinnedWindow =
-    // re-resolve-on-miss (VERDICT r16 #6): a serving read that outlives
-    // the manifest grace window can lose its `.v_*` dir to GC mid-scan;
-    // readWindow resolves fresh on each attempt, so the retry restarts
-    // the read against the current live version
-    graft.sources.ResolvedScan.retryOnVanishedVersion() {
-      val df0 = reader.readWindow(spark, symbol, start, end)
-      // Under a resolving committer, PIN the window eagerly INSIDE the
-      // guard (r17 advice): callers consume the returned frame outside
-      // it (candle aggregation, indicator collects, rebuild merges), so
-      // a version GC'd after this returns would otherwise surface the
-      // raw FileNotFound this guard exists to absorb. The coverage
-      // count below scans the full window anyway — the pin is that same
-      // scan, cached. Dataset.persist registers the plan in the shared
-      // CacheManager, which holds a strong reference until an explicit
-      // unpersist (ContextCleaner reclaims only unreachable RDDs and
-      // broadcasts, NOT CacheManager entries — r18 advice), so the pin
-      // is returned WITH a release handle and every serving caller
-      // unpersists once its result is materialized. Identity
-      // deployments stay fully lazy (their paths never vanish) — zero
-      // change to the local/HDFS hot path, release is a no-op.
-      val df = if (reader.resolvesVersions) df0.persist() else df0
-      val release: () => Unit =
-        if (reader.resolvesVersions) () => { df.unpersist(); () }
-        else () => ()
-      try {
-        val observed = df.select(countDistinct(col("timestamp"))).collect().head.getLong(0)
-        val expected = ChronoUnit.MINUTES.between(start, end) + 1
-        PinnedWindow(df, WindowCoverage(expected, observed), release)
-      } catch {
-        case e: Throwable =>
-          release()
-          throw e
-      }
-    }
+                          symbol: String, start: Instant, end: Instant): CanonicalWindow = {
+    val df = reader.readWindow(spark, symbol, start, end)
+    val observed = df.select(countDistinct(col("timestamp"))).collect().head.getLong(0)
+    val expected = ChronoUnit.MINUTES.between(start, end) + 1
+    CanonicalWindow(df, WindowCoverage(expected, observed))
+  }
 
   /** End-time resolution (reference `service.py:944-966`): an explicit
     * end is floored to the minute; an omitted end resolves to the last
@@ -282,27 +248,23 @@ object QueryService {
       allowBinancePatch: Boolean = true): CanonicalWindowResult = {
     import graft.pipeline.Orchestrator
     require(!end.isBefore(start), "end_time must be on or after start_time")
-    val win = loadCanonicalWindow(spark, reader, symbol, start, end)
-    val (local, coverage) = (win.frame, win.coverage)
+    val CanonicalWindow(local, coverage) = loadCanonicalWindow(spark, reader, symbol, start, end)
     if (coverage.complete || !allowBinancePatch)
-      return CanonicalWindowResult(symbol, start, end, "local", local, coverage, Nil,
-        release = win.release)
+      return CanonicalWindowResult(symbol, start, end, "local", local, coverage, Nil)
     if (coverage.expectedMinutes > onDemandMaxMinutes) {
-      if (coverage.observedMinutes == 0) {
-        win.release()
+      if (coverage.observedMinutes == 0)
         throw new IllegalArgumentException(
           "Requested window is not available locally and is too large for " +
             "on-demand retrieval. Reduce limit or materialize the symbol " +
             "into the minute lake first.")
-      }
       return CanonicalWindowResult(symbol, start, end, "local", local, coverage,
-        Seq("window_too_large_for_on_demand_patch"), release = win.release)
+        Seq("window_too_large_for_on_demand_patch"))
     }
 
-    // Any throw past this point must unwind the pinned window (and any
-    // frames this path persisted) before propagating — otherwise each
-    // failed patch request leaks a CacheManager entry, the exact leak
-    // class the release() seam exists to close (r19 advice).
+    // Any throw past this point must unpersist the frames this path
+    // persisted before propagating — otherwise each failed patch
+    // request leaks a CacheManager entry, the exact leak class the
+    // release() seam exists to close (r19 advice).
     var patchPinned: Option[DataFrame] = None
     var combinedPinned: Option[DataFrame] = None
     try {
@@ -373,15 +335,11 @@ object QueryService {
       .collect().head.getLong(0)
     CanonicalWindowResult(symbol, start, end, source, combined,
       WindowCoverage(coverage.expectedMinutes, observedAfter), notes.toSeq,
-      release = () => {
-        patch.foreach { p => p.unpersist(); combined.unpersist() }
-        win.release()
-      })
+      release = () => patch.foreach { p => p.unpersist(); combined.unpersist() })
     } catch {
       case e: Throwable =>
         combinedPinned.foreach(f => scala.util.Try(f.unpersist()))
         patchPinned.foreach(f => scala.util.Try(f.unpersist()))
-        win.release()
         throw e
     }
   }
@@ -418,20 +376,8 @@ object QueryService {
                  timeframe: String, start: Instant, end: Instant,
                  limit: Int = 200): DataFrame = {
     val spec = Timeframes.parse(timeframe)
-    val win = loadCanonicalWindow(spark, reader, symbol, start, end)
-    val bars = candleBarsFromFrame(win.frame, spec, limit)
-    if (!reader.resolvesVersions) bars // identity: lazy, nothing pinned
-    else {
-      // manifest deployment: the caller collects `bars` AFTER this
-      // returns, so the window pin can't be dropped while `bars` still
-      // reads through it. The bars frame is request-bounded (≤ limit
-      // rows) — localCheckpoint materializes it off the window's
-      // lineage (RDD-level storage, which ContextCleaner DOES reclaim
-      // once the frame is unreachable), then the window cache is
-      // released immediately instead of leaking one CacheManager entry
-      // per request (r18 advice).
-      try bars.localCheckpoint() finally win.release()
-    }
+    candleBarsFromFrame(loadCanonicalWindow(spark, reader, symbol, start, end).frame,
+      spec, limit)
   }
 
   /** The aggregate-vs-passthrough core of [[candleBars]], callable on any
@@ -539,10 +485,7 @@ object QueryService {
     val win = loadCanonicalWindow(spark, minuteReader, symbol, start, resolvedEnd)
     val aggregate = QueryAggregator
       .aggregateCanonicalFrame(win.frame, spec, limit).persist()
-    // the count materializes `aggregate` into its own cache, so the
-    // window pin is no longer load-bearing — release it here rather
-    // than leaking one CacheManager entry per request (r18 advice)
-    val aggCount = try aggregate.count() finally win.release()
+    val aggCount = aggregate.count()
     if (aggCount >= limit) {
       htfFrame.foreach(_.unpersist()) // losing frame
       notes += "using_local_btc_minute_lake"
@@ -663,9 +606,7 @@ object QueryService {
     val pivotStart = pivotSpec.addBuckets(endTime, -1)
     val start = if (emaStart.isBefore(pivotStart)) emaStart else pivotStart
 
-    val win = loadCanonicalWindow(spark, reader, symbol, start, endTime)
-    val window = win.frame
-    try {
+    val window = loadCanonicalWindow(spark, reader, symbol, start, endTime).frame
 
     // indicator bars use the dedicated OHLC aggregation with non-null
     // gates and end-exclusive bound (live_indicators/aggregation.py:22-75)
@@ -696,9 +637,6 @@ object QueryService {
       case _ => Map.empty[String, Double]
     }
     IndicatorPayload(emaTf, emaLength, emaVal, emaTs, pivotTf, pivots)
-    // everything above collects on the driver — the pin is done once
-    // the payload scalars exist (r18 advice: no per-request cache leak)
-    } finally win.release()
   }
 
   /** Per-timeframe result as the payload assembler consumes it —

@@ -1,60 +1,36 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-
-/** Physical layout of the minute/HTF lakes.
+/** Physical layout of the minute/HTF lakes — the one layout the
+  * writers and readers know.
   *
   * The reference's layout (`writer/atomic.py:99-111`) is one file per
-  * symbol-hour under `symbol=S/year=/month=/day=/hour=` — tuned for its
-  * single-node engine where every read is a hand-built partition path.
-  * That shape was measured (width-10k probe, SURVEY §8.15) to be the
-  * binding constraint at lake width ≥10,000 symbols: 240k files/day,
-  * bulk append DNF at 2 h, HTF backfill ×16 for ×10 width. On an object
-  * store the same shape is LIST/PUT request economics, so it is not a
-  * local-FS artifact.
+  * symbol-hour under `symbol=S/year=/month=/day=/hour=`. That shape was
+  * measured (width-10k probe, SURVEY §8.15) to be the binding constraint
+  * at lake width ≥10,000 symbols: 240k files/day, bulk append DNF at
+  * 2 h, HTF backfill ×16 for ×10 width. On an object store the same
+  * shape is LIST/PUT request economics, so it is not a local-FS
+  * artifact. A reference-layout tree is adopted once through
+  * [[LakeMigrate.hourlyToDayWide]].
   *
-  * [[LakeLayout.DayWide]] is the width-scalable alternative: partitions
-  * at DAY granularity only, `symbol` carried as a DATA column, and the
-  * day's files range-partitioned + sorted by (symbol, timestamp) so
+  * The day-wide layout partitions at DAY granularity only
+  * (`year=/month=/day=`), carries `symbol` as a DATA column, and
+  * range-partitions + sorts each day's files by (symbol, timestamp), so
   * parquet min/max column statistics give per-symbol file/row-group
-  * skipping without per-symbol directories. Files/day is O(filesPerDay)
-  * regardless of width — the knob trades read parallelism against
-  * file-count economics and is independent of symbol count.
+  * skipping without per-symbol directories. Files/day is
+  * O(`filesPerDay`) regardless of width — the knob trades read
+  * parallelism against file-count economics and is independent of
+  * symbol count.
   *
-  * Trade-offs vs hourly (documented, measured by WideWidthProbe):
-  *  - partition pruning floor is a DAY: a 2-hour repair window reads a
-  *    full day partition (row-group timestamp stats still skip inside
-  *    files because rows are timestamp-sorted per symbol range);
-  *  - the rewrite unit is a day×all-symbols partition, so per-hour
-  *    single-symbol repair amplifies to a day rewrite — batch repairs
-  *    through the bulk writer, which is the fleet path anyway (r12
-  *    measured the per-symbol band path driver-bound).
+  * Trade-offs (measured by WideWidthProbe):
+  *  - the partition pruning floor is a DAY: a 2-hour repair window
+  *    reads a full day partition;
+  *  - the rewrite unit is a day×all-symbols partition, so point repairs
+  *    land as delta files ([[MinuteLakeWriter.writeDeltaPatch]]) and
+  *    fold back on a threshold.
   */
-sealed abstract class LakeLayout(val name: String)
-
 object LakeLayout {
 
-  /** Reference-inherited layout: `symbol=/year=/month=/day=/hour=`,
-    * one file per symbol-hour. Right at width ≤~1000 (152.7 s daily
-    * tick measured); file-count-bound beyond. */
-  case object HourlySymbol extends LakeLayout("hourly-symbol")
-
-  /** Width-scalable layout: `year=/month=/day=` partitions, symbol as
-    * a data column, files range-bucketed and sorted by
-    * (symbol, timestamp). `filesPerDay` bounds the file population:
-    * files/day is this constant, not O(width × 24). */
-  final case class DayWide(filesPerDay: Int = 32) extends LakeLayout("day-wide")
-
-  /** Detect an existing lake's layout from its top-level partition
-    * directory names (`symbol=` ⇒ hourly, `year=` ⇒ day-wide). Returns
-    * None when the directory is absent or empty — the caller falls back
-    * to its configured default. */
-  def detect(fs: FileSystem, lakeDir: String): Option[LakeLayout] = {
-    val p = new HPath(lakeDir)
-    if (!fs.exists(p)) return None
-    val dirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-    if (dirs.exists(_.startsWith("symbol="))) Some(HourlySymbol)
-    else if (dirs.exists(_.startsWith("year="))) Some(DayWide())
-    else None
-  }
+  /** The writers' layout argument: `filesPerDay` bounds the file
+    * population — files/day is this constant, not O(width × 24). */
+  final case class DayWide(filesPerDay: Int = 32)
 }

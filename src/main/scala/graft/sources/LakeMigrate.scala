@@ -1,16 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One-shot migration of a reference-layout minute lake
-  * ([[LakeLayout.HourlySymbol]]) to the width-scalable
-  * [[LakeLayout.DayWide]] layout — the adoption path for an existing
-  * deployment hitting the hourly layout's file-count wall at width
-  * ≥10k (SURVEY §8.15/§8.16).
+/** One-shot migration of a reference-layout minute lake (one file per
+  * symbol-hour under `symbol=/year=/month=/day=/hour=`,
+  * `writer/atomic.py:99-111`) to the day-wide layout ([[LakeLayout]]),
+  * the only layout the engine reads — the adoption path for an
+  * existing deployment (SURVEY §8.15/§8.16).
   *
-  * One partitioned read of the whole source lake (symbol comes back as
-  * the partition column) feeds ONE `writeDaysWide` bulk write — a
+  * One partition-discovery read of the whole source lake (symbol comes
+  * back as the partition column) feeds ONE `writeDaysWide` bulk write — a
   * single Spark job pair regardless of width or depth; no per-symbol
   * or per-partition driver loop. The HTF tree is NOT migrated:
   * re-running `AggregatorRunner.runBackfillAll` against the migrated
@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Validation is built in: total row count and per-symbol
   * (count, min/max timestamp, sum(open)) fingerprints are compared
-  * across source and destination in one aggregation each; any
-  * difference fails the migration before the caller switches readers.
+  * across source (the same partition-discovery read) and destination
+  * (the day-wide reader) in one aggregation each; any difference fails
+  * the migration before the caller switches readers.
   */
 object LakeMigrate {
 
@@ -39,16 +40,14 @@ object LakeMigrate {
     writer.writeDaysWide(src)
 
     // parity: per-symbol fingerprints, one aggregation per side
-    def fp(root: String) = {
-      val r = new MinuteLakeReader(root)
-      r.scanAllSymbols(spark).get
-        .groupBy("symbol")
+    def fp(rows: DataFrame) =
+      rows.groupBy("symbol")
         .agg(count(lit(1)).as("n"),
           min("timestamp").as("mn"), max("timestamp").as("mx"),
           sum("open").as("s"))
-    }
-    val joined = fp(srcRoot).alias("a")
-      .join(fp(dstRoot).alias("b"), Seq("symbol"), "full_outer")
+    val joined = fp(src).alias("a")
+      .join(fp(new MinuteLakeReader(dstRoot).scanAllSymbols(spark).get).alias("b"),
+        Seq("symbol"), "full_outer")
     // RELATIVE tolerance on the double sum: summation order differs
     // between the two sides' partitionings, and at production scale a
     // per-symbol sum(open) is ~1e7–1e9, where reordering error routinely

@@ -147,85 +147,30 @@ private[graft] object DayDirs {
   * `live_data_api_service/repository.py:79-122`): bucket-window read
   * with the complete-bucket filter and latest-wins dedup, bucket_start
   * re-keyed as `timestamp` so downstream consumes HTF bars and 1m bars
-  * through the same column. The hourly tree reads the symbol's subtree;
-  * the day-wide tree reads the window's day dirs ([[DayDirs]]). */
-class HtfLakeReader(root: String, committer: CommitProtocol = RenameCommit) {
-
-  private def dir(timeframe: String, symbol: String) =
-    s"$root/timeframe=$timeframe/symbol=${symbol.toUpperCase}"
+  * through the same column. Reads name the window's day dirs under
+  * `timeframe=T/` ([[DayDirs]]) and filter `symbol` as a data column. */
+class HtfLakeReader(root: String) {
 
   def readWindow(spark: SparkSession, timeframe: String, symbol: String,
                  start: Instant, end: Instant,
-                 completeOnly: Boolean = true): Option[DataFrame] =
-    if (!committer.readThroughResolve)
-      readWindowOnce(spark, timeframe, symbol, start, end, completeOnly)
-    else
-      // manifest deployment (VERDICT r17 #2): resolve + plan + PIN
-      // inside the re-resolve guard, so the returned frame's later
-      // consumption (bar serving, alignment joins) cannot die on a
-      // version GC'd after this returns. HTF windows are serving-
-      // bounded (limit × bucket width); ContextCleaner reclaims the
-      // cache when the frame leaves driver scope. Identity deployments
-      // (above) stay fully lazy — their paths never vanish.
-      ResolvedScan.retryOnVanishedVersion() {
-        readWindowOnce(spark, timeframe, symbol, start, end, completeOnly)
-          .map { df =>
-            val pinned = df.persist()
-            try { pinned.count(); pinned }
-            catch { case e: Throwable => pinned.unpersist(); throw e }
-          }
-      }
-
-  private def readWindowOnce(spark: SparkSession, timeframe: String,
-                 symbol: String, start: Instant, end: Instant,
-                 completeOnly: Boolean): Option[DataFrame] = {
-    val d = dir(timeframe, symbol)
+                 completeOnly: Boolean = true): Option[DataFrame] = {
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val base =
-      if (fs.exists(new HPath(d)) && committer.readThroughResolve) {
-        // manifest deployment: the live day versions sit behind each
-        // leaf's pointer (dot-prefixed — a plain subtree read sees
-        // nothing); window-bound the leaf walk first, then resolve
-        val inWin = ResolvedScan.resolveLeaves(fs,
-          DayDirs.inRange(fs, d, start, end), committer)
-        // in-range-empty window still reads ONE committed day so the
-        // result keeps the real schema (mirrors the wide branch)
-        val days =
-          if (inWin.nonEmpty) inWin
-          else ResolvedScan.resolveLeaves(fs,
-            DayDirs.deepest(fs, d, 1), committer)
-        if (days.isEmpty) return None
-        spark.read.option("basePath", d).parquet(days: _*)
-      }
-      else if (fs.exists(new HPath(d))) spark.read.parquet(d)
-      else {
-        // day-wide layout: no per-symbol directory level — symbol is a
-        // sorted data column under timeframe=T/year=/month=/day=, and
-        // parquet min/max stats on it do the per-symbol skipping. The
-        // window's day dirs are read EXPLICITLY (bucket_start derives the
-        // day partition), same as the minute reader — a tfDir root-read
-        // listed the whole HTF tree per request. An in-range-empty
-        // window reads ONE day dir so the result keeps the real schema.
-        val tfDir = s"$root/timeframe=$timeframe"
-        if (LakeLayout.detect(fs, tfDir).exists(_.isInstanceOf[LakeLayout.DayWide])) {
-          val days = DayDirs.inRange(fs, tfDir, start, end)
-          val paths = if (days.nonEmpty) days
-                      else DayDirs.deepest(fs, tfDir, 1)
-          if (paths.isEmpty) return None
-          spark.read.option("basePath", tfDir).parquet(paths: _*)
-            .where(col("symbol") === symbol.toUpperCase)
-        } else return None
-      }
-    var df = base
+    // the window's day dirs are read EXPLICITLY (bucket_start derives
+    // the day partition) — a tfDir root-read listed the whole HTF tree
+    // per request. An in-range-empty window reads ONE day dir so the
+    // result keeps the real schema.
+    val tfDir = s"$root/timeframe=$timeframe"
+    val days = DayDirs.inRange(fs, tfDir, start, end)
+    val paths = if (days.nonEmpty) days else DayDirs.deepest(fs, tfDir, 1)
+    if (paths.isEmpty) return None
+    var df = spark.read.option("basePath", tfDir).parquet(paths: _*)
+      .where(col("symbol") === symbol.toUpperCase)
       .where(col("bucket_start").between(
         java.sql.Timestamp.from(start), java.sql.Timestamp.from(end)))
     if (completeOnly) df = df.where(col("bucket_complete"))
     // duplicate bucket rows should not exist, but if a repair ever
     // leaves one, prefer the complete / most-observed row deterministically.
-    // `symbol` is dropped too: the wide branch carries it as a data
-    // column (already pinned to one value by the equality filter above)
-    // while the hourly per-symbol subtree has none — both layouts must
-    // return the SAME schema through this API (ADVICE r13).
+    // `symbol` is dropped too: it is pinned to one value by the filter.
     Some(Ops.dedupKeepLast(df, Seq("bucket_start"),
         Seq(col("bucket_complete"), col("observed_minutes_in_bucket")))
       .drop("year", "month", "day", "symbol")
@@ -234,67 +179,61 @@ class HtfLakeReader(root: String, committer: CommitProtocol = RenameCommit) {
 }
 
 /** Minute-lake reader (reference `aggregator/source_reader.py:13-78`,
-  * `live_data_api_service/repository.py:22-52`).
+  * `live_data_api_service/repository.py:22-52`) over the day-wide lake
+  * ([[LakeLayout]]).
   *
-  * Reads name the directories they need instead of reading the lake
-  * root under partition predicates, because a root read LISTS every
-  * file in the lake before pruning. On the hourly layout a single-symbol
-  * read scopes to the symbol's `symbol=X/` subtree. On the day-wide
-  * layout a bounded read names the window's day dirs ([[DayDirs]]),
-  * filters `symbol` as a data column (files are symbol-sorted, so
-  * parquet min/max stats skip row groups), and overlays the late-repair
-  * delta files (see `overlayDeltas`). Unbounded scans read the root,
-  * since they need every file; of the bounded reads only the hourly
-  * all-symbols window read still does, pruned on the hour partition key.
+  * Bounded reads name the window's day dirs ([[DayDirs]]) instead of
+  * reading the lake root under partition predicates, because a root
+  * read LISTS every file in the lake before pruning; they filter
+  * `symbol` as a data column (files are symbol-sorted, so parquet
+  * min/max stats skip row groups) and overlay the late-repair delta
+  * files (see `overlayDeltas`). Unbounded scans read the root, since
+  * they need every file.
+  *
+  * An empty or absent lake reads as empty: an empty frame with the
+  * read's schema, `None`, `Map.empty` or `(None, None)`. A lake root
+  * holding the reference's hourly `symbol=` tree fails every verb with
+  * an `IllegalStateException` — migrate it with
+  * [[LakeMigrate.hourlyToDayWide]] first.
   */
-class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
-                       committer: CommitProtocol = RenameCommit) {
+class MinuteLakeReader(root: String) {
 
   private def lakeDir = s"$root/futures/um/minute"
 
-  /** Manifest deployments publish each hourly leaf behind a pointer
-    * ([[CommitProtocol.readThroughResolve]]): every hourly subtree scan
-    * below must then enumerate+resolve leaves instead of handing Spark
-    * the subtree root (whose dot-prefixed live versions the hidden-path
-    * filter would skip — the reader would see EMPTY partitions). The
-    * wide layout never needs this: its bulk writes commit through
-    * Hadoop's committer and its deltas are append-only (§4.1). */
-  private def mustResolve: Boolean = committer.readThroughResolve
+  private def fsOf(spark: SparkSession): FileSystem =
+    FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
-  /** Whether this reader's plans carry manifest-resolved `.v_*` paths
-    * that a later publish can GC mid-scan — serving layers use this to
-    * decide when a returned frame must be pinned eagerly inside a
-    * [[ResolvedScan.retryOnVanishedVersion]] guard (r17 advice).
-    * Identity deployments return false: their paths never vanish. */
-  def resolvesVersions: Boolean = committer.readThroughResolve
-
-  private def hasData(spark: SparkSession): Boolean = {
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    fs.exists(new HPath(lakeDir))
+  /** Whether the lake holds any day yet: one listing of the lake root,
+    * cached once a day is found (an empty lake re-checks, so data that
+    * lands later is seen). Every verb goes through it, so a
+    * reference-layout root fails loudly instead of reading as empty. */
+  @volatile private var sawDays = false
+  private def hasDays(spark: SparkSession): Boolean = sawDays || {
+    val fs = fsOf(spark)
+    val p = new HPath(lakeDir)
+    val names =
+      if (!fs.exists(p)) Seq.empty[String]
+      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+    if (names.exists(_.startsWith("symbol=")))
+      throw new IllegalStateException(
+        s"$lakeDir holds a reference-layout symbol=/year=/month=/day=/hour= " +
+          "tree; migrate it with LakeMigrate.hourlyToDayWide before reading")
+    sawDays = names.exists(_.startsWith("year="))
+    sawDays
   }
 
-  /** Physical layout, auto-detected from the lake's top-level partition
-    * directories (cached once found; an empty lake reads as the hourly
-    * default until data lands). Every read path below branches on this,
-    * so one reader serves both layouts behind the same API. */
-  @volatile private var detectedLayout: Option[LakeLayout] = None
-  private def layoutOf(spark: SparkSession): LakeLayout =
-    layoutHint.getOrElse(detectedLayout.getOrElse {
-      val fs = FileSystem.get(new java.net.URI(root),
-        spark.sparkContext.hadoopConfiguration)
-      LakeLayout.detect(fs, lakeDir) match {
-        case Some(l) => detectedLayout = Some(l); l
-        case None => LakeLayout.HourlySymbol
-      }
-    })
+  private def emptyFrame(spark: SparkSession, withSymbol: Boolean): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      if (!withSymbol) CanonicalSchema.structType
+      else org.apache.spark.sql.types.StructType(
+        org.apache.spark.sql.types.StructField("symbol",
+          org.apache.spark.sql.types.StringType) +:
+        CanonicalSchema.structType.fields))
 
-  private def isWide(spark: SparkSession): Boolean =
-    layoutOf(spark).isInstanceOf[LakeLayout.DayWide]
-
-  // ------------------------------------------------ delta overlay (wide)
+  // ------------------------------------------------ delta overlay
   // Late point repairs land as small `_delta/year=/month=/day=` files
   // beside the base (MinuteLakeWriter.writeDeltaPatch) — O(patch)
-  // writes instead of a day × all-symbols rewrite. Every wide read
+  // writes instead of a day × all-symbols rewrite. Every read
   // overlays them through the ONE shared merge policy (mergeKeyed:
   // delta wins, highest __delta_seq wins among deltas, LIVE_ONLY
   // preserved from base), so a patch is visible immediately and
@@ -303,9 +242,6 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
   // by compaction; delta days ⊆ base days by writer invariant.
 
   private def deltaRoot = s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}"
-
-  private def fsOf(spark: SparkSession): FileSystem =
-    FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
   /** Delta day dirs intersecting the window (all of them when
     * unbounded) — the same O(touched) pruned walk as the base. */
@@ -362,7 +298,7 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
     days.flatMap(DayDirs.dataFiles(fs, _)).filter(mayHold).map(_.getPath.toString)
   }
 
-  /** Overlay the window's deltas onto a base wide read.
+  /** Overlay the window's deltas onto a base read.
     *
     * With `symbol = Some(s)` both sides are single-symbol frames without
     * the symbol column (merge keyed by timestamp), and delta files are
@@ -398,126 +334,46 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
           collapsedDeltas(spark, deltaDays), Seq("symbol", "timestamp"))
     }
 
-  /** Single-symbol scan, scoped to the symbol's OWN directory subtree.
-    * Reading the lake root and filtering `symbol === X` prunes the
-    * PARTITIONS correctly, but file LISTING happens before pruning —
-    * Spark's file index enumerates every symbol's directories, so
-    * request latency grows with lake WIDTH (measured: ×2.7 from 10 to
-    * 1000 symbols at constant per-symbol data, `ServiceScaleProbe`).
-    * Scoping the read to `symbol=X/` bounds the listing to one
-    * symbol's tree — the per-request cost a 1000-symbol lake needs
-    * (the reference gets this from its hand-built partition paths;
-    * year/month/day/hour discovery still happens under the subtree). */
-  def scanSymbol(spark: SparkSession, symbol: String): DataFrame = {
-    if (isWide(spark))
-      // day-wide: symbol is a DATA column, files sorted+range-bucketed
-      // by it, so the predicate prunes via parquet min/max file stats —
-      // and the whole-lake file listing is O(days × filesPerDay), which
-      // is the layout's point (no per-symbol subtree needed). The root
-      // read skips `_delta` (underscore dir); deltas overlay explicitly.
-      return overlayDeltas(spark,
-        spark.read.parquet(lakeDir)
-          .where(col("symbol") === symbol.toUpperCase)
-          .drop("year", "month", "day", "symbol"),
-        deltaDaysFor(spark, None, None), Some(symbol))
-    val symbolDir = s"$lakeDir/symbol=${symbol.toUpperCase}"
-    val fs = FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration)
-    def empty() =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        CanonicalSchema.structType)
-    if (!fs.exists(new HPath(symbolDir))) empty()
-    else if (mustResolve) {
-      val leaves = ResolvedScan.resolvedLeaves(fs, symbolDir, committer)
-      if (leaves.isEmpty) empty()
-      else spark.read.option("basePath", symbolDir).parquet(leaves: _*)
-        .drop("year", "month", "day", "hour")
-    } else
-      spark.read.parquet(symbolDir).drop("year", "month", "day", "hour")
-  }
+  /** Single-symbol scan over the whole lake: `symbol` is a DATA column
+    * and files are sorted+range-bucketed by it, so the predicate prunes
+    * via parquet min/max file stats, and the whole-lake file listing is
+    * O(days × filesPerDay) regardless of width. The root read skips
+    * `_delta` (underscore dir); deltas overlay explicitly. */
+  def scanSymbol(spark: SparkSession, symbol: String): DataFrame =
+    if (!hasDays(spark)) emptyFrame(spark, withSymbol = false)
+    else overlayDeltas(spark,
+      spark.read.parquet(lakeDir)
+        .where(col("symbol") === symbol.toUpperCase)
+        .drop("year", "month", "day", "symbol"),
+      deltaDaysFor(spark, None, None), Some(symbol))
 
-  /** Whole-lake scan keeping the `symbol` partition column — the input
-    * to all-symbols-in-one-job processing (1000-symbol plans never loop
+  /** Whole-lake scan keeping the `symbol` column — the input to
+    * all-symbols-in-one-job processing (1000-symbol plans never loop
     * the driver over symbols). */
   def scanAllSymbols(spark: SparkSession): Option[DataFrame] =
-    if (!hasData(spark)) None
-    else if (isWide(spark))
-      Some(overlayDeltas(spark,
-        spark.read.parquet(lakeDir).drop("year", "month", "day"),
-        deltaDaysFor(spark, None, None), None))
-    else if (mustResolve) {
-      val leaves = ResolvedScan.resolvedLeaves(fsOf(spark), lakeDir, committer)
-      if (leaves.isEmpty) None
-      else Some(spark.read.option("basePath", lakeDir).parquet(leaves: _*)
-        .drop("year", "month", "day", "hour"))
-    } else Some(spark.read.parquet(lakeDir).drop("year", "month", "day", "hour"))
+    if (!hasDays(spark)) None
+    else Some(overlayDeltas(spark,
+      spark.read.parquet(lakeDir).drop("year", "month", "day"),
+      deltaDaysFor(spark, None, None), None))
 
   /** Whole-lake windowed read with per-(symbol, minute) latest-wins
-    * dedup — the multi-symbol form of [[readWindow]]. The window is
-    * pushed into the PARTITION columns (lpad-normalized hour key, so
-    * int- or string-inferred partition values both compare correctly):
-    * a 2-hour repair window over a years-deep 1000-symbol lake must
-    * prune to the touched hour directories, not scan-and-filter the
-    * whole lake on a data column. */
+    * dedup — the multi-symbol form of [[readWindow]]. The pruning floor
+    * is a DAY (the layout's documented trade; INT96 timestamps carry no
+    * row-group stats to skip within it). The touched day dirs are read
+    * EXPLICITLY — `spark.read(root)` + a partition predicate still LISTS
+    * every file in the lake before pruning, so bounded windows paid
+    * O(depth) listing (WideDepthProbe); the directory walk is
+    * metadata-only. */
   def readWindowAllSymbols(spark: SparkSession, start: Instant,
                            end: Instant): Option[DataFrame] = {
-    if (!hasData(spark)) return None
-    val df =
-      if (isWide(spark)) {
-        // pruning floor is a DAY here (the layout's documented trade;
-        // INT96 timestamps carry no row-group stats to skip within it).
-        // The touched day dirs are read EXPLICITLY — `spark.read(root)`
-        // + a partition predicate still LISTS every file in the lake
-        // before pruning, so bounded windows paid O(depth) listing
-        // (WideDepthProbe); the O(depth) directory walk is metadata-only
-        val days = dayDirsInRange(spark, start, end)
-        val base =
-          if (days.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(
-                org.apache.spark.sql.types.StructField("symbol",
-                  org.apache.spark.sql.types.StringType) +:
-                CanonicalSchema.structType.fields))
-          else spark.read.option("basePath", lakeDir).parquet(days: _*)
-            .drop("year", "month", "day")
-        overlayDeltas(spark, base,
-          deltaDaysFor(spark, Some(start), Some(end)), None)
-      } else {
-        val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHH")
-          .withZone(java.time.ZoneOffset.UTC)
-        val hourKey = concat(
-          lpad(col("year").cast("string"), 4, "0"),
-          lpad(col("month").cast("string"), 2, "0"),
-          lpad(col("day").cast("string"), 2, "0"),
-          lpad(col("hour").cast("string"), 2, "0"))
-        if (mustResolve) {
-          // manifest deployment: prune candidate leaves to the window
-          // DRIVER-side by the hour key parsed from each leaf's path
-          // BEFORE resolution (r19: the post-resolve filter paid one
-          // day-state read per out-of-window LEAF — ~11 s over a
-          // 24k-leaf lake for a 3 h window), then read the survivors
-          // explicitly
-          val lo = fmt.format(start)
-          val hi = fmt.format(end)
-          val leaves = ResolvedScan.resolvedLeaves(fsOf(spark), lakeDir,
-            committer,
-            leafFilter =
-              p => MinuteLakeReader.hourKeyOf(p).forall(k => k >= lo && k <= hi))
-          if (leaves.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(
-                org.apache.spark.sql.types.StructField("symbol",
-                  org.apache.spark.sql.types.StringType) +:
-                CanonicalSchema.structType.fields))
-          else spark.read.option("basePath", lakeDir).parquet(leaves: _*)
-            .where(hourKey.between(lo, hi))
-            .drop("year", "month", "day", "hour")
-        } else spark.read.parquet(lakeDir)
-          .where(hourKey.between(fmt.format(start), fmt.format(end)))
-          .drop("year", "month", "day", "hour")
-      }
+    if (!hasDays(spark)) return None
+    val days = dayDirsInRange(spark, start, end)
+    val base =
+      if (days.isEmpty) emptyFrame(spark, withSymbol = true)
+      else spark.read.option("basePath", lakeDir).parquet(days: _*)
+        .drop("year", "month", "day")
+    val df = overlayDeltas(spark, base,
+      deltaDaysFor(spark, Some(start), Some(end)), None)
     Some(Ops.dedupKeepLast(
       df.where(col("timestamp").between(
         java.sql.Timestamp.from(start), java.sql.Timestamp.from(end))),
@@ -526,137 +382,88 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
         col("update_id_end"))))
   }
 
-  /** Per-symbol latest minute for EVERY symbol via partition-directory
-    * descent: walk each symbol's max year → month → day → hour by
-    * directory LISTING (metadata only), then read just those max-hour
-    * directories in one job. The steady-state incremental tick needs
-    * per-symbol latest every cadence — computing it from a full-lake
-    * scan reads the whole history per tick; this form reads one hour
-    * partition per symbol regardless of lake depth. */
+  /** Per-symbol latest minute for EVERY symbol. The deepest TWO day
+    * partitions cover every symbol that wrote within the last day
+    * (day-boundary stragglers included) — one job over
+    * ≤2 × filesPerDay files regardless of width or depth; the
+    * steady-state incremental tick needs this every cadence, so it must
+    * not read the lake's history. A symbol idle LONGER than that
+    * (delisted/halted while others keep writing) is absent from this
+    * scan, so callers pass the symbols they track (watermark store /
+    * ledger) and each missing one is reconciled through the per-symbol
+    * end-probe — O(log depth) jobs per IDLE symbol only, zero in the
+    * steady state (ADVICE r13: without this, the fleet tick silently
+    * never finalizes an idle symbol's trailing buckets). */
   def latestMinuteAllSymbols(spark: SparkSession,
                              knownSymbols: Set[String] = Set.empty): Map[String, Instant] = {
-    if (!hasData(spark)) return Map.empty
-    val fs = FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration)
-    if (isWide(spark)) {
-      // day-wide: the deepest TWO day partitions cover every symbol that
-      // wrote within the last day (day-boundary stragglers included) —
-      // one job over ≤2 × filesPerDay files regardless of width or
-      // depth. A symbol idle LONGER than that (delisted/halted while
-      // others keep writing) is absent from this scan, so callers pass
-      // the symbols they track (watermark store / ledger) and each
-      // missing one is reconciled through the per-symbol end-probe —
-      // O(log depth) jobs per IDLE symbol only, zero in the steady state
-      // (ADVICE r13: without this, the fleet tick silently never
-      // finalizes an idle symbol's trailing buckets on the wide layout).
-      val days = DayDirs.deepest(fs, lakeDir, 2)
-      if (days.isEmpty) return Map.empty
-      var scan = spark.read.option("basePath", lakeDir).parquet(days: _*)
-        .select("symbol", "timestamp")
-      // deltas in those same days can carry a later minute for a symbol
-      // (a correction is usually older, but the API doesn't forbid it)
-      val deltaDays = DayDirs.matching(fs, deltaRoot,
-        days.map(DayDirs.ymdOf).toSet)
-      if (deltaDays.nonEmpty)
-        scan = scan.unionByName(
-          spark.read.parquet(deltaDays: _*).select("symbol", "timestamp"))
-      val recent = scan
-        .groupBy("symbol").agg(max("timestamp").as("latest"))
-        .collect().map(r => r.getString(0) -> r.getTimestamp(1).toInstant).toMap
-      val idle = knownSymbols.map(_.toUpperCase) -- recent.keySet
-      if (idle.isEmpty) return recent
-      val allDaysDesc = dayDirsAscending(spark).reverse
-      val deltaByYmd = deltaYmdMap(spark)
-      return recent ++ idle.toSeq.flatMap { sym =>
-        probeDays(spark, allDaysDesc, sym, max(col("timestamp")), deltaByYmd)
-          .map(ts => sym -> ts.toInstant)
-      }
-    }
-    // maxBy the PARSED numeric value after '=': lexicographic compare is
-    // only correct on zero-padded names (our writer pads, but a lake with
-    // int-inferred dirs has 'month=9' > 'month=12' and the descent would
-    // silently return a stale "latest"). Non-numeric values fall back to
-    // string order.
-    def maxChild(p: HPath): Option[HPath] = {
-      val kids = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.contains("="))
-      if (kids.isEmpty) None
-      else Some(kids.maxBy { k =>
-        val v = k.getName.substring(k.getName.indexOf('=') + 1)
-        v.toLongOption match {
-          case Some(n) => (1, n, "")
-          case None    => (0, 0L, v)
-        }
-      })
-    }
-    var hourDirs = fs.listStatus(new HPath(lakeDir)).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("symbol="))
-      .flatMap(sd => maxChild(sd).flatMap(maxChild).flatMap(maxChild).flatMap(maxChild))
-      .map(_.toString)
-    if (mustResolve)
-      hourDirs = ResolvedScan.resolveLeaves(fs, hourDirs.toSeq, committer)
-        .toArray
-    if (hourDirs.isEmpty) return Map.empty
-    spark.read.option("basePath", lakeDir).parquet(hourDirs.toIndexedSeq: _*)
+    if (!hasDays(spark)) return Map.empty
+    val fs = fsOf(spark)
+    val days = DayDirs.deepest(fs, lakeDir, 2)
+    if (days.isEmpty) return Map.empty
+    var scan = spark.read.option("basePath", lakeDir).parquet(days: _*)
+      .select("symbol", "timestamp")
+    // deltas in those same days can carry a later minute for a symbol
+    // (a correction is usually older, but the API doesn't forbid it)
+    val deltaDays = DayDirs.matching(fs, deltaRoot,
+      days.map(DayDirs.ymdOf).toSet)
+    if (deltaDays.nonEmpty)
+      scan = scan.unionByName(
+        spark.read.parquet(deltaDays: _*).select("symbol", "timestamp"))
+    val recent = scan
       .groupBy("symbol").agg(max("timestamp").as("latest"))
       .collect().map(r => r.getString(0) -> r.getTimestamp(1).toInstant).toMap
+    val idle = knownSymbols.map(_.toUpperCase) -- recent.keySet
+    if (idle.isEmpty) return recent
+    val allDaysDesc = dayDirsAscending(spark).reverse
+    val deltaByYmd = deltaYmdMap(spark)
+    recent ++ idle.toSeq.flatMap { sym =>
+      probeDays(spark, allDaysDesc, sym, max(col("timestamp")), deltaByYmd)
+        .map(ts => sym -> ts.toInstant)
+    }
   }
 
-  /** min/max timestamp — parquet footer statistics make this a
-    * metadata-only scan (S2). On the day-wide layout a whole-lake footer
-    * scan still costs O(depth × filesPerDay) listings+footers (measured
-    * 4.8 s at 365 days, WideDepthProbe), and [[latestMinute]] sits on the
-    * per-symbol incremental tick — so wide probes day partitions from
-    * each END of the date-sorted directory list in exponentially growing
-    * batches instead: a symbol present at the lake edges (the steady
-    * state) resolves in one ≤filesPerDay-file job per bound, independent
-    * of depth. Day partitions derive from `timestamp`, so the first
+  /** min/max timestamp of one symbol. A whole-lake footer scan costs
+    * O(depth × filesPerDay) listings+footers (measured 4.8 s at 365
+    * days, WideDepthProbe), and [[latestMinute]] sits on the per-symbol
+    * incremental tick — so this probes day partitions from each END of
+    * the date-sorted directory list in exponentially growing batches
+    * instead: a symbol present at the lake edges (the steady state)
+    * resolves in one ≤filesPerDay-file job per bound, independent of
+    * depth. Day partitions derive from `timestamp`, so the first
     * day-batch containing the symbol bounds the global min (resp. max). */
   def inspectRange(spark: SparkSession, symbol: String): (Option[Instant], Option[Instant]) = {
-    if (isWide(spark)) {
-      // registry short-circuit: an ABSENT symbol's expanding probe
-      // otherwise walks the whole lake backward (~10 s at 2,000 days,
-      // measured r15). The registry is a writer-maintained SUPERSET;
-      // when it is missing/torn the probe just walks as before.
-      if (absentPerRegistry(spark, symbol)) return (None, None)
-      val days = dayDirsAscending(spark)
-      val deltaByYmd = deltaYmdMap(spark)
-      val mn = probeDays(spark, days, symbol, min(col("timestamp")), deltaByYmd)
-      val mx = if (mn.isEmpty) None
-               else probeDays(spark, days.reverse, symbol, max(col("timestamp")), deltaByYmd)
-      return (mn.map(_.toInstant), mx.map(_.toInstant))
-    }
-    val r = scanSymbol(spark, symbol)
-      .agg(min(col("timestamp")).as("mn"), max(col("timestamp")).as("mx"))
-      .collect().head
-    (Option(r.getTimestamp(0)).map(_.toInstant), Option(r.getTimestamp(1)).map(_.toInstant))
+    // registry short-circuit: an ABSENT symbol's expanding probe
+    // otherwise walks the whole lake backward (~10 s at 2,000 days,
+    // measured r15). The registry is a writer-maintained SUPERSET;
+    // when it is missing/torn the probe just walks as before.
+    if (!hasDays(spark) || absentPerRegistry(spark, symbol)) return (None, None)
+    val days = dayDirsAscending(spark)
+    val deltaByYmd = deltaYmdMap(spark)
+    val mn = probeDays(spark, days, symbol, min(col("timestamp")), deltaByYmd)
+    val mx = if (mn.isEmpty) None
+             else probeDays(spark, days.reverse, symbol, max(col("timestamp")), deltaByYmd)
+    (mn.map(_.toInstant), mx.map(_.toInstant))
   }
 
   def latestMinute(spark: SparkSession, symbol: String): Option[Instant] =
-    if (isWide(spark)) {
-      if (absentPerRegistry(spark, symbol)) None
-      else probeDays(spark, dayDirsAscending(spark).reverse, symbol,
-        max(col("timestamp")), deltaYmdMap(spark)).map(_.toInstant)
-    } else inspectRange(spark, symbol)._2
+    if (!hasDays(spark) || absentPerRegistry(spark, symbol)) None
+    else probeDays(spark, dayDirsAscending(spark).reverse, symbol,
+      max(col("timestamp")), deltaYmdMap(spark)).map(_.toInstant)
 
-  /** True only when the wide lake HAS a symbol registry and `symbol`
+  /** True only when the lake HAS a symbol registry and `symbol`
     * is not in it (see [[MinuteLakeWriter.SymbolsRegistry]]). */
   private def absentPerRegistry(spark: SparkSession, symbol: String): Boolean =
-    MinuteLakeWriter.readSymbolRegistry(
-        FileSystem.get(new java.net.URI(root),
-          spark.sparkContext.hadoopConfiguration), lakeDir)
+    MinuteLakeWriter.readSymbolRegistry(fsOf(spark), lakeDir)
       .exists(!_.contains(symbol.toUpperCase))
 
-  /** Every `year=/month=/day=` directory of a day-wide lake in ascending
+  /** Every `year=/month=/day=` directory of the lake in ascending
     * (year, month, day) numeric order — an O(depth) metadata walk. */
   private def dayDirsAscending(spark: SparkSession): Seq[String] =
-    DayDirs.ascending(FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration), lakeDir)
+    DayDirs.ascending(fsOf(spark), lakeDir)
 
   private def dayDirsInRange(spark: SparkSession, start: Instant,
                              end: Instant): Seq[String] =
-    DayDirs.inRange(FileSystem.get(new java.net.URI(root),
-      spark.sparkContext.hadoopConfiguration), lakeDir, start, end)
+    DayDirs.inRange(fsOf(spark), lakeDir, start, end)
 
   /** First non-null `agg` over `symbol`'s rows, probing `order`ed day
     * dirs in batches of 1, 2, 4, … — at most O(log depth) jobs, and the
@@ -691,98 +498,26 @@ class MinuteLakeReader(root: String, layoutHint: Option[LakeLayout] = None,
     None
   }
 
-  def scanAvailableMinutes(spark: SparkSession, symbol: String,
-                           start: Option[Instant] = None,
-                           end: Option[Instant] = None): DataFrame = {
-    var df = scanSymbol(spark, symbol).select("timestamp")
-    start.foreach(s => df = df.where(col("timestamp") >= java.sql.Timestamp.from(s)))
-    end.foreach(e => df = df.where(col("timestamp") <= java.sql.Timestamp.from(e)))
-    df.distinct()
-  }
-
   /** Windowed read with latest-wins dedup (S3, reference
     * `source_reader.py:44-59`): one row per timestamp, the one with the
     * greatest (arrival_time, event_time, transact_time, update_id_end)
-    * nulls-last tuple. */
+    * nulls-last tuple. The touched day dirs are read EXPLICITLY — a
+    * partition predicate on a root-read lists every file in the lake
+    * before pruning, so a 3-hour request paid O(depth) listing + footer
+    * reads (request latency ×5.7 from 30 to 365 days, WideDepthProbe).
+    * The directory walk is O(depth) metadata; the read is O(window). */
   def readWindow(spark: SparkSession, symbol: String, start: Instant, end: Instant): DataFrame = {
-    val base =
-      if (isWide(spark)) {
-        // read the touched day dirs EXPLICITLY — scanSymbol drops the
-        // partition columns, and even a partition predicate on a
-        // root-read lists every file in the lake before pruning, so a
-        // 3-hour request paid O(depth) listing + footer reads (request
-        // latency ×5.7 from 30 to 365 days, WideDepthProbe). The
-        // directory walk is O(depth) metadata; the read is O(window)
-        val days = dayDirsInRange(spark, start, end)
-        val b =
-          if (days.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              CanonicalSchema.structType)
-          else spark.read.option("basePath", lakeDir).parquet(days: _*)
-            .where(col("symbol") === symbol.toUpperCase)
-            .drop("year", "month", "day", "symbol")
-        overlayDeltas(spark, b,
-          deltaDaysFor(spark, Some(start), Some(end)), Some(symbol))
-      } else scanSymbol(spark, symbol)
-    val df = base
+    val days = if (hasDays(spark)) dayDirsInRange(spark, start, end) else Seq.empty
+    val b =
+      if (days.isEmpty) emptyFrame(spark, withSymbol = false)
+      else spark.read.option("basePath", lakeDir).parquet(days: _*)
+        .where(col("symbol") === symbol.toUpperCase)
+        .drop("year", "month", "day", "symbol")
+    val df = overlayDeltas(spark, b,
+      deltaDaysFor(spark, Some(start), Some(end)), Some(symbol))
       .where(col("timestamp").between(
         java.sql.Timestamp.from(start), java.sql.Timestamp.from(end)))
     Ops.dedupKeepLast(df, Seq("timestamp"),
       Seq(col("arrival_time"), col("event_time"), col("transact_time"), col("update_id_end")))
-  }
-
-  /** Partition-directory snapshot for change detection (S5, reference
-    * `source_reader.py:61-69`). */
-  def partitionDirectories(spark: SparkSession, symbol: String): Set[String] = {
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    if (isWide(spark)) {
-      // day-wide has no per-symbol subtree: the change-detection
-      // snapshot is the set of day directories holding data files —
-      // symbol-agnostic, so a change anywhere re-triggers the symbol's
-      // backfill (conservative and correct; backfill is idempotent)
-      val it = fs.listFiles(new HPath(lakeDir), true)
-      val dirs = scala.collection.mutable.Set[String]()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet"))
-          dirs += f.getPath.getParent.toString.stripPrefix(lakeDir).stripPrefix("/")
-      }
-      return dirs.toSet
-    }
-    val symbolRoot = new HPath(s"$lakeDir/symbol=${symbol.toUpperCase}")
-    if (!fs.exists(symbolRoot)) Set.empty
-    else if (mustResolve)
-      // manifest deployment: the committed-content dirs ARE the change
-      // snapshot — a publish swaps the version name, so any repair is
-      // detected; superseded/orphan versions never enter the set
-      ResolvedScan.resolvedLeaves(fs, symbolRoot.toString, committer)
-        .map(_.stripPrefix(symbolRoot.toString).stripPrefix("/")).toSet
-    else {
-      val it = fs.listFiles(symbolRoot, true)
-      val dirs = scala.collection.mutable.Set[String]()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet"))
-          dirs += f.getPath.getParent.toString.stripPrefix(symbolRoot.toString).stripPrefix("/")
-      }
-      dirs.toSet
-    }
-  }
-}
-
-object MinuteLakeReader {
-
-  private val HourKeyRe =
-    """.*/year=(\d+)/month=(\d+)/day=(\d+)/hour=(\d+)(?:/[^/]+)?$""".r
-
-  /** `yyyyMMddHH` key parsed from a leaf partition path (resolved
-    * version dirs keep their `key=value` ancestry, so one optional
-    * trailing non-kv segment is allowed); None when the path carries
-    * no hour ancestry — callers must treat that as in-window. */
-  private[graft] def hourKeyOf(path: String): Option[String] = path match {
-    case HourKeyRe(y, m, d, h) =>
-      Some(f"${y.toInt}%04d${m.toInt}%02d${d.toInt}%02d${h.toInt}%02d")
-    case _ => None
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -15,25 +14,21 @@ import graft.validation.DQValidator
 /** Minute-lake writer — Spark re-expression of the reference's
   * `AtomicParquetWriter` (`writer/atomic.py:27-117`).
   *
-  * Layout: `futures/um/minute/symbol=S/year=YYYY/month=MM/day=DD/hour=HH/`
-  * (Hive-style, so Catalyst partition pruning is automatic on read).
+  * Layout: day-wide ([[LakeLayout]]) —
+  * `futures/um/minute/year=YYYY/month=MM/day=DD/`, symbol as a sorted
+  * data column, late repairs under `futures/um/minute/_delta/`.
   *
-  * Write paths, one publish each:
-  *  - [[writeHourPartition]] — the exact semantic port: read existing
-  *    partition, last-wins merge with LIVE_ONLY preservation (bool-OR
-  *    for coverage flags, coalesce for the rest), DQ-validate, rewrite
-  *    the single partition (write-to-tmp + `committer.publish` keeps
-  *    readers atomic). On the day-wide layout it routes to the two
-  *    paths below.
-  *  - [[writeDaysWide]] — the WIDTH-scalable path ([[LakeLayout.DayWide]]):
-  *    day-level partitions, symbol as a data column, files
+  * Write paths:
+  *  - [[writeDaysWide]] — the bulk path: day-level partitions, files
   *    range-partitioned + sorted by (symbol, timestamp), written once
-  *    and swapped in per day by [[WideDayPublish.write]]. Same last-wins +
-  *    LIVE_ONLY-preserve merge semantics, keyed by (symbol, timestamp).
-  *    Use at lake width ≥10k where the hourly layout's file population
-  *    (width × 24 files/day) is the measured constraint (SURVEY §8.15).
-  *  - [[writeDeltaPatch]] — day-wide point repairs as append-only delta
-  *    files, folded back by [[compactWideDeltas]].
+  *    and swapped in per day by [[WideDayPublish.write]]. Last-wins +
+  *    LIVE_ONLY-preserve merge semantics (reference `atomic.py:65-97`),
+  *    keyed by (symbol, timestamp).
+  *  - [[writeDeltaPatch]] — point repairs as append-only delta files,
+  *    folded back by [[compactWideDeltas]].
+  *  - [[writeHourPartition]] — the pipeline's hour verb: one symbol's
+  *    hour lands as a delta into an existing day, or as a bulk merge
+  *    write for a new day.
   */
 /** When the ingestion tick folds accumulated day-wide delta patches
   * into their base days — threshold OR age, whichever trips first
@@ -41,109 +36,53 @@ import graft.validation.DQValidator
   * day at 8 delta files (read-overlay economics) or once its oldest
   * patch is a day old (staleness). `ledgerMaxBytes` bounds the
   * append-only partition ledger the same tick owns
-  * ([[PartitionLedger.compactIfLarge]] — both layouts). */
+  * ([[PartitionLedger.compactIfLarge]]). */
 final case class CompactionPolicy(minFilesPerDay: Int = 8,
                                   maxAgeMinutes: Long = 1440L,
                                   ledgerMaxBytes: Long = 16L * 1024 * 1024)
 
 class MinuteLakeWriter(root: String, ledger: PartitionLedger,
-                       val layout: LakeLayout = LakeLayout.HourlySymbol,
-                       val committer: CommitProtocol = RenameCommit) {
+                       layout: LakeLayout.DayWide = LakeLayout.DayWide()) {
 
-  private val hourFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH").withZone(ZoneOffset.UTC)
-
-  def partitionDir(symbol: String, hourStart: Instant): String = {
-    val z = hourStart.atZone(ZoneOffset.UTC)
-    f"$root/futures/um/minute/symbol=${symbol.toUpperCase}/year=${z.getYear}%04d/" +
-      f"month=${z.getMonthValue}%02d/day=${z.getDayOfMonth}%02d/hour=${z.getHour}%02d"
-  }
-
-  /** Write (merge if present) one symbol-hour partition. Atomicity =
-    * write to `.tmp/<uuid>` then rename over the final directory — the
-    * same tmp+replace choreography as `atomic.py:38-44`. */
+  /** Write (merge if present) one symbol's hour. A repair into an
+    * EXISTING day lands as a small delta file — O(patch), not O(day):
+    * the reference's repair cadence (2 h lookback every 30 s,
+    * `aggregator/config.py:17-21`) makes point repairs the common case,
+    * and rewriting day × all-symbols per patch was the one remaining
+    * write-amplification cliff (164.6 s/day at width 100k, r13). A NEW
+    * day bootstraps through the bulk merge write. Read results are
+    * identical either way — the delta overlay and the bulk merge share
+    * [[MinuteLakeWriter.mergeKeyed]].
+    *
+    * @return the day directory written into */
   def writeHourPartition(symbol: String, hourStart: Instant, frame: DataFrame): String = {
     val spark = frame.sparkSession
-    layout match {
-      case LakeLayout.DayWide(_) =>
-        // Same API, day-wide physics. A repair into an EXISTING day
-        // lands as a small delta file — O(patch), not O(day): the
-        // reference's repair cadence (2 h lookback every 30 s,
-        // `aggregator/config.py:17-21`) makes point repairs the common
-        // case, and rewriting day × all-symbols per patch was the one
-        // remaining write-amplification cliff (164.6 s/day at width
-        // 100k, r13). A NEW day still bootstraps through the bulk
-        // merge write. Read results are identical either way — the
-        // delta overlay and the bulk merge share mergeKeyed.
-        val dq = DQValidator.validate(frame)
-        val z = hourStart.atZone(ZoneOffset.UTC)
-        val dayDir = f"$root/futures/um/minute/year=${z.getYear}%04d/" +
-          f"month=${z.getMonthValue}%02d/day=${z.getDayOfMonth}%02d"
-        val spark2 = frame.sparkSession
-        val fs2 = FileSystem.get(new java.net.URI(root),
-          spark2.sparkContext.hadoopConfiguration)
-        val withSym = frame.withColumn("symbol", lit(symbol.toUpperCase))
-        if (fs2.exists(new HPath(dayDir))) writeDeltaPatch(withSym)
-        else writeDaysWide(withSym, merge = true)
-        ledger.upsert(PartitionLedgerEntry(
-          symbol = symbol.toUpperCase,
-          day = hourStart.atZone(ZoneOffset.UTC).toLocalDate.toString,
-          hour = hourStart.atZone(ZoneOffset.UTC).getHour,
-          path = dayDir,
-          rowCount = dq.rowCount,
-          minTs = dq.minTs,
-          maxTs = dq.maxTs,
-          schemaHash = CanonicalSchema.schemaHash,
-          status = "COMMITTED",
-          committedAtUtc = Instant.now.toString,
-          // content hash is per-PARTITION; a day-wide partition is
-          // rewritten by later symbols' writes, so this per-symbol-hour
-          // row is bookkeeping only — auditPartitions audits the
-          // day-grain rows writeDaysWide / writeDeltaPatch commit
-          contentHash = ""))
-        return dayDir
-      case LakeLayout.HourlySymbol => ()
-    }
-    val finalDir = partitionDir(symbol, hourStart)
+    val dq = DQValidator.validate(frame)
+    val z = hourStart.atZone(ZoneOffset.UTC)
+    val dayDir = f"$root/futures/um/minute/year=${z.getYear}%04d/" +
+      f"month=${z.getMonthValue}%02d/day=${z.getDayOfMonth}%02d"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-    // existing content is read through the committer's resolve — on a
-    // manifest deployment the live version sits behind the pointer,
-    // not at the partition path itself (SURVEY §4.1)
-    val existingDir = committer.resolve(fs, finalDir)
-      .filter(d => fs.listStatus(new HPath(d)).exists(_.isFile))
-    val effective = existingDir match {
-      case Some(d) => MinuteLakeWriter.mergeKeyed(spark.read.parquet(d), frame, Seq("timestamp"))
-      case None    => frame
-    }
-
-    val dq = DQValidator.validate(effective)
-
-    val tmpDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    effective.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(tmpDir)
-    committer.publish(fs, tmpDir, finalDir)
-
+    val withSym = frame.withColumn("symbol", lit(symbol.toUpperCase))
+    if (fs.exists(new HPath(dayDir))) writeDeltaPatch(withSym)
+    else writeDaysWide(withSym, merge = true)
     ledger.upsert(PartitionLedgerEntry(
       symbol = symbol.toUpperCase,
-      day = hourStart.atZone(ZoneOffset.UTC).toLocalDate.toString,
-      hour = hourStart.atZone(ZoneOffset.UTC).getHour,
-      path = finalDir,
+      day = z.toLocalDate.toString,
+      hour = z.getHour,
+      path = dayDir,
       rowCount = dq.rowCount,
       minTs = dq.minTs,
       maxTs = dq.maxTs,
       schemaHash = CanonicalSchema.schemaHash,
       status = "COMMITTED",
       committedAtUtc = Instant.now.toString,
-      contentHash = MinuteLakeWriter.contentHashOfDir(fs,
-        committer.resolve(fs, finalDir).getOrElse(finalDir))))
-    finalDir
+      // content hash is per-PARTITION; a day partition is rewritten by
+      // later symbols' writes, so this per-symbol-hour row is
+      // bookkeeping only (it feeds the tick token) — auditPartitions
+      // audits the day-grain rows writeDaysWide / writeDeltaPatch commit
+      contentHash = ""))
+    dayDir
   }
-
-  /** The path readers scan for a published hour partition — identity
-    * under [[RenameCommit]]; the live manifest version under
-    * [[ManifestCommit]]. */
-  def resolvePartitionDir(fs: FileSystem, dir: String): Option[String] =
-    committer.resolve(fs, dir)
 
   /** Tick-owned ledger compaction (see [[PartitionLedger.compact]]):
     * the writer owns the ledger, the pipeline owns the cadence. */
@@ -209,18 +148,8 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
   def rebuildSymbolRegistry(spark: SparkSession): Set[String] = {
     val lakeDir = s"$root/futures/um/minute"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val days = DayDirs.ascending(fs, lakeDir) ++
+    val dirs = DayDirs.ascending(fs, lakeDir) ++
       DayDirs.ascending(fs, s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}")
-    // Under a manifest deployment each day's live bytes sit behind the
-    // leaf's pointer (VERDICT r16 #3): resolve every walked leaf before
-    // scanning, exactly like the read paths — a plain-dir read would
-    // rebuild the registry from stale plain prefixes, or from nothing
-    // at all (committed `.v_*` dirs are hidden-path-filtered by Spark),
-    // and the healing verb would then durably deny live symbols.
-    val dirs =
-      if (committer.readThroughResolve)
-        ResolvedScan.resolveLeaves(fs, days, committer)
-      else days
     val symbols =
       if (dirs.isEmpty) Set.empty[String]
       else spark.read.parquet(dirs: _*).select(upper(col("symbol")))
@@ -240,14 +169,10 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     def isIoFailure(t: Throwable): Boolean =
       t != null && (t.isInstanceOf[java.io.IOException] || isIoFailure(t.getCause))
-    // a day-wide lake's audit surface is its day-grain rows (hour < 0);
-    // the per-(symbol, hour) rows writeHourPartition records there are
+    // the audit surface is the day-grain rows (hour < 0); the
+    // per-(symbol, hour) rows writeHourPartition records are
     // bookkeeping without a hash
-    val auditable: PartitionLedgerEntry => Boolean = layout match {
-      case LakeLayout.DayWide(_)   => _.hour < 0
-      case LakeLayout.HourlySymbol => _ => true
-    }
-    val entries = ledger.all().filter(e => e.status == "COMMITTED" && auditable(e))
+    val entries = ledger.all().filter(e => e.status == "COMMITTED" && e.hour < 0)
       .sortBy(e => (e.symbol, e.day, e.hour))
     // Day-grain entries recompute DISTRIBUTED, and hashing them per
     // entry launched one binaryFile job per committed day — O(days)
@@ -261,7 +186,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     // attributes "unreadable" to the one bad day instead of failing
     // the whole verb (spec-pinned).
     val batched: Map[String, String] =
-      entries.filter(e => e.hour < 0 && e.contentHash.nonEmpty &&
+      entries.filter(e => e.contentHash.nonEmpty &&
           fs.exists(new HPath(e.path)))
         .groupBy(_.hour).valuesIterator.flatMap { family =>
           scala.util.Try(
@@ -274,16 +199,13 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
         }.toMap
     entries
       .map { e =>
-        // recompute with the SAME function that recorded the hash:
-        // hourly entries (hour ≥ 0) hashed on the driver at commit;
-        // day-grain wide entries (hour < 0) hashed distributed — served
-        // from the batched pass above, per-entry only on its fallback
+        // recompute with the SAME function that recorded the hash —
+        // served from the batched pass above, per-entry only on its
+        // fallback
         def recompute(): String =
-          if (e.hour < 0)
-            batched.getOrElse(e.path,
-              MinuteLakeWriter.dayContentHashes(spark, Seq(e.path))
-                .getOrElse(DayDirs.ymdOf(e.path), ""))
-          else MinuteLakeWriter.contentHashOfDir(fs, e.path)
+          batched.getOrElse(e.path,
+            MinuteLakeWriter.dayContentHashes(spark, Seq(e.path))
+              .getOrElse(DayDirs.ymdOf(e.path), ""))
         val issue =
           if (!fs.exists(new HPath(e.path))) "missing_partition"
           else if (e.contentHash.isEmpty) "no_recorded_hash"
@@ -301,7 +223,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       }
   }
 
-  /** Day-wide bulk write ([[LakeLayout.DayWide]]): a multi-symbol,
+  /** Day-wide bulk write: a multi-symbol,
     * multi-day canonical frame (must carry a `symbol` column) lands in
     * `year=/month=/day=` partitions, each day's data range-partitioned
     * and sorted by (symbol, timestamp) into `filesPerDay` files — so the
@@ -314,7 +236,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     *
     * `merge = true` reads back ONLY the touched day dirs that exist and
     * applies the SAME last-wins + LIVE_ONLY-preserve policy as the
-    * hourly path ([[MinuteLakeWriter.mergeKeyed]]), keyed by (symbol,
+    * delta overlay ([[MinuteLakeWriter.mergeKeyed]]), keyed by (symbol,
     * timestamp); symbols present in a touched day but absent from
     * `frame` survive the rewrite because the merge read is keyed by
     * day, not by symbol.
@@ -326,12 +248,6 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * single-evaluation semantics — the standard shape on an object
     * store too. */
   def writeDaysWide(frame: DataFrame, merge: Boolean = false): Unit = {
-    val filesPerDay = layout match {
-      case LakeLayout.DayWide(f) => f
-      case LakeLayout.HourlySymbol =>
-        throw new IllegalStateException(
-          "writeDaysWide requires LakeLayout.DayWide; this writer is hourly-symbol")
-    }
     val spark = frame.sparkSession
     val lakeDir = s"$root/futures/um/minute"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
@@ -379,14 +295,14 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
         stagedStats.iterator.flatMap(_.getSeq[String](6)).toSet)
 
       val mergedExisting = WideDayPublish.write(fs, root, lakeDir, staged, touched,
-        filesPerDay, "timestamp",
+        layout.filesPerDay, "timestamp",
         if (merge) Some(MinuteLakeWriter.mergeKeyed(_, _, Seq("symbol", "timestamp")))
         else None)
 
       // S13 at day grain: commit one ledger row per touched day
       // (symbol = "__ALL__", hour = -1) with row bounds and a content
-      // hash over the day's files — the same tamper/delete audit surface
-      // the hourly path records per symbol-hour, computed DISTRIBUTED
+      // hash over the day's files — the tamper/delete audit surface,
+      // computed DISTRIBUTED
       // (one executors-side hash job for all touched days) because a
       // bulk day at production width is hundreds of MB
       val committedDirs = DayDirs.matching(fs, lakeDir, touched.toSet)
@@ -500,13 +416,6 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     *
     * @return the touched delta day directories */
   def writeDeltaPatch(frame0: DataFrame): Seq[String] = {
-    layout match {
-      case LakeLayout.DayWide(_) => ()
-      case LakeLayout.HourlySymbol =>
-        throw new IllegalStateException(
-          "writeDeltaPatch requires LakeLayout.DayWide; hourly repairs " +
-            "rewrite their one symbol-hour partition (already O(patch))")
-    }
     // pin the patch once: four actions consume it (touched-days collect,
     // DQ validation, symbol registration, the write itself), and the
     // caller's frame is typically the tail of a pipeline — unpinned,
@@ -844,20 +753,14 @@ object MinuteLakeWriter {
     } finally pool.shutdown()
   }
 
-  /** SHA-256 over a partition directory's data files (reference hashes
-    * the single parquet file, `atomic.py:108-114`; a Spark partition is
-    * a directory, so the digest covers each data file's name + bytes in
-    * sorted-name order — metadata files like _SUCCESS and .crc are
-    * excluded because they differ across committers without the data
-    * changing). */
-  /** Distributed content hashes for day-wide partitions, keyed by the
-    * parsed (year, month, day) of each file's parent dir: per-file
-    * SHA-256 computed on EXECUTORS (binaryFile source — it skips `_`/`.`
-    * metadata files), combined per day in file-name order. One Spark job
-    * for ANY number of days. The hourly path hashes its one coalesced
-    * file on the driver at commit ([[contentHashOfDir]]); a bulk day at
-    * width 10k+ is hundreds of MB × many days — driver-side hashing
-    * would serialize the data plane, so the bulk path distributes it.
+  /** Distributed content hashes for day partitions (the reference
+    * hashes its one parquet file per partition, `atomic.py:108-114`),
+    * keyed by the parsed (year, month, day) of each file's parent dir:
+    * per-file SHA-256 computed on EXECUTORS (binaryFile source — it
+    * skips `_`/`.` metadata files), combined per day in file-name order.
+    * One Spark job for ANY number of days; a bulk day at width 10k+ is
+    * hundreds of MB × many days — driver-side hashing would serialize
+    * the data plane, so the hash is distributed.
     * binaryFile materializes one file per row (hard cap 2 GB); the
     * `filesPerDay` sizing keeps wide files well under it (~300 MB at
     * width 100k ÷ 32 files). */
@@ -884,27 +787,12 @@ object MinuteLakeWriter {
       ymd -> combined.digest().map("%02x".format(_)).mkString
     }
   }
-
-  def contentHashOfDir(fs: FileSystem, dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-    val files = DayDirs.dataFiles(fs, dir).map(_.getPath).sortBy(_.getName)
-    val buf = new Array[Byte](1024 * 1024)
-    files.foreach { p =>
-      digest.update(p.getName.getBytes(StandardCharsets.UTF_8))
-      val in = fs.open(p)
-      try {
-        var n = in.read(buf)
-        while (n >= 0) { if (n > 0) digest.update(buf, 0, n); n = in.read(buf) }
-      } finally in.close()
-    }
-    digest.digest().map("%02x".format(_)).mkString
-  }
 }
 
-/** The one publish path of the day-wide trees (minute base and HTF):
+/** The one publish path of the lake (minute base and HTF):
   * [[write]] writes the touched days once into `.tmp` and [[swap]]s
   * each day directory into place. Day-granular, non-atomic across
-  * days; the manifest committers remain the atomicity answer. */
+  * days. */
 private[graft] object WideDayPublish {
 
   /** Write the staged increment's days under `dir` (a
@@ -1014,65 +902,31 @@ private[graft] object WideDayPublish {
 }
 
 /** HTF bucket writer (reference `aggregator/target_writer.py:14-69`):
-  * layout `timeframe=T/symbol=S/year=/month=/day=/`, merge-dedup by
-  * bucket_start keep-last. With [[LakeLayout.DayWide]] the per-symbol
-  * directory level disappears (`timeframe=T/year=/month=/day=/`, symbol
-  * as a sorted data column, `filesPerDay` files per day per timeframe)
-  * — at width 10k the hourly-era HTF tree is 10k files/day/timeframe,
-  * the same file-count wall the minute lake hit (SURVEY §8.15).
-  *
-  * One publish per layout: hourly (symbol, day) leaves publish through
-  * `committer.publish` (batched under [[DayManifestCommit]]); day-wide
-  * days publish through [[WideDayPublish.write]]. */
+  * layout `timeframe=T/year=/month=/day=/`, symbol as a sorted data
+  * column, `filesPerDay` files per day per timeframe, merge-dedup by
+  * (symbol, bucket_start) keep-last. The reference's per-symbol
+  * directory level is gone — at width 10k it is 10k files/day/timeframe,
+  * the same file-count wall the minute lake hit (SURVEY §8.15). Days
+  * publish through [[WideDayPublish.write]]. */
 class HtfLakeWriter(root: String,
-                    val layout: LakeLayout = LakeLayout.HourlySymbol,
-                    val committer: CommitProtocol = RenameCommit) {
-
-  def partitionDir(timeframe: String, symbol: String, day: java.time.LocalDate): String =
-    f"$root/timeframe=$timeframe/symbol=${symbol.toUpperCase}/year=${day.getYear}%04d/" +
-      f"month=${day.getMonthValue}%02d/day=${day.getDayOfMonth}%02d"
+                    layout: LakeLayout.DayWide = LakeLayout.DayWide()) {
 
   /** Bulk path (reference `target_writer.py:59-69`, re-planned for a
     * cluster): `buckets` carries a `symbol` column and may span every
     * symbol and day of the timeframe — the shape a 1000-symbol backfill
-    * needs (no per-symbol driver loop). Existing sibling buckets inside
-    * a touched partition that are not in `buckets` survive: rows dedup
-    * last-wins on (symbol, bucket_start), incoming wins.
+    * needs (no per-symbol driver loop). Buckets of a touched day that
+    * are not in `buckets` survive, sibling symbols' included: the merge
+    * reads each touched day whole and dedups last-wins on (symbol,
+    * bucket_start), incoming wins.
     *
-    * `touchedDays` and `callerPinned` apply to the day-wide layout:
-    * a caller that already knows the increment's day set skips the
-    * distinct pass, and a caller that persisted (and owns) `buckets`
-    * skips the `.tmp` staging. */
+    * A caller that already knows the increment's day set passes
+    * `touchedDays` and skips the distinct pass; a caller that persisted
+    * (and owns) `buckets` passes `callerPinned` and skips the `.tmp`
+    * staging. */
   def writeBucketsBulkAllSymbols(spark: SparkSession, timeframe: String,
                                  buckets: DataFrame,
                                  touchedDays: Option[Seq[(Int, Int, Int)]] = None,
-                                 callerPinned: Boolean = false): Unit =
-    layout match {
-      case LakeLayout.DayWide(f) =>
-        writeBucketsBulkAllSymbolsWide(spark, timeframe, buckets, f, touchedDays,
-          callerPinned)
-      case LakeLayout.HourlySymbol =>
-        writeBucketsBulkCommitted(spark, timeframe, buckets)
-    }
-
-  /** Last-wins union of `fresh` over `existing` on `keys` (incoming
-    * wins); columns missing on either side read as null. */
-  private def lastWins(existing: DataFrame, fresh: DataFrame,
-                       keys: Seq[String]): DataFrame =
-    Ops.dedupKeepLast(
-      existing.withColumn("__src", lit(0))
-        .unionByName(fresh.withColumn("__src", lit(1)), allowMissingColumns = true),
-      keys, Seq(col("__src"))).drop("__src")
-
-  /** Day-wide HTF bulk write: `timeframe=T/year=/month=/day=` with
-    * symbol as a sorted data column, written and published by
-    * [[WideDayPublish.write]]. Merge is keyed by day (the rewrite unit),
-    * so sibling symbols' buckets in a touched day survive. */
-  private def writeBucketsBulkAllSymbolsWide(spark: SparkSession, timeframe: String,
-                                             buckets: DataFrame,
-                                             filesPerDay: Int,
-                                             touchedDays: Option[Seq[(Int, Int, Int)]],
-                                             callerPinned: Boolean): Unit = {
+                                 callerPinned: Boolean = false): Unit = {
     val dir = s"$root/timeframe=$timeframe"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
@@ -1108,7 +962,7 @@ class HtfLakeWriter(root: String,
                   dayofmonth(col("bucket_start")))
           .distinct().collect().toSeq
           .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))))
-      WideDayPublish.write(fs, root, dir, staged, touched, filesPerDay, "bucket_start",
+      WideDayPublish.write(fs, root, dir, staged, touched, layout.filesPerDay, "bucket_start",
         Some(lastWins(_, _, Seq("symbol", "bucket_start"))))
       ()
     } finally {
@@ -1117,102 +971,12 @@ class HtfLakeWriter(root: String,
     }
   }
 
-  /** Hourly-layout bulk write (r15 #1, r19 batched staging — VERDICT
-    * r18 #4): every (symbol, day) leaf is committed through the
-    * committer, so a manifest deployment's pointer always names the
-    * live version.
-    *
-    * Staging is ONE partitioned Spark write for the whole batch, not
-    * one job per leaf (the r18 probe measured the per-leaf shape at
-    * ~5× identity on the first tick — WRITE-JOB-bound, not PUT-bound):
-    * incoming ∪ touched existing content merges last-wins keyed by
-    * (symbol, day, bucket_start) in one plan, lands partitioned by
-    * (__sym, __day) under a hidden tmp tree, and each partition dir IS
-    * the leaf's stage — the committer renames it into place. Commit
-    * stays batched: one pointer PUT per parent dir under
-    * [[DayManifestCommit]]; other committers publish per leaf. */
-  private def writeBucketsBulkCommitted(spark: SparkSession, timeframe: String,
-                                        buckets: DataFrame): Unit = {
-    val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    buckets.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
-    val tmpTree = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try {
-      val staged = spark.read.parquet(stageDir)
-      val symCol = upper(col("symbol"))
-      val touched = staged
-        .select(symCol.as("__sym"), to_date(col("bucket_start")).as("__day"))
-        .distinct().collect()
-        .map(r => (r.getString(0), r.getDate(1).toLocalDate))
-        .sortBy(t => (t._1, t._2.toString))
-      // existing content of already-published touched leaves: resolved
-      // through the committer (ONE day-state read per parent under
-      // DayManifestCommit via resolveLeaves' cache path), read as a
-      // single multi-root scan — leaf identity re-derives from the
-      // DATA (day dirs hold one day; aggregator content carries its
-      // symbol), so no per-leaf union plan
-      val leafDirs = touched.map { case (sym, day) =>
-        partitionDir(timeframe, sym, day) }
-      val resolvedExisting = graft.sources.ResolvedScan
-        .resolveLeaves(fs, leafDirs, committer)
-        .filter(d => fs.listStatus(new HPath(d)).exists(_.isFile))
-      val existingAttr: Option[DataFrame] =
-        if (resolvedExisting.isEmpty) None
-        else {
-          // mergeSchema: the multi-root scan must union every leaf's
-          // schema — without it Spark infers from a file subset and a
-          // column present only in some leaves (schema-evolved lakes)
-          // would be silently dropped from the republished versions
-          // (r19 advice)
-          val df = spark.read.option("mergeSchema", "true")
-            .parquet(resolvedExisting: _*)
-          // Existing rows re-key from the LEAF DIR they were read from,
-          // not from to_date(bucket_start): the session timezone at
-          // write time may differ from the one that placed the row, and
-          // a derived day outside the touched set would land in a tmp
-          // partition that is never published — silently dropping the
-          // row from its republished leaf (r19 advice). The dir names
-          // are zero-padded by partitionDir, so string assembly matches
-          // the touched key exactly. Leaves written by the retired
-          // dynamic-partition path carry the symbol only in their path,
-          // so a missing or null `symbol` is taken from the leaf too.
-          val file = input_file_name()
-          val pathSym = upper(regexp_extract(file, "symbol=([^/]+)", 1))
-          val symbol =
-            if (df.columns.contains("symbol")) coalesce(col("symbol"), pathSym)
-            else pathSym
-          Some(df
-            .withColumn("symbol", symbol)
-            .withColumn("__sym", pathSym)
-            .withColumn("__day", concat_ws("-",
-              regexp_extract(file, "/year=(\\d{4})/", 1),
-              regexp_extract(file, "/month=(\\d{2})/", 1),
-              regexp_extract(file, "/day=(\\d{2})/", 1))))
-        }
-      val incomingAttr = staged.withColumn("__sym", symCol)
-        .withColumn("__day", to_date(col("bucket_start")).cast("string"))
-      val merged = existingAttr match {
-        case None => incomingAttr
-        case Some(ex) => lastWins(ex, incomingAttr, Seq("__sym", "__day", "bucket_start"))
-      }
-      // ONE staging job: hash-clustered so each leaf lands as one file
-      // (the per-leaf coalesce(1) parity), partition dirs named by the
-      // leaf key
-      merged.repartition(col("__sym"), col("__day"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("__sym", "__day")
-        .option("compression", "zstd").parquet(tmpTree)
-      val stagedLeaves = touched.map { case (sym, day) =>
-        (s"$tmpTree/__sym=$sym/__day=$day",
-          partitionDir(timeframe, sym, day))
-      }
-      committer match {
-        case b: DayManifestCommit => b.publishBatch(fs, stagedLeaves)
-        case c => stagedLeaves.foreach { case (tmp, dir) => c.publish(fs, tmp, dir) }
-      }
-    } finally {
-      fs.delete(new HPath(stageDir), true)
-      fs.delete(new HPath(tmpTree), true)
-    }
-  }
+  /** Last-wins union of `fresh` over `existing` on `keys` (incoming
+    * wins); columns missing on either side read as null. */
+  private def lastWins(existing: DataFrame, fresh: DataFrame,
+                       keys: Seq[String]): DataFrame =
+    Ops.dedupKeepLast(
+      existing.withColumn("__src", lit(0))
+        .unionByName(fresh.withColumn("__src", lit(1)), allowMissingColumns = true),
+      keys, Seq(col("__src"))).drop("__src")
 }

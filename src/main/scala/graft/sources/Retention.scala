@@ -43,53 +43,29 @@ object Retention {
     * day of one table); a 100 TB lake compacts day-by-day behind the
     * retention watermark, never as one global rewrite.
     *
-    * OBJECT-STORE SEAM (§4.1 seam 4, closed r15): the tmp/aside/swap
-    * choreography above is correct ONLY where directory rename is
-    * atomic — under copy+delete rename, a crash mid-aside-delete can
-    * leave the live dir a SUBSET while `recoverCompaction` (seeing the
-    * live dir exist) drops the complete aside copy. A cluster
-    * deployment passes `committer = ManifestCommit`: the verified
-    * rewrite publishes as a hidden version behind one manifest-object
-    * PUT (crash matrix pinned in CommitSeamSpec), reads resolve
-    * through the manifest, and `.compact_old` recovery is not needed.
-    * Contract in manifest mode: compaction runs on QUIESCENT
-    * partitions (behind the ingestion frontier — already this
-    * function's stated cadence), so loose parquet files beside a
-    * manifest can only be a crashed pre-delete window's leftovers
-    * (their rows are in the count-verified published version) and are
-    * swept on entry. */
+    * OBJECT-STORE SEAM (§4.1 seam 4): the tmp/aside/swap choreography
+    * above is correct ONLY where directory rename is atomic — under
+    * copy+delete rename, a crash mid-aside-delete can leave the live
+    * dir a SUBSET while `recoverCompaction` (seeing the live dir exist)
+    * drops the complete aside copy. */
   def compactDayPartitions(spark: SparkSession, root: String,
                            partitionCol: String,
                            smallFileBytes: Long = 32L * 1024 * 1024,
-                           targetFiles: Int = 1,
-                           committer: CommitProtocol = RenameCommit): Seq[Compaction] = {
+                           targetFiles: Int = 1): Seq[Compaction] = {
     require(targetFiles >= 1, "targetFiles must be at least 1")
     val fs = FileSystem.get(new java.net.URI(root),
       spark.sparkContext.hadoopConfiguration)
     val rootPath = new HPath(root)
     if (!fs.exists(rootPath)) return Seq.empty
-    val renameMode = committer == RenameCommit
-    if (renameMode) recoverCompaction(fs, rootPath)
+    recoverCompaction(fs, rootPath)
     val out = Vector.newBuilder[Compaction]
     for (status <- fs.listStatus(rootPath) if status.isDirectory) {
       val name = status.getPath.getName
       if (name.startsWith(s"$partitionCol=")) {
-        // live content sits behind the committer's resolve (§4.1 seam
-        // 4): the dir itself under RenameCommit / a never-published
-        // partition; the manifest version otherwise
-        val liveDir = committer.resolve(fs, status.getPath.toString)
-          .getOrElse(status.getPath.toString)
-        // manifest mode: loose parquet files beside a manifest are a
-        // crashed pre-delete window's leftovers — the published version
-        // was count-verified complete before its PUT, so sweep them
-        if (!renameMode && liveDir != status.getPath.toString)
-          fs.listStatus(status.getPath)
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .foreach(s => fs.delete(s.getPath, false))
-        val parquets = fs.listStatus(new HPath(liveDir))
+        val parquets = fs.listStatus(status.getPath)
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         if (parquets.length > targetFiles && parquets.forall(_.getLen < smallFileBytes)) {
-          val df = spark.read.parquet(liveDir)
+          val df = spark.read.parquet(status.getPath.toString)
           val before = df.count()
           val tmp = new HPath(rootPath, s".compact_tmp/$name")
           fs.delete(tmp, true)
@@ -97,35 +73,19 @@ object Retention {
           val after = spark.read.parquet(tmp.toString).count()
           require(after == before,
             s"compaction row-count mismatch for $name: $before -> $after; original kept")
-          if (renameMode) {
-            // Swap: original aside -> tmp in -> drop aside. The original
-            // is never deleted before the new files are live; see
-            // recoverCompaction for every crash window.
-            val old = new HPath(rootPath, s".compact_old/$name")
-            fs.delete(old, true)
-            fs.mkdirs(old.getParent)
-            require(fs.rename(status.getPath, old),
-              s"compaction: failed to move $name aside; original kept in place")
-            require(fs.rename(tmp, status.getPath),
-              s"compaction: failed to promote new files for $name; " +
-                "original preserved under .compact_old, recovered on next run")
-            fs.delete(old, true)
-          } else {
-            // manifest mode: the verified tmp publishes as a new
-            // version behind ONE object PUT — torn-free on stores
-            // where directory rename is copy+delete (CommitSeamSpec's
-            // crash matrix covers every publish window); the previous
-            // version is the rollback and GC's own grace copy. Any
-            // pre-manifest loose files are superseded by the verified
-            // version; drop them (a crash in between is re-swept on
-            // the next run, above).
-            committer.publish(fs, tmp.toString, status.getPath.toString)
-            parquets.filter(p => p.getPath.getParent == status.getPath)
-              .foreach(p => fs.delete(p.getPath, false))
-          }
-          val filesAfter = fs.listStatus(new HPath(
-              committer.resolve(fs, status.getPath.toString)
-                .getOrElse(status.getPath.toString)))
+          // Swap: original aside -> tmp in -> drop aside. The original
+          // is never deleted before the new files are live; see
+          // recoverCompaction for every crash window.
+          val old = new HPath(rootPath, s".compact_old/$name")
+          fs.delete(old, true)
+          fs.mkdirs(old.getParent)
+          require(fs.rename(status.getPath, old),
+            s"compaction: failed to move $name aside; original kept in place")
+          require(fs.rename(tmp, status.getPath),
+            s"compaction: failed to promote new files for $name; " +
+              "original preserved under .compact_old, recovered on next run")
+          fs.delete(old, true)
+          val filesAfter = fs.listStatus(status.getPath)
             .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
           out += Compaction(name.stripPrefix(s"$partitionCol="),
             parquets.length, filesAfter, before)
@@ -133,7 +93,7 @@ object Retention {
       }
     }
     fs.delete(new HPath(rootPath, ".compact_tmp"), true)
-    if (renameMode) fs.delete(new HPath(rootPath, ".compact_old"), true)
+    fs.delete(new HPath(rootPath, ".compact_old"), true)
     out.result()
   }
 
@@ -173,10 +133,9 @@ object Retention {
   }
 
   /** Drop MINUTE-LAKE day partitions strictly older than `cutoff` — the
-    * lifecycle verb that bounds a decade lake. Day-wide: O(days)
-    * directory deletes at ANY width (the layout's point — retention on
-    * a 100k-symbol lake is the same handful of metadata ops as on a
-    * 100-symbol one); hourly: a per-symbol day-dir walk. Emptied
+    * lifecycle verb that bounds a decade lake: O(days) directory
+    * deletes at ANY width (retention on a 100k-symbol lake is the same
+    * handful of metadata ops as on a 100-symbol one). Emptied
     * month/year parents are removed. Ledger rows for dropped days are
     * re-upserted with status DROPPED (the append-only log is preserved
     * and `auditPartitions` only audits COMMITTED rows, so retention
@@ -191,18 +150,11 @@ object Retention {
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new HPath(lakeDir))) return Seq.empty
     val cutoffDay = cutoff.atZone(ZoneOffset.UTC).toLocalDate
-    val dropped = LakeLayout.detect(fs, lakeDir) match {
-      case Some(_: LakeLayout.DayWide) =>
-        // aged delta days retire with their base days (the `_delta`
-        // subtree is day-partitioned identically; ledger rows for both
-        // flip to DROPPED via the day-string filter below)
-        dropYmdTree(fs, lakeDir, cutoffDay) ++
-          dropYmdTree(fs, s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}", cutoffDay)
-      case _ =>
-        fs.listStatus(new HPath(lakeDir)).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith("symbol=")).toSeq
-          .flatMap(sd => dropYmdTree(fs, sd.toString, cutoffDay))
-    }
+    // aged delta days retire with their base days (the `_delta`
+    // subtree is day-partitioned identically; ledger rows for both
+    // flip to DROPPED via the day-string filter below)
+    val dropped = dropYmdTree(fs, lakeDir, cutoffDay) ++
+      dropYmdTree(fs, s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}", cutoffDay)
     ledger.foreach { l =>
       l.all().filter(e => e.status == "COMMITTED" &&
           scala.util.Try(LocalDate.parse(e.day)).toOption.exists(_.isBefore(cutoffDay)))
@@ -211,19 +163,14 @@ object Retention {
     dropped
   }
 
-  /** [[dropLakeDaysBefore]] for one HTF timeframe tree (both layouts:
-    * `timeframe=T/symbol=S/y/m/d` hourly, `timeframe=T/y/m/d` wide). */
+  /** [[dropLakeDaysBefore]] for one HTF timeframe tree
+    * (`timeframe=T/year=/month=/day=`). */
   def dropHtfDaysBefore(spark: SparkSession, htfRoot: String, timeframe: String,
                         cutoff: Instant): Seq[String] = {
     val tfDir = s"$htfRoot/timeframe=$timeframe"
     val fs = FileSystem.get(new java.net.URI(htfRoot),
       spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(tfDir))) return Seq.empty
-    val cutoffDay = cutoff.atZone(ZoneOffset.UTC).toLocalDate
-    val symbolDirs = fs.listStatus(new HPath(tfDir)).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("symbol=")).toSeq
-    if (symbolDirs.nonEmpty) symbolDirs.flatMap(sd => dropYmdTree(fs, sd.toString, cutoffDay))
-    else dropYmdTree(fs, tfDir, cutoffDay)
+    dropYmdTree(fs, tfDir, cutoff.atZone(ZoneOffset.UTC).toLocalDate)
   }
 
   /** Delete every `year=/month=/day=` dir under `base` whose date is

@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   * bounds span only the increment, and the incremental tick's
   * data-driven repair window needs the latter (a day-grain content
   * bound re-aggregates day-to-date × width per poll as the day fills).
-  * Empty patch bounds (pre-r16 rows, hourly entries) fall back to the
+  * Empty patch bounds (pre-r16 rows, per-symbol-hour rows) fall back to the
   * content bounds — wider, never wrong. */
 final case class PartitionLedgerEntry(
     symbol: String, day: String, hour: Int, path: String, rowCount: Long,
@@ -119,7 +119,7 @@ class PartitionLedger(dir: String, committer: CommitProtocol = RenameCommit) {
     * bounded-state companion of [[upsert]]. Every reader ([[all]], and
     * through it the audit, retention, and delta-compaction verbs)
     * parses the WHOLE log; without compaction that is O(total upserts
-    * ever) driver work per tick — at width 1000 the hourly layout
+    * ever) driver work per tick — at width 1000 the hour verb
     * appends ~24k rows/day, a multi-GB parse after a year. The
     * snapshot is O(live partitions) (DROPPED tombstones kept: one row
     * per retired day, bounded by lake lifetime). Atomic whole-object

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.MinuteBuilder
-import graft.sources.{MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
+import graft.sources.{HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
 
 /** Usage example + smoke driver for the lake write/read path: writes an
-  * hour partition twice (exercising the last-wins merge), reads the
+  * hour twice (a new day, then a delta patch — the last-wins merge),
+  * reads the
   * window back with latest-wins dedup, prints the ledger entry and the
   * pruned-scan physical plan. Run: `sbt "runMain graft.tools.LakeDemo"`. */
 object LakeDemo {
@@ -22,7 +23,8 @@ object LakeDemo {
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("demo-lake").toString
-    val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"))
+    val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
+      LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
 
     def row(t: String, o: Double) = MinuteBuilder.finalizeSchema(
@@ -53,7 +55,7 @@ object LakeDemo {
         "volume_usdt", "trade_count", "mark_price_open", "mark_price_close",
         "index_price_open", "index_price_close"))
     writer.writeHourPartition("BTCUSDT", h, tenMinutes)
-    val htfWriter = new graft.sources.HtfLakeWriter(s"$dir/htf")
+    val htfWriter = new HtfLakeWriter(s"$dir/htf", LakeLayout.DayWide(filesPerDay = 4))
     val state = new graft.operators.AggregatorRunner.AggregatorStateStore(s"$dir/_aggstate")
     val bf = graft.operators.AggregatorRunner.runBackfillAll(spark, reader,
       htfWriter, state, s"$dir/htf", graft.schema.Timeframes.parse("5m"))

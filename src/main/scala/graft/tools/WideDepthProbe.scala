@@ -14,11 +14,8 @@ import graft.sources.{LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionL
   * (partition-pruning floor = a day; the whole-lake file listing is
   * O(depth × filesPerDay) instead of O(symbol-subtree)).
   *
-  * Builds day-wide lakes of fixed width and growing depth, plus an
-  * hourly lake at the shallowest depth for a cross-layout point (an
-  * hourly lake at depth 365 × width 100 would be 876k files — the
-  * regime the width probe already showed unbuildable on this FS), and
-  * per layout/depth times: the SERVICE request path
+  * Builds day-wide lakes of fixed width and growing depth, and per
+  * depth times: the SERVICE request path
   * (`QueryService.candleBars`, 15m × 12 bars ending at the lake head)
   * and `inspectRange`, median of 5; then a REPAIR tick (re-ingest the
   * deepest existing day, merge=true — exercises the touched-day merge
@@ -27,9 +24,8 @@ import graft.sources.{LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionL
   * §8.16); a regression here means an O(depth) listing crept back into
   * a bounded path.
   *
-  * Run: `sbt "runMain graft.tools.WideDepthProbe [width] [depthsCsv]
-  * [hourlyDepth]"` (defaults 100 / 30,120,365 / 30; hourlyDepth 0
-  * skips the hourly leg). */
+  * Run: `sbt "runMain graft.tools.WideDepthProbe [width] [depthsCsv]"`
+  * (defaults 100 / 30,120,365). */
 object WideDepthProbe {
 
   private val End = Instant.parse("2026-01-15T00:00:00Z") // lake head (exclusive)
@@ -79,7 +75,6 @@ object WideDepthProbe {
   def main(args: Array[String]): Unit = {
     val width = args.headOption.flatMap(_.toIntOption).getOrElse(100)
     val depths = args.lift(1).getOrElse("30,120,365").split(",").map(_.trim.toInt).toSeq
-    val hourlyDepth = args.lift(2).flatMap(_.toIntOption).getOrElse(30)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
@@ -88,28 +83,6 @@ object WideDepthProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val tmp = java.nio.file.Files.createTempDirectory("graft-wide-depth").toString
-
-    // hourly cross-layout point at the shallow depth (0 skips it — the
-    // wide-only runs at production width / multi-year depth sit in the
-    // regime the width probe already showed unbuildable as hourly)
-    if (hourlyDepth > 0) locally {
-      val root = s"$tmp/hourly_$hourlyDepth"
-      val t0 = System.nanoTime()
-      dayFrame(spark, width, hourlyDepth)
-        .withColumn("year", date_format(col("timestamp"), "yyyy"))
-        .withColumn("month", date_format(col("timestamp"), "MM"))
-        .withColumn("day", date_format(col("timestamp"), "dd"))
-        .withColumn("hour", date_format(col("timestamp"), "HH"))
-        .repartition(col("symbol"))
-        .write.mode("overwrite")
-        .partitionBy("symbol", "year", "month", "day", "hour")
-        .parquet(s"$root/futures/um/minute")
-      val build = (System.nanoTime() - t0) / 1e9
-      val (req, insp) = medianRequest(spark, root)
-      println(f"[wide-depth] layout=hourly   width=$width depth=$hourlyDepth%4d d " +
-        f"build=$build%.1f s request=${req * 1000}%.0f ms inspectRange=${insp * 1000}%.0f ms " +
-        f"(files=${width * hourlyDepth * 24})")
-    }
 
     for (d <- depths) {
       val root = s"$tmp/wide_$d"

@@ -3,14 +3,13 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AggregatorRunner, MinuteBuilder}
 import graft.operators.AggregatorRunner.AggregatorStateStore
 import graft.schema.{TimeframeSpec, Timeframes}
-import graft.sources.{HtfLakeWriter, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
+import graft.sources.{HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
 
 /** Lifecycle semantics from reference `tests/test_aggregator.py:130-258`. */
 class AggregatorRunnerSpec extends SparkSpec {
@@ -33,9 +32,10 @@ class AggregatorRunnerSpec extends SparkSpec {
 
   private def newEnv() = {
     val dir = Files.createTempDirectory("graft-agg").toString
-    val minuteWriter = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"))
+    val minuteWriter = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
+      LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
-    val htfWriter = new HtfLakeWriter(s"$dir/htf")
+    val htfWriter = new HtfLakeWriter(s"$dir/htf", LakeLayout.DayWide(filesPerDay = 4))
     val state = new AggregatorStateStore(s"$dir/_aggstate")
     (dir, minuteWriter, reader, htfWriter, state)
   }
@@ -52,12 +52,15 @@ class AggregatorRunnerSpec extends SparkSpec {
       sourceLedger, allowIncomplete, repairLookbackMinutes, maxBucketsPerTick)
       .head._2
 
+  /** One symbol's stored HTF rows, read straight from the tree. */
+  private def htfRows(htfRoot: String, timeframe: String, symbol: String) =
+    spark.read.parquet(s"$htfRoot/timeframe=$timeframe").where(col("symbol") === symbol)
+
   /** One symbol's stored HTF index, (bucket_start, bucket_complete) in
-    * bucket order, read straight from the tree (either layout). */
+    * bucket order, read straight from the tree. */
   private def htfIndex(htfRoot: String, timeframe: String,
                        symbol: String): Seq[(Instant, Boolean)] =
-    spark.read.parquet(s"$htfRoot/timeframe=$timeframe")
-      .where(col("symbol") === symbol)
+    htfRows(htfRoot, timeframe, symbol)
       .orderBy("bucket_start").select("bucket_start", "bucket_complete")
       .collect().map(r => (r.getTimestamp(0).toInstant, r.getBoolean(1))).toSeq
 
@@ -100,7 +103,7 @@ class AggregatorRunnerSpec extends SparkSpec {
       canonicalMinutes("2026-01-01T00:00:00Z", 10))
     AggregatorRunner.runBackfillAll(spark, reader, hw, state,
       s"$dir/htf", Timeframes.parse("5m"))
-    val before = spark.read.parquet(s"$dir/htf/timeframe=5m/symbol=BTCUSDT")
+    val before = htfRows(s"$dir/htf", "5m", "BTCUSDT")
       .where(col("bucket_start") === ts("2026-01-01T00:00:00Z"))
       .select("close").head.getDouble(0)
     // a late correction rewrites minute 00:04 with different prices
@@ -108,7 +111,7 @@ class AggregatorRunnerSpec extends SparkSpec {
       canonicalMinutes("2026-01-01T00:04:00Z", 1, baseOpen = 500.0))
     val inc = tick(reader, hw, state, s"$dir/htf", Timeframes.parse("5m"))
     assert(inc.repaired >= 1)
-    val after = spark.read.parquet(s"$dir/htf/timeframe=5m/symbol=BTCUSDT")
+    val after = htfRows(s"$dir/htf", "5m", "BTCUSDT")
       .where(col("bucket_start") === ts("2026-01-01T00:00:00Z"))
     assert(after.count() == 1) // idempotent rewrite, no duplicate bucket rows
     assert(after.select("close").head.getDouble(0) == 500.5 && before == 104.5)
@@ -243,43 +246,10 @@ class AggregatorRunnerSpec extends SparkSpec {
         .unionByName(bucketRow("2026-01-01T05:00:00Z", 2.0)))
     // rewrite only the 05:00 bucket; 00:00 (same day partition) must survive
     hw.writeBucketsBulkAllSymbols(spark, "1h", bucketRow("2026-01-01T05:00:00Z", 9.0))
-    val rows = spark.read.parquet(s"$dir/htf/timeframe=1h/symbol=BTCUSDT")
+    val rows = htfRows(s"$dir/htf", "1h", "BTCUSDT")
       .orderBy("bucket_start").select("close").collect().map(_.getDouble(0)).toSeq
     assert(rows == Seq(1.0, 9.0))
   }
-
-  test("hourly HTF leaf with the symbol only in its path merges through the committer path") {
-    val (dir, _, _, hw, _) = newEnv()
-    def bucketRow(iso: String, close: Double) =
-      Seq(("BTCUSDT", java.sql.Timestamp.from(instant(iso)), close, true, 60L))
-        .toDF("symbol", "bucket_start", "close", "bucket_complete",
-          "observed_minutes_in_bucket")
-    // a leaf as the retired dynamic-partition writer left it: partitioned
-    // by symbol too, so its files carry no `symbol` column
-    bucketRow("2026-01-01T00:00:00Z", 1.0)
-      .withColumn("year", date_format(col("bucket_start"), "yyyy"))
-      .withColumn("month", date_format(col("bucket_start"), "MM"))
-      .withColumn("day", date_format(col("bucket_start"), "dd"))
-      .write.partitionBy("symbol", "year", "month", "day")
-      .parquet(s"$dir/htf/timeframe=1h")
-    val leaf = s"$dir/htf/timeframe=1h/symbol=BTCUSDT/year=2026/month=01/day=01"
-    assert(!spark.read.parquet(leaf).columns.contains("symbol"))
-
-    hw.writeBucketsBulkAllSymbols(spark, "1h", bucketRow("2026-01-01T05:00:00Z", 2.0))
-    val served = new graft.sources.HtfLakeReader(s"$dir/htf")
-      .readWindow(spark, "1h", "BTCUSDT",
-        instant("2026-01-01T00:00:00Z"), instant("2026-01-01T23:00:00Z")).get
-    assert(served.orderBy("timestamp").select("close").collect()
-      .map(_.getDouble(0)).toSeq == Seq(1.0, 2.0))
-    val files = new java.io.File(leaf).listFiles()
-      .filter(f => f.getName.endsWith(".parquet"))
-    assert(files.length == 1, s"merged leaf holds one file: ${files.map(_.getName).toSeq}")
-    assert(spark.read.parquet(leaf).where(col("symbol") === "BTCUSDT").count() == 2)
-  }
-
-  // ---- ledger-gated ticks (r16: an ungated no-news 12-spec fleet poll
-  // at width 10k cost 109–121 s of pure re-scan + write-skip against a
-  // 30 s poll budget) ----
 
   test("ledger gate: an unchanged lake token-skips the tick; new data re-arms it") {
     val (dir, mw, reader, hw, state) = newEnv()
@@ -335,7 +305,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     val gated = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
     assert(gated.bucketsWritten >= 1, "ledger window reaches the late write")
     def closeOf(d: String): Double =
-      spark.read.parquet(s"$d/htf/timeframe=5m/symbol=BTCUSDT")
+      htfRows(s"$d/htf", "5m", "BTCUSDT")
         .where(col("bucket_start") === ts("2026-01-01T00:00:00Z"))
         .select("close").head.getDouble(0)
     assert(closeOf(dir) == 500.5)
@@ -348,8 +318,9 @@ class AggregatorRunnerSpec extends SparkSpec {
   test("single-symbol gate: commits touching only OTHER symbols skip this symbol's tick") {
     // Fleet form: a commit that touched only ETHUSDT makes the tick
     // write only ETHUSDT's buckets. BTCUSDT is re-aggregated inside the
-    // ledger window but write-skipped, so its HTF files and watermark
-    // stay byte-identical.
+    // ledger window but write-skipped, so its stored HTF rows and
+    // watermark stay identical (the day's files are shared with
+    // ETHUSDT, so they are rewritten by its merge).
     val (dir, mw, reader, hw, state) = newEnv()
     val ledger = Some(new PartitionLedger(s"$dir/_state"))
     val spec = Timeframes.parse("5m")
@@ -357,15 +328,9 @@ class AggregatorRunnerSpec extends SparkSpec {
       canonicalMinutes("2026-01-01T00:00:00Z", 10))
     val first = tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = ledger)
     assert(first.bucketsWritten == 2)
-    val btcDir = java.nio.file.Paths.get(s"$dir/htf/timeframe=5m/symbol=BTCUSDT")
-    def btcFiles(): Map[String, Seq[Byte]] = {
-      val walk = Files.walk(btcDir)
-      try walk.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(p => btcDir.relativize(p).toString ->
-          Files.readAllBytes(p).toSeq).toMap
-      finally walk.close()
-    }
-    val btcBefore = btcFiles()
+    def btcRows(): Seq[String] =
+      htfRows(s"$dir/htf", "5m", "BTCUSDT").collect().map(_.toString).sorted.toSeq
+    val btcBefore = btcRows()
     val btcWm = state.get("BTCUSDT", spec.name)
     assert(btcBefore.nonEmpty && btcWm.isDefined)
     Thread.sleep(10)
@@ -376,7 +341,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     assert(eth.bucketsWritten == 2, s"only ETHUSDT's two buckets are written: $eth")
     assert(eth.repaired == 0)
     assert(htfIndex(s"$dir/htf", "5m", "ETHUSDT").size == 2)
-    assert(btcFiles() == btcBefore, "BTCUSDT's HTF files must not be rewritten")
+    assert(btcRows() == btcBefore, "BTCUSDT's HTF rows must not change")
     assert(state.get("BTCUSDT", spec.name) == btcWm)
     // BTC's own data re-arms BTC
     Thread.sleep(10)
@@ -433,7 +398,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     val mw = new graft.sources.MinuteLakeWriter(dir, ledger,
       graft.sources.LakeLayout.DayWide(filesPerDay = 2))
     (dir, mw, ledger, new MinuteLakeReader(dir),
-      new graft.sources.HtfLakeWriter(s"$dir/htf"),
+      new graft.sources.HtfLakeWriter(s"$dir/htf", LakeLayout.DayWide(filesPerDay = 4)),
       new AggregatorStateStore(s"$dir/_aggstate"))
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.MinuteBuilder
-import graft.sources.{MinuteLakeReader, MinuteLakeWriter, PartitionLedger, WatermarkStore}
+import graft.sources.{LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger, WatermarkStore}
 import graft.validation.{DQValidator, DataQualityException, PartitionAudit}
 
 /** Golden semantics ported from reference `tests/test_atomic_writer.py`
@@ -30,14 +30,15 @@ class LakeWriterSpec extends SparkSpec {
   private def newLake(): (MinuteLakeWriter, MinuteLakeReader, String) = {
     val dir = Files.createTempDirectory("graft-lake").toString
     val ledger = new PartitionLedger(s"$dir/_state")
-    (new MinuteLakeWriter(dir, ledger), new MinuteLakeReader(dir), dir)
+    (new MinuteLakeWriter(dir, ledger, LakeLayout.DayWide(filesPerDay = 4)),
+      new MinuteLakeReader(dir), dir)
   }
 
   test("atomic write creates hive partition and ledger entry (test_atomic_writer.py:29-47)") {
     val (writer, reader, dir) = newLake()
     val out = writer.writeHourPartition("BTCUSDT", instant("2026-01-15T10:00:00Z"),
       canonicalRow("2026-01-15T10:00:00Z", 100.0))
-    assert(out.contains("symbol=BTCUSDT/year=2026/month=01/day=15/hour=10"))
+    assert(out.endsWith("futures/um/minute/year=2026/month=01/day=15"))
     val ledger = new PartitionLedger(s"$dir/_state")
     val latest = ledger.latestPartition("BTCUSDT")
     assert(latest.isDefined && latest.get.rowCount == 1L)
@@ -231,49 +232,6 @@ class LakeWriterSpec extends SparkSpec {
       java.time.Instant.parse("2026-01-10T11:00:00Z")))
   }
 
-  test("events compaction through ManifestCommit: resolved reads identical, crash leftovers swept, repeat no-op (§4.1 seam 4)") {
-    import graft.sources.{ManifestCommit, Retention}
-    val dir = Files.createTempDirectory("graft-compact-mf").toString
-    (1 to 6).foreach { i =>
-      Seq((i.toLong, 100.0 + i)).toDF("event_id", "px")
-        .coalesce(1).write.mode("append").parquet(s"$dir/day=2026-01-10")
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    def resolved = ManifestCommit.resolve(fs, s"$dir/day=2026-01-10")
-    def rowsOf(p: String) = spark.read.parquet(p).collect()
-      .map(_.getLong(0)).sorted.toSeq
-    def looseParquet = new java.io.File(s"$dir/day=2026-01-10").listFiles
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-
-    val done = Retention.compactDayPartitions(spark, dir, "day",
-      committer = ManifestCommit)
-    assert(done.map(_.partition) == Seq("2026-01-10"))
-    assert(done.head.filesBefore == 6 && done.head.filesAfter == 1
-      && done.head.rows == 6L)
-    // live content behind the manifest pointer, byte-identical rows;
-    // the superseded loose originals are gone
-    assert(resolved.isDefined && rowsOf(resolved.get) == (1L to 6L))
-    assert(looseParquet.isEmpty)
-
-    // second run reads eligibility from the RESOLVED dir (1 healthy
-    // file) — no-op, same version stays live
-    val v1 = resolved.get
-    assert(Retention.compactDayPartitions(spark, dir, "day",
-      committer = ManifestCommit).isEmpty)
-    assert(resolved.get == v1)
-
-    // crashed pre-delete window: a loose file beside the manifest (its
-    // rows are in the verified version by construction) — swept on the
-    // next run without being double-counted
-    spark.read.parquet(v1).coalesce(1).write.mode("append")
-      .parquet(s"$dir/day=2026-01-10")
-    assert(looseParquet.nonEmpty)
-    assert(Retention.compactDayPartitions(spark, dir, "day",
-      committer = ManifestCommit).isEmpty)
-    assert(looseParquet.isEmpty && rowsOf(resolved.get) == (1L to 6L))
-  }
-
   test("compaction crash recovery: every crash window keeps one complete copy; reader sees old or new, never a mix (ADVICE r7)") {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     def mkPartition(dir: String): Unit = (1 to 6).foreach { i =>
@@ -349,40 +307,6 @@ class LakeWriterSpec extends SparkSpec {
       .agg(sum("event_id")).head.getLong(0) == 21L)
   }
 
-  test("single-symbol scan is scoped to the symbol subtree (listing bounded by one symbol, not lake width)") {
-    val (writer, reader, _) = newLake()
-    writer.writeHourPartition("BTCUSDT", instant("2026-01-15T10:00:00Z"),
-      canonicalRow("2026-01-15T10:00:00Z", 100.0))
-    writer.writeHourPartition("ETHUSDT", instant("2026-01-15T10:00:00Z"),
-      canonicalRow("2026-01-15T10:00:00Z", 50.0))
-    // the scan's file index must be rooted at symbol=BTCUSDT — reading
-    // the lake root and filtering prunes partitions but lists EVERY
-    // symbol's directories first (measured x2.7 request inflation at
-    // 1000 symbols, ServiceScaleProbe r8)
-    val roots = reader.scanSymbol(spark, "BTCUSDT")
-      .queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.rootPaths.map(_.toString)
-      }.getOrElse(Nil)
-    assert(roots.nonEmpty && roots.forall(_.contains("symbol=BTCUSDT")),
-      s"scan not scoped: $roots")
-    // behavior unchanged: only the scoped symbol's rows come back, and
-    // a missing symbol still yields an empty canonical frame
-    assert(reader.scanSymbol(spark, "BTCUSDT").count() == 1)
-    assert(reader.scanSymbol(spark, "NOPEUSDT").count() == 0)
-  }
-
-  test("partition directory discovery for change detection (source_reader.py:61-69)") {
-    val (writer, reader, _) = newLake()
-    writer.writeHourPartition("BTCUSDT", instant("2026-01-15T10:00:00Z"),
-      canonicalRow("2026-01-15T10:00:00Z", 100.0))
-    writer.writeHourPartition("BTCUSDT", instant("2026-01-15T11:00:00Z"),
-      canonicalRow("2026-01-15T11:00:00Z", 100.0))
-    val dirs = reader.partitionDirectories(spark, "BTCUSDT")
-    assert(dirs.size == 2)
-    assert(dirs.forall(_.contains("hour=")))
-  }
-
   test("ledger records content hash at commit; audit detects tamper (atomic.py:47,108-114)") {
     val (writer, _, dir) = newLake()
     val out = writer.writeHourPartition("BTCUSDT", instant("2026-01-15T10:00:00Z"),
@@ -390,11 +314,13 @@ class LakeWriterSpec extends SparkSpec {
     writer.writeHourPartition("BTCUSDT", instant("2026-01-15T11:00:00Z"),
       canonicalRow("2026-01-15T11:00:00Z", 101.0))
 
+    // the day's base row carries the content hash (the hour rows are
+    // bookkeeping); the second hour of the day landed as a delta
     val ledger = new PartitionLedger(s"$dir/_state")
-    val latest = ledger.latestPartition("BTCUSDT")
+    val latest = ledger.all().find(e => e.symbol == "__ALL__" && e.day == "2026-01-15")
     assert(latest.isDefined && latest.get.contentHash.length == 64) // hex sha-256
 
-    // pristine lake: every partition audits ok
+    // pristine lake: every partition (base day + delta day) audits ok
     val clean = writer.auditPartitions(spark)
     assert(clean.size == 2 && clean.forall(_.ok))
 
@@ -417,7 +343,7 @@ class LakeWriterSpec extends SparkSpec {
       .foreach(_.delete())
     val tampered = writer.auditPartitions(spark)
     assert(tampered.count(_.issue == "hash_mismatch") == 1)
-    assert(tampered.find(_.issue == "hash_mismatch").get.hour == 10)
+    assert(tampered.find(_.issue == "hash_mismatch").get.hour == -1) // base day
 
     // a deleted partition directory → missing_partition
     def deleteRec(f: java.io.File): Unit = {
@@ -425,6 +351,6 @@ class LakeWriterSpec extends SparkSpec {
     }
     deleteRec(new java.io.File(out))
     assert(writer.auditPartitions(spark)
-      .exists(r => r.hour == 10 && r.issue == "missing_partition"))
+      .exists(r => r.hour == -1 && r.issue == "missing_partition"))
   }
 }

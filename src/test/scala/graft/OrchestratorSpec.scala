@@ -42,7 +42,8 @@ class OrchestratorSpec extends SparkSpec {
 
   private def env() = {
     val dir = Files.createTempDirectory("graft-orch").toString
-    val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"))
+    val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
+      graft.sources.LakeLayout.DayWide(filesPerDay = 4))
     (dir, writer, new MinuteLakeReader(dir), new WatermarkStore(s"$dir/_wm"))
   }
 
@@ -149,8 +150,9 @@ class OrchestratorSpec extends SparkSpec {
       collector, writer, wm)
     assert(pipe.runOnce(instant("2026-01-15T10:03:00Z")).partitionsCommitted == 3)
     val after = java.nio.file.Files.readAllLines(logPath).size
-    // 3 pre-seeded live keys + 3 freshly committed hours, nothing else
-    assert(after == ledger.all().size && after == 6,
+    // 3 pre-seeded live keys + 3 freshly committed hours + the new
+    // day's base row (hour 08) and delta row (hours 09–10), nothing else
+    assert(after == ledger.all().size && after == 8,
       s"log holds the live snapshot, saw $after lines")
   }
 

@@ -226,7 +226,8 @@ class QueryServiceSpec extends SparkSpec {
   test("indicator payload: EMA + previous-period pivots from one window (live_indicators/service.py:32-238)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ind").toString
     val writer = new graft.sources.MinuteLakeWriter(dir,
-      new graft.sources.PartitionLedger(s"$dir/_state"))
+      new graft.sources.PartitionLedger(s"$dir/_state"),
+      graft.sources.LakeLayout.DayWide(filesPerDay = 4))
     val reader = new graft.sources.MinuteLakeReader(dir)
     val h0 = instant("2026-01-15T10:00:00Z")
     // two hours of minutes, close ramps upward
@@ -259,7 +260,8 @@ class QueryServiceSpec extends SparkSpec {
   test("canonical window load reports coverage (service.py:1036-1117)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-qs").toString
     val writer = new graft.sources.MinuteLakeWriter(dir,
-      new graft.sources.PartitionLedger(s"$dir/_state"))
+      new graft.sources.PartitionLedger(s"$dir/_state"),
+      graft.sources.LakeLayout.DayWide(filesPerDay = 4))
     val reader = new graft.sources.MinuteLakeReader(dir)
     val start = instant("2026-01-15T10:00:00Z")
     val rows = (0 until 5).map { i =>
@@ -380,11 +382,12 @@ class QueryServiceSpec extends SparkSpec {
   test("BTC local-only route: HTF direct, 1m fallback, best-partial (service.py:1729-1831)") {
     import java.nio.file.Files
     import graft.operators.{AggregatorRunner, MinuteBuilder}
-    import graft.sources.{HtfLakeReader, HtfLakeWriter, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
+    import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
     val dir = Files.createTempDirectory("graft-btc").toString
-    val mw = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"))
+    val mw = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
+      LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
-    val hw = new HtfLakeWriter(s"$dir/htf")
+    val hw = new HtfLakeWriter(s"$dir/htf", LakeLayout.DayWide(filesPerDay = 4))
     val hr = new HtfLakeReader(s"$dir/htf")
 
     // 2 hours of minutes → backfill 5m HTF buckets
@@ -669,7 +672,8 @@ class QueryServiceSpec extends SparkSpec {
     }
 
     val dir = Files.createTempDirectory("graft-rebuild").toString
-    val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"))
+    val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
+      graft.sources.LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
     val h10 = instant("2026-01-15T10:00:00Z")
 

@@ -10,12 +10,12 @@ import graft.operators.AggregatorRunner.AggregatorStateStore
 import graft.schema.Timeframes
 import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
 
-/** Layout parity: the day-wide lake ([[LakeLayout.DayWide]], the
-  * width-≥10k answer to the width-10k probe's file-count wall, SURVEY
-  * §8.15) must be indistinguishable from the reference-inherited hourly
-  * layout through the reader API and the HTF pipeline — same merge
-  * policy (one shared `MinuteLakeWriter.mergeKeyed`), same query results,
-  * different physics (files/day O(filesPerDay), not O(width × 24)). */
+/** The day-wide lake ([[LakeLayout]], the width-≥10k answer to the
+  * width-10k probe's file-count wall, SURVEY §8.15) through the reader
+  * API and the HTF pipeline: reads are checked against a test-local
+  * oracle over the input frame (last-wins per (symbol, timestamp),
+  * min/max per symbol, bars and HTF from a plain `groupBy`), and the
+  * physics is pinned (files/day O(filesPerDay), not O(width × 24)). */
 class WideLakeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,6 +63,31 @@ class WideLakeSpec extends SparkSpec {
       .partitionBy("symbol", "year", "month", "day", "hour")
       .parquet(s"$root/futures/um/minute")
 
+  /** Oracle: the rows a reader must serve for `frame`'s writes —
+    * last-wins per (symbol, timestamp) in input order. */
+  private def lastWins(frame: DataFrame): DataFrame =
+    graft.ops.Ops.dedupKeepLast(
+      frame.withColumn("__ord", monotonically_increasing_id()),
+      Seq("symbol", "timestamp"), Seq(col("__ord"))).drop("__ord")
+
+  /** Oracle: `symbol`'s (min, max) timestamp in `frame`. */
+  private def rangeOf(frame: DataFrame, symbol: String): (Option[java.time.Instant], Option[java.time.Instant]) = {
+    val r = frame.where(col("symbol") === symbol)
+      .agg(min("timestamp"), max("timestamp")).collect().head
+    (Option(r.getTimestamp(0)).map(_.toInstant), Option(r.getTimestamp(1)).map(_.toInstant))
+  }
+
+  /** Oracle: every symbol's latest minute in `frame`. */
+  private def latestOf(frame: DataFrame): Map[String, java.time.Instant] =
+    frame.groupBy("symbol").agg(max("timestamp")).collect()
+      .map(r => r.getString(0) -> r.getTimestamp(1).toInstant).toMap
+
+  /** Oracle: rows of `frame` inside [lo, hi]. */
+  private def windowOf(frame: DataFrame, lo: java.time.Instant,
+                       hi: java.time.Instant): DataFrame =
+    lastWins(frame).where(col("timestamp").between(
+      java.sql.Timestamp.from(lo), java.sql.Timestamp.from(hi)))
+
   private def sortedRows(df: DataFrame): Seq[String] =
     df.select(col("symbol"), col("timestamp").cast("string"), col("open"), col("close"))
       .collect().map(_.toString).sorted.toIndexedSeq
@@ -70,15 +95,12 @@ class WideLakeSpec extends SparkSpec {
   test("wide write + reader API parity with the hourly layout") {
     val syms = Seq("AAAUSDT", "BBBUSDT", "CCCUSDT", "DDDUSDT")
     val frame = minutes(syms, hours = 26) // crosses a day boundary
-    val hRoot = Files.createTempDirectory("graft-wide-h").toString
     val wRoot = Files.createTempDirectory("graft-wide-w").toString
-    hourlyLake(frame, hRoot)
     val wWriter = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
     wWriter.writeDaysWide(frame)
 
-    val hr = new MinuteLakeReader(hRoot)
-    val wr = new MinuteLakeReader(wRoot) // layout auto-detected
+    val wr = new MinuteLakeReader(wRoot)
 
     // file-count bound: ≤ touchedDays × filesPerDay range partitions,
     // plus up to (touchedDays − 1) extra files where a range partition
@@ -93,25 +115,25 @@ class WideLakeSpec extends SparkSpec {
     assert(nFiles > 0 && nFiles <= 2 * 4 + 1,
       s"lake has $nFiles files, want ≤ 2 days × 4 + 1 straddle")
 
-    // scanSymbol parity (wide path must also drop the symbol data col)
-    val hScan = hr.scanSymbol(spark, "BBBUSDT")
+    // scanSymbol parity (the symbol data col is dropped)
+    val oScan = lastWins(frame).where(col("symbol") === "BBBUSDT").drop("symbol")
     val wScan = wr.scanSymbol(spark, "BBBUSDT")
-    assert(hScan.columns.sorted.toSeq == wScan.columns.sorted.toSeq)
-    assert(hScan.count() == 26 * 60 && wScan.count() == 26 * 60)
+    assert(oScan.columns.sorted.toSeq == wScan.columns.sorted.toSeq)
+    assert(oScan.count() == 26 * 60 && wScan.count() == 26 * 60)
 
     // readWindow parity (windowed + latest-wins dedup)
     val lo = instant("2026-01-15T10:00:00Z"); val hi = instant("2026-01-15T11:59:00Z")
-    assert(hr.readWindow(spark, "CCCUSDT", lo, hi).orderBy("timestamp")
+    assert(windowOf(frame, lo, hi).where(col("symbol") === "CCCUSDT").orderBy("timestamp")
         .select("open").collect().map(_.getDouble(0)).toSeq ==
       wr.readWindow(spark, "CCCUSDT", lo, hi).orderBy("timestamp")
         .select("open").collect().map(_.getDouble(0)).toSeq)
 
     // readWindowAllSymbols parity
-    assert(sortedRows(hr.readWindowAllSymbols(spark, lo, hi).get) ==
+    assert(sortedRows(windowOf(frame, lo, hi)) ==
       sortedRows(wr.readWindowAllSymbols(spark, lo, hi).get))
 
     // latestMinuteAllSymbols parity — every symbol, exact instant
-    assert(hr.latestMinuteAllSymbols(spark) == wr.latestMinuteAllSymbols(spark))
+    assert(latestOf(frame) == wr.latestMinuteAllSymbols(spark))
   }
 
   test("wide inspectRange/latestMinute: end-probed, parity incl. stragglers and absent symbols") {
@@ -120,16 +142,13 @@ class WideLakeSpec extends SparkSpec {
     // min-probe finds every symbol in batch 1. FFFUSDT never exists.
     val frame = minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 26)
       .unionByName(minutes(Seq("EEEUSDT"), hours = 10))
-    val hRoot = Files.createTempDirectory("graft-insp-h").toString
     val wRoot = Files.createTempDirectory("graft-insp-w").toString
-    hourlyLake(frame, hRoot)
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3)).writeDaysWide(frame)
-    val hr = new MinuteLakeReader(hRoot)
     val wr = new MinuteLakeReader(wRoot)
     for (s <- Seq("AAAUSDT", "EEEUSDT")) {
-      assert(wr.inspectRange(spark, s) == hr.inspectRange(spark, s), s)
-      assert(wr.latestMinute(spark, s) == hr.latestMinute(spark, s), s)
+      assert(wr.inspectRange(spark, s) == rangeOf(frame, s), s)
+      assert(wr.latestMinute(spark, s) == rangeOf(frame, s)._2, s)
     }
     assert(wr.inspectRange(spark, "EEEUSDT")._2.contains(instant("2026-01-15T09:59:00Z")))
     assert(wr.inspectRange(spark, "FFFUSDT") == (None, None))
@@ -142,8 +161,8 @@ class WideLakeSpec extends SparkSpec {
       LakeLayout.DayWide(filesPerDay = 3)).writeDeltaPatch(minutes(Seq("AAAUSDT"),
         hours = 1, dayStart = instant("2026-01-16T02:00:00Z")))
     for (s <- Seq("BBBUSDT", "EEEUSDT")) {
-      assert(wr.inspectRange(spark, s) == hr.inspectRange(spark, s), s)
-      assert(wr.latestMinute(spark, s) == hr.latestMinute(spark, s), s)
+      assert(wr.inspectRange(spark, s) == rangeOf(frame, s), s)
+      assert(wr.latestMinute(spark, s) == rangeOf(frame, s)._2, s)
     }
     assert(wr.latestMinute(spark, "AAAUSDT").contains(instant("2026-01-16T02:59:00Z")))
     assert(wr.inspectRange(spark, "AAAUSDT") ==
@@ -155,7 +174,7 @@ class WideLakeSpec extends SparkSpec {
     val beforeEnd = instant("2025-12-02T00:00:00Z")
     val w0 = wr.readWindow(spark, "AAAUSDT", before, beforeEnd)
     assert(w0.count() == 0 &&
-      w0.columns.sorted.toSeq == hr.readWindow(spark, "AAAUSDT", before, beforeEnd).columns.sorted.toSeq)
+      w0.columns.sorted.toSeq == frame.drop("symbol").columns.sorted.toSeq)
     val a0 = wr.readWindowAllSymbols(spark, before, beforeEnd).get
     assert(a0.count() == 0 && a0.columns.contains("symbol"))
   }
@@ -288,36 +307,32 @@ class WideLakeSpec extends SparkSpec {
   test("HTF pipeline parity: backfill + incremental + write-skip under the wide layout") {
     val syms = Seq("AAAUSDT", "BBBUSDT", "CCCUSDT")
     val spec = Timeframes.parse("1h")
+    val frame = minutes(syms, hours = 24)
 
-    def run(root: String, layout: LakeLayout): (Long, Long, DataFrame) = {
-      val frame = minutes(syms, hours = 24)
-      layout match {
-        case LakeLayout.HourlySymbol => hourlyLake(frame, root)
-        case LakeLayout.DayWide(_) =>
-          new MinuteLakeWriter(root, new PartitionLedger(s"$root/_state"), layout)
-            .writeDaysWide(frame)
-      }
-      val reader = new MinuteLakeReader(root)
-      val writer = new HtfLakeWriter(s"$root/htf", layout)
-      val state = new AggregatorStateStore(s"$root/_aggstate")
-      val bf = AggregatorRunner.runBackfillAll(spark, reader, writer, state,
-        s"$root/htf", spec)
-      val noop = AggregatorRunner.runFleetTick(spark, reader, writer, state,
-        s"$root/htf", Seq(spec)).head._2
-      val buckets = spark.read.parquet(s"$root/htf/timeframe=1h")
-        .select("symbol", "bucket_start", "open", "close", "bucket_complete")
-      (bf.bucketsWritten, noop.bucketsWritten, buckets)
-    }
-
-    val hRoot = Files.createTempDirectory("graft-wide-htf-h").toString
     val wRoot = Files.createTempDirectory("graft-wide-htf-w").toString
-    val (hWritten, hNoop, hBuckets) = run(hRoot, LakeLayout.HourlySymbol)
-    val (wWritten, wNoop, wBuckets) = run(wRoot, LakeLayout.DayWide(filesPerDay = 3))
+    val layout = LakeLayout.DayWide(filesPerDay = 3)
+    new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"), layout)
+      .writeDaysWide(frame)
+    val reader = new MinuteLakeReader(wRoot)
+    val writer = new HtfLakeWriter(s"$wRoot/htf", layout)
+    val state = new AggregatorStateStore(s"$wRoot/_aggstate")
+    val wWritten = AggregatorRunner.runBackfillAll(spark, reader, writer, state,
+      s"$wRoot/htf", spec).bucketsWritten
+    val wNoop = AggregatorRunner.runFleetTick(spark, reader, writer, state,
+      s"$wRoot/htf", Seq(spec)).head._2.bucketsWritten
+    val wBuckets = spark.read.parquet(s"$wRoot/htf/timeframe=1h")
+      .select("symbol", "bucket_start", "open", "close", "bucket_complete")
+    // oracle: hour bars of the input frame from a plain groupBy
+    val oBuckets = lastWins(frame)
+      .groupBy(col("symbol"), date_trunc("hour", col("timestamp")).as("bucket_start"))
+      .agg(min_by(col("open"), col("timestamp")).as("open"),
+        max_by(col("close"), col("timestamp")).as("close"),
+        (count(lit(1)) === 60).as("bucket_complete"))
 
-    assert(hWritten == wWritten && hWritten == syms.length * 24L)
-    assert(hNoop == 0L && wNoop == 0L) // fingerprint write-skip holds in both layouts
+    assert(wWritten == syms.length * 24L)
+    assert(wNoop == 0L) // fingerprint write-skip holds
     val key = (df: DataFrame) => df.collect().map(_.toString).sorted.toSeq
-    assert(key(hBuckets) == key(wBuckets))
+    assert(key(oBuckets) == key(wBuckets))
 
     // wide HTF file bound: one day dir holds ≤ filesPerDay files
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(wRoot),
@@ -327,21 +342,23 @@ class WideLakeSpec extends SparkSpec {
     val n = fs.listStatus(dayDir).count(_.getPath.getName.endsWith(".parquet"))
     assert(n > 0 && n <= 3, s"wide HTF day dir has $n files, want ≤3")
 
-    // per-symbol HTF window read parity through HtfLakeReader — the two
-    // layouts must return IDENTICAL schemas (the wide branch drops its
-    // symbol data column after the equality filter; a layout-dependent
-    // schema would leak through QueryService.btcLocalOnlyBars)
-    val hb = new graft.sources.HtfLakeReader(s"$hRoot/htf")
+    // per-symbol HTF window read through HtfLakeReader: the stored
+    // bucket columns minus the symbol data column and the partition
+    // columns, bucket_start re-keyed as timestamp (the schema
+    // QueryService.btcLocalOnlyBars serves), and the oracle's bars
     val wb = new graft.sources.HtfLakeReader(s"$wRoot/htf")
     val lo = instant("2026-01-15T05:00:00Z"); val hi = instant("2026-01-15T09:00:00Z")
-    val hDf = hb.readWindow(spark, "1h", "BBBUSDT", lo, hi).get
     val wDf = wb.readWindow(spark, "1h", "BBBUSDT", lo, hi).get
-    assert(hDf.columns.sorted.toSeq == wDf.columns.sorted.toSeq,
-      s"HTF reader schema diverges by layout: hourly=${hDf.columns.sorted.mkString(",")} " +
-        s"wide=${wDf.columns.sorted.mkString(",")}")
-    val hWin = hDf.orderBy("timestamp").select("open", "close").collect().map(_.toString).toSeq
+    val apiCols = spark.read.parquet(s"$wRoot/htf/timeframe=1h")
+      .drop("year", "month", "day", "symbol")
+      .withColumnRenamed("bucket_start", "timestamp").columns.sorted.toSeq
+    assert(apiCols == wDf.columns.sorted.toSeq,
+      s"HTF reader schema: want ${apiCols.mkString(",")} got ${wDf.columns.sorted.mkString(",")}")
+    val oWin = oBuckets.where(col("symbol") === "BBBUSDT" && col("bucket_complete") &&
+        col("bucket_start").between(java.sql.Timestamp.from(lo), java.sql.Timestamp.from(hi)))
+      .orderBy("bucket_start").select("open", "close").collect().map(_.toString).toSeq
     val wWin = wDf.orderBy("timestamp").select("open", "close").collect().map(_.toString).toSeq
-    assert(hWin == wWin && hWin.nonEmpty)
+    assert(oWin == wWin && oWin.nonEmpty)
   }
 
   test("bounded wide reads touch ONLY the window's day dirs (inputFiles-pinned)") {
@@ -428,11 +445,12 @@ class WideLakeSpec extends SparkSpec {
     val spec = Timeframes.parse("1h")
     val cutoff = instant("2026-01-16T00:00:00Z") // retires day 15 only
 
-    // wide: 3-day lake + HTF tree, ledgered
+    // 3-day lake + HTF tree, ledgered
     val wRoot = Files.createTempDirectory("graft-ret-w").toString
     val ledger = new PartitionLedger(s"$wRoot/_state")
+    val frame = minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 72)
     new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 3))
-      .writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 72))
+      .writeDaysWide(frame)
     val reader = new MinuteLakeReader(wRoot)
     val htfWriter = new HtfLakeWriter(s"$wRoot/htf", LakeLayout.DayWide(filesPerDay = 3))
     val state = new AggregatorStateStore(s"$wRoot/_aggstate")
@@ -455,13 +473,12 @@ class WideLakeSpec extends SparkSpec {
     assert(AggregatorRunner.runBackfillAll(spark, reader, htfWriter, state,
       s"$wRoot/htf", spec).bucketsWritten == 0L)
 
-    // hourly: per-symbol day-dir walk
-    val hRoot = Files.createTempDirectory("graft-ret-h").toString
-    hourlyLake(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 48), hRoot)
-    val hDropped = Retention.dropLakeDaysBefore(spark, hRoot, cutoff)
-    assert(hDropped.size == 2 && hDropped.forall(_.contains("day=15"))) // one per symbol
-    val hr = new MinuteLakeReader(hRoot)
-    assert(hr.scanSymbol(spark, "BBBUSDT").count() == 24 * 60)
+    // oracle: a retained symbol reads exactly its input rows at or
+    // after the cutoff
+    val retained = lastWins(frame).where(col("symbol") === "BBBUSDT" &&
+      col("timestamp") >= java.sql.Timestamp.from(cutoff))
+    assert(sortedRows(retained) ==
+      sortedRows(reader.scanSymbol(spark, "BBBUSDT").withColumn("symbol", lit("BBBUSDT"))))
   }
 
   test("wide scanSymbol pushes the symbol predicate into the parquet scan") {
@@ -778,20 +795,28 @@ class WideLakeSpec extends SparkSpec {
   test("QueryService.candleBars serves identical bars from hourly and wide lakes") {
     val syms = Seq("AAAUSDT", "BBBUSDT")
     val frame = minutes(syms, hours = 4)
-    val hRoot = Files.createTempDirectory("graft-wide-svc-h").toString
     val wRoot = Files.createTempDirectory("graft-wide-svc-w").toString
-    hourlyLake(frame, hRoot)
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 4)).writeDaysWide(frame)
     val lo = Day1; val hi = instant("2026-01-15T03:59:00Z")
-    def bars(root: String) = graft.service.QueryService
-      .candleBars(spark, new MinuteLakeReader(root), "BBBUSDT", "15m", lo, hi, limit = 12)
+    val w = graft.service.QueryService
+      .candleBars(spark, new MinuteLakeReader(wRoot), "BBBUSDT", "15m", lo, hi, limit = 12)
       .orderBy("timestamp")
       .select(col("timestamp").cast("string"), col("open"), col("high"),
         col("low"), col("close"))
       .collect().map(_.toString).toSeq
-    val h = bars(hRoot); val w = bars(wRoot)
-    assert(h == w && h.size == 12, s"hourly=${h.size} wide=${w.size}")
+    // oracle: the last 12 complete 15m bars of the input from a plain groupBy
+    val h = windowOf(frame, lo, hi).where(col("symbol") === "BBBUSDT")
+      .groupBy(window(col("timestamp"), "15 minutes").getField("start").as("bar"))
+      .agg(min_by(col("open"), col("timestamp")).as("open"), max(col("high")).as("high"),
+        min(col("low")).as("low"), max_by(col("close"), col("timestamp")).as("close"),
+        count(lit(1)).as("n"))
+      .where(col("n") === 15)
+      .orderBy(col("bar").desc).limit(12).orderBy("bar")
+      .select(date_format(col("bar"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"), col("open"),
+        col("high"), col("low"), col("close"))
+      .collect().map(_.toString).toSeq
+    assert(h == w && h.size == 12, s"oracle=${h.size} wide=${w.size}")
 
     // a delta patch of ANOTHER symbol on the same day leaves BBBUSDT's
     // served output — every field of the bars, and the indicators —
@@ -827,7 +852,7 @@ class WideLakeSpec extends SparkSpec {
     assert(r.scanSymbol(spark, "BBBUSDT").count() == 26 * 60)
     val lo = instant("2026-01-15T10:00:00Z"); val hi = instant("2026-01-15T11:59:00Z")
     assert(sortedRows(r.readWindowAllSymbols(spark, lo, hi).get) ==
-      sortedRows(new MinuteLakeReader(hRoot).readWindowAllSymbols(spark, lo, hi).get))
+      sortedRows(windowOf(frame, lo, hi)))
   }
 
   test("overlap: returns both results; background failure rethrows its original cause") {
@@ -869,14 +894,12 @@ class WideLakeSpec extends SparkSpec {
       def buckets(close: Double) =
         Seq(("AAAUSDT", ts("2026-01-15T00:00:00Z"), close, true))
           .toDF("symbol", "bucket_start", "close", "bucket_complete")
-      Seq(LakeLayout.HourlySymbol, LakeLayout.DayWide(filesPerDay = 2)).foreach { l =>
-        val hRoot = Files.createTempDirectory("graft-htf-conf").toString
-        val hw = new HtfLakeWriter(hRoot, l)
-        unchanged(s"writeBucketsBulkAllSymbols ($l, fresh)")(
-          hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(1.0)))
-        unchanged(s"writeBucketsBulkAllSymbols ($l, merge)")(
-          hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(2.0)))
-      }
+      val hRoot = Files.createTempDirectory("graft-htf-conf").toString
+      val hw = new HtfLakeWriter(hRoot, LakeLayout.DayWide(filesPerDay = 2))
+      unchanged("writeBucketsBulkAllSymbols (fresh)")(
+        hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(1.0)))
+      unchanged("writeBucketsBulkAllSymbols (merge)")(
+        hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(2.0)))
     } finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
@@ -975,5 +998,94 @@ class WideLakeSpec extends SparkSpec {
     assert(new MinuteLakeReader(wRoot).scanSymbol(spark, "AAAUSDT")
       .where(col("timestamp") === ts("2026-01-15T00:00:00Z"))
       .select("open").head.getDouble(0) == 700.0)
+  }
+
+  /** Every reader verb on a lake that holds no day: the empty frame
+    * with the read's schema, `None`, `Map.empty` or `(None, None)`. The
+    * whole-lake scans are checked only when `wholeLake`. */
+  private def assertReadsEmpty(root: String, wholeLake: Boolean): Unit = {
+    val canonicalCols = graft.schema.CanonicalSchema.structType.fieldNames.sorted.toSeq
+    val lo = Day1; val hi = instant("2026-01-15T03:59:00Z")
+    val r = new MinuteLakeReader(root)
+    val scan = r.scanSymbol(spark, "AAAUSDT")
+    assert(scan.count() == 0 && scan.columns.sorted.toSeq == canonicalCols)
+    if (wholeLake) {
+      assert(r.scanAllSymbols(spark).isEmpty)
+      assert(r.readWindowAllSymbols(spark, lo, hi).isEmpty)
+    }
+    assert(r.latestMinuteAllSymbols(spark, Set("AAAUSDT")) == Map.empty)
+    assert(r.inspectRange(spark, "AAAUSDT") == ((None, None)))
+    assert(r.latestMinute(spark, "AAAUSDT").isEmpty)
+    val win = r.readWindow(spark, "AAAUSDT", lo, hi)
+    assert(win.count() == 0 && win.columns.sorted.toSeq == canonicalCols)
+    assert(new HtfLakeReader(s"$root/htf").readWindow(spark, "1h", "AAAUSDT", lo, hi).isEmpty)
+  }
+
+  /** A root whose minute lake and HTF timeframe dirs exist but hold no
+    * day yet. */
+  private def daylessLake(): String = {
+    val root = Files.createTempDirectory("graft-empty-b").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/futures/um/minute"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/htf/timeframe=1h"))
+    root
+  }
+
+  test("an absent or day-less lake reads empty through every reader verb") {
+    // (a) a root with no lake dir
+    assertReadsEmpty(Files.createTempDirectory("graft-empty-a").toString, wholeLake = true)
+    // (b) lake and HTF timeframe dirs that hold no day yet
+    assertReadsEmpty(daylessLake(), wholeLake = false)
+  }
+
+  test("a day-less lake dir: the whole-lake scans read None instead of failing schema inference") {
+    assertReadsEmpty(daylessLake(), wholeLake = true)
+  }
+
+  test("a reference-layout hourly tree fails every reader verb loudly, naming the migration") {
+    val hRoot = Files.createTempDirectory("graft-ref-layout").toString
+    hourlyLake(minutes(Seq("AAAUSDT"), hours = 2), hRoot)
+    val r = new MinuteLakeReader(hRoot)
+    val lo = Day1; val hi = instant("2026-01-15T01:59:00Z")
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "scanSymbol" -> (() => r.scanSymbol(spark, "AAAUSDT")),
+      "scanAllSymbols" -> (() => r.scanAllSymbols(spark)),
+      "readWindowAllSymbols" -> (() => r.readWindowAllSymbols(spark, lo, hi)),
+      "latestMinuteAllSymbols" -> (() => r.latestMinuteAllSymbols(spark)),
+      "inspectRange" -> (() => r.inspectRange(spark, "AAAUSDT")),
+      "latestMinute" -> (() => r.latestMinute(spark, "AAAUSDT")),
+      "readWindow" -> (() => r.readWindow(spark, "AAAUSDT", lo, hi)))
+    verbs.foreach { case (name, verb) =>
+      val e = intercept[IllegalStateException](verb())
+      assert(e.getMessage.contains("LakeMigrate.hourlyToDayWide"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("rebuildSymbolRegistry heals a torn registry from the base and delta trees") {
+    val root = Files.createTempDirectory("graft-registry-heal").toString
+    val w = new MinuteLakeWriter(root, new PartitionLedger(s"$root/_state"),
+      LakeLayout.DayWide(filesPerDay = 4))
+    w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3))
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(root),
+      spark.sparkContext.hadoopConfiguration)
+    val lakeDir = s"$root/futures/um/minute"
+    // tear the registry (the healing verb's trigger)
+    val reg = new org.apache.hadoop.fs.Path(s"$lakeDir/${MinuteLakeWriter.SymbolsRegistry}")
+    val out = fs.create(reg, true)
+    try out.write("""["AAAUSDT","BB""".getBytes("UTF-8")) finally out.close()
+    assert(MinuteLakeWriter.readSymbolRegistry(fs, lakeDir).isEmpty)
+    // a symbol that exists only in a delta: a torn registry is never
+    // rewritten from the fresh symbols alone, so it stays torn
+    val patch = minutes(Seq("CCCUSDT"), hours = 1, dayStart = instant("2026-01-15T01:00:00Z"))
+    w.writeDeltaPatch(patch)
+    assert(MinuteLakeWriter.readSymbolRegistry(fs, lakeDir).isEmpty)
+    // heal: base ∪ delta symbols
+    val healed = w.rebuildSymbolRegistry(spark)
+    assert(healed == Set("AAAUSDT", "BBBUSDT", "CCCUSDT"), s"rebuild: $healed")
+    assert(MinuteLakeWriter.readSymbolRegistry(fs, lakeDir).contains(healed))
+    // the healed registry short-circuits only absent symbols: the
+    // delta-only symbol answers from its delta rows
+    val r = new MinuteLakeReader(root)
+    assert(r.inspectRange(spark, "CCCUSDT") == rangeOf(patch, "CCCUSDT"))
+    assert(r.inspectRange(spark, "ZZZUSDT") == ((None, None)))
   }
 }
