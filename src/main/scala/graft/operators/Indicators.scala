@@ -41,16 +41,24 @@ object Indicators {
          |  acc -> acc.out)""".stripMargin)
   }
 
-  /** TradingView EMA on a bar frame: returns the input plus an `ema`
-    * column, computed over rows ordered by `orderCol`. The frame is
+  /** The EMA recursion over a bar frame as ONE row of two arrays: `ks`,
+    * the `orderCol` values ascending, and `emas`, element i the EMA at
+    * `ks[i]` (empty arrays for an empty frame). The frame is
     * driver-bounded, so a single collect_list group is fine. */
-  def withEma(bars: DataFrame, valueCol: String, length: Int,
-              orderCol: String = "timestamp", outCol: String = "ema"): DataFrame = {
-    val collected = bars
+  def emaArrays(bars: DataFrame, valueCol: String, length: Int,
+                orderCol: String = "timestamp"): DataFrame =
+    bars
       .select(col(orderCol), col(valueCol).cast("double").as("__v"))
       .agg(expr(s"array_sort(collect_list(struct($orderCol, __v)))").as("arr"))
       .select(expr(s"transform(arr, x -> x.$orderCol)").as("ks"),
         emaExpr(s"transform(arr, x -> x.__v)", length).as("emas"))
+
+  /** TradingView EMA on a bar frame: returns the input plus an `ema`
+    * column, computed over rows ordered by `orderCol` ([[emaArrays]]
+    * exploded and joined back). */
+  def withEma(bars: DataFrame, valueCol: String, length: Int,
+              orderCol: String = "timestamp", outCol: String = "ema"): DataFrame = {
+    val collected = emaArrays(bars, valueCol, length, orderCol)
       .select(explode(arrays_zip(col("ks"), col("emas"))).as("z"))
       .select(col(s"z.ks").as(orderCol), col(s"z.emas").as(outCol))
     bars.join(collected, Seq(orderCol), "left")

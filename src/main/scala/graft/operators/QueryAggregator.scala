@@ -13,10 +13,16 @@ import graft.schema.TimeframeSpec
   * snapshot metrics → tumbling-window aggregation → complete-window
   * filter → derived recompute → service-only fields → CVD → tail(limit).
   *
-  * The result set is driver-bounded (≤ max_limit bars, reference
-  * `config.py:14-15`), so the trailing single-partition window for CVD
-  * and the top-k tail are cheap; the heavy part — the per-window
-  * aggregation — is one shuffle with partial aggregation.
+  * The result set is at most `limit` bars, so the trailing
+  * single-partition window for CVD and the top-k tail stay
+  * driver-sized (the reference caps `limit` at max_limit,
+  * `config.py:14-15`; this API does not). The API's input is one symbol's
+  * window, which the single-symbol lake reads hand over as ONE
+  * partition when it spans at most `DayDirs.SingleTaskMaxDays` day
+  * dirs: the ffill, the bucket aggregate, the CVD/lag windows and the
+  * tail then plan no exchange at all. Lake-scale (multi-series)
+  * callers pass `partitionCols`, so every window, groupBy and tail is
+  * keyed by the series and shuffles by it instead of single-tasking.
   */
 object QueryAggregator {
 

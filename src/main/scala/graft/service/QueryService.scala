@@ -10,7 +10,7 @@ import scala.concurrent.{Future, Promise}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{MinuteBuilder, QueryAggregator}
+import graft.operators.{Indicators, QueryAggregator}
 import graft.schema.Timeframes
 import graft.sources.MinuteLakeReader
 
@@ -172,7 +172,11 @@ object QueryService {
   final case class CanonicalWindow(frame: DataFrame, coverage: WindowCoverage)
 
   /** Load [start, end] canonical minutes with latest-wins dedup and
-    * coverage check (reference `service.py:1036-1117`). */
+    * coverage check (reference `service.py:1036-1117`). The coverage
+    * costs one `countDistinct` job; only the on-demand rebuild
+    * ([[loadCanonicalWindowWithRebuild]]) reads it, to decide whether to
+    * patch. Routes that only serve the window call
+    * `reader.readWindow` directly. */
   def loadCanonicalWindow(spark: SparkSession, reader: MinuteLakeReader,
                           symbol: String, start: Instant, end: Instant): CanonicalWindow = {
     val df = reader.readWindow(spark, symbol, start, end)
@@ -376,8 +380,7 @@ object QueryService {
                  timeframe: String, start: Instant, end: Instant,
                  limit: Int = 200): DataFrame = {
     val spec = Timeframes.parse(timeframe)
-    candleBarsFromFrame(loadCanonicalWindow(spark, reader, symbol, start, end).frame,
-      spec, limit)
+    candleBarsFromFrame(reader.readWindow(spark, symbol, start, end), spec, limit)
   }
 
   /** The aggregate-vs-passthrough core of [[candleBars]], callable on any
@@ -438,10 +441,10 @@ object QueryService {
   }
 
   /** BTC local-only route result (reference `service.py:1729-1831`).
-    * @param release unpersists the winning cached frame — call once the
-    *                caller has materialized `frame` (a long-lived service
-    *                would otherwise accumulate one persisted stage per
-    *                request) */
+    * @param frame   a local frame over the ≤ limit bars already collected
+    * @param release a no-op: the route pins nothing, so a served request
+    *                leaves no cached state; kept so callers that release
+    *                after materializing keep compiling */
   final case class BtcLocalResult(frame: DataFrame, source: String,
                                   sourceStrategy: String, fetchMode: String,
                                   notes: Seq[String],
@@ -451,7 +454,12 @@ object QueryService {
     * `service.py:1729-1831`): for timeframes above 3m, try the HTF lake
     * directly; if it can't fill the limit, aggregate the local 1m lake;
     * if neither covers, serve the best partial frame — never a Binance
-    * fallback. Notes follow the reference vocabulary. */
+    * fallback. Notes follow the reference vocabulary.
+    *
+    * Each strategy's tail (≤ limit bars) is collected once and the
+    * choice is made on the collected row counts; the returned frame is
+    * a local frame over the winner's rows, so the caller's collect
+    * re-reads nothing and nothing stays cached. */
   def btcLocalOnlyBars(spark: SparkSession, minuteReader: MinuteLakeReader,
                        htfReader: graft.sources.HtfLakeReader,
                        symbol: String, timeframe: String,
@@ -459,60 +467,56 @@ object QueryService {
     val spec = Timeframes.parse(timeframe)
     val start = spec.addBuckets(resolvedEnd, -limit)
     val notes = scala.collection.mutable.Buffer[String]()
+    // (local frame over the collected rows, row count)
+    def collected(df: DataFrame): (DataFrame, Long) = {
+      val rows = df.collect()
+      (spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), rows.length)
+    }
 
-    var htfFrame: Option[DataFrame] = None
+    var htfBars: Option[(DataFrame, Long)] = None
     if (spec.fixedMinutes.forall(_ > 3)) {
       // end bound = last bucket whose FULL span fits inside the request
       // (latestCompleteBucketStart) — a later bucket's minutes extend
       // past resolvedEnd, so the 1m path could never serve it and the
       // two strategies must agree on the bar set (also correct for
       // non-bucket-aligned ends)
-      htfFrame = spec.latestCompleteBucketStart(resolvedEnd).flatMap(htfEnd =>
+      htfBars = spec.latestCompleteBucketStart(resolvedEnd).flatMap(htfEnd =>
         htfReader.readWindow(spark, spec.name, symbol, start, htfEnd))
-        .map(_.orderBy(col("timestamp").desc).limit(limit).orderBy("timestamp").persist())
-      val htfCount = htfFrame.map(_.count()).getOrElse(0L)
-      if (htfCount >= limit) {
-        val winner = htfFrame.get
-        return BtcLocalResult(winner, "local", "local_higher_timeframe_lake",
-          "direct_local_higher_tf", Seq("using_local_btc_higher_timeframe_lake"),
-          release = () => { winner.unpersist(); () })
-      }
+        .map(df => collected(
+          df.orderBy(col("timestamp").desc).limit(limit).orderBy("timestamp")))
+      val htfCount = htfBars.map(_._2).getOrElse(0L)
+      if (htfCount >= limit)
+        return BtcLocalResult(htfBars.get._1, "local", "local_higher_timeframe_lake",
+          "direct_local_higher_tf", Seq("using_local_btc_higher_timeframe_lake"))
       notes += (if (htfCount > 0) "btc_higher_tf_local_lake_partial_window"
                 else "btc_higher_tf_local_lake_missing_required_window")
       notes += "btc_higher_tf_local_minute_aggregation_fallback"
     }
 
-    val win = loadCanonicalWindow(spark, minuteReader, symbol, start, resolvedEnd)
-    val aggregate = QueryAggregator
-      .aggregateCanonicalFrame(win.frame, spec, limit).persist()
-    val aggCount = aggregate.count()
+    val (aggregate, aggCount) = collected(QueryAggregator.aggregateCanonicalFrame(
+      minuteReader.readWindow(spark, symbol, start, resolvedEnd), spec, limit))
     if (aggCount >= limit) {
-      htfFrame.foreach(_.unpersist()) // losing frame
       notes += "using_local_btc_minute_lake"
       notes += "btc_local_path_selected"
       return BtcLocalResult(aggregate, "local", "local_minute_lake_preferred",
-        "aggregate_from_1m", notes.toSeq,
-        release = () => { aggregate.unpersist(); () })
+        "aggregate_from_1m", notes.toSeq)
     }
 
     // best partial frame, no Binance fallback (service.py:1696,1806-1831)
-    val htfCount = htfFrame.map(_.count()).getOrElse(0L)
+    val htfCount = htfBars.map(_._2).getOrElse(0L)
     val useAgg = aggCount >= htfCount
-    val partial = if (useAgg) aggregate else htfFrame.get
-    (if (useAgg) htfFrame else Some(aggregate)).foreach(_.unpersist())
     val partialCount = math.max(aggCount, htfCount)
     if (aggCount > 0) notes += "using_local_btc_minute_lake"
     notes += "local_btc_missing_required_window"
     notes += "btc_local_only_no_binance_fallback"
-    BtcLocalResult(partial,
+    BtcLocalResult(if (useAgg) aggregate else htfBars.get._1,
       source = if (partialCount > 0) "local" else "local_unavailable",
       sourceStrategy = if (useAgg) "local_minute_lake_preferred"
                        else "local_higher_timeframe_lake",
       fetchMode =
         if (partialCount == 0) "local_only_unavailable"
         else if (useAgg) "aggregate_from_1m" else "direct_local_higher_tf",
-      notes = notes.toSeq,
-      release = () => { partial.unpersist(); () })
+      notes = notes.toSeq)
   }
 
   /** Native candle route result (§3.1 step 5c).
@@ -588,7 +592,8 @@ object QueryService {
   /** Indicator payload (reference `live_indicators/service.py:32-238`):
     * TradingView EMA over the trailing bars of one timeframe plus
     * traditional pivots from the PREVIOUS completed period of another.
-    * Both computations share one canonical window load. */
+    * Both computations share one window read (five columns) and cost one
+    * action each. */
   final case class IndicatorPayload(emaTf: String, emaLength: Int,
                                     ema: Option[Double], emaBarTs: Option[String],
                                     pivotTf: String,
@@ -606,36 +611,38 @@ object QueryService {
     val pivotStart = pivotSpec.addBuckets(endTime, -1)
     val start = if (emaStart.isBefore(pivotStart)) emaStart else pivotStart
 
-    val window = loadCanonicalWindow(spark, reader, symbol, start, endTime).frame
+    val window = reader.readWindow(spark, symbol, start, endTime)
+      .select("timestamp", "open", "high", "low", "close")
 
     // indicator bars use the dedicated OHLC aggregation with non-null
-    // gates and end-exclusive bound (live_indicators/aggregation.py:22-75)
-    val emaAgg = graft.operators.Indicators.aggregateOhlcBars(
-      window.select("timestamp", "open", "high", "low", "close"), emaSpec, endTime)
-    val withEma = graft.operators.Indicators.withEma(emaAgg, "close", emaLength)
-      .orderBy(col("timestamp").desc).limit(1)
-      .select(col("timestamp"), col("ema")).collect().headOption
-    val emaVal = withEma.flatMap(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
-    val emaTs = withEma.map(r => r.getTimestamp(0).toInstant.toString)
+    // gates and end-exclusive bound (live_indicators/aggregation.py:22-75);
+    // only the last complete bar's EMA is served, so it is read off the
+    // end of the recursion's arrays (Indicators.emaArrays, the ones
+    // withEma explodes) instead of joining every bar's EMA back
+    val lastBar = Indicators.emaArrays(
+        Indicators.aggregateOhlcBars(window, emaSpec, endTime), "close", emaLength)
+      .where(size(col("ks")) > 0)
+      .select(element_at(col("ks"), -1), element_at(col("emas"), -1))
+      .collect().headOption
+    val emaVal = lastBar.flatMap(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+    val emaTs = lastBar.map(r => r.getTimestamp(0).toInstant.toString)
 
-    // previous completed pivot period: [start-1 bucket, current bucket)
+    // previous completed pivot period: [start-1 bucket, current bucket);
+    // the pivots are columns of the period's own aggregate (all NULL
+    // when the period has no complete H/L/C)
     val prevStart = pivotSpec.addBuckets(endTime, -1)
     val prevEnd = pivotSpec.floorInstant(endTime)
+    val pivotExprs = Indicators.pivotPoints(col("h"), col("l"), col("c"))
     val prev = window
       .where(col("timestamp") >= java.sql.Timestamp.from(prevStart) &&
         col("timestamp") < java.sql.Timestamp.from(prevEnd))
       .agg(max(col("high")).as("h"), min(col("low")).as("l"),
         graft.ops.Ops.lastByOrd(col("close"), col("timestamp")).as("c"))
-      .collect().headOption
-    val pivots = prev match {
-      case Some(r) if !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) =>
-        val exprs = graft.operators.Indicators.pivotPoints(lit(r.getDouble(0)),
-          lit(r.getDouble(1)), lit(r.getDouble(2)))
-        val row = spark.range(1).select(exprs.map { case (n, e) => e.as(n) }: _*)
-          .collect().head
-        exprs.map(_._1).zipWithIndex.map { case (n, i) => n -> row.getDouble(i) }.toMap
-      case _ => Map.empty[String, Double]
-    }
+      .select(pivotExprs.map { case (n, e) => e.as(n) }: _*)
+      .collect().head
+    val pivots =
+      if (prev.isNullAt(0)) Map.empty[String, Double]
+      else pivotExprs.map(_._1).zipWithIndex.map { case (n, i) => n -> prev.getDouble(i) }.toMap
     IndicatorPayload(emaTf, emaLength, emaVal, emaTs, pivotTf, pivots)
   }
 

@@ -19,6 +19,13 @@ import graft.sources.{LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionL
   * window read and the patch write itself every `sampleEvery` patches;
   * then compact and re-measure.
   *
+  * The measured read is `MinuteLakeReader.readWindow`, a one-day
+  * window, which runs as ONE task ([[graft.sources.DayDirs.singleTaskIfBounded]]).
+  * `boundedRead` figures recorded before the single-symbol reads became
+  * one partition (SURVEY's delta-accumulation annex) timed a parallel
+  * scan plus a shuffled dedup on `local[32]`, and do not compare with
+  * figures taken since.
+  *
   * Run: `sbt "runMain graft.tools.DeltaAccumProbe [width] [patches]"`
   * (defaults 1000 / 24).
   */

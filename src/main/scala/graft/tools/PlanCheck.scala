@@ -49,24 +49,20 @@ object PlanCheck {
     "qagg_aggregate_15m", "native_enrich_route", "mb_canonical_build",
     "ind_pivot_points", "w5_bounded_ffill", "j3_align_close")
 
-  /** Partition-unbounded window operators in `plan`, descending through
-    * AQE wrappers, query stages, and reused exchanges. */
-  def unpartitionedWindows(plan: SparkPlan): Seq[String] = {
-    val out = scala.collection.mutable.Buffer[String]()
-    def walk(n: SparkPlan): Unit = n match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case r: ReusedExchangeExec => walk(r.child)
-      case w: WindowExec =>
-        if (w.partitionSpec.isEmpty) out += w.simpleString(80)
-        w.children.foreach(walk)
-      case w: WindowGroupLimitExec =>
-        if (w.partitionSpec.isEmpty) out += w.simpleString(80)
-        w.children.foreach(walk)
-      case other => other.children.foreach(walk)
-    }
-    walk(plan)
-    out.toSeq
+  /** Every operator of `plan` in pre-order, descending through AQE
+    * wrappers, query stages, and reused exchanges — after execution an
+    * AQE plan shows its final stages, exchanges included. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case n => n +: n.children.flatMap(nodes)
+  }
+
+  /** Partition-unbounded window operators in `plan` ([[nodes]]). */
+  def unpartitionedWindows(plan: SparkPlan): Seq[String] = nodes(plan).collect {
+    case w: WindowExec if w.partitionSpec.isEmpty => w.simpleString(80)
+    case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w.simpleString(80)
   }
 
   /** Audit every SparkEntry query; returns (query → offending windows)

@@ -848,22 +848,6 @@ class AggregatorRunnerSpec extends SparkSpec {
     AggregatorRunner.runBackfillAll(spark, reader, hw, state, s"$dir/htf", spec)
     tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg) // accounting poll
 
-    def jobsOf[T](body: => T): (T, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val r = body
-        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
-        (r, jobs.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val (steady, steadyJobs) = jobsOf(
       tick(reader, hw, state, s"$dir/htf", spec, sourceLedger = lg))
     assert(steady.bucketsScanned == 0 && steady.bucketsWritten == 0)

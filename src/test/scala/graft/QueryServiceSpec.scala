@@ -255,6 +255,38 @@ class QueryServiceSpec extends SparkSpec {
     assert(p.keySet == Set("p", "r1", "r2", "s1", "s2"))
     val (hi, lo, cl) = (160.0 + 59 + 1.0, 160.0 - 1.0, 160.0 + 59 + 0.5)
     assert(math.abs(p("p") - (hi + lo + cl) / 3.0) < 1e-9)
+    // every pivot follows the pivotPoints formula, not only p
+    val pv = (hi + lo + cl) / 3.0
+    val wantPivots = Map("p" -> pv, "r1" -> (pv * 2.0 - lo), "r2" -> (pv + (hi - lo)),
+      "s1" -> (pv * 2.0 - hi), "s2" -> (pv - (hi - lo)))
+    wantPivots.foreach { case (k, v) => assert(math.abs(p(k) - v) < 1e-9, k) }
+    // the EMA is TradingView's over the window's complete 5m bars (the
+    // window opens at 11:00, the pivot period's start, which reaches
+    // further back than the 9-bar warm-up): SMA seed over the first 3
+    // closes, then the α-blend; it is served at the last complete bar
+    val closes = (0 until 12).map(j => 164.5 + 5 * j)
+    val a = 2.0 / (3 + 1.0)
+    val wantEma = closes.drop(3).foldLeft(closes.take(3).sum / 3.0) { (e, x) =>
+      a * x + (1.0 - a) * e
+    }
+    assert(math.abs(payload.ema.get - wantEma) < 1e-9)
+    assert(payload.emaBarTs.contains("2026-01-15T11:55:00Z"))
+
+    def at(end: String, emaLength: Int) = graft.service.QueryService.indicatorPayload(
+      spark, reader, "BTCUSDT", emaTf = "5m", emaLength = emaLength, pivotTf = "1h",
+      endTime = instant(end))
+    // fewer complete bars (24) than the EMA length: no EMA, but the bar
+    // it would be served at is still reported
+    val short = at("2026-01-15T12:00:00Z", emaLength = 100)
+    assert(short.ema.isEmpty && short.emaBarTs.contains("2026-01-15T11:55:00Z"))
+    assert(short.pivots == p)
+    // no complete bar at all (10:00-10:03 only): neither is reported
+    val none = at("2026-01-15T10:03:00Z", emaLength = 3)
+    assert(none.ema.isEmpty && none.emaBarTs.isEmpty && none.pivots.isEmpty)
+    // an empty previous pivot period (09:00-10:00) serves no pivots
+    val noPivots = at("2026-01-15T10:30:00Z", emaLength = 3)
+    assert(noPivots.pivots.isEmpty)
+    assert(noPivots.ema.isDefined && noPivots.emaBarTs.contains("2026-01-15T10:25:00Z"))
   }
 
   test("canonical window load reports coverage (service.py:1036-1117)") {
@@ -768,5 +800,141 @@ class QueryServiceSpec extends SparkSpec {
     assert(enriched.notes.contains("mark_price_alignment_asof_backward_max_age_1bar"))
     assert(enriched.notes.contains("mark_price_alignment_exact_timestamp"))
     enriched.release()
+  }
+
+  /** A day-wide lake with an HTF tree: `hours` hours of minutes for
+    * BTCUSDT and ETHUSDT from `from`, and BTCUSDT's `htfTf` buckets
+    * backfilled. */
+  private def lakeWithHtf(from: java.time.Instant, hours: Int, htfTf: String)
+      : (graft.sources.MinuteLakeReader, graft.sources.HtfLakeReader) = {
+    import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
+    val dir = java.nio.file.Files.createTempDirectory("graft-served").toString
+    val base = Seq("BTCUSDT", "ETHUSDT").toDF("symbol")
+      .crossJoin(spark.range(hours * 60L).select(
+        timestamp_millis(lit(from.toEpochMilli) + col("id") * 60000L).as("timestamp"),
+        (lit(100.0) + col("id") % 50).as("open")))
+      .withColumn("high", col("open") + 1.0).withColumn("low", col("open") - 1.0)
+      .withColumn("close", col("open") + 0.5)
+      .withColumn("volume_btc", lit(1.2)).withColumn("volume_usdt", lit(120000.0))
+      .withColumn("trade_count", lit(10L))
+    val minutes = graft.schema.CanonicalSchema.columns.foldLeft(base) { (df, c) =>
+      if (df.columns.contains(c.name)) df.withColumn(c.name, col(c.name).cast(c.sparkType))
+      else df.withColumn(c.name, lit(null).cast(c.sparkType))
+    }
+    new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
+      LakeLayout.DayWide(filesPerDay = 4)).writeDaysWide(minutes)
+    val reader = new MinuteLakeReader(dir)
+    graft.operators.AggregatorRunner.runBackfillAll(spark, reader,
+      new HtfLakeWriter(s"$dir/htf", LakeLayout.DayWide(filesPerDay = 4)),
+      new graft.operators.AggregatorRunner.AggregatorStateStore(s"$dir/_agg"),
+      s"$dir/htf", graft.schema.Timeframes.parse(htfTf))
+    (reader, new HtfLakeReader(s"$dir/htf"))
+  }
+
+  /** Six hours from 2026-01-15T00:00Z, 15m buckets (no 5m tree). */
+  private lazy val servedLake = lakeWithHtf(instant("2026-01-15T00:00:00Z"), 6, "15m")
+
+  private val ServedEnd = instant("2026-01-15T06:00:00Z")
+
+  test("served routes cost one pass: per-route job budget") {
+    val (reader, htfReader) = servedLake
+    // each count includes the read's parquet schema-inference job
+    val (bars, candleJobs) = jobsOf(QueryService.candleBars(spark, reader, "ETHUSDT",
+      "5m", instant("2026-01-15T05:00:00Z"), ServedEnd, limit = 12).toJSON.collect())
+    assert(bars.length == 12)
+    assert(candleJobs == 2, s"candleBars + collect: $candleJobs jobs")
+
+    val (ind, indicatorJobs) = jobsOf(QueryService.indicatorPayload(spark, reader,
+      "ETHUSDT", emaTf = "15m", emaLength = 3, pivotTf = "1h", endTime = ServedEnd))
+    assert(ind.ema.isDefined && ind.pivots.size == 5)
+    assert(indicatorJobs == 3, s"indicatorPayload: $indicatorJobs jobs")
+
+    val ((btc, btcRows), btcJobs) = jobsOf {
+      val r = QueryService.btcLocalOnlyBars(spark, reader, htfReader, "BTCUSDT",
+        "15m", ServedEnd, limit = 8)
+      (r, r.frame.toJSON.collect())
+    }
+    assert(btc.fetchMode == "direct_local_higher_tf" && btcRows.length == 8)
+    assert(btcJobs == 3, s"btcLocalOnlyBars (HTF direct) + collect: $btcJobs jobs")
+  }
+
+  test("bounded single-symbol reads are one partition; candleBars plans no exchange") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import graft.tools.PlanCheck
+    val (reader, htfReader) = servedLake
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      PlanCheck.nodes(df.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec => e.simpleString(80)
+        case e: BroadcastExchangeExec => e.simpleString(80)
+      }
+    val lo = instant("2026-01-15T05:00:00Z")
+    val minuteWindow = reader.readWindow(spark, "ETHUSDT", lo, ServedEnd)
+    val htfWindow = htfReader.readWindow(spark, "15m", "BTCUSDT", lo, ServedEnd).get
+    for ((what, w) <- Seq("MinuteLakeReader" -> minuteWindow, "HtfLakeReader" -> htfWindow)) {
+      assert(w.rdd.getNumPartitions == 1, what)
+      assert(exchanges(w).isEmpty, s"$what.readWindow: ${exchanges(w)}")
+    }
+    assert(minuteWindow.count() == 60 && htfWindow.count() == 4)
+
+    // the AQE final plan of a served collect
+    val bars = QueryService.candleBars(spark, reader, "ETHUSDT", "5m", lo, ServedEnd,
+      limit = 12)
+    assert(bars.collect().length == 12)
+    assert(exchanges(bars).isEmpty, s"candleBars: ${exchanges(bars)}")
+  }
+
+  test("a window over more than SingleTaskMaxDays day dirs keeps a parallel scan") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.sources.DayDirs
+    val n = DayDirs.SingleTaskMaxDays
+    val from = instant("2026-01-01T00:00:00Z")
+    val (reader, htfReader) = lakeWithHtf(from, (n + 1) * 24, "1d")
+    def shuffles(df: org.apache.spark.sql.DataFrame) =
+      graft.tools.PlanCheck.nodes(df.queryExecution.executedPlan)
+        .collect { case e: ShuffleExchangeExec => e }.size
+    val end = from.plus(java.time.Duration.ofDays(n + 1L)).minusSeconds(60)
+    val lastN = from.plus(java.time.Duration.ofDays(1))
+    // n day dirs: one partition, no exchange
+    val minuteN = reader.readWindow(spark, "ETHUSDT", lastN, end)
+    val htfN = htfReader.readWindow(spark, "1d", "BTCUSDT", lastN, end).get
+    for ((what, w) <- Seq("MinuteLakeReader" -> minuteN, "HtfLakeReader" -> htfN)) {
+      assert(w.rdd.getNumPartitions == 1, what)
+      assert(shuffles(w) == 0, what)
+    }
+    // n + 1 day dirs: the scan stays parallel and the dedup shuffles
+    val minuteAll = reader.readWindow(spark, "ETHUSDT", from, end)
+    val htfAll = htfReader.readWindow(spark, "1d", "BTCUSDT", from, end).get
+    for ((what, w) <- Seq("MinuteLakeReader" -> minuteAll, "HtfLakeReader" -> htfAll))
+      assert(shuffles(w) > 0, what)
+    assert(minuteN.count() == n * 1440L && minuteAll.count() == (n + 1) * 1440L)
+    assert(htfN.count() == n && htfAll.count() == n + 1)
+  }
+
+  test("served requests leave no cached state") {
+    val (reader, htfReader) = servedLake
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache() // start empty: other specs share this session
+    def btc(tf: String, limit: Int) = {
+      val r = QueryService.btcLocalOnlyBars(spark, reader, htfReader, "BTCUSDT", tf,
+        ServedEnd, limit)
+      assert(r.frame.collect().nonEmpty)
+      assert(cacheManager.isEmpty, s"${r.fetchMode}/${r.sourceStrategy} left a cache entry")
+      r.release() // harmless: nothing to release
+      r.release()
+      assert(r.frame.count() > 0)
+      r
+    }
+    assert(btc("15m", 8).fetchMode == "direct_local_higher_tf")
+    // no 5m tree: the minute lake fills the limit
+    assert(btc("5m", 12).notes.contains("btc_local_path_selected"))
+    // nothing fills 100 bars: the best partial
+    assert(btc("15m", 100).notes.contains("btc_local_only_no_binance_fallback"))
+
+    QueryService.candleBars(spark, reader, "ETHUSDT", "5m",
+      instant("2026-01-15T05:00:00Z"), ServedEnd, limit = 12).toJSON.collect()
+    assert(cacheManager.isEmpty, "candleBars left a cache entry")
+    QueryService.indicatorPayload(spark, reader, "ETHUSDT", emaTf = "15m",
+      emaLength = 3, pivotTf = "1h", endTime = ServedEnd)
+    assert(cacheManager.isEmpty, "indicatorPayload left a cache entry")
   }
 }

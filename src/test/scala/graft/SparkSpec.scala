@@ -30,4 +30,22 @@ trait SparkSpec extends AnyFunSuite {
   def instant(s: String): java.time.Instant = java.time.Instant.parse(s)
 
   def ms(s: String): Long = java.time.Instant.parse(s).toEpochMilli
+
+  /** `body`'s result and the Spark jobs it launched (the listener bus is
+    * drained before and after, so no other work's jobs are counted). */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
