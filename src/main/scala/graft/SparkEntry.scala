@@ -1089,9 +1089,9 @@ object SparkEntry {
     // ann_lsh_autosize. The sf10 probe traced dedup_cc_canonical's
     // super-linear tail to the FIXED 8x2 geometry the small-parameter
     // oracles use (in-bucket pair work is quadratic under a fixed
-    // geometry; LshGeomProbe measured 204M->88M candidate pairs at 500k
-    // docs from re-sizing alone) — this query pins the sizing decision
-    // AND the occupancy histogram under it against a DuckDB mirror that
+    // geometry; the geometry probe in SURVEY §8.11 measured 204M->88M
+    // candidate pairs at 500k docs from re-sizing alone) — this query
+    // pins the sizing decision AND the occupancy histogram under it against a DuckDB mirror that
     // derives the same geometry from count(*) with integer-exact
     // comparisons (no float log boundary can flip either side).
     "dedup_minhash_autosize" -> ((s, dir) => {
@@ -1531,7 +1531,7 @@ object SparkEntry {
     // (VERDICT r13 #4): members whose star edge failed exact verify
     // re-pair with their bucket predecessor and verify once more.
     // Verify volume stays linear in bucket occupancy (< 2× star);
-    // recall recovers the chain loss mode (measured: StarRecallProbe).
+    // recall recovers the chain loss mode (measured: SURVEY §8.17).
     "dedup_cc_verified_star_rescue" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), TextFns.shingleHashesFromText("text", 3).as("sh"))

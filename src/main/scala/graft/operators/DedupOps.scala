@@ -27,10 +27,10 @@ import org.apache.spark.sql.functions._
   *    assignment is identical to all-pairs (sf0.01: 476/476
   *    components, sf10: 5,268/5,268, zero docs differ).
   *
-  *    MEASURED DOMAIN BOUNDARY (StarRecallProbe, r13; rescue measured
-  *    r14): the equality holds for CLUSTER-shaped duplicate structure
-  *    (verbatim/variant groups — every member is a true dup of every
-  *    other, so any bucket-min is a valid hub). On CHAIN-shaped
+  *    MEASURED DOMAIN BOUNDARY (SURVEY §8.16, r13; rescue measured
+  *    r14, §8.17): the equality holds for CLUSTER-shaped duplicate
+  *    structure (verbatim/variant groups — every member is a true dup
+  *    of every other, so any bucket-min is a valid hub). On CHAIN-shaped
   *    structure (adjacent-overlap near-dups where skip-one members
   *    co-bucket but fail the exact verify) star loses real recall:
   *    56.2% vs 51.0% pair recall at 500k docs (81.3% vs 74.6% at 20k
@@ -112,7 +112,7 @@ object DedupOps {
 
   /** STAR plus ONE rescue round — the chain-recall repair for the star
     * policy (VERDICT r13 #4). Star's measured loss mode
-    * (StarRecallProbe): on CHAIN-shaped near-dups the bucket-min is
+    * (SURVEY §8.16): on CHAIN-shaped near-dups the bucket-min is
     * often a member that is NOT a true dup of the far members, so its
     * (min, member) edges fail the exact verify and the chain never
     * bridges. Rescue: every member whose star edge FAILED verify is

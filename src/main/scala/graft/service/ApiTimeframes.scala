@@ -24,6 +24,10 @@ object ApiTimeframes {
 
   val supportedNames: Seq[String] = Seq("1m", "3m", "5m", "15m", "1hr", "4hr")
 
+  /** Most bars one timeframe may request, query or inline limit alike
+    * (reference `max_limit`, `live_data_api_service/config.py:14-16`). */
+  val MaxLimit = 500
+
   private val aliases =
     Map("1h" -> "1hr", "60m" -> "1hr", "4h" -> "4hr", "240m" -> "4hr")
 
@@ -74,6 +78,9 @@ object ApiTimeframes {
         if (parsed < 1)
           throw new IllegalArgumentException(
             s"Limit for timeframe '${spec.apiName}' must be at least 1")
+        if (parsed > MaxLimit)
+          throw new IllegalArgumentException(
+            s"Limit for timeframe '${spec.apiName}' must be at most $MaxLimit")
         parsed
       }
       if (!resolved.contains(spec.apiName))

@@ -63,7 +63,8 @@ object HttpFacade {
             val q = PerpetualQuery(
               coin = required(request, "coin"),
               tfs = required(request, "tfs"),
-              limit = optionalInt(request, "limit", atLeast = 1),
+              limit = optionalInt(request, "limit", atLeast = 1,
+                atMost = ApiTimeframes.MaxLimit),
               endTime = request.query.get("end_time"))
             finish(200, perpetual(q), embedTime = true)
           case "/api/v1/live-indicators" =>
@@ -92,17 +93,19 @@ object HttpFacade {
         .getOrElse(throw ValidationError(s"field required: $name"))
 
     private def requiredInt(request: HttpRequest, name: String, atLeast: Int): Int =
-      parseInt(name, required(request, name), atLeast)
+      parseInt(name, required(request, name), atLeast, Int.MaxValue)
 
     private def optionalInt(request: HttpRequest, name: String,
-                            atLeast: Int): Option[Int] =
-      request.query.get(name).map(parseInt(name, _, atLeast))
+                            atLeast: Int, atMost: Int): Option[Int] =
+      request.query.get(name).map(parseInt(name, _, atLeast, atMost))
 
-    private def parseInt(name: String, raw: String, atLeast: Int): Int = {
+    private def parseInt(name: String, raw: String, atLeast: Int, atMost: Int): Int = {
       val v = raw.trim.toIntOption.getOrElse(
         throw ValidationError(s"$name must be an integer"))
       if (v < atLeast)
         throw ValidationError(s"$name must be at least $atLeast")
+      if (v > atMost)
+        throw ValidationError(s"$name must be at most $atMost")
       v
     }
   }

@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ops.Ops
 import graft.schema.CanonicalSchema
@@ -249,11 +250,7 @@ class MinuteLakeReader(root: String) {
 
   private def emptyFrame(spark: SparkSession, withSymbol: Boolean): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      if (!withSymbol) CanonicalSchema.structType
-      else org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("symbol",
-          org.apache.spark.sql.types.StringType) +:
-        CanonicalSchema.structType.fields))
+      if (withSymbol) MinuteLakeReader.FileSchema else CanonicalSchema.structType)
 
   // ------------------------------------------------ delta overlay
   // Late point repairs land as small `_delta/year=/month=/day=` files
@@ -387,7 +384,7 @@ class MinuteLakeReader(root: String) {
     * row-group stats to skip within it). The touched day dirs are read
     * EXPLICITLY — `spark.read(root)` + a partition predicate still LISTS
     * every file in the lake before pruning, so bounded windows paid
-    * O(depth) listing (WideDepthProbe); the directory walk is
+    * O(depth) listing (SURVEY §8.16); the directory walk is
     * metadata-only. */
   def readWindowAllSymbols(spark: SparkSession, start: Instant,
                            end: Instant): Option[DataFrame] = {
@@ -449,7 +446,7 @@ class MinuteLakeReader(root: String) {
 
   /** min/max timestamp of one symbol. A whole-lake footer scan costs
     * O(depth × filesPerDay) listings+footers (measured 4.8 s at 365
-    * days, WideDepthProbe), and [[latestMinute]] sits on the per-symbol
+    * days, SURVEY §8.16), and [[latestMinute]] sits on the per-symbol
     * incremental tick — so this probes day partitions from each END of
     * the date-sorted directory list in exponentially growing batches
     * instead: a symbol present at the lake edges (the steady state)
@@ -529,7 +526,7 @@ class MinuteLakeReader(root: String) {
     * nulls-last tuple. The touched day dirs are read EXPLICITLY — a
     * partition predicate on a root-read lists every file in the lake
     * before pruning, so a 3-hour request paid O(depth) listing + footer
-    * reads (request latency ×5.7 from 30 to 365 days, WideDepthProbe).
+    * reads (request latency ×5.7 from 30 to 365 days, SURVEY §8.16).
     * The directory walk is O(depth) metadata; the read is O(window).
     *
     * A window over at most [[DayDirs.SingleTaskMaxDays]] day dirs is
@@ -538,12 +535,18 @@ class MinuteLakeReader(root: String) {
     * caller's windows, bucket aggregate and tail run in one task with
     * no exchange — a single partition satisfies every distribution they
     * require. A longer window, [[readWindowAllSymbols]], the scans and
-    * the writers keep their parallelism ([[DayDirs.singleTaskIfBounded]]). */
+    * the writers keep their parallelism ([[DayDirs.singleTaskIfBounded]]).
+    *
+    * The base read is given the lake's file schema
+    * ([[MinuteLakeReader.FileSchema]]; parquet resolves its columns by
+    * name, in whatever order a writer wrote them), so building the frame
+    * reads no footer: the request's first Spark job is its own action. */
   def readWindow(spark: SparkSession, symbol: String, start: Instant, end: Instant): DataFrame = {
     val days = if (hasDays(spark)) dayDirsInRange(spark, start, end) else Seq.empty
     val b =
       if (days.isEmpty) emptyFrame(spark, withSymbol = false)
-      else spark.read.option("basePath", lakeDir).parquet(days: _*)
+      else spark.read.schema(MinuteLakeReader.FileSchema)
+        .option("basePath", lakeDir).parquet(days: _*)
         .where(col("symbol") === symbol.toUpperCase)
         .drop("year", "month", "day", "symbol")
     val df = overlayDeltas(spark, b,
@@ -553,4 +556,10 @@ class MinuteLakeReader(root: String) {
     Ops.dedupKeepLast(DayDirs.singleTaskIfBounded(df, days.size), Seq("timestamp"),
       Seq(col("arrival_time"), col("event_time"), col("transact_time"), col("update_id_end")))
   }
+}
+
+object MinuteLakeReader {
+  /** A minute day file's columns: `symbol`, then the canonical schema. */
+  private[graft] val FileSchema: StructType =
+    StructType(StructField("symbol", StringType) +: CanonicalSchema.structType.fields)
 }

@@ -556,9 +556,9 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * delta files (read-overlay cost bound) OR its oldest delta file is
     * older than `policy.maxAgeMinutes` relative to `now` (staleness
     * bound — a quiet day with two ancient patches must not carry them
-    * forever). The DeltaAccumProbe showed overlay cost stays flat
-    * across accumulated deltas, so the cadence is an economics knob,
-    * not a correctness one: readers see identical rows pre-/post-fold
+    * forever). The delta-accumulation probe (SURVEY §8.17) showed
+    * overlay cost stays flat across accumulated deltas, so the cadence
+    * is an economics knob, not a correctness one: readers see identical rows pre-/post-fold
     * by construction (one shared [[MinuteLakeWriter.mergeKeyed]]).
     * Owned by [[graft.pipeline.Orchestrator.MinutePipeline]]'s tick. */
   def compactWideDeltasIfDue(spark: SparkSession, now: Instant,

@@ -42,7 +42,7 @@ import graft.functions.TextFns
   * against EVERY live member of its bucket (incident-pairs within the
   * horizon), not only the min, so a chain doc's true neighbor — when
   * co-bucketed and inside the horizon — is always among the candidates
-  * already. Measured (StreamNearDupProbe `chain:20000:8` leg, SURVEY
+  * already. Measured (the streaming probe's 20k-doc chain leg, SURVEY
   * §8.18): on the permuted-id chain corpus the full-span stream flags
   * equal the batch ALL-PAIRS est-gate's later-arriving sides exactly
   * (11,643/11,643, missed = 0, extra = 0) — all-pairs recall at

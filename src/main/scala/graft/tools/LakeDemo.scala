@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.MinuteBuilder
@@ -13,13 +12,7 @@ import graft.sources.{HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWri
   * pruned-scan physical plan. Run: `sbt "runMain graft.tools.LakeDemo"`. */
 object LakeDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors)
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("demo-lake").toString

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives a larger scale factor from an existing testdata directory by
@@ -30,17 +30,10 @@ object ScaleProbe {
     val src = args(0)
     val dst = args(1)
     val copies = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS): surfaces as epoch-ns long; the
-      // copy writes it back as int64, which SparkEntry.t() converts
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors)
+    // events.ts is TIMESTAMP(NANOS): surfaces as epoch-ns long; the
+    // copy writes it back as int64, which SparkEntry.t() converts
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // optional 4th arg: csv of tables to derive (default all) — a
     // documents-only sf100 for the dedup probes costs seconds instead

@@ -63,6 +63,22 @@ class HttpFacadeSpec extends AnyFunSuite {
     assert(router.handle(req("-5")).status == 422)
     assert(router.handle(req("abc")).status == 422)
     assert(router.handle(req("1")).status == 200)
+    // and at most max_limit (config.py:14-16), checked before the handler
+    var handled = Seq.empty[Option[Int]]
+    val capped = new Router(q => { handled :+= q.limit; okPerpetual(q) }, okIndicators)
+    assert(ApiTimeframes.MaxLimit == 500)
+    assert(capped.handle(req("500")).status == 200)
+    assert(handled == Seq(Some(500)))
+    val over = capped.handle(req("501"))
+    assert(over.status == 422 && over.body("detail") == "limit must be at most 500")
+    assert(handled == Seq(Some(500)))
+    // an inline limit is parsed by the handler: over the cap is a 400
+    val inline = capped.handle(HttpRequest("/api/v1/perpetual-data",
+      Map("coin" -> "BTC", "tfs" -> "5m=501")))
+    assert(inline.status == 400)
+    assert(inline.body("detail") == "Limit for timeframe '5m' must be at most 500")
+    assert(capped.handle(HttpRequest("/api/v1/perpetual-data",
+      Map("coin" -> "BTC", "tfs" -> "5m=500"))).status == 200)
   }
 
   test("service-level ValueError maps to 400 with detail (app.py:222-223)") {

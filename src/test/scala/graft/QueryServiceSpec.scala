@@ -838,16 +838,17 @@ class QueryServiceSpec extends SparkSpec {
 
   test("served routes cost one pass: per-route job budget") {
     val (reader, htfReader) = servedLake
-    // each count includes the read's parquet schema-inference job
+    // the minute reader's schema is fixed, so only the HTF-direct count
+    // includes a parquet schema-inference job
     val (bars, candleJobs) = jobsOf(QueryService.candleBars(spark, reader, "ETHUSDT",
       "5m", instant("2026-01-15T05:00:00Z"), ServedEnd, limit = 12).toJSON.collect())
     assert(bars.length == 12)
-    assert(candleJobs == 2, s"candleBars + collect: $candleJobs jobs")
+    assert(candleJobs == 1, s"candleBars + collect: $candleJobs jobs")
 
     val (ind, indicatorJobs) = jobsOf(QueryService.indicatorPayload(spark, reader,
       "ETHUSDT", emaTf = "15m", emaLength = 3, pivotTf = "1h", endTime = ServedEnd))
     assert(ind.ema.isDefined && ind.pivots.size == 5)
-    assert(indicatorJobs == 3, s"indicatorPayload: $indicatorJobs jobs")
+    assert(indicatorJobs == 2, s"indicatorPayload: $indicatorJobs jobs")
 
     val ((btc, btcRows), btcJobs) = jobsOf {
       val r = QueryService.btcLocalOnlyBars(spark, reader, htfReader, "BTCUSDT",

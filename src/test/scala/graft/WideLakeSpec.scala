@@ -136,6 +136,35 @@ class WideLakeSpec extends SparkSpec {
     assert(latestOf(frame) == wr.latestMinuteAllSymbols(spark))
   }
 
+  test("readWindow reads with the writers' schema: no footer job before an action") {
+    val frame = minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3)
+    val wRoot = Files.createTempDirectory("graft-wide-schema").toString
+    new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 2)).writeDaysWide(frame)
+    val lakeDir = s"$wRoot/futures/um/minute"
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(wRoot),
+      spark.sparkContext.hadoopConfiguration)
+    val Seq(day) = graft.sources.DayDirs.ascending(fs, lakeDir)
+    val inferred = spark.read.option("basePath", lakeDir).parquet(day)
+      .drop("year", "month", "day").schema
+    // parquet resolves columns by name, and a file source reads every
+    // column as nullable: compare (name, type) in name order (the file
+    // keeps its writer's column order; the canonical fields carry doc
+    // metadata the files do not)
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => f.name -> f.dataType).sortBy(_._1)
+    assert(fields(inferred) == fields(MinuteLakeReader.FileSchema))
+
+    val reader = new MinuteLakeReader(wRoot)
+    val lo = instant("2026-01-15T01:00:00Z"); val hi = instant("2026-01-15T01:59:00Z")
+    val (window, jobs) = jobsOf(reader.readWindow(spark, "BBBUSDT", lo, hi))
+    assert(jobs == 0, s"building the window ran $jobs jobs")
+    val expected = windowOf(frame, lo, hi).where(col("symbol") === "BBBUSDT").drop("symbol")
+    assert(window.columns.sorted.toSeq == expected.columns.sorted.toSeq)
+    assert(window.count() == 60 &&
+      window.exceptAll(expected.select(window.columns.map(col).toSeq: _*)).isEmpty)
+  }
+
   test("wide inspectRange/latestMinute: end-probed, parity incl. stragglers and absent symbols") {
     // EEEUSDT stops 10 hours into day 1 — the max-probe's first batch
     // (deepest day) finds nothing for it and must expand backward; the

@@ -18,6 +18,7 @@
 #   SOLO_SF1_DIR         derived sf1 corpus dir (default /tmp/sf1_de;
 #                        derived on first use, reused after)
 #   SPARK_DRIVER_MEM     heap (default 16g)
+#   SPARK_GRAFT_CPUS     Bench's local[N] (default: every core)
 #
 # The fixed set = the 6 slowest sf0.1 queries of the r14 full ledger
 # (the suite gained s16_wide_lake_roundtrip and
@@ -104,9 +105,9 @@ if [ -n "$SF1_QUERIES" ]; then
   done
 fi
 
-python3 - "$TMP" "$OUT" "$SF" "$SAMPLES" <<'PY'
+python3 - "$TMP" "$OUT" "$SF" "$SAMPLES" "${SPARK_GRAFT_CPUS:-$(nproc)}" <<'PY'
 import json, sys, os, glob
-tmp, out, sf, samples = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4]
+tmp, out, sf, samples, cpus = sys.argv[1:6]
 queries = {}
 for f in sorted(glob.glob(os.path.join(tmp, '*.json'))):
     base = os.path.basename(f)[:-len('.json')]
@@ -120,7 +121,7 @@ for f in sorted(glob.glob(os.path.join(tmp, '*.json'))):
     queries.setdefault(d['query'], {})[sfkey] = {
         k: d[k] for k in ('median', 'min', 'max', 'samples')}
 doc = {
-    'protocol': f'Bench --solo per query per JVM (warm-up + {samples} isolated samples), quiet box, local[32]',
+    'protocol': f'Bench --solo per query per JVM (warm-up + {samples} isolated samples), quiet box, local[{cpus}]',
     'sf_dir': sf,
     'queries': queries,
 }
