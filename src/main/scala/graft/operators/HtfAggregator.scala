@@ -151,38 +151,37 @@ object HtfAggregator {
       .agg(aggExprs.head, aggExprs.tail: _*)
 
     val weightedFinal = weightedByVolume.map { c =>
-      when(col(s"_${c}_weight_sum") > 0,
+      c -> when(col(s"_${c}_weight_sum") > 0,
         col(s"_${c}_weighted_sum") / col(s"_${c}_weight_sum"))
-        .otherwise(col(s"_${c}_mean")).as(c)
+        .otherwise(col(s"_${c}_mean"))
     }
 
-    var enriched = grouped
-      .withColumn("bucket_end", spec.bucketEnd(col("bucket_start")))
-      .withColumn("expected_minutes_in_bucket", spec.expectedMinutes(col("bucket_start")))
-      .withColumn("timeframe", lit(spec.name))
-      .withColumn("timestamp", col("bucket_start"))
-      .withColumn("missing_minutes_count",
-        col("expected_minutes_in_bucket") - col("observed_minutes_in_bucket"))
-      .withColumn("bucket_complete",
-        col("observed_minutes_in_bucket") === col("expected_minutes_in_bucket"))
-      .withColumn("vwap",
-        when(col("volume_btc") > 0, col("volume_usdt") / col("volume_btc")))
-      .withColumn("avg_trade_size_btc",
-        when(col("trade_count") > 0, col("volume_btc") / col("trade_count")))
-      .withColumn("taker_buy_ratio",
-        when(col("volume_btc") > 0, col("taker_buy_vol_btc") / col("volume_btc")))
-      .withColumn("liq_avg_fill_price",
-        when(col("_liq_weight_sum") > 0,
-          col("_liq_avg_fill_price_sum") / col("_liq_weight_sum")))
-      .withColumn("liq_unfilled_ratio",
-        when(col("_liq_weight_sum") > 0,
-          col("_liq_unfilled_ratio_sum") / col("_liq_weight_sum")))
-      .withColumn("realized_vol_htf", sqrt(coalesce(col("_realized_var"), lit(0.0))))
-    enriched =
-      if (byCols.contains("symbol")) enriched
-      else enriched.withColumn("symbol", lit(symbol))
-    for ((c, e) <- weightedByVolume.zip(weightedFinal))
-      enriched = enriched.withColumn(c, e)
+    // two projections rather than one withColumn per column: every
+    // Dataset step re-analyzes the whole aggregate below it, and twenty
+    // steps cost ~300 ms of planning CPU per call
+    val enriched = grouped
+      .withColumns((Seq(
+        "bucket_end" -> spec.bucketEnd(col("bucket_start")),
+        "expected_minutes_in_bucket" -> spec.expectedMinutes(col("bucket_start")),
+        "timeframe" -> lit(spec.name),
+        "timestamp" -> col("bucket_start"),
+        "vwap" -> when(col("volume_btc") > 0, col("volume_usdt") / col("volume_btc")),
+        "avg_trade_size_btc" ->
+          when(col("trade_count") > 0, col("volume_btc") / col("trade_count")),
+        "taker_buy_ratio" ->
+          when(col("volume_btc") > 0, col("taker_buy_vol_btc") / col("volume_btc")),
+        "liq_avg_fill_price" -> when(col("_liq_weight_sum") > 0,
+          col("_liq_avg_fill_price_sum") / col("_liq_weight_sum")),
+        "liq_unfilled_ratio" -> when(col("_liq_weight_sum") > 0,
+          col("_liq_unfilled_ratio_sum") / col("_liq_weight_sum")),
+        "realized_vol_htf" -> sqrt(coalesce(col("_realized_var"), lit(0.0)))) ++
+        (if (byCols.contains("symbol")) Nil else Seq("symbol" -> lit(symbol))) ++
+        weightedFinal).toMap)
+      .withColumns(Map(
+        "missing_minutes_count" ->
+          (col("expected_minutes_in_bucket") - col("observed_minutes_in_bucket")),
+        "bucket_complete" ->
+          (col("observed_minutes_in_bucket") === col("expected_minutes_in_bucket"))))
 
     val outCols = (byCols.filterNot(targetColumns.contains) ++ targetColumns).distinct
     val out = enriched.select(outCols.map(col): _*)

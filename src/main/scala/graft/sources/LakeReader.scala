@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ops.Ops
 import graft.schema.CanonicalSchema
@@ -46,11 +46,11 @@ private[graft] object DayDirs {
     } yield d.toString
   }
 
-  /** The (year, month, day) of a walked day-dir path — parsed from the
-    * directory names rather than re-constructed, so int- and zero-padded
-    * partition values both match. */
+  /** The (year, month, day) of a day dir or a path inside one (its
+    * `_delta` dir, a file) — parsed from the last three `key=value`
+    * names, so int- and zero-padded partition values both match. */
   def ymdOf(p: String): (Int, Int, Int) = {
-    val a = p.split('/').takeRight(3).map { s =>
+    val a = p.split('/').filter(_.contains('=')).takeRight(3).map { s =>
       s.substring(s.indexOf('=') + 1).toLongOption.getOrElse(-1L).toInt
     }
     (a(0), a(1), a(2))
@@ -176,7 +176,8 @@ class HtfLakeReader(root: String) {
     * the dedup and whatever the caller plans on top (windows,
     * aggregates, top-k tails) run in one task with no exchange. The
     * bound is the day-dir count the read already walks, so a longer
-    * window keeps its parallel scan ([[DayDirs.singleTaskIfBounded]]). */
+    * window keeps its parallel scan ([[DayDirs.singleTaskIfBounded]]).
+    * The read names the bar files' schema, so building it runs no job. */
   def readWindow(spark: SparkSession, timeframe: String, symbol: String,
                  start: Instant, end: Instant,
                  completeOnly: Boolean = true): Option[DataFrame] = {
@@ -189,7 +190,8 @@ class HtfLakeReader(root: String) {
     val days = DayDirs.inRange(fs, tfDir, start, end)
     val paths = if (days.nonEmpty) days else DayDirs.deepest(fs, tfDir, 1)
     if (paths.isEmpty) return None
-    var df = spark.read.option("basePath", tfDir).parquet(paths: _*)
+    var df = spark.read.schema(HtfLakeReader.fileSchema(spark, timeframe))
+      .option("basePath", tfDir).parquet(paths: _*)
       .where(col("symbol") === symbol.toUpperCase)
       .where(col("bucket_start").between(
         java.sql.Timestamp.from(start), java.sql.Timestamp.from(end)))
@@ -204,23 +206,42 @@ class HtfLakeReader(root: String) {
   }
 }
 
+object HtfLakeReader {
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** A `timeframe` bar file's columns, nullable as a file source reads
+    * them: the analyzed output of the aggregator that writes the files
+    * over an empty minute frame (no Spark job), cached per timeframe. */
+  private[graft] def fileSchema(spark: SparkSession, timeframe: String): StructType =
+    schemas.getOrElseUpdate(timeframe, StructType(graft.operators.HtfAggregator
+      .aggregateMinutes(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        MinuteLakeReader.FileSchema), graft.schema.Timeframes.parse(timeframe), symbol = "",
+        byCols = Seq("symbol"))
+      .schema.fields.map(_.copy(nullable = true))))
+}
+
 /** Minute-lake reader (reference `aggregator/source_reader.py:13-78`,
   * `live_data_api_service/repository.py:22-52`) over the day-wide lake
   * ([[LakeLayout]]).
+  *
+  * One directory per day: a day dir holds its base files and, in its
+  * `_delta/` child (which Spark's listing skips), its late-repair delta
+  * files; every read overlays the deltas of the days it reads (see
+  * `overlayDeltas`).
   *
   * Bounded reads name the window's day dirs ([[DayDirs]]) instead of
   * reading the lake root under partition predicates, because a root
   * read LISTS every file in the lake before pruning; they filter
   * `symbol` as a data column (files are symbol-sorted, so parquet
-  * min/max stats skip row groups) and overlay the late-repair delta
-  * files (see `overlayDeltas`). Unbounded scans read the root, since
+  * min/max stats skip row groups). Unbounded scans read the root, since
   * they need every file.
   *
   * An empty or absent lake reads as empty: an empty frame with the
   * read's schema, `None`, `Map.empty` or `(None, None)`. A lake root
   * holding the reference's hourly `symbol=` tree fails every verb with
   * an `IllegalStateException` — migrate it with
-  * [[LakeMigrate.hourlyToDayWide]] first.
+  * [[LakeMigrate.hourlyToDayWide]] first — and so does a top-level
+  * `_delta/` tree (deltas from before they moved into their days).
   */
 class MinuteLakeReader(root: String) {
 
@@ -232,7 +253,7 @@ class MinuteLakeReader(root: String) {
   /** Whether the lake holds any day yet: one listing of the lake root,
     * cached once a day is found (an empty lake re-checks, so data that
     * lands later is seen). Every verb goes through it, so a
-    * reference-layout root fails loudly instead of reading as empty. */
+    * reference-layout root or a top-level delta tree fails loudly. */
   @volatile private var sawDays = false
   private def hasDays(spark: SparkSession): Boolean = sawDays || {
     val fs = fsOf(spark)
@@ -244,6 +265,10 @@ class MinuteLakeReader(root: String) {
       throw new IllegalStateException(
         s"$lakeDir holds a reference-layout symbol=/year=/month=/day=/hour= " +
           "tree; migrate it with LakeMigrate.hourlyToDayWide before reading")
+    if (names.contains(MinuteLakeWriter.DeltaSubdir))
+      throw new IllegalStateException(
+        s"$lakeDir holds a top-level _delta/ tree; move each day's delta " +
+          "files into its year=/month=/day=/_delta/ dir before reading")
     sawDays = names.exists(_.startsWith("year="))
     sawDays
   }
@@ -253,56 +278,22 @@ class MinuteLakeReader(root: String) {
       if (withSymbol) MinuteLakeReader.FileSchema else CanonicalSchema.structType)
 
   // ------------------------------------------------ delta overlay
-  // Late point repairs land as small `_delta/year=/month=/day=` files
-  // beside the base (MinuteLakeWriter.writeDeltaPatch) — O(patch)
-  // writes instead of a day × all-symbols rewrite. Every read
-  // overlays them through the ONE shared merge policy (mergeKeyed:
-  // delta wins, highest __delta_seq wins among deltas, LIVE_ONLY
-  // preserved from base), so a patch is visible immediately and
-  // compaction (which applies the same policy at write time) never
-  // changes what a reader sees. The delta population is bounded small
-  // by compaction; delta days ⊆ base days by writer invariant.
+  // Late point repairs land as small files in their day's `_delta/` dir
+  // (MinuteLakeWriter.writeDeltaPatch) — O(patch) writes instead of a
+  // day × all-symbols rewrite. Every read overlays them through the ONE
+  // policy the writers publish too (MinuteLakeReader.overlay), so a
+  // patch is visible immediately and compaction never changes what a
+  // reader sees.
 
-  private def deltaRoot = s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}"
-
-  /** Delta day dirs intersecting the window (all of them when
-    * unbounded) — the same O(touched) pruned walk as the base. */
-  private def deltaDaysFor(spark: SparkSession, start: Option[Instant],
-                           end: Option[Instant]): Seq[String] = {
-    val fs = fsOf(spark)
-    if (!fs.exists(new HPath(deltaRoot))) Seq.empty
-    else (start, end) match {
-      case (Some(s), Some(e)) => DayDirs.inRange(fs, deltaRoot, s, e)
-      case _ => DayDirs.ascending(fs, deltaRoot)
-    }
-  }
-
-  /** ymd → delta-day-dir map for the probe paths (empty when no deltas). */
-  private def deltaYmdMap(spark: SparkSession): Map[(Int, Int, Int), String] = {
-    val fs = fsOf(spark)
-    if (!fs.exists(new HPath(deltaRoot))) Map.empty
-    else DayDirs.ascending(fs, deltaRoot).map(p => DayDirs.ymdOf(p) -> p).toMap
-  }
-
-  /** The delta rows under `paths` (day dirs or files), collapsed
-    * last-wins per (symbol, timestamp) by `__delta_seq` — one fresh row
-    * per key. */
-  private def collapsedDeltas(spark: SparkSession, paths: Seq[String]): DataFrame =
-    Ops.dedupKeepLast(
-      spark.read.option("basePath", deltaRoot).parquet(paths: _*)
-        .drop("year", "month", "day"),
-      Seq("symbol", "timestamp"), Seq(col("__delta_seq")))
-      .drop("__delta_seq")
-
-  /** The data files under the delta day dirs `days` that the skipping
-    * rule of [[overlayDeltas]] keeps for `symbol`. `probeDays` (behind
-    * `inspectRange`/`latestMinute`) selects through it too, so every
-    * single-symbol overlay shares one rule. Costs one LIST per day and
-    * one footer read per file (compaction keeps both few); an unreadable
-    * footer fails the read, as it would fail the scan. */
+  /** The delta files of the day dirs `days` that the skipping rule of
+    * [[overlayDeltas]] keeps for `symbol`.
+    * `probeDays` (behind `inspectRange`/`latestMinute`) selects through
+    * it too, so every single-symbol overlay shares one rule. Costs one
+    * LIST per day and one footer read per delta file (compaction keeps
+    * both few); an unreadable footer fails the read, as it would fail
+    * the scan. */
   private def deltaFilesHolding(spark: SparkSession, days: Seq[String],
                                 symbol: String): Seq[String] = {
-    val fs = fsOf(spark)
     val conf = spark.sparkContext.hadoopConfiguration
     val s = Binary.fromString(symbol.toUpperCase)
     def spans(b: BinaryStatistics): Boolean =
@@ -317,10 +308,10 @@ class MinuteLakeReader(root: String) {
           })
       } finally reader.close()
     }
-    days.flatMap(DayDirs.dataFiles(fs, _)).filter(mayHold).map(_.getPath.toString)
+    MinuteLakeReader.deltaFiles(fsOf(spark), days).filter(mayHold).map(_.getPath.toString)
   }
 
-  /** Overlay the window's deltas onto a base read.
+  /** Overlay the deltas of the day dirs `days` onto a base read of them.
     *
     * With `symbol = Some(s)` both sides are single-symbol frames without
     * the symbol column (merge keyed by timestamp), and delta files are
@@ -337,37 +328,36 @@ class MinuteLakeReader(root: String) {
     * no statistics, so time pruning stays at day grain.
     *
     * With `symbol = None` (multi-symbol, keyed by (symbol, timestamp))
-    * every delta day is overlaid; only an empty `deltaDays` leaves the
-    * base unchanged. */
+    * every delta file of `days` is overlaid ([[MinuteLakeReader.overlay]]). */
   private def overlayDeltas(spark: SparkSession, base: DataFrame,
-                            deltaDays: Seq[String],
+                            days: Seq[String],
                             symbol: Option[String]): DataFrame =
     symbol match {
       case Some(sym) =>
-        val files = deltaFilesHolding(spark, deltaDays, sym)
+        val files = deltaFilesHolding(spark, days, sym)
         if (files.isEmpty) base
         else MinuteLakeWriter.mergeKeyed(base,
-          collapsedDeltas(spark, files)
+          MinuteLakeReader.collapsedDeltas(spark, files)
             .where(col("symbol") === sym.toUpperCase).drop("symbol"),
           Seq("timestamp"))
       case None =>
-        if (deltaDays.isEmpty) base
-        else MinuteLakeWriter.mergeKeyed(base,
-          collapsedDeltas(spark, deltaDays), Seq("symbol", "timestamp"))
+        MinuteLakeReader.overlay(spark, base,
+          MinuteLakeReader.deltaFiles(fsOf(spark), days).map(_.getPath.toString),
+          fresh = None)
     }
 
   /** Single-symbol scan over the whole lake: `symbol` is a DATA column
     * and files are sorted+range-bucketed by it, so the predicate prunes
     * via parquet min/max file stats, and the whole-lake file listing is
     * O(days × filesPerDay) regardless of width. The root read skips
-    * `_delta` (underscore dir); deltas overlay explicitly. */
+    * every day's `_delta` (underscore dir); deltas overlay explicitly. */
   def scanSymbol(spark: SparkSession, symbol: String): DataFrame =
     if (!hasDays(spark)) emptyFrame(spark, withSymbol = false)
     else overlayDeltas(spark,
       spark.read.parquet(lakeDir)
         .where(col("symbol") === symbol.toUpperCase)
         .drop("year", "month", "day", "symbol"),
-      deltaDaysFor(spark, None, None), Some(symbol))
+      dayDirsAscending(spark), Some(symbol))
 
   /** Whole-lake scan keeping the `symbol` column — the input to
     * all-symbols-in-one-job processing (1000-symbol plans never loop
@@ -376,7 +366,7 @@ class MinuteLakeReader(root: String) {
     if (!hasDays(spark)) None
     else Some(overlayDeltas(spark,
       spark.read.parquet(lakeDir).drop("year", "month", "day"),
-      deltaDaysFor(spark, None, None), None))
+      dayDirsAscending(spark), None))
 
   /** Whole-lake windowed read with per-(symbol, minute) latest-wins
     * dedup — the multi-symbol form of [[readWindow]]. The pruning floor
@@ -394,8 +384,7 @@ class MinuteLakeReader(root: String) {
       if (days.isEmpty) emptyFrame(spark, withSymbol = true)
       else spark.read.option("basePath", lakeDir).parquet(days: _*)
         .drop("year", "month", "day")
-    val df = overlayDeltas(spark, base,
-      deltaDaysFor(spark, Some(start), Some(end)), None)
+    val df = overlayDeltas(spark, base, days, None)
     Some(Ops.dedupKeepLast(
       df.where(col("timestamp").between(
         java.sql.Timestamp.from(start), java.sql.Timestamp.from(end))),
@@ -426,20 +415,18 @@ class MinuteLakeReader(root: String) {
       .select("symbol", "timestamp")
     // deltas in those same days can carry a later minute for a symbol
     // (a correction is usually older, but the API doesn't forbid it)
-    val deltaDays = DayDirs.matching(fs, deltaRoot,
-      days.map(DayDirs.ymdOf).toSet)
-    if (deltaDays.nonEmpty)
-      scan = scan.unionByName(
-        spark.read.parquet(deltaDays: _*).select("symbol", "timestamp"))
+    val deltas = MinuteLakeReader.deltaFiles(fs, days).map(_.getPath.toString)
+    if (deltas.nonEmpty)
+      scan = scan.unionByName(spark.read.schema(MinuteLakeReader.DeltaFileSchema)
+        .parquet(deltas: _*).select("symbol", "timestamp"))
     val recent = scan
       .groupBy("symbol").agg(max("timestamp").as("latest"))
       .collect().map(r => r.getString(0) -> r.getTimestamp(1).toInstant).toMap
     val idle = knownSymbols.map(_.toUpperCase) -- recent.keySet
     if (idle.isEmpty) return recent
     val allDaysDesc = dayDirsAscending(spark).reverse
-    val deltaByYmd = deltaYmdMap(spark)
     recent ++ idle.toSeq.flatMap { sym =>
-      probeDays(spark, allDaysDesc, sym, max(col("timestamp")), deltaByYmd)
+      probeDays(spark, allDaysDesc, sym, max(col("timestamp")))
         .map(ts => sym -> ts.toInstant)
     }
   }
@@ -460,17 +447,16 @@ class MinuteLakeReader(root: String) {
     // when it is missing/torn the probe just walks as before.
     if (!hasDays(spark) || absentPerRegistry(spark, symbol)) return (None, None)
     val days = dayDirsAscending(spark)
-    val deltaByYmd = deltaYmdMap(spark)
-    val mn = probeDays(spark, days, symbol, min(col("timestamp")), deltaByYmd)
+    val mn = probeDays(spark, days, symbol, min(col("timestamp")))
     val mx = if (mn.isEmpty) None
-             else probeDays(spark, days.reverse, symbol, max(col("timestamp")), deltaByYmd)
+             else probeDays(spark, days.reverse, symbol, max(col("timestamp")))
     (mn.map(_.toInstant), mx.map(_.toInstant))
   }
 
   def latestMinute(spark: SparkSession, symbol: String): Option[Instant] =
     if (!hasDays(spark) || absentPerRegistry(spark, symbol)) None
     else probeDays(spark, dayDirsAscending(spark).reverse, symbol,
-      max(col("timestamp")), deltaYmdMap(spark)).map(_.toInstant)
+      max(col("timestamp"))).map(_.toInstant)
 
   /** True only when the lake HAS a symbol registry and `symbol`
     * is not in it (see [[MinuteLakeWriter.SymbolsRegistry]]). */
@@ -491,13 +477,10 @@ class MinuteLakeReader(root: String) {
     * dirs in batches of 1, 2, 4, … — at most O(log depth) jobs, and the
     * total files read across ALL probes is ≤ 2× the files before the
     * terminating batch. Each slice also reads those of its days' delta
-    * files that can hold `symbol` ([[deltaFilesHolding]]; delta days ⊆
-    * base days by writer invariant) so a patched minute bounds the range
-    * exactly like a base one. */
+    * files that can hold `symbol` ([[deltaFilesHolding]]) so a patched
+    * minute bounds the range exactly like a base one. */
   private def probeDays(spark: SparkSession, order: Seq[String], symbol: String,
-                        agg: Column,
-                        deltaByYmd: Map[(Int, Int, Int), String] = Map.empty)
-      : Option[java.sql.Timestamp] = {
+                        agg: Column): Option[java.sql.Timestamp] = {
     var taken = 0
     var batch = 1
     while (taken < order.length) {
@@ -505,11 +488,10 @@ class MinuteLakeReader(root: String) {
       var df = spark.read.option("basePath", lakeDir).parquet(slice: _*)
         .where(col("symbol") === symbol.toUpperCase)
         .select("timestamp")
-      val extra = deltaFilesHolding(spark,
-        slice.map(DayDirs.ymdOf).flatMap(deltaByYmd.get), symbol)
+      val extra = deltaFilesHolding(spark, slice, symbol)
       if (extra.nonEmpty)
         df = df.unionByName(
-          spark.read.parquet(extra: _*)
+          spark.read.schema(MinuteLakeReader.DeltaFileSchema).parquet(extra: _*)
             .where(col("symbol") === symbol.toUpperCase)
             .select("timestamp"))
       val r = df.agg(agg).collect().head
@@ -537,7 +519,7 @@ class MinuteLakeReader(root: String) {
     * require. A longer window, [[readWindowAllSymbols]], the scans and
     * the writers keep their parallelism ([[DayDirs.singleTaskIfBounded]]).
     *
-    * The base read is given the lake's file schema
+    * The base and delta reads are given the lake's file schemas
     * ([[MinuteLakeReader.FileSchema]]; parquet resolves its columns by
     * name, in whatever order a writer wrote them), so building the frame
     * reads no footer: the request's first Spark job is its own action. */
@@ -545,12 +527,10 @@ class MinuteLakeReader(root: String) {
     val days = if (hasDays(spark)) dayDirsInRange(spark, start, end) else Seq.empty
     val b =
       if (days.isEmpty) emptyFrame(spark, withSymbol = false)
-      else spark.read.schema(MinuteLakeReader.FileSchema)
-        .option("basePath", lakeDir).parquet(days: _*)
+      else MinuteLakeReader.readDays(spark, lakeDir, days)
         .where(col("symbol") === symbol.toUpperCase)
-        .drop("year", "month", "day", "symbol")
-    val df = overlayDeltas(spark, b,
-      deltaDaysFor(spark, Some(start), Some(end)), Some(symbol))
+        .drop("symbol")
+    val df = overlayDeltas(spark, b, days, Some(symbol))
       .where(col("timestamp").between(
         java.sql.Timestamp.from(start), java.sql.Timestamp.from(end)))
     Ops.dedupKeepLast(DayDirs.singleTaskIfBounded(df, days.size), Seq("timestamp"),
@@ -562,4 +542,48 @@ object MinuteLakeReader {
   /** A minute day file's columns: `symbol`, then the canonical schema. */
   private[graft] val FileSchema: StructType =
     StructType(StructField("symbol", StringType) +: CanonicalSchema.structType.fields)
+
+  /** A delta file's columns: [[FileSchema]], then `__delta_seq`. */
+  private[graft] val DeltaFileSchema: StructType =
+    FileSchema.add(StructField("__delta_seq", LongType))
+
+  /** The base rows of the day dirs `days` under `lakeDir`, read with
+    * [[FileSchema]] (no footer job). */
+  private[graft] def readDays(spark: SparkSession, lakeDir: String,
+                              days: Seq[String]): DataFrame =
+    spark.read.schema(FileSchema).option("basePath", lakeDir).parquet(days: _*)
+      .drop("year", "month", "day")
+
+  /** The delta files of the day dirs `days`: one LIST per day. */
+  private[graft] def deltaFiles(fs: FileSystem, days: Seq[String]): Seq[FileStatus] =
+    days.flatMap { d =>
+      try DayDirs.dataFiles(fs, MinuteLakeWriter.deltaDirOf(d))
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    }
+
+  /** The delta rows of `files` — and `fresh`, if given, as a layer
+    * newer than every delta — collapsed last-wins per (symbol,
+    * timestamp) by `__delta_seq`. The read names its schema (no job). */
+  private[graft] def collapsedDeltas(spark: SparkSession, files: Seq[String],
+                                     fresh: Option[DataFrame] = None): DataFrame = {
+    val deltas = spark.read.schema(DeltaFileSchema).parquet(files: _*)
+    Ops.dedupKeepLast(
+      fresh.fold(deltas)(f =>
+        deltas.unionByName(f.withColumn("__delta_seq", lit(Long.MaxValue)))),
+      Seq("symbol", "timestamp"), Seq(col("__delta_seq")))
+      .drop("__delta_seq")
+  }
+
+  /** base ⊕ deltas ⊕ fresh, keyed by (symbol, timestamp): the one
+    * overlay readers serve and writers publish. The deltas, with
+    * `fresh` above them, collapse by `__delta_seq` and merge over `base`
+    * through [[MinuteLakeWriter.mergeKeyed]], so a frame merged by
+    * `writeDaysWide(merge = true)` lands as it would as a newer delta. */
+  private[graft] def overlay(spark: SparkSession, base: DataFrame,
+                             deltaFiles: Seq[String],
+                             fresh: Option[DataFrame]): DataFrame = {
+    val keys = Seq("symbol", "timestamp")
+    if (deltaFiles.isEmpty) fresh.fold(base)(MinuteLakeWriter.mergeKeyed(base, _, keys))
+    else MinuteLakeWriter.mergeKeyed(base, collapsedDeltas(spark, deltaFiles, fresh), keys)
+  }
 }

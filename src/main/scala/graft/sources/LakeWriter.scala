@@ -14,9 +14,9 @@ import graft.validation.DQValidator
 /** Minute-lake writer — Spark re-expression of the reference's
   * `AtomicParquetWriter` (`writer/atomic.py:27-117`).
   *
-  * Layout: day-wide ([[LakeLayout]]) —
+  * Layout: day-wide ([[LakeLayout]]), one directory per day —
   * `futures/um/minute/year=YYYY/month=MM/day=DD/`, symbol as a sorted
-  * data column, late repairs under `futures/um/minute/_delta/`.
+  * data column, the day's late repairs in its `_delta/` child.
   *
   * Write paths:
   *  - [[writeDaysWide]] — the bulk path: day-level partitions, files
@@ -59,8 +59,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val spark = frame.sparkSession
     val dq = DQValidator.validate(frame)
     val z = hourStart.atZone(ZoneOffset.UTC)
-    val dayDir = f"$root/futures/um/minute/year=${z.getYear}%04d/" +
-      f"month=${z.getMonthValue}%02d/day=${z.getDayOfMonth}%02d"
+    val dayDir = dayDirOf(z.toLocalDate)
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     val withSym = frame.withColumn("symbol", lit(symbol.toUpperCase))
     if (fs.exists(new HPath(dayDir))) writeDeltaPatch(withSym)
@@ -84,14 +83,20 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     dayDir
   }
 
+  /** The minute day dir of `day` (zero-padded, as the writers name it). */
+  private def dayDirOf(day: java.time.LocalDate): String =
+    f"$root/futures/um/minute/year=${day.getYear}%04d/" +
+      f"month=${day.getMonthValue}%02d/day=${day.getDayOfMonth}%02d"
+
   /** Tick-owned ledger compaction (see [[PartitionLedger.compact]]):
     * the writer owns the ledger, the pipeline owns the cadence. */
   def compactLedgerIfLarge(maxBytes: Long): Boolean =
     ledger.compactIfLarge(maxBytes)
 
-  /** Union `frame`'s symbols into the wide lake's `_symbols.json`
-    * registry ([[MinuteLakeWriter.SymbolsRegistry]]): O(width) driver
-    * strings, rewritten only when a NEW symbol appears.
+  /** Union `fresh` — symbols a write collected in a pass it already
+    * makes — into the wide lake's `_symbols.json` registry
+    * ([[MinuteLakeWriter.SymbolsRegistry]]): O(width) driver strings,
+    * rewritten only when a NEW symbol appears.
     *
     * Invariant (r15 advice — the registry IS load-bearing for
     * ABSENCE): the registry, when present and parseable, must be a
@@ -113,13 +118,6 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * Called BEFORE the data commit (r15 advice #2): premature
     * registration is harmless in a superset; late registration races a
     * reader into falsely denying a just-committed new symbol. */
-  private def registerSymbols(fs: FileSystem, frame: DataFrame): Unit =
-    registerSymbolSet(fs, frame.select(upper(col("symbol"))).distinct()
-      .collect().map(_.getString(0)).toSet)
-
-  /** Symbol-set form of [[registerSymbols]] for callers that already
-    * hold the distinct symbols from another pass (the bulk writer's
-    * fused stats job) — same registry rules, no extra Spark job. */
   private def registerSymbolSet(fs: FileSystem, fresh: Set[String]): Unit = {
     val lakeDir = s"$root/futures/um/minute"
     val regPath = new HPath(s"$lakeDir/${MinuteLakeWriter.SymbolsRegistry}")
@@ -142,18 +140,18 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
 
   /** Rebuild the symbol registry from the lake itself — the healing
     * verb for a torn/corrupt or pre-registry lake (see
-    * [[registerSymbols]] rules 2–3). ONE distinct-symbols job over the
-    * base ∪ delta trees (columnar: only the symbol column is read);
-    * run it from an operator tick, not the hot path. */
+    * [[registerSymbolSet]] rules 2–3). ONE distinct-symbols job over
+    * every day's base and delta files (columnar: only the symbol column
+    * is read); run it from an operator tick, not the hot path. */
   def rebuildSymbolRegistry(spark: SparkSession): Set[String] = {
     val lakeDir = s"$root/futures/um/minute"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val dirs = DayDirs.ascending(fs, lakeDir) ++
-      DayDirs.ascending(fs, s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}")
+    val days = DayDirs.ascending(fs, lakeDir)
+    val paths = days ++ MinuteLakeReader.deltaFiles(fs, days).map(_.getPath.toString)
     val symbols =
-      if (dirs.isEmpty) Set.empty[String]
-      else spark.read.parquet(dirs: _*).select(upper(col("symbol")))
-        .distinct().collect().map(_.getString(0)).toSet
+      if (paths.isEmpty) Set.empty[String]
+      else spark.read.schema(MinuteLakeReader.FileSchema).parquet(paths: _*)
+        .select(upper(col("symbol"))).distinct().collect().map(_.getString(0)).toSet
     if (symbols.nonEmpty)
       MinuteLakeWriter.writeSymbolRegistry(fs, lakeDir, symbols)
     symbols
@@ -230,16 +228,19 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * file population is O(days × filesPerDay) regardless of lake width,
     * and parquet min/max stats on the sorted symbol column give
     * per-symbol file skipping that replaces the per-symbol directory
-    * tree. The days are written once into `.tmp` and each touched day
-    * is swapped in ([[WideDayPublish.write]]); `merge = false` replaces
-    * the touched days with `frame`'s rows.
+    * tree. The days are written once into `.tmp` (in
+    * [[MinuteLakeReader.FileSchema]] column order) and each touched day
+    * is swapped in ([[WideDayPublish.write]]), which retires its deltas
+    * (their `__DELTA__` ledger rows turn DROPPED); `merge = false`
+    * replaces the touched days with `frame`'s rows.
     *
-    * `merge = true` reads back ONLY the touched day dirs that exist and
-    * applies the SAME last-wins + LIVE_ONLY-preserve policy as the
-    * delta overlay ([[MinuteLakeWriter.mergeKeyed]]), keyed by (symbol,
-    * timestamp); symbols present in a touched day but absent from
-    * `frame` survive the rewrite because the merge read is keyed by
-    * day, not by symbol.
+    * `merge = true` reads back ONLY the touched day dirs that exist, as
+    * readers see them, and lands `frame` as the newest layer of the
+    * readers' overlay ([[MinuteLakeReader.overlay]]: last-wins +
+    * LIVE_ONLY-preserve, keyed by (symbol, timestamp)), so a day's
+    * pending deltas are folded in and never mask the write; symbols
+    * present in a touched day but absent from `frame` survive the
+    * rewrite because the merge read is keyed by day, not by symbol.
     *
     * The incoming frame is always staged through `.tmp` parquet first:
     * the day stats, the range-partitioner's sampling pass, and the final
@@ -266,7 +267,8 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     // days being replaced (r20 ADVICE #2). Reverted r21; the r20
     // stats-pass fusion stays.
     val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    frame.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
+    frame.select(MinuteLakeReader.FileSchema.fieldNames.toIndexedSeq.map(col): _*)
+      .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
     try {
       val staged = spark.read.parquet(stageDir)
       // ONE stats pass over the staged increment serves the touched-day
@@ -296,8 +298,10 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
 
       val mergedExisting = WideDayPublish.write(fs, root, lakeDir, staged, touched,
         layout.filesPerDay, "timestamp",
-        if (merge) Some(MinuteLakeWriter.mergeKeyed(_, _, Seq("symbol", "timestamp")))
-        else None)
+        if (!merge) None
+        else Some((days, fresh) => MinuteLakeReader.overlay(spark,
+          MinuteLakeReader.readDays(spark, lakeDir, days),
+          MinuteLakeReader.deltaFiles(fs, days).map(_.getPath.toString), Some(fresh))))
 
       // S13 at day grain: commit one ledger row per touched day
       // (symbol = "__ALL__", hour = -1) with row bounds and a content
@@ -341,33 +345,29 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       val patchBounds = stagedStats
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
           (LedgerBounds.iso(r.getLong(4)), LedgerBounds.iso(r.getLong(5)))).toMap
+      // the touched days' base and delta rows before this write; the
+      // swap retired the deltas
+      val dayKeys = touched.map { case (y, m, d) => f"$y%04d-$m%02d-$d%02d" }.toSet
+      val prior = ledger.all()
+        .filter(e => e.status == "COMMITTED" && e.hour < 0 && dayKeys(e.day)).groupBy(_.day)
+      prior.valuesIterator.flatten.filter(_.symbol == "__DELTA__")
+        .foreach(e => ledger.upsert(e.copy(status = "DROPPED")))
       // A non-merge rewrite of an ALREADY-COMMITTED day can shrink it:
-      // rows earlier than the new content's min vanish, and a patch
-      // range covering only the new content would leave those minutes
-      // outside every change window — the gated tick would skip repairs
-      // the blind lookback used to catch (ADVICE r16 #3). Widen such a
-      // day's patch bounds to the union of the superseded line's CONTENT
-      // bounds and the new increment's.
-      val priorContentBounds: Map[String, (String, String)] =
-        if (merge) Map.empty
-        else ledger.all()
-          .filter(e => e.symbol == "__ALL__" && e.status == "COMMITTED")
-          .map(e => e.day -> (e.minTs, e.maxTs)).toMap
+      // rows earlier than the new content's min vanish (base and delta
+      // rows alike), and a patch range covering only the new content
+      // would leave those minutes outside every change window — the
+      // gated tick would skip repairs the blind lookback used to catch
+      // (ADVICE r16 #3). Widen such a day's patch bounds to the union of
+      // the superseded rows' CONTENT bounds and the new increment's.
       bounds.foreach { case (ymd, nRows, mnMicros, mxMicros) =>
         committedDirs.get(ymd).foreach { dayDir =>
           val dayKey = f"${ymd._1}%04d-${ymd._2}%02d-${ymd._3}%02d"
           val patch = patchBounds.get(ymd).map { case (mn, mx) =>
-            priorContentBounds.get(dayKey) match {
-              case Some((oldMn, oldMx)) =>
-                val lo = Seq(Some(mn), Option(oldMn).filter(_.nonEmpty))
-                  .flatten.flatMap(s => LedgerBounds.parse(s).map(_ -> s))
-                  .minByOption(_._1).map(_._2).getOrElse(mn)
-                val hi = Seq(Some(mx), Option(oldMx).filter(_.nonEmpty))
-                  .flatten.flatMap(s => LedgerBounds.parse(s).map(_ -> s))
-                  .maxByOption(_._1).map(_._2).getOrElse(mx)
-                (lo, hi)
-              case None => (mn, mx)
-            }
+            val old = if (merge) Seq.empty else prior.getOrElse(dayKey, Seq.empty)
+            def parsed(ss: Seq[String]) = ss.filter(s => s != null && s.nonEmpty)
+              .flatMap(s => LedgerBounds.parse(s).map(_ -> s))
+            (parsed(mn +: old.map(_.minTs)).minByOption(_._1).map(_._2).getOrElse(mn),
+             parsed(mx +: old.map(_.maxTs)).maxByOption(_._1).map(_._2).getOrElse(mx))
           }
           ledger.upsert(PartitionLedgerEntry(
             symbol = "__ALL__",
@@ -396,25 +396,27 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * every 30 s (`aggregator/config.py:17-21`), makes point repairs the
     * COMMON case, so they must not pay the day rewrite).
     *
-    * Physics: `frame` (must carry `symbol`) is appended under
-    * `minute/_delta/year=/month=/day=` with a monotone `__delta_seq`
-    * stamp. Readers overlay base ∪ delta through the shared
-    * [[MinuteLakeWriter.mergeKeyed]] last-wins policy (delta wins;
-    * among deltas the highest `__delta_seq` wins), so a patch is
-    * visible immediately and pre-/post-compaction results are
-    * identical by construction. [[compactWideDeltas]] folds deltas
-    * into the base on a threshold.
+    * Physics: `frame` (must carry `symbol`) is staged as one file per
+    * touched day with a monotone `__delta_seq` stamp, and each file is
+    * renamed into its day's `_delta/` dir under a name carrying the
+    * stamp. Keys are day-local, so the stamp need only rise within a
+    * day: 1 + the highest the touched days' file names carry (a LIST
+    * per day, no job). Readers overlay base ∪ delta through the shared
+    * [[MinuteLakeReader.overlay]] (delta wins; among deltas the highest
+    * `__delta_seq` wins), so a patch is visible immediately and
+    * pre-/post-compaction results are identical by construction.
+    * [[compactWideDeltas]] folds deltas into the base on a threshold.
     *
     * Invariant: every patched day must already have a BASE day
-    * partition (new days go through [[writeDaysWide]]) — this keeps
-    * delta days ⊆ base days, which the readers' probe paths rely on.
+    * partition (new days go through [[writeDaysWide]]) — a delta lives
+    * inside its day's dir, so delta days ⊆ base days by construction.
     *
-    * S13: each touched delta day gets a day-grain ledger row
+    * S13: each touched day's delta dir gets a day-grain ledger row
     * (symbol `__DELTA__`, hour −2) with row bounds and a distributed
     * content hash over the day's delta files, so tamper/delete audit
-    * covers the delta tree exactly like the base.
+    * covers the deltas exactly like the base.
     *
-    * @return the touched delta day directories */
+    * @return the touched days' `_delta` directories */
   def writeDeltaPatch(frame0: DataFrame): Seq[String] = {
     // pin the patch once: four actions consume it (touched-days collect,
     // DQ validation, symbol registration, the write itself), and the
@@ -430,13 +432,7 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
   private def writeDeltaPatchPinned(frame: DataFrame): Seq[String] = {
     val spark = frame.sparkSession
     val lakeDir = s"$root/futures/um/minute"
-    val deltaRoot = s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-
-    def withPartCols(df: DataFrame): DataFrame = df
-      .withColumn("year", date_format(col("timestamp"), "yyyy"))
-      .withColumn("month", date_format(col("timestamp"), "MM"))
-      .withColumn("day", date_format(col("timestamp"), "dd"))
 
     // ONE pass over the pinned patch serves the DQ gate, the touched-day
     // set, and the symbol registry (r20): previously three separate
@@ -452,23 +448,14 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     val touched = extras(0).asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSet
     if (touched.isEmpty) return Seq.empty
-    val baseDays = DayDirs.matching(fs, lakeDir, touched).map(DayDirs.ymdOf).toSet
-    require(touched.subsetOf(baseDays),
-      s"writeDeltaPatch: days ${touched -- baseDays} have no base partition — " +
+    val dayByYmd = DayDirs.matching(fs, lakeDir, touched).map(d => DayDirs.ymdOf(d) -> d).toMap
+    require(touched.subsetOf(dayByYmd.keySet),
+      s"writeDeltaPatch: days ${touched -- dayByYmd.keySet} have no base partition — " +
         "route new days through writeDaysWide; deltas only overlay existing days")
-
-    // monotone patch stamp: 1 + max over the existing delta population
-    // (bounded small by compaction — one metadata walk + one tiny scan;
-    // no counter file, so there is no crash window that could reset it)
-    val existingDeltaDays = DayDirs.ascending(fs, deltaRoot)
-    val seq =
-      if (existingDeltaDays.isEmpty) 1L
-      else {
-        val r = spark.read.parquet(existingDeltaDays: _*)
-          .agg(max("__delta_seq")).collect()(0)
-        if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
-      }
-
+    val days = dayByYmd.values.toSeq
+    // a day swap retires the day's deltas, so its stamps start over
+    val seq = 1L + MinuteLakeReader.deltaFiles(fs, days).map(_.getPath.getName)
+      .collect { case MinuteLakeWriter.DeltaName(n) => n.toLong }.maxOption.getOrElse(0L)
     // a patch can introduce a symbol new to the lake (only the DAY must
     // pre-exist) — register BEFORE the append (r15 advice #2: premature
     // registration is safe, late registration races readers into
@@ -476,16 +463,33 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     registerSymbolSet(fs,
       extras(1).asInstanceOf[scala.collection.Seq[String]].toSet)
 
-    withPartCols(frame)
-      .coalesce(1)
-      .sortWithinPartitions("year", "month", "day", "symbol", "timestamp")
-      .withColumn("__delta_seq", lit(seq))
-      .write.mode(SaveMode.Append)
-      .partitionBy("year", "month", "day")
-      .option("compression", "zstd")
-      .parquet(deltaRoot)
+    val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    try {
+      frame.select(MinuteLakeReader.FileSchema.fieldNames.toIndexedSeq.map(col): _*)
+        .withColumn("__delta_seq", lit(seq))
+        .withColumn("year", date_format(col("timestamp"), "yyyy"))
+        .withColumn("month", date_format(col("timestamp"), "MM"))
+        .withColumn("day", date_format(col("timestamp"), "dd"))
+        .coalesce(1)
+        .sortWithinPartitions("year", "month", "day", "symbol", "timestamp")
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("year", "month", "day")
+        .option("compression", "zstd")
+        .parquet(stageDir)
+      // each staged file lands by one single-file rename: a reader sees
+      // a patch file whole or not at all
+      DayDirs.ascending(fs, stageDir).foreach { staged =>
+        val target = new HPath(MinuteLakeWriter.deltaDirOf(dayByYmd(DayDirs.ymdOf(staged))))
+        fs.mkdirs(target)
+        DayDirs.dataFiles(fs, staged).foreach { f =>
+          val dst = new HPath(target, f"delta-$seq%012d-${f.getPath.getName}")
+          if (!fs.rename(f.getPath, dst))
+            throw new java.io.IOException(s"delta patch: rename ${f.getPath} -> $dst failed")
+        }
+      }
+    } finally fs.delete(new HPath(stageDir), true)
 
-    // ledger rows re-read the written dirs so the recorded bounds/hash
+    // ledger rows re-read the day's delta dir so the recorded bounds/hash
     // cover the day's WHOLE delta population (prior patches included) —
     // the same surface auditPartitions recomputes. The two audit reads
     // are INDEPENDENT jobs over the same small dirs (raw bytes for the
@@ -493,28 +497,27 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     // helper thread while the bounds job runs, so the patch pays
     // max(hash, bounds) instead of their sum (guide §2.6 — actions are
     // only sequential because the driver calls them sequentially).
-    val deltaDirs = DayDirs.matching(fs, deltaRoot, touched)
+    val deltaDirs = days.map(MinuteLakeWriter.deltaDirOf)
     val (hashes, bounds) = MinuteLakeWriter.overlap(
       MinuteLakeWriter.dayContentHashes(spark, deltaDirs)) {
-      spark.read.option("basePath", deltaRoot).parquet(deltaDirs: _*)
-        .groupBy(col("year").cast("int").as("y"),
-                 col("month").cast("int").as("m"),
-                 col("day").cast("int").as("d"))
+      spark.read.schema(MinuteLakeReader.DeltaFileSchema).parquet(deltaDirs: _*)
+        .groupBy(year(col("timestamp")).as("y"),
+                 month(col("timestamp")).as("m"),
+                 dayofmonth(col("timestamp")).as("d"))
         .agg(count(lit(1)).as("n"),
              unix_micros(min(col("timestamp"))).as("mn"),
              unix_micros(max(col("timestamp"))).as("mx"))
         .collect()
     }
-    val dirByYmd = deltaDirs.map(p => DayDirs.ymdOf(p) -> p).toMap
     bounds.foreach { r =>
       val ymd = (r.getInt(0), r.getInt(1), r.getInt(2))
-      dirByYmd.get(ymd).foreach { dayDir =>
+      dayByYmd.get(ymd).foreach { dayDir =>
         val (mn, mx) = (LedgerBounds.iso(r.getLong(4)), LedgerBounds.iso(r.getLong(5)))
         ledger.upsert(PartitionLedgerEntry(
           symbol = "__DELTA__",
           day = f"${ymd._1}%04d-${ymd._2}%02d-${ymd._3}%02d",
           hour = -2,
-          path = dayDir,
+          path = MinuteLakeWriter.deltaDirOf(dayDir),
           rowCount = r.getLong(3),
           minTs = mn,
           maxTs = mx,
@@ -531,35 +534,30 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
   }
 
   /** Fold accumulated deltas back into the day-wide base — the
-    * threshold companion of [[writeDeltaPatch]]: delta days holding at
-    * least `minFilesPerDay` delta files are merged into their base day
-    * partitions through one [[writeDaysWide]]`(merge = true)` call
-    * (same last-wins + LIVE_ONLY-preserve policy the read overlay
-    * applies, so compaction never changes what a reader sees), then
-    * the folded delta dirs are deleted and their `__DELTA__` ledger
-    * rows flipped to DROPPED (base day rows were re-committed with
-    * fresh hashes by the bulk write, so the audit stays coherent).
+    * threshold companion of [[writeDeltaPatch]]: days (those with a
+    * COMMITTED `__DELTA__` ledger row — the lake is never walked)
+    * holding at least `minFilesPerDay` delta files are rewritten by one
+    * [[writeDaysWide]]`(merge = true)` of their collapsed deltas. That
+    * write reads each day as readers see it, so compaction never
+    * changes what a reader sees, and its day swap retires the folded
+    * deltas with the old base: there is no delete step, and a crash
+    * leaves each day wholly old or wholly new.
     *
-    * Crash-safe by idempotence: if the fold commits but the delete is
-    * lost, the surviving deltas re-overlay rows the base now already
-    * holds — the merge is a fixpoint — and the next compaction retries
-    * the delete.
-    *
-    * @return the delta day directories folded and removed */
+    * @return the `_delta` directories folded and retired */
   def compactWideDeltas(spark: SparkSession, minFilesPerDay: Int = 1): Seq[String] = {
     require(minFilesPerDay >= 1, "minFilesPerDay must be at least 1")
     compactWideDeltasWhere(spark)((files, _) => files >= minFilesPerDay)
   }
 
   /** Policy-driven compaction for the ingestion tick (VERDICT r14 #2):
-    * a delta day folds when it holds at least `policy.minFilesPerDay`
+    * a day folds when it holds at least `policy.minFilesPerDay`
     * delta files (read-overlay cost bound) OR its oldest delta file is
     * older than `policy.maxAgeMinutes` relative to `now` (staleness
     * bound — a quiet day with two ancient patches must not carry them
     * forever). The delta-accumulation probe (SURVEY §8.17) showed
     * overlay cost stays flat across accumulated deltas, so the cadence
     * is an economics knob, not a correctness one: readers see identical rows pre-/post-fold
-    * by construction (one shared [[MinuteLakeWriter.mergeKeyed]]).
+    * by construction (one shared [[MinuteLakeReader.overlay]]).
     * Owned by [[graft.pipeline.Orchestrator.MinutePipeline]]'s tick. */
   def compactWideDeltasIfDue(spark: SparkSession, now: Instant,
                              policy: CompactionPolicy): Seq[String] = {
@@ -571,45 +569,26 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
   }
 
   /** Shared fold machinery behind the two eligibility surfaces; the
-    * predicate sees (parquet-file count, oldest file mtime ms) per
-    * delta day. */
+    * predicate sees (delta file count, oldest file mtime ms) per
+    * candidate day. */
   private def compactWideDeltasWhere(spark: SparkSession)
                                     (due: (Int, Long) => Boolean): Seq[String] = {
-    val lakeDir = s"$root/futures/um/minute"
-    val deltaRoot = s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(deltaRoot))) return Seq.empty
-    val eligible = DayDirs.ascending(fs, deltaRoot).filter { d =>
-      val parquets = fs.listStatus(new HPath(d))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      parquets.nonEmpty &&
-        due(parquets.length, parquets.map(_.getModificationTime).min)
-    }
+    val eligible = ledger.all()
+      .filter(e => e.symbol == "__DELTA__" && e.status == "COMMITTED")
+      .flatMap(e => scala.util.Try(java.time.LocalDate.parse(e.day)).toOption)
+      .sortBy(_.toEpochDay)
+      .map { d =>
+        val day = dayDirOf(d)
+        day -> MinuteLakeReader.deltaFiles(fs, Seq(day))
+      }
+      .filter { case (_, files) =>
+        files.nonEmpty && due(files.length, files.map(_.getModificationTime).min)
+      }
     if (eligible.isEmpty) return Seq.empty
-
-    // collapse the delta population first (last-wins by __delta_seq per
-    // key) so the bulk merge sees ONE fresh row per (symbol, timestamp)
-    val folded = Ops.dedupKeepLast(
-      spark.read.option("basePath", deltaRoot).parquet(eligible: _*)
-        .drop("year", "month", "day"),
-      Seq("symbol", "timestamp"), Seq(col("__delta_seq")))
-      .drop("__delta_seq")
-    writeDaysWide(folded, merge = true)
-
-    eligible.foreach(d => fs.delete(new HPath(d), true))
-    // prune emptied month=/year= parents (two levels is the tree depth)
-    var parents = eligible.map(d => new HPath(d).getParent).distinct
-    (0 until 2).foreach { _ =>
-      val next = parents.filter(p => fs.exists(p) && fs.listStatus(p).isEmpty)
-      next.foreach(p => fs.delete(p, false))
-      parents = next.map(_.getParent).distinct
-    }
-    val foldedYmd = eligible.map(DayDirs.ymdOf).toSet
-    ledger.all()
-      .filter(e => e.hour == -2 && e.status == "COMMITTED" &&
-        scala.util.Try(DayDirs.ymdOf(e.path)).toOption.exists(foldedYmd.contains))
-      .foreach(e => ledger.upsert(e.copy(status = "DROPPED")))
-    eligible
+    writeDaysWide(MinuteLakeReader.collapsedDeltas(spark,
+      eligible.flatMap(_._2).map(_.getPath.toString)), merge = true)
+    eligible.map { case (day, _) => MinuteLakeWriter.deltaDirOf(day) }
   }
 }
 
@@ -623,11 +602,17 @@ final case class PartitionAuditResult(symbol: String, day: String, hour: Int,
 
 object MinuteLakeWriter {
 
-  /** Subdirectory of the day-wide minute lake holding late-patch DELTA
-    * files (`_delta/year=/month=/day=`, same day partitioning as the
-    * base). Underscore-prefixed so Spark's file listing never picks it
-    * up on a base read; readers overlay it explicitly. */
+  /** Child dir of a minute day dir holding the day's late-patch DELTA
+    * files (`year=/month=/day=/_delta/`). Underscore-prefixed so
+    * Spark's file listing never picks it up on a base read; readers
+    * overlay it explicitly. */
   val DeltaSubdir = "_delta"
+
+  /** The `_delta` dir of the minute day dir `dayDir`. */
+  private[graft] def deltaDirOf(dayDir: String): String = s"$dayDir/$DeltaSubdir"
+
+  /** A delta file's name, `delta-<__delta_seq>-<staged name>`. */
+  private[sources] val DeltaName = """delta-(\d{12})-.*""".r
 
   /** Symbol registry of a day-wide lake (`_symbols.json`, one small
     * JSON array): the SUPERSET of symbols the wide writers have ever
@@ -797,9 +782,9 @@ private[graft] object WideDayPublish {
 
   /** Write the staged increment's days under `dir` (a
     * `year=/month=/day=` tree) and publish them. With a `merge` policy
-    * the touched day dirs that exist are read back and merged as
-    * `merge(existing, staged)`; without one the touched days are
-    * replaced by `staged`'s rows. The (merged) rows are written ONCE —
+    * the touched day dirs that exist are handed to it with the staged
+    * rows, and `merge(existingDays, staged)` is what publishes; without
+    * one the touched days are replaced by `staged`'s rows. The (merged) rows are written ONCE —
     * range-partitioned and sorted by (year, month, day, symbol,
     * `timeCol`) into `filesPerDay` files per touched day — into
     * `root/.tmp/<uuid>`, then every written day is swapped in. Absent
@@ -812,19 +797,13 @@ private[graft] object WideDayPublish {
   private[sources] def write(fs: FileSystem, root: String, dir: String,
                              staged: DataFrame, touched: Seq[(Int, Int, Int)],
                              filesPerDay: Int, timeCol: String,
-                             merge: Option[(DataFrame, DataFrame) => DataFrame]): Boolean = {
-    val spark = staged.sparkSession
+                             merge: Option[(Seq[String], DataFrame) => DataFrame]): Boolean = {
     // explicit touched-day read — a root read + partition filter still
     // LISTS every file in the tree before pruning; the walk descends
     // only the touched years/months
     val existing =
       if (merge.isEmpty) Seq.empty else DayDirs.matching(fs, dir, touched.toSet)
-    val effective = merge match {
-      case Some(policy) if existing.nonEmpty =>
-        policy(spark.read.option("basePath", dir).parquet(existing: _*)
-          .drop("year", "month", "day"), staged)
-      case _ => staged
-    }
+    val effective = merge.filter(_ => existing.nonEmpty).fold(staged)(_(existing, staged))
     val tmp = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val asideRoot = s"$tmp-aside"
     try {
@@ -858,7 +837,10 @@ private[graft] object WideDayPublish {
   }
 
   /** One staged day directory swapped into place with rename-ASIDE
-    * semantics (r21, r20 ADVICE #1): the live day moves into the
+    * semantics (r21, r20 ADVICE #1). The whole day directory moves, a
+    * minute day's `_delta/` child included, so one swap replaces the
+    * day's base and retires its deltas, and a failed promote restores
+    * both. The live day moves into the
     * dot-prefixed tmp area (readers never list it) BEFORE the
     * replacement renames in, and is restored if the promote fails — by
     * a false return OR an in-JVM exception — so a transient rename
@@ -963,20 +945,17 @@ class HtfLakeWriter(root: String,
           .distinct().collect().toSeq
           .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))))
       WideDayPublish.write(fs, root, dir, staged, touched, layout.filesPerDay, "bucket_start",
-        Some(lastWins(_, _, Seq("symbol", "bucket_start"))))
+        // last-wins on (symbol, bucket_start), incoming wins; columns
+        // missing on either side read as null
+        Some((days, fresh) => Ops.dedupKeepLast(
+          spark.read.option("basePath", dir).parquet(days: _*).drop("year", "month", "day")
+            .withColumn("__src", lit(0))
+            .unionByName(fresh.withColumn("__src", lit(1)), allowMissingColumns = true),
+          Seq("symbol", "bucket_start"), Seq(col("__src"))).drop("__src")))
       ()
     } finally {
       // a caller-owned pin stays the caller's to release
       stageDir.foreach(d => fs.delete(new HPath(d), true))
     }
   }
-
-  /** Last-wins union of `fresh` over `existing` on `keys` (incoming
-    * wins); columns missing on either side read as null. */
-  private def lastWins(existing: DataFrame, fresh: DataFrame,
-                       keys: Seq[String]): DataFrame =
-    Ops.dedupKeepLast(
-      existing.withColumn("__src", lit(0))
-        .unionByName(fresh.withColumn("__src", lit(1)), allowMissingColumns = true),
-      keys, Seq(col("__src"))).drop("__src")
 }

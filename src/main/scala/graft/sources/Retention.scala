@@ -135,8 +135,9 @@ object Retention {
   /** Drop MINUTE-LAKE day partitions strictly older than `cutoff` — the
     * lifecycle verb that bounds a decade lake: O(days) directory
     * deletes at ANY width (retention on a 100k-symbol lake is the same
-    * handful of metadata ops as on a 100-symbol one). Emptied
-    * month/year parents are removed. Ledger rows for dropped days are
+    * handful of metadata ops as on a 100-symbol one). A day's deltas
+    * live in its dir and go with it. Emptied month/year parents are
+    * removed. Ledger rows for dropped days (base and delta) are
     * re-upserted with status DROPPED (the append-only log is preserved
     * and `auditPartitions` only audits COMMITTED rows, so retention
     * does not manufacture missing_partition noise). Drop the HTF tree
@@ -150,11 +151,7 @@ object Retention {
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new HPath(lakeDir))) return Seq.empty
     val cutoffDay = cutoff.atZone(ZoneOffset.UTC).toLocalDate
-    // aged delta days retire with their base days (the `_delta`
-    // subtree is day-partitioned identically; ledger rows for both
-    // flip to DROPPED via the day-string filter below)
-    val dropped = dropYmdTree(fs, lakeDir, cutoffDay) ++
-      dropYmdTree(fs, s"$lakeDir/${MinuteLakeWriter.DeltaSubdir}", cutoffDay)
+    val dropped = dropYmdTree(fs, lakeDir, cutoffDay)
     ledger.foreach { l =>
       l.all().filter(e => e.status == "COMMITTED" &&
           scala.util.Try(LocalDate.parse(e.day)).toOption.exists(_.isBefore(cutoffDay)))

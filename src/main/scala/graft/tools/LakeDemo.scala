@@ -9,13 +9,24 @@ import graft.sources.{HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWri
   * hour twice (a new day, then a delta patch — the last-wins merge),
   * reads the
   * window back with latest-wins dedup, prints the ledger entry and the
-  * pruned-scan physical plan. Run: `sbt "runMain graft.tools.LakeDemo"`. */
+  * pruned-scan physical plan. The demo lake lives in a temporary
+  * directory that is deleted on exit. Run:
+  * `sbt "runMain graft.tools.LakeDemo"`. */
 object LakeDemo {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors)
+    val dir = java.nio.file.Files.createTempDirectory("demo-lake").toString
+    try demo(spark, dir)
+    finally {
+      spark.stop()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+      ()
+    }
+  }
+
+  private def demo(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     import spark.implicits._
 
-    val dir = java.nio.file.Files.createTempDirectory("demo-lake").toString
     val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
@@ -130,6 +141,5 @@ object LakeDemo {
     val unsupported = router.handle(HttpFacade.HttpRequest("/api/v1/perpetual-data",
       Map("coin" -> "BTC", "tfs" -> "2h")))
     println(s"HTTP_ERRS validation=${bad.status} service=${unsupported.status}")
-    spark.stop()
   }
 }

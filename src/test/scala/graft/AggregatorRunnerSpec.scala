@@ -31,7 +31,7 @@ class AggregatorRunnerSpec extends SparkSpec {
   }
 
   private def newEnv() = {
-    val dir = Files.createTempDirectory("graft-agg").toString
+    val dir = tempDir("graft-agg").toString
     val minuteWriter = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
@@ -393,7 +393,7 @@ class AggregatorRunnerSpec extends SparkSpec {
   // merge into today must not re-aggregate day-to-date × width) ----
 
   private def wideEnv() = {
-    val dir = Files.createTempDirectory("graft-agg-wide").toString
+    val dir = tempDir("graft-agg-wide").toString
     val ledger = new PartitionLedger(s"$dir/_state")
     val mw = new graft.sources.MinuteLakeWriter(dir, ledger,
       graft.sources.LakeLayout.DayWide(filesPerDay = 2))
@@ -471,7 +471,7 @@ class AggregatorRunnerSpec extends SparkSpec {
     // nWritten/repaired), and (b) always counts as CHANGED even when
     // every copy matches the recomputed content — the forced rewrite
     // heals the tree via the writer's last-wins merge.
-    val dir = Files.createTempDirectory("graft-agg-dup").toString
+    val dir = tempDir("graft-agg-dup").toString
     val ledger = new PartitionLedger(s"$dir/_state")
     val mw = new graft.sources.MinuteLakeWriter(dir, ledger,
       graft.sources.LakeLayout.DayWide(filesPerDay = 2))
@@ -692,7 +692,7 @@ class AggregatorRunnerSpec extends SparkSpec {
       Seq((1L, 100000L, 60000.0), (1L, 200000L, 30000.0)))
     assert(m2 == 0.01 && f2 >= 0.0 && f2 <= 60000.0, s"clamps: ($f2, $m2)")
     // observations round-trip through the tick-state file
-    val dir = Files.createTempDirectory("graft-costobs").toString
+    val dir = tempDir("graft-costobs").toString
     val state = new AggregatorStateStore(dir)
     state.addCostObservation(12L, 50000L, 22000.4)
     state.addCostObservation(3L, 100000L, 32000.0)
@@ -719,7 +719,7 @@ class AggregatorRunnerSpec extends SparkSpec {
   }
 
   test("drain cursor store: an unparsable cursor discards the key's WHOLE block instead of silently classifying that symbol drained (r18 advice)") {
-    val dir = Files.createTempDirectory("graft-cursors").toString
+    val dir = tempDir("graft-cursors").toString
     val state = new AggregatorStateStore(dir)
     val key = "5m|ai=false|lb=120|cap=20"
     state.setDrainCursors(key, Map(
@@ -742,7 +742,7 @@ class AggregatorRunnerSpec extends SparkSpec {
   }
 
   test("cost-estimate serialization is locale-proof: comma-decimal default locale round-trips (r18 advice)") {
-    val dir = Files.createTempDirectory("graft-cost-locale").toString
+    val dir = tempDir("graft-cost-locale").toString
     val state = new AggregatorStateStore(dir)
     val prev = java.util.Locale.getDefault
     try {
@@ -825,7 +825,7 @@ class AggregatorRunnerSpec extends SparkSpec {
 
     // keys an older store wrote (whole key upper-cased) still read back
     // for every timeframe whose name has no capital letter
-    val legacyDir = Files.createTempDirectory("graft-wm-legacy")
+    val legacyDir = tempDir("graft-wm-legacy")
     Files.writeString(legacyDir.resolve("watermarks.json"),
       """{"BTCUSDT|1H":"2026-01-01T05:00:00Z","BTCUSDT|5M":"2026-01-01T05:55:00Z"}""")
     val legacy = new AggregatorStateStore(legacyDir.toString)
@@ -834,7 +834,7 @@ class AggregatorRunnerSpec extends SparkSpec {
   }
 
   test("fleet tick Spark job counts (wide layout): a token-skip poll launches none, a one-spec busy tick a fixed number") {
-    val dir = Files.createTempDirectory("graft-agg-jobs").toString
+    val dir = tempDir("graft-agg-jobs").toString
     val ledger = new PartitionLedger(s"$dir/_state")
     val layout = graft.sources.LakeLayout.DayWide(filesPerDay = 2)
     val mw = new MinuteLakeWriter(dir, ledger, layout)

@@ -48,7 +48,7 @@ class CommitSeamSpec extends SparkSpec {
     }
 
   test("rename commit roundtrips create + replace on an atomic-rename FS") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val fs = localFs()
     val dest = s"$root/data/part=a"
     RenameCommit.publish(fs, stage(root, Seq(1, 2, 3)), dest)
@@ -65,7 +65,7 @@ class CommitSeamSpec extends SparkSpec {
     fs.listStatus(new HPath(dir)).count(_.isFile)
 
   test("motivating tear: rename commit on a non-atomic FS exposes a partial partition") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val dest = s"$root/data/part=a"
     RenameCommit.publish(localFs(), stage(root, Seq(1, 2, 3)), dest)
 
@@ -93,7 +93,7 @@ class CommitSeamSpec extends SparkSpec {
   private def gc0 = new ManifestCommit(0L)
 
   test("manifest commit: complete old or complete new at EVERY crash point, then retry completes") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val dest = s"$root/data/part=a"
     val fsClean = crashyFs()
     val mc = gc0
@@ -146,7 +146,7 @@ class CommitSeamSpec extends SparkSpec {
   }
 
   test("grace window (r15 #2): a reader holding version N survives two publishes") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val dest = s"$root/data/part=a"
     val fs = localFs()
     // ManifestCommit's default grace is one hour — far beyond any scan
@@ -185,7 +185,7 @@ class CommitSeamSpec extends SparkSpec {
   }
 
   test("manifest PUT crash windows: the live pointer is never torn or zeroed") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val dest = s"$root/data/part=a"
     val mc = gc0
     mc.publish(localFs(), stage(root, Seq(1, 2, 3)), dest)
@@ -214,7 +214,7 @@ class CommitSeamSpec extends SparkSpec {
   }
 
   test("corrupt manifest: readers see nothing-published; GC refuses to sweep") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val dest = s"$root/data/part=a"
     val fs = localFs()
     val mc = gc0
@@ -236,7 +236,7 @@ class CommitSeamSpec extends SparkSpec {
   }
 
   test("old single-line manifest bodies still resolve (format compatibility)") {
-    val root = Files.createTempDirectory("graft-seam").toString
+    val root = tempDir("graft-seam").toString
     val dest = s"$root/data/part=a"
     val fs = localFs()
     ManifestCommit.publish(fs, stage(root, Seq(1, 2)), dest)
@@ -256,7 +256,7 @@ class CommitSeamSpec extends SparkSpec {
 
   test("putState replace is never read torn — concurrent-read matrix (r15 #7)") {
     Seq(RenameCommit: CommitProtocol, ManifestCommit).foreach { c =>
-      val dir = Files.createTempDirectory("graft-seam-put")
+      val dir = tempDir("graft-seam-put")
       val f = dir.resolve("state.json")
       val a = ("{" + Seq.fill(200)("\"ka\":\"va\"").mkString(",") + "}").getBytes("UTF-8")
       val b = ("{" + Seq.fill(200)("\"kb\":\"vb\"").mkString(",") + "}").getBytes("UTF-8")
@@ -286,7 +286,7 @@ class CommitSeamSpec extends SparkSpec {
 
   test("state-plane seam: WatermarkStore roundtrips through both committers") {
     Seq(RenameCommit: CommitProtocol, ManifestCommit).foreach { c =>
-      val dir = Files.createTempDirectory("graft-seam-state").toString
+      val dir = tempDir("graft-seam-state").toString
       val store = new WatermarkStore(dir, c)
       store.setAll(Map("BTCUSDT" -> instant("2024-03-01T10:59:00Z")))
       store.setAll(Map("ETHUSDT" -> instant("2024-03-01T11:30:00Z"),
@@ -297,7 +297,7 @@ class CommitSeamSpec extends SparkSpec {
   }
 
   test("single-coordinator clock pin (r16 #5 + r17 advice): a publisher behind the recorded history warns loudly; new stamps are capped at now + tolerance") {
-    val root = Files.createTempDirectory("graft-seam-clock").toString
+    val root = tempDir("graft-seam-clock").toString
     val dest = s"$root/data/part=a"
     val fs = localFs()
     val warnings = scala.collection.mutable.Buffer[String]()
@@ -355,7 +355,7 @@ class CommitSeamSpec extends SparkSpec {
     // transient promote failure plus the writer's finally-cleanup of
     // the merge tmp destroyed the only copy — day-level data loss.
     // The rename-aside swap must hand the old content back.
-    val root = Files.createTempDirectory("graft-swap").toString
+    val root = tempDir("graft-swap").toString
     val fs = new org.apache.hadoop.fs.RawLocalFileSystem {
       var failPromotesTo: Option[String] = None
       override def rename(src: HPath, dst: HPath): Boolean = {
@@ -394,5 +394,46 @@ class CommitSeamSpec extends SparkSpec {
     assert(fs.exists(new HPath(s"$target/new-content")) &&
       !fs.exists(new HPath(s"$target/old-content")),
       "retried swap promotes the staged day")
+
+    // a minute day holding a `_delta/` child: the swap moves the whole
+    // day, so a failed promote hands the deltas back with the base and
+    // every read is as before
+    def canonical(symbol: String, open: Double, minutes: Int) = {
+      val base = spark.range(minutes.toLong).select(lit(symbol).as("symbol"),
+        timestamp_millis(lit(ms("2026-01-15T00:00:00Z")) + col("id") * 60000L).as("timestamp"),
+        lit(open).as("open"), lit(open + 1).as("high"), lit(open - 1).as("low"),
+        lit(open).as("close"), lit(1.0).as("volume_btc"), lit(100.0).as("volume_usdt"),
+        lit(10L).as("trade_count"), lit(open).as("mark_price_open"),
+        lit(open).as("mark_price_close"), lit(open).as("index_price_open"),
+        lit(open).as("index_price_close"))
+      graft.schema.CanonicalSchema.columns.foldLeft(base) { (df, c) =>
+        if (df.columns.contains(c.name)) df.withColumn(c.name, col(c.name).cast(c.sparkType))
+        else df.withColumn(c.name, lit(null).cast(c.sparkType))
+      }
+    }
+    val lake = s"$root/lake"
+    val writer = new MinuteLakeWriter(lake, new PartitionLedger(s"$lake/_state"),
+      LakeLayout.DayWide(filesPerDay = 2))
+    writer.writeDaysWide(canonical("AAAUSDT", 1.0, 120).unionByName(canonical("BBBUSDT", 1.0, 120)))
+    writer.writeDeltaPatch(canonical("AAAUSDT", 2.0, 30))
+    val day = s"$lake/futures/um/minute/year=2026/month=01/day=15"
+    val reader = new MinuteLakeReader(lake)
+    def rows(): Seq[String] = reader.readWindowAllSymbols(spark,
+        instant("2026-01-15T00:00:00Z"), instant("2026-01-15T01:59:00Z")).get
+      .select("symbol", "timestamp", "open").collect().map(_.toString).sorted.toSeq
+    def deltaNames(): Seq[String] =
+      fs.listStatus(new HPath(s"$day/_delta")).map(_.getPath.getName).sorted.toSeq
+    val (rowsBefore, deltasBefore) = (rows(), deltaNames())
+    assert(rowsBefore.count(_.contains(",2.0]")) == 30 && deltasBefore.nonEmpty)
+    val staged2 = s"$root/.tmp/stage2/year=2026/month=01/day=15"
+    mkDay(staged2, "new-content")
+    fs.failPromotesTo = Some(day)
+    intercept[java.io.IOException] {
+      graft.sources.WideDayPublish.swap(fs, staged2, new HPath(day),
+        new HPath(s"$root/.tmp/aside2/year=2026/month=01/day=15"))
+    }
+    assert(!fs.exists(new HPath(s"$day/new-content")))
+    assert(deltaNames() == deltasBefore, "the day came back without its deltas")
+    assert(rows() == rowsBefore, "reads moved after the restore")
   }
 }

@@ -74,7 +74,7 @@ class GraphOpsSpec extends SparkSpec {
 
   test("reliable checkpointing is a constructor argument: closure identical through _.checkpoint() (VERDICT r14 #4)") {
     import spark.implicits._
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val ckptDir = tempDir("graft-cc-ckpt").toString
     val prior = Option(spark.sparkContext.getCheckpointDir).flatten
     spark.sparkContext.setCheckpointDir(ckptDir)
     try {

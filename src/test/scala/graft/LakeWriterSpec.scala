@@ -28,7 +28,7 @@ class LakeWriterSpec extends SparkSpec {
   }
 
   private def newLake(): (MinuteLakeWriter, MinuteLakeReader, String) = {
-    val dir = Files.createTempDirectory("graft-lake").toString
+    val dir = tempDir("graft-lake").toString
     val ledger = new PartitionLedger(s"$dir/_state")
     (new MinuteLakeWriter(dir, ledger, LakeLayout.DayWide(filesPerDay = 4)),
       new MinuteLakeReader(dir), dir)
@@ -108,7 +108,7 @@ class LakeWriterSpec extends SparkSpec {
   }
 
   test("watermark store round-trips and replaces atomically (state/store.py:46-75)") {
-    val dir = Files.createTempDirectory("graft-wm").toString
+    val dir = tempDir("graft-wm").toString
     val wm = new WatermarkStore(dir)
     assert(wm.get("BTCUSDT").isEmpty)
     wm.set("BTCUSDT", instant("2026-01-15T10:00:00Z"))
@@ -119,7 +119,7 @@ class LakeWriterSpec extends SparkSpec {
   }
 
   test("retention drops day partitions older than cutoff (websocket.py:798-899)") {
-    val dir = Files.createTempDirectory("graft-ret").toString
+    val dir = tempDir("graft-ret").toString
     for (d <- Seq("2026-01-10", "2026-01-14", "2026-01-15")) {
       Seq((1L, d)).toDF("event_id", "d")
         .write.mode("overwrite").parquet(s"$dir/day=$d")
@@ -132,7 +132,7 @@ class LakeWriterSpec extends SparkSpec {
   }
 
   test("small-file compaction: file count drops, content unchanged, healthy partitions untouched (cli/app.py:180-222 VACUUM analogue)") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     // a micro-batch-accreted partition: 6 tiny files
     (1 to 6).foreach { i =>
       Seq((i.toLong, s"e$i", 100.0 + i)).toDF("event_id", "kind", "px")
@@ -174,7 +174,7 @@ class LakeWriterSpec extends SparkSpec {
 
   test("ledger compaction: last-wins snapshot, identical reads, appends keep working") {
     import java.nio.file.{Files => JFiles, Paths}
-    val dir = Files.createTempDirectory("graft-ledger-compact").toString
+    val dir = tempDir("graft-ledger-compact").toString
     val ledger = new PartitionLedger(dir)
     def entry(sym: String, hour: Int, n: Long, status: String = "COMMITTED") =
       graft.sources.PartitionLedgerEntry(sym, "2026-01-10", hour, s"$dir/p",
@@ -204,7 +204,7 @@ class LakeWriterSpec extends SparkSpec {
   }
 
   test("ledger version log: superseded lines visible until compaction; droppedThrough marks the hole (r16)") {
-    val dir = Files.createTempDirectory("graft-ledger-versions").toString
+    val dir = tempDir("graft-ledger-versions").toString
     val ledger = new PartitionLedger(dir)
     def entry(n: Long, at: String, pmin: String) =
       graft.sources.PartitionLedgerEntry("__ALL__", "2026-01-10", -1, s"$dir/p",
@@ -255,7 +255,7 @@ class LakeWriterSpec extends SparkSpec {
 
     // window 1 — crash BEFORE the swap: original live + stale tmp with
     // divergent content. The stale tmp must be discarded, never promoted.
-    val d1 = Files.createTempDirectory("graft-crash1").toString
+    val d1 = tempDir("graft-crash1").toString
     mkPartition(d1); bogusTmp(d1)
     val done1 = graft.sources.Retention.compactDayPartitions(spark, d1, "day")
     assert(rowsOf(d1) == (1L to 6L)) // original content survived (and compacted)
@@ -264,7 +264,7 @@ class LakeWriterSpec extends SparkSpec {
     // window 2 — crash BETWEEN the renames: partition dir missing, the
     // only original copy sits under .compact_old, a verified tmp exists.
     // Recovery must restore the ORIGINAL (the pre-fix code deleted it).
-    val d2 = Files.createTempDirectory("graft-crash2").toString
+    val d2 = tempDir("graft-crash2").toString
     mkPartition(d2)
     moveDir(s"$d2/day=2026-01-10", s"$d2/.compact_old/day=2026-01-10")
     bogusTmp(d2)
@@ -276,7 +276,7 @@ class LakeWriterSpec extends SparkSpec {
     // dropped: the live dir already holds ONLY new files (the swap is a
     // dir rename, so a reader never observes an old/new mix). Recovery
     // just drops the leftover old copy.
-    val d3 = Files.createTempDirectory("graft-crash3").toString
+    val d3 = tempDir("graft-crash3").toString
     mkPartition(d3)
     moveDir(s"$d3/day=2026-01-10", s"$d3/.compact_old/day=2026-01-10")
     spark.read.parquet(s"$d3/.compact_old/day=2026-01-10").coalesce(1)
@@ -289,7 +289,7 @@ class LakeWriterSpec extends SparkSpec {
 
     // window 4 (defensive) — partition AND .compact_old both gone, the
     // verified tmp is the sole complete copy: it must be promoted.
-    val d4 = Files.createTempDirectory("graft-crash4").toString
+    val d4 = tempDir("graft-crash4").toString
     mkPartition(d4)
     moveDir(s"$d4/day=2026-01-10", s"$d4/.compact_tmp/day=2026-01-10")
     graft.sources.Retention.compactDayPartitions(spark, d4, "day")
@@ -298,7 +298,7 @@ class LakeWriterSpec extends SparkSpec {
     // a reader opened across the swap resolves files at action time:
     // re-running an aggregation over the same lazy frame after a
     // compaction returns identical results
-    val d5 = Files.createTempDirectory("graft-crash5").toString
+    val d5 = tempDir("graft-crash5").toString
     mkPartition(d5)
     val lazyReader = spark.read.parquet(s"$d5/day=2026-01-10")
     assert(lazyReader.agg(sum("event_id")).head.getLong(0) == 21L)

@@ -81,7 +81,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata projection prunes the binary column from the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("mm").toString
+    val dir = tempDir("mm").toString
     Seq((1L, Array[Byte](1, 2, 3), "image/fake", 3L))
       .toDF("media_id", "payload", "mime_type", "n_bytes")
       .write.mode("overwrite").parquet(dir)

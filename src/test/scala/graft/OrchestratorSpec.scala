@@ -41,7 +41,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   private def env() = {
-    val dir = Files.createTempDirectory("graft-orch").toString
+    val dir = tempDir("graft-orch").toString
     val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
       graft.sources.LakeLayout.DayWide(filesPerDay = 4))
     (dir, writer, new MinuteLakeReader(dir), new WatermarkStore(s"$dir/_wm"))
@@ -76,7 +76,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("the ingestion tick owns wide-delta compaction: busy tick folds at threshold, idle tick still compacts") {
-    val dir = Files.createTempDirectory("graft-orch-wide").toString
+    val dir = tempDir("graft-orch-wide").toString
     val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
       graft.sources.LakeLayout.DayWide(filesPerDay = 2))
     val reader = new MinuteLakeReader(dir)
@@ -88,7 +88,7 @@ class OrchestratorSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
       spark.sparkContext.hadoopConfiguration)
     def deltaDays = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$dir/futures/um/minute/_delta" + "/year=*/month=*/day=*")).toSeq.map(_.getPath.toString)
+      s"$dir/futures/um/minute" + "/year=*/month=*/day=*/_delta")).toSeq.map(_.getPath.toString)
 
     // age disabled: this row pins the threshold half + the tick wiring
     // (the age half is pinned against controlled `now` in WideLakeSpec)

@@ -224,7 +224,7 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("indicator payload: EMA + previous-period pivots from one window (live_indicators/service.py:32-238)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ind").toString
+    val dir = tempDir("graft-ind").toString
     val writer = new graft.sources.MinuteLakeWriter(dir,
       new graft.sources.PartitionLedger(s"$dir/_state"),
       graft.sources.LakeLayout.DayWide(filesPerDay = 4))
@@ -290,7 +290,7 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("canonical window load reports coverage (service.py:1036-1117)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qs").toString
+    val dir = tempDir("graft-qs").toString
     val writer = new graft.sources.MinuteLakeWriter(dir,
       new graft.sources.PartitionLedger(s"$dir/_state"),
       graft.sources.LakeLayout.DayWide(filesPerDay = 4))
@@ -415,7 +415,7 @@ class QueryServiceSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.operators.{AggregatorRunner, MinuteBuilder}
     import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
-    val dir = Files.createTempDirectory("graft-btc").toString
+    val dir = tempDir("graft-btc").toString
     val mw = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
@@ -703,7 +703,7 @@ class QueryServiceSpec extends SparkSpec {
       def liveAggTrades(s: Instant, e: Instant): Option[org.apache.spark.sql.DataFrame] = None
     }
 
-    val dir = Files.createTempDirectory("graft-rebuild").toString
+    val dir = tempDir("graft-rebuild").toString
     val writer = new MinuteLakeWriter(dir, new PartitionLedger(s"$dir/_state"),
       graft.sources.LakeLayout.DayWide(filesPerDay = 4))
     val reader = new MinuteLakeReader(dir)
@@ -808,7 +808,7 @@ class QueryServiceSpec extends SparkSpec {
   private def lakeWithHtf(from: java.time.Instant, hours: Int, htfTf: String)
       : (graft.sources.MinuteLakeReader, graft.sources.HtfLakeReader) = {
     import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
-    val dir = java.nio.file.Files.createTempDirectory("graft-served").toString
+    val dir = tempDir("graft-served").toString
     val base = Seq("BTCUSDT", "ETHUSDT").toDF("symbol")
       .crossJoin(spark.range(hours * 60L).select(
         timestamp_millis(lit(from.toEpochMilli) + col("id") * 60000L).as("timestamp"),
@@ -838,8 +838,8 @@ class QueryServiceSpec extends SparkSpec {
 
   test("served routes cost one pass: per-route job budget") {
     val (reader, htfReader) = servedLake
-    // the minute reader's schema is fixed, so only the HTF-direct count
-    // includes a parquet schema-inference job
+    // both readers name their file schema, so no count includes a
+    // parquet schema-inference job
     val (bars, candleJobs) = jobsOf(QueryService.candleBars(spark, reader, "ETHUSDT",
       "5m", instant("2026-01-15T05:00:00Z"), ServedEnd, limit = 12).toJSON.collect())
     assert(bars.length == 12)
@@ -856,7 +856,7 @@ class QueryServiceSpec extends SparkSpec {
       (r, r.frame.toJSON.collect())
     }
     assert(btc.fetchMode == "direct_local_higher_tf" && btcRows.length == 8)
-    assert(btcJobs == 3, s"btcLocalOnlyBars (HTF direct) + collect: $btcJobs jobs")
+    assert(btcJobs == 2, s"btcLocalOnlyBars (HTF direct) + collect: $btcJobs jobs")
   }
 
   test("bounded single-symbol reads are one partition; candleBars plans no exchange") {

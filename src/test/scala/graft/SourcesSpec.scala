@@ -20,7 +20,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV-in-ZIP kline load: executor-side unzip, rename, window filter (vision_loader.py:28-66,264-312)") {
-    val dir = Files.createTempDirectory("vision").toString
+    val dir = tempDir("vision").toString
     val t0 = ms("2026-01-15T10:00:00Z")
     // 3 rows, one outside the window; 12 declared columns
     val rows = Seq(t0, t0 + 60000, t0 + 120000).zipWithIndex.map { case (t, i) =>
@@ -37,7 +37,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("schema tolerance: missing columns become typed NULLs, extras dropped (vision_loader.py:303-310)") {
-    val dir = Files.createTempDirectory("vision2").toString
+    val dir = tempDir("vision2").toString
     val t0 = ms("2026-01-15T10:00:00Z")
     // only 5 of 12 kline columns present (plus junk column)
     writeZip(dir, "short.zip", s"$t0,100.0,101.0,99.0,100.5")
@@ -112,7 +112,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("metrics inspector lists the first CSV's header columns (metrics_inspector.py)") {
-    val dir = Files.createTempDirectory("vision-insp").toString
+    val dir = tempDir("vision-insp").toString
     writeZip(dir, "metrics.zip", "create_time,symbol,sum_open_interest\n1,BTCUSDT,2.0")
     assert(VisionLoader.listZipCsvColumns(s"$dir/metrics.zip") ==
       Seq("create_time", "symbol", "sum_open_interest"))
@@ -122,7 +122,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("aggTrades + bookTicker Vision loaders: renames and window filters (vision_loader.py:96-182)") {
-    val dir = Files.createTempDirectory("vision3").toString
+    val dir = tempDir("vision3").toString
     val t0 = ms("2026-01-15T10:00:00Z")
     writeZip(dir, "BTCUSDT-aggTrades-2026-01-15.zip",
       Seq(s"1001,100.25,0.5,2000,2003,$t0,true",
@@ -148,7 +148,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("trades + bookDepth loaders complete the addendum's 9-stream table (§B1.1)") {
-    val dir = Files.createTempDirectory("vision9").toString
+    val dir = tempDir("vision9").toString
     val t0 = ms("2026-01-15T10:00:00Z")
 
     // trades: raw per-trade rows (id,price,qty,quote_qty,time,is_buyer_maker)
@@ -301,7 +301,7 @@ class SourcesSpec extends SparkSpec {
 
   test("vision ZIP cache: second load hits disk, no re-probe or re-download (vision_loader.py:264-312)") {
     import java.time.LocalDate
-    val cacheDir = Files.createTempDirectory("vision-cache")
+    val cacheDir = tempDir("vision-cache")
     val day = LocalDate.parse("2026-01-15")
     val url = "https://data.example.com/klines/BTCUSDT/1m/BTCUSDT-1m-2026-01-15.zip"
     val t0 = ms("2026-01-15T00:00:00Z")
@@ -337,7 +337,7 @@ class SourcesSpec extends SparkSpec {
 
   test("vision ZIP cache: .missing marker suppresses re-probe until TTL expiry (vision_loader.py:314-346)") {
     import java.time.{Instant, LocalDate}
-    val cacheDir = Files.createTempDirectory("vision-miss")
+    val cacheDir = tempDir("vision-miss")
     val day = LocalDate.parse("2026-01-16")
     val transport = new FakeVisionTransport(Map.empty) // nothing remote
     var clock = Instant.parse("2026-01-17T00:00:00Z")
@@ -368,7 +368,7 @@ class SourcesSpec extends SparkSpec {
 
   test("vision ZIP cache: fetchWindow caches each present day across streams (vision_loader.py:206-219)") {
     import java.time.LocalDate
-    val cacheDir = Files.createTempDirectory("vision-win")
+    val cacheDir = tempDir("vision-win")
     val base = "https://data.example.com"
     val row = "1,2.0,3.0,4.0,5.0"
     // klines present both days; aggTrades only the first
@@ -388,7 +388,7 @@ class SourcesSpec extends SparkSpec {
 
   test("bucketed lake tables join WITHOUT a shuffle (co-located join)") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-bucketed").toString
+    val dir = tempDir("graft-bucketed").toString
     val left = spark.range(0, 1000)
       .select(col("id").as("user_id"), (col("id") % 7).as("v"))
     val right = spark.range(0, 1000)

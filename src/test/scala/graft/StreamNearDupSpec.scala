@@ -40,7 +40,7 @@ class StreamNearDupSpec extends SparkSpec {
                                   maxMembers: Int = 128):
       (Seq[org.apache.spark.sql.Row], Long, Seq[org.apache.spark.sql.Row]) = {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-neardup").toString
     val stream = MemoryStream[NearDoc]
     val name = s"near_dup_test_${System.nanoTime()}"

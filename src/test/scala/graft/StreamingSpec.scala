@@ -152,7 +152,7 @@ class StreamingSpec extends SparkSpec {
     val m0 = ms("2026-01-15T10:00:00Z")
     val m1 = m0 + 60000L
     val m2 = m0 + 120000L
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-depth-ckpt").toString
 
     val stream = MemoryStream[DepthMsg]
@@ -249,7 +249,7 @@ class StreamingSpec extends SparkSpec {
     // fork a shell per file op, so multi-batch state round-trips are
     // prohibitively slow here; cross-batch math is covered by the batch
     // path (same MinuteAccumulator).
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-ckpt").toString
     val stream = MemoryStream[LiquidationEvent]
     stream.addData(events: _*)
@@ -278,8 +278,8 @@ class StreamingSpec extends SparkSpec {
     // /dev/shm: local-FS checkpoint renames shell out per file op here,
     // so the state store must live on tmpfs to keep the restart fast
     val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = java.nio.file.Files.createTempDirectory(shm, "graft-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory(shm, "graft-out").toString + "/liq"
+    val ckpt = tempDir(shm, "graft-ckpt").toString
+    val out = tempDir(shm, "graft-out").toString + "/liq"
 
     val batchA = Seq(
       LiquidationEvent("BTCUSDT", m0 + 1000, "SELL", 100.0, 2.0,
@@ -489,7 +489,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val t0 = new java.sql.Timestamp(ms("2026-01-15T10:00:00Z"))
     def at(deltaMs: Long) = new java.sql.Timestamp(t0.getTime + deltaMs)
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-ckpt").toString
 
     val stream = MemoryStream[(String, Long, java.sql.Timestamp)]
@@ -523,7 +523,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val t0 = new java.sql.Timestamp(ms("2026-01-15T10:00:00Z"))
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-ckpt").toString
     val stream = MemoryStream[(String, Double, Double, java.sql.Timestamp)]
     val deduped = graft.streaming.StreamDedup.dedupByFingerprint(
@@ -548,7 +548,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val t0 = new java.sql.Timestamp(ms("2026-01-15T10:00:00Z"))
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-ckpt").toString
     val stream = MemoryStream[(Option[String], Option[String], java.sql.Timestamp)]
     val deduped = graft.streaming.StreamDedup.dedupByFingerprint(
@@ -574,7 +574,7 @@ class StreamingSpec extends SparkSpec {
 
     val m0 = ms("2026-01-15T10:00:00Z")
     val (m1, m2, m3) = (m0 + 60000L, m0 + 120000L, m0 + 180000L)
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = tempDir(
       java.nio.file.Paths.get("/dev/shm"), "graft-e2e-ckpt").toString
 
     val stream = MemoryStream[DepthMsg]

@@ -22,9 +22,11 @@ class WideLakeSpec extends SparkSpec {
   private val Day1 = instant("2026-01-15T00:00:00Z")
 
   /** Spark jobs of a one-day `writeDaysWide(merge = true)` and of a
-    * one-day `compactWideDeltas`, measured on this suite's session. */
-  private val MergeWriteJobs = 15
-  private val CompactJobs = 16
+    * one-day `compactWideDeltas`, measured on this suite's session. The
+    * merge's base and delta reads name their schemas, so neither runs a
+    * footer job. */
+  private val MergeWriteJobs = 14
+  private val CompactJobs = 15
 
   /** Multi-symbol canonical minutes spanning `hours` hours. */
   private def minutes(symbols: Seq[String], hours: Int,
@@ -95,7 +97,7 @@ class WideLakeSpec extends SparkSpec {
   test("wide write + reader API parity with the hourly layout") {
     val syms = Seq("AAAUSDT", "BBBUSDT", "CCCUSDT", "DDDUSDT")
     val frame = minutes(syms, hours = 26) // crosses a day boundary
-    val wRoot = Files.createTempDirectory("graft-wide-w").toString
+    val wRoot = tempDir("graft-wide-w").toString
     val wWriter = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
     wWriter.writeDaysWide(frame)
@@ -138,7 +140,7 @@ class WideLakeSpec extends SparkSpec {
 
   test("readWindow reads with the writers' schema: no footer job before an action") {
     val frame = minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3)
-    val wRoot = Files.createTempDirectory("graft-wide-schema").toString
+    val wRoot = tempDir("graft-wide-schema").toString
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2)).writeDaysWide(frame)
     val lakeDir = s"$wRoot/futures/um/minute"
@@ -147,12 +149,12 @@ class WideLakeSpec extends SparkSpec {
     val Seq(day) = graft.sources.DayDirs.ascending(fs, lakeDir)
     val inferred = spark.read.option("basePath", lakeDir).parquet(day)
       .drop("year", "month", "day").schema
-    // parquet resolves columns by name, and a file source reads every
-    // column as nullable: compare (name, type) in name order (the file
-    // keeps its writer's column order; the canonical fields carry doc
-    // metadata the files do not)
+    // a file source reads every column as nullable: compare (name, type)
+    // in order (the writer writes FileSchema's column order whatever the
+    // caller's — the fixture leads with symbol, timestamp, open; the
+    // canonical fields carry doc metadata the files do not)
     def fields(s: org.apache.spark.sql.types.StructType) =
-      s.fields.toSeq.map(f => f.name -> f.dataType).sortBy(_._1)
+      s.fields.toSeq.map(f => f.name -> f.dataType)
     assert(fields(inferred) == fields(MinuteLakeReader.FileSchema))
 
     val reader = new MinuteLakeReader(wRoot)
@@ -165,13 +167,36 @@ class WideLakeSpec extends SparkSpec {
       window.exceptAll(expected.select(window.columns.map(col).toSeq: _*)).isEmpty)
   }
 
+  test("HtfLakeReader reads with the writers' schema: the aggregator's plan, no footer job") {
+    val wRoot = tempDir("graft-htf-schema").toString
+    new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 2)).writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3))
+    AggregatorRunner.runBackfillAll(spark, new MinuteLakeReader(wRoot),
+      new HtfLakeWriter(s"$wRoot/htf", LakeLayout.DayWide(filesPerDay = 2)),
+      new AggregatorStateStore(s"$wRoot/_aggstate"), s"$wRoot/htf", Timeframes.parse("1h"))
+    val tfDir = s"$wRoot/htf/timeframe=1h"
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(wRoot),
+      spark.sparkContext.hadoopConfiguration)
+    val Seq(day) = graft.sources.DayDirs.ascending(fs, tfDir)
+    val inferred = spark.read.option("basePath", tfDir).parquet(day)
+      .drop("year", "month", "day").schema
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => (f.name, f.dataType, f.nullable))
+    assert(fields(HtfLakeReader.fileSchema(spark, "1h")) == fields(inferred))
+
+    val (bars, jobs) = jobsOf(new HtfLakeReader(s"$wRoot/htf").readWindow(spark, "1h",
+      "BBBUSDT", Day1, instant("2026-01-15T02:59:00Z")).get)
+    assert(jobs == 0, s"building the HTF window ran $jobs jobs")
+    assert(bars.count() == 3)
+  }
+
   test("wide inspectRange/latestMinute: end-probed, parity incl. stragglers and absent symbols") {
     // EEEUSDT stops 10 hours into day 1 — the max-probe's first batch
     // (deepest day) finds nothing for it and must expand backward; the
     // min-probe finds every symbol in batch 1. FFFUSDT never exists.
     val frame = minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 26)
       .unionByName(minutes(Seq("EEEUSDT"), hours = 10))
-    val wRoot = Files.createTempDirectory("graft-insp-w").toString
+    val wRoot = tempDir("graft-insp-w").toString
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3)).writeDaysWide(frame)
     val wr = new MinuteLakeReader(wRoot)
@@ -209,7 +234,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("wide bulk write commits day-grain ledger rows; audit detects tamper and deletes") {
-    val wRoot = Files.createTempDirectory("graft-audit-w").toString
+    val wRoot = tempDir("graft-audit-w").toString
     val ledger = new PartitionLedger(s"$wRoot/_state")
     val writer = new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 3))
     writer.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 26)) // 2 days
@@ -246,7 +271,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("auditPartitions batches day-grain hashing: one job per family; unreadable isolates") {
-    val wRoot = Files.createTempDirectory("graft-audit-batch").toString
+    val wRoot = tempDir("graft-audit-batch").toString
     val ledger = new PartitionLedger(s"$wRoot/_state")
     val writer = new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 2))
     writer.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 50)) // 3 days
@@ -297,7 +322,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("wide merge is last-wins keyed by (symbol, timestamp), sibling symbols survive") {
-    val wRoot = Files.createTempDirectory("graft-wide-m").toString
+    val wRoot = tempDir("graft-wide-m").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 2))
@@ -318,7 +343,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("writeHourPartition routes through the day-wide merge (same writer API)") {
-    val wRoot = Files.createTempDirectory("graft-wide-api").toString
+    val wRoot = tempDir("graft-wide-api").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     val hour = instant("2026-01-15T10:00:00Z")
@@ -338,7 +363,7 @@ class WideLakeSpec extends SparkSpec {
     val spec = Timeframes.parse("1h")
     val frame = minutes(syms, hours = 24)
 
-    val wRoot = Files.createTempDirectory("graft-wide-htf-w").toString
+    val wRoot = tempDir("graft-wide-htf-w").toString
     val layout = LakeLayout.DayWide(filesPerDay = 3)
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"), layout)
       .writeDaysWide(frame)
@@ -394,7 +419,7 @@ class WideLakeSpec extends SparkSpec {
     // 3-day lake; every bounded read form must plan over the touched
     // day's files alone — the depth-flat guarantee, asserted from the
     // plan's file list rather than timed
-    val wRoot = Files.createTempDirectory("graft-wide-bounded").toString
+    val wRoot = tempDir("graft-wide-bounded").toString
     val writer = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3))
     // coverage flags written false, as MinuteBuilder writes them ("False
@@ -475,7 +500,7 @@ class WideLakeSpec extends SparkSpec {
     val cutoff = instant("2026-01-16T00:00:00Z") // retires day 15 only
 
     // 3-day lake + HTF tree, ledgered
-    val wRoot = Files.createTempDirectory("graft-ret-w").toString
+    val wRoot = tempDir("graft-ret-w").toString
     val ledger = new PartitionLedger(s"$wRoot/_state")
     val frame = minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 72)
     new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 3))
@@ -512,7 +537,7 @@ class WideLakeSpec extends SparkSpec {
 
   test("wide scanSymbol pushes the symbol predicate into the parquet scan") {
     val syms = (0 until 8).map(i => f"SY${i}%02dUSDT")
-    val wRoot = Files.createTempDirectory("graft-wide-plan").toString
+    val wRoot = tempDir("graft-wide-plan").toString
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 8))
       .writeDaysWide(minutes(syms, hours = 2))
@@ -537,7 +562,7 @@ class WideLakeSpec extends SparkSpec {
     // a clustered day stores each symbol in ≤2 files (range boundary
     // straddle); a scrambled day smears symbols across all 4.
     val syms = (0 until 8).map(i => f"CL${i}%02dUSDT")
-    val wRoot = Files.createTempDirectory("graft-wide-cluster").toString
+    val wRoot = tempDir("graft-wide-cluster").toString
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
       .writeDaysWide(minutes(syms, hours = 24))
@@ -555,7 +580,7 @@ class WideLakeSpec extends SparkSpec {
     // 2-deepest-day scan. Without the knownSymbols hint it's absent
     // (documented trade); with it, the per-symbol probe finds its true
     // latest, so the fleet tick can finalize its trailing buckets.
-    val wRoot = Files.createTempDirectory("graft-wide-idle").toString
+    val wRoot = tempDir("graft-wide-idle").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 96)
@@ -585,7 +610,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("point repair lands as a delta: base files untouched, patch visible with merge semantics") {
-    val wRoot = Files.createTempDirectory("graft-wide-delta").toString
+    val wRoot = tempDir("graft-wide-delta").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3))
     // base: 26h × 2 symbols, AAAUSDT carries a LIVE_ONLY coverage flag
@@ -595,7 +620,7 @@ class WideLakeSpec extends SparkSpec {
 
     // patch: AAAUSDT's first hour, new opens, has_depth null in the patch
     val deltaDirs = w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 700.0))
-    assert(deltaDirs.size == 1 && deltaDirs.head.contains("/_delta/"))
+    assert(deltaDirs.size == 1 && deltaDirs.head.endsWith("/day=15/_delta"))
     assert(baseFileSnapshot(wRoot) == before, "base day files were rewritten by a point patch")
 
     val r = new MinuteLakeReader(wRoot)
@@ -645,7 +670,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("delta compaction folds into base: reads identical, deltas gone, ledger coherent") {
-    val wRoot = Files.createTempDirectory("graft-wide-compact").toString
+    val wRoot = tempDir("graft-wide-compact").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 3))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 26)
@@ -660,7 +685,7 @@ class WideLakeSpec extends SparkSpec {
     val pre = fingerprint()
 
     val folded = w.compactWideDeltas(spark)
-    assert(folded.size == 1 && folded.head.contains("/_delta/"))
+    assert(folded.size == 1 && folded.head.endsWith("/day=15/_delta"))
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(wRoot),
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(folded.head)))
@@ -696,7 +721,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("symbol registry short-circuits absent-symbol probes; fallback walk without it; patches register new symbols") {
-    val wRoot = Files.createTempDirectory("graft-wide-reg").toString
+    val wRoot = tempDir("graft-wide-reg").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3))
@@ -739,16 +764,15 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("compactWideDeltasIfDue: threshold OR age (whichever trips), reader-invariant, retention-safe") {
-    val wRoot = Files.createTempDirectory("graft-wide-policy").toString
+    val wRoot = tempDir("graft-wide-policy").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3))
     w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 700.0))
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(wRoot),
       spark.sparkContext.hadoopConfiguration)
-    val deltaRoot = s"$wRoot/futures/um/minute/_delta"
     def deltaDays = fs.globStatus(new org.apache.hadoop.fs.Path(
-      deltaRoot + "/year=*/month=*/day=*")).toSeq.map(_.getPath.toString)
+      s"$wRoot/futures/um/minute" + "/year=*/month=*/day=*/_delta")).toSeq.map(_.getPath.toString)
     val r = new MinuteLakeReader(wRoot)
     def fingerprint() = sortedRows(r.scanAllSymbols(spark).get)
     val pre = fingerprint()
@@ -791,7 +815,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("writeHourPartition point-repairs an existing wide day as a delta; new days bootstrap bulk") {
-    val wRoot = Files.createTempDirectory("graft-wide-hourapi").toString
+    val wRoot = tempDir("graft-wide-hourapi").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
@@ -817,14 +841,14 @@ class WideLakeSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$wRoot/futures/um/minute/year=2026/month=01/day=16")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$wRoot/futures/um/minute/_delta/year=2026/month=01/day=16")))
+      s"$wRoot/futures/um/minute/year=2026/month=01/day=16/_delta")))
     assert(r.scanSymbol(spark, "AAAUSDT").count() == 25 * 60) // 24h base + 1 new-day hour
   }
 
   test("QueryService.candleBars serves identical bars from hourly and wide lakes") {
     val syms = Seq("AAAUSDT", "BBBUSDT")
     val frame = minutes(syms, hours = 4)
-    val wRoot = Files.createTempDirectory("graft-wide-svc-w").toString
+    val wRoot = tempDir("graft-wide-svc-w").toString
     new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 4)).writeDaysWide(frame)
     val lo = Day1; val hi = instant("2026-01-15T03:59:00Z")
@@ -867,8 +891,8 @@ class WideLakeSpec extends SparkSpec {
   test("LakeMigrate: hourly lake migrates to day-wide with parity verified") {
     val syms = Seq("AAAUSDT", "BBBUSDT", "CCCUSDT")
     val frame = minutes(syms, hours = 26) // crosses a day boundary
-    val hRoot = Files.createTempDirectory("graft-mig-src").toString
-    val wRoot = Files.createTempDirectory("graft-mig-dst").toString
+    val hRoot = tempDir("graft-mig-src").toString
+    val wRoot = tempDir("graft-mig-dst").toString
     hourlyLake(frame, hRoot)
 
     val report = graft.sources.LakeMigrate.hourlyToDayWide(spark, hRoot, wRoot,
@@ -910,7 +934,7 @@ class WideLakeSpec extends SparkSpec {
       assert(spark.conf.get(key) == "STATIC", s"$what changed $key")
     }
     try {
-      val wRoot = Files.createTempDirectory("graft-wide-conf").toString
+      val wRoot = tempDir("graft-wide-conf").toString
       val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
         LakeLayout.DayWide(filesPerDay = 2))
       unchanged("writeDaysWide")(
@@ -923,7 +947,7 @@ class WideLakeSpec extends SparkSpec {
       def buckets(close: Double) =
         Seq(("AAAUSDT", ts("2026-01-15T00:00:00Z"), close, true))
           .toDF("symbol", "bucket_start", "close", "bucket_complete")
-      val hRoot = Files.createTempDirectory("graft-htf-conf").toString
+      val hRoot = tempDir("graft-htf-conf").toString
       val hw = new HtfLakeWriter(hRoot, LakeLayout.DayWide(filesPerDay = 2))
       unchanged("writeBucketsBulkAllSymbols (fresh)")(
         hw.writeBucketsBulkAllSymbols(spark, "1h", buckets(1.0)))
@@ -936,7 +960,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("wide audit is clean after writeHourPartition into an existing and a new day; tamper still detected") {
-    val wRoot = Files.createTempDirectory("graft-wide-hour-audit").toString
+    val wRoot = tempDir("graft-wide-hour-audit").toString
     val ledger = new PartitionLedger(s"$wRoot/_state")
     val w = new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
@@ -965,6 +989,60 @@ class WideLakeSpec extends SparkSpec {
     val issues = w.auditPartitions(spark).map(r => (r.day, r.hour) -> r.issue).toMap
     assert(issues(("2026-01-15", -2)) == "hash_mismatch", s"got $issues")
     assert(issues.values.count(_ == "ok") == 2, s"got $issues")
+  }
+
+  /** AAAUSDT's opens over the first hour of Day1 through every window
+    * reader, ordered by time. */
+  private def firstHourOpens(r: MinuteLakeReader): Seq[(String, Seq[Double])] = {
+    val lo = Day1; val hi = instant("2026-01-15T00:59:00Z")
+    def opens(df: DataFrame) = df.where(col("timestamp").between(
+        java.sql.Timestamp.from(lo), java.sql.Timestamp.from(hi)))
+      .orderBy("timestamp").select("open").collect().map(_.getDouble(0)).toSeq
+    Seq("readWindow" -> opens(r.readWindow(spark, "AAAUSDT", lo, hi)),
+        "scanSymbol" -> opens(r.scanSymbol(spark, "AAAUSDT")),
+        "readWindowAllSymbols" -> opens(r.readWindowAllSymbols(spark, lo, hi).get
+          .where(col("symbol") === "AAAUSDT")))
+  }
+
+  for (merge <- Seq(true, false))
+    test(s"a writeDaysWide(merge = $merge) over a patched day is not masked by its older deltas") {
+      val wRoot = tempDir("graft-wide-mask").toString
+      val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+        LakeLayout.DayWide(filesPerDay = 2))
+      w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24, openBase = 1.0))
+      w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 2.0))
+      val latest =
+        if (merge) minutes(Seq("AAAUSDT"), hours = 1, openBase = 3.0)
+        else minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24, openBase = 3.0)
+      w.writeDaysWide(latest, merge = merge)
+      val want = minutes(Seq("AAAUSDT"), hours = 1, openBase = 3.0)
+        .orderBy("timestamp").select("open").collect().map(_.getDouble(0)).toSeq
+      val r = new MinuteLakeReader(wRoot)
+      for ((what, got) <- firstHourOpens(r))
+        assert(got == want, s"$what after the write read ${got.take(3)}…, want ${want.take(3)}…")
+      // the swap retired the day's deltas: nothing is left to fold, the
+      // rows stay the write's, and every ledger row audits ok
+      w.compactWideDeltas(spark)
+      for ((what, got) <- firstHourOpens(r))
+        assert(got == want, s"$what after compaction read ${got.take(3)}…")
+      val audit = w.auditPartitions(spark)
+      assert(audit.nonEmpty && audit.forall(_.ok), s"audit: $audit")
+      assert(new PartitionLedger(s"$wRoot/_state").all()
+        .filter(_.symbol == "__DELTA__").forall(_.status == "DROPPED"))
+    }
+
+  test("a second patch to a day runs no more Spark jobs than the first (no seq scan)") {
+    val wRoot = tempDir("graft-wide-seq").toString
+    val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
+      LakeLayout.DayWide(filesPerDay = 2))
+    w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
+    val (_, first) = jobsOf(w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 700.0)))
+    val (_, second) = jobsOf(w.writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 900.0)))
+    assert(second <= first, s"first patch $first jobs, second $second")
+    // the second patch still outranks the first
+    assert(new MinuteLakeReader(wRoot).readWindow(spark, "AAAUSDT",
+        Day1, instant("2026-01-15T00:59:00Z"))
+      .agg(min("open"), max("open")).head.toSeq == Seq(900.0, 949.0))
   }
 
   /** (all jobs, jobs whose tasks wrote output bytes) launched by `body`. */
@@ -998,7 +1076,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("wide merge write stages once and writes the merged days once (job counts)") {
-    val wRoot = Files.createTempDirectory("graft-wide-jobs").toString
+    val wRoot = tempDir("graft-wide-jobs").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
@@ -1015,7 +1093,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("delta compaction stages once and writes the folded days once (job counts)") {
-    val wRoot = Files.createTempDirectory("graft-compact-jobs").toString
+    val wRoot = tempDir("graft-compact-jobs").toString
     val w = new MinuteLakeWriter(wRoot, new PartitionLedger(s"$wRoot/_state"),
       LakeLayout.DayWide(filesPerDay = 2))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
@@ -1053,7 +1131,7 @@ class WideLakeSpec extends SparkSpec {
   /** A root whose minute lake and HTF timeframe dirs exist but hold no
     * day yet. */
   private def daylessLake(): String = {
-    val root = Files.createTempDirectory("graft-empty-b").toString
+    val root = tempDir("graft-empty-b").toString
     Files.createDirectories(java.nio.file.Paths.get(s"$root/futures/um/minute"))
     Files.createDirectories(java.nio.file.Paths.get(s"$root/htf/timeframe=1h"))
     root
@@ -1061,7 +1139,7 @@ class WideLakeSpec extends SparkSpec {
 
   test("an absent or day-less lake reads empty through every reader verb") {
     // (a) a root with no lake dir
-    assertReadsEmpty(Files.createTempDirectory("graft-empty-a").toString, wholeLake = true)
+    assertReadsEmpty(tempDir("graft-empty-a").toString, wholeLake = true)
     // (b) lake and HTF timeframe dirs that hold no day yet
     assertReadsEmpty(daylessLake(), wholeLake = false)
   }
@@ -1071,7 +1149,7 @@ class WideLakeSpec extends SparkSpec {
   }
 
   test("a reference-layout hourly tree fails every reader verb loudly, naming the migration") {
-    val hRoot = Files.createTempDirectory("graft-ref-layout").toString
+    val hRoot = tempDir("graft-ref-layout").toString
     hourlyLake(minutes(Seq("AAAUSDT"), hours = 2), hRoot)
     val r = new MinuteLakeReader(hRoot)
     val lo = Day1; val hi = instant("2026-01-15T01:59:00Z")
@@ -1089,8 +1167,30 @@ class WideLakeSpec extends SparkSpec {
     }
   }
 
+  test("a top-level _delta tree fails every reader verb loudly") {
+    val root = tempDir("graft-old-delta").toString
+    new MinuteLakeWriter(root, new PartitionLedger(s"$root/_state"),
+      LakeLayout.DayWide(filesPerDay = 2)).writeDaysWide(minutes(Seq("AAAUSDT"), hours = 2))
+    Files.createDirectories(java.nio.file.Paths.get(
+      s"$root/futures/um/minute/_delta/year=2026/month=01/day=15"))
+    val r = new MinuteLakeReader(root)
+    val lo = Day1; val hi = instant("2026-01-15T01:59:00Z")
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "scanSymbol" -> (() => r.scanSymbol(spark, "AAAUSDT")),
+      "scanAllSymbols" -> (() => r.scanAllSymbols(spark)),
+      "readWindowAllSymbols" -> (() => r.readWindowAllSymbols(spark, lo, hi)),
+      "latestMinuteAllSymbols" -> (() => r.latestMinuteAllSymbols(spark)),
+      "inspectRange" -> (() => r.inspectRange(spark, "AAAUSDT")),
+      "latestMinute" -> (() => r.latestMinute(spark, "AAAUSDT")),
+      "readWindow" -> (() => r.readWindow(spark, "AAAUSDT", lo, hi)))
+    verbs.foreach { case (name, verb) =>
+      val e = intercept[IllegalStateException](verb())
+      assert(e.getMessage.contains("year=/month=/day=/_delta/"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("rebuildSymbolRegistry heals a torn registry from the base and delta trees") {
-    val root = Files.createTempDirectory("graft-registry-heal").toString
+    val root = tempDir("graft-registry-heal").toString
     val w = new MinuteLakeWriter(root, new PartitionLedger(s"$root/_state"),
       LakeLayout.DayWide(filesPerDay = 4))
     w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 3))

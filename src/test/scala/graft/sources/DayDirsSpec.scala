@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileSystem
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Request-economics bound for the day-dir walks (VERDICT r13 #2): a
   * bounded window over an arbitrarily DEEP lake must cost
@@ -12,14 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * store every LIST is a billable request, so a 3-hour read over a
   * decade lake pruning down from ~3,700 LISTs to 3 is the difference
   * between metadata noise and a per-request cost floor. Pure-FS spec:
-  * no SparkSession, just directories. */
-class DayDirsSpec extends AnyFunSuite {
-
-  private def instant(s: String) = java.time.Instant.parse(s)
+  * it starts no SparkSession, just directories. */
+class DayDirsSpec extends graft.SparkSpec {
 
   /** A bare year=/month=/day= tree spanning [firstYear, lastYear]. */
   private def mkTree(firstYear: Int, lastYear: Int): String = {
-    val base = Files.createTempDirectory("graft-daydirs").toString
+    val base = tempDir("graft-daydirs").toString
     for (y <- firstYear to lastYear; m <- 1 to 12; d <- Seq(1, 10, 28))
       Files.createDirectories(java.nio.file.Paths.get(
         base, f"year=$y%04d", f"month=$m%02d", f"day=$d%02d"))
@@ -68,5 +65,13 @@ class DayDirsSpec extends AnyFunSuite {
     assert(DayDirs.deepest(fs, base, 4).map(DayDirs.ymdOf) ==
       Seq((2026, 12, 28), (2026, 12, 10), (2026, 12, 1), (2026, 11, 28)))
     assert(DayDirs.deepest(fs, base, 0).isEmpty)
+  }
+
+  test("ymdOf resolves a day dir, its _delta dir and the files in them to the day") {
+    val day = "file:/lake/futures/um/minute/year=2026/month=01/day=15"
+    for (p <- Seq(day, s"$day/_delta", s"$day/part-00000.parquet",
+                  s"$day/_delta/delta-000000000001-part-00000.parquet"))
+      assert(DayDirs.ymdOf(p) == ((2026, 1, 15)), p)
+    assert(DayDirs.ymdOf("/lake/year=2026/month=1/day=5") == ((2026, 1, 5)))
   }
 }
