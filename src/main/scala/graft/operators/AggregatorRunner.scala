@@ -269,8 +269,9 @@ object AggregatorRunner {
     // file must not re-arm gates); change detection over the full
     // VERSION log (two commits to the same key between polls must both
     // contribute their touched ranges — the deduped view keeps only
-    // the second)
-    val versions = ledger.allVersions()
+    // the second). A PENDING delta row announces files that have not
+    // landed yet; the COMMITTED row that follows it is the change.
+    val versions = ledger.allVersions().filter(_.status != "PENDING")
     if (versions.isEmpty) None
     else {
       val entries = versions.groupBy(e => (e.symbol, e.day, e.hour))

@@ -342,8 +342,7 @@ class MinuteLakeReader(root: String) {
           Seq("timestamp"))
       case None =>
         MinuteLakeReader.overlay(spark, base,
-          MinuteLakeReader.deltaFiles(fsOf(spark), days).map(_.getPath.toString),
-          fresh = None)
+          MinuteLakeReader.deltaFiles(fsOf(spark), days).map(_.getPath.toString))
     }
 
   /** Single-symbol scan over the whole lake: `symbol` is a DATA column
@@ -561,29 +560,19 @@ object MinuteLakeReader {
       catch { case _: java.io.FileNotFoundException => Seq.empty }
     }
 
-  /** The delta rows of `files` — and `fresh`, if given, as a layer
-    * newer than every delta — collapsed last-wins per (symbol,
+  /** The delta rows of `files`, collapsed last-wins per (symbol,
     * timestamp) by `__delta_seq`. The read names its schema (no job). */
-  private[graft] def collapsedDeltas(spark: SparkSession, files: Seq[String],
-                                     fresh: Option[DataFrame] = None): DataFrame = {
-    val deltas = spark.read.schema(DeltaFileSchema).parquet(files: _*)
-    Ops.dedupKeepLast(
-      fresh.fold(deltas)(f =>
-        deltas.unionByName(f.withColumn("__delta_seq", lit(Long.MaxValue)))),
+  private[graft] def collapsedDeltas(spark: SparkSession, files: Seq[String]): DataFrame =
+    Ops.dedupKeepLast(spark.read.schema(DeltaFileSchema).parquet(files: _*),
       Seq("symbol", "timestamp"), Seq(col("__delta_seq")))
       .drop("__delta_seq")
-  }
 
-  /** base ⊕ deltas ⊕ fresh, keyed by (symbol, timestamp): the one
-    * overlay readers serve and writers publish. The deltas, with
-    * `fresh` above them, collapse by `__delta_seq` and merge over `base`
-    * through [[MinuteLakeWriter.mergeKeyed]], so a frame merged by
-    * `writeDaysWide(merge = true)` lands as it would as a newer delta. */
+  /** base ⊕ deltas, keyed by (symbol, timestamp): the one view readers
+    * serve and writers merge over. The deltas collapse by `__delta_seq`
+    * and merge over `base` through [[MinuteLakeWriter.mergeKeyed]]. */
   private[graft] def overlay(spark: SparkSession, base: DataFrame,
-                             deltaFiles: Seq[String],
-                             fresh: Option[DataFrame]): DataFrame = {
-    val keys = Seq("symbol", "timestamp")
-    if (deltaFiles.isEmpty) fresh.fold(base)(MinuteLakeWriter.mergeKeyed(base, _, keys))
-    else MinuteLakeWriter.mergeKeyed(base, collapsedDeltas(spark, deltaFiles, fresh), keys)
-  }
+                             deltaFiles: Seq[String]): DataFrame =
+    if (deltaFiles.isEmpty) base
+    else MinuteLakeWriter.mergeKeyed(base, collapsedDeltas(spark, deltaFiles),
+      Seq("symbol", "timestamp"))
 }

@@ -235,12 +235,12 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * replaces the touched days with `frame`'s rows.
     *
     * `merge = true` reads back ONLY the touched day dirs that exist, as
-    * readers see them, and lands `frame` as the newest layer of the
-    * readers' overlay ([[MinuteLakeReader.overlay]]: last-wins +
-    * LIVE_ONLY-preserve, keyed by (symbol, timestamp)), so a day's
-    * pending deltas are folded in and never mask the write; symbols
-    * present in a touched day but absent from `frame` survive the
-    * rewrite because the merge read is keyed by day, not by symbol.
+    * readers see them (base ⊕ deltas, [[MinuteLakeReader.overlay]]), and
+    * merges `frame` over that view with [[MinuteLakeWriter.mergeKeyed]]
+    * (last-wins + LIVE_ONLY-preserve, keyed by (symbol, timestamp)), so
+    * a day's pending deltas are folded in and never mask the write;
+    * symbols present in a touched day but absent from `frame` survive
+    * the rewrite because the merge read is keyed by day, not by symbol.
     *
     * The incoming frame is always staged through `.tmp` parquet first:
     * the day stats, the range-partitioner's sampling pass, and the final
@@ -248,36 +248,31 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     * One extra columnar materialization of the increment buys
     * single-evaluation semantics — the standard shape on an object
     * store too. */
-  def writeDaysWide(frame: DataFrame, merge: Boolean = false): Unit = {
+  def writeDaysWide(frame: DataFrame, merge: Boolean = false): Unit =
+    writeDays(frame, merge, folding = false)
+
+  /** [[writeDaysWide]]. With `folding`, `frame` is the collapse of every
+    * delta file of the days it touches ([[compactWideDeltas]]), so it
+    * merges over those days' base files alone: what publishes is the
+    * readers' view, with nothing stacked on top. */
+  private def writeDays(frame: DataFrame, merge: Boolean, folding: Boolean): Unit = {
     val spark = frame.sparkSession
     val lakeDir = s"$root/futures/um/minute"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
 
-    // stage the increment through .tmp parquet once (see Scaladoc): day
-    // stats, range sampling, the merge read, and the final write must
-    // not re-run the caller's aggregation plan. r20 briefly swapped this
-    // for a MEMORY_AND_DISK persist; the driver's ground-truth bench
-    // showed that collapsing 4-5× at 32 cores under memory pressure
-    // (s16 8.5→32.6 s, s18 12.0→62.1 s) while 8 cores stayed at r19
-    // levels — a bulk increment is O(corpus) by this verb's contract,
-    // the one thing never pinned to executor storage unconditionally
-    // (guide §5). Parquet staging also guarantees a recompute-free read:
-    // a persisted block lost mid-write on a cluster would recompute from
-    // the caller's plan, which for merge writes reads the very lake
-    // days being replaced (r20 ADVICE #2). Reverted r21; the r20
-    // stats-pass fusion stays.
+    // stage the increment through .tmp parquet once (see Scaladoc), not
+    // a persist: a bulk increment is O(corpus) (a MEMORY_AND_DISK persist
+    // collapsed 4-5× at 32 cores, r20), and a lost persisted block would
+    // recompute from the caller's plan, which for merge writes reads the
+    // very days being replaced.
     val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
     frame.select(MinuteLakeReader.FileSchema.fieldNames.toIndexedSeq.map(col): _*)
       .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
     try {
       val staged = spark.read.parquet(stageDir)
       // ONE stats pass over the staged increment serves the touched-day
-      // set, the per-day patch bounds, and the symbol registry (r20):
-      // these were four separate jobs (touched distinct, registerSymbols
-      // distinct, bounds, patchBounds) — each a full pass over the
-      // staged parquet, pure fixed cost per bulk write. The per-day
-      // symbol sets are width-bounded (strings per day), the same bound
-      // the registry write already carries.
+      // set, the per-day patch bounds, and the symbol registry (r20; the
+      // symbol sets are width-bounded, as the registry already is)
       val stagedStats = staged
         .groupBy(year(col("timestamp")).as("y"),
                  month(col("timestamp")).as("m"),
@@ -299,9 +294,14 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       val mergedExisting = WideDayPublish.write(fs, root, lakeDir, staged, touched,
         layout.filesPerDay, "timestamp",
         if (!merge) None
-        else Some((days, fresh) => MinuteLakeReader.overlay(spark,
-          MinuteLakeReader.readDays(spark, lakeDir, days),
-          MinuteLakeReader.deltaFiles(fs, days).map(_.getPath.toString), Some(fresh))))
+        else Some { (days, fresh) =>
+          val base = MinuteLakeReader.readDays(spark, lakeDir, days)
+          MinuteLakeWriter.mergeKeyed(
+            if (folding) base
+            else MinuteLakeReader.overlay(spark, base,
+              MinuteLakeReader.deltaFiles(fs, days).map(_.getPath.toString)),
+            fresh, Seq("symbol", "timestamp"))
+        })
 
       // S13 at day grain: commit one ledger row per touched day
       // (symbol = "__ALL__", hour = -1) with row bounds and a content
@@ -345,11 +345,16 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
       val patchBounds = stagedStats
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
           (LedgerBounds.iso(r.getLong(4)), LedgerBounds.iso(r.getLong(5)))).toMap
-      // the touched days' base and delta rows before this write; the
-      // swap retired the deltas
-      val dayKeys = touched.map { case (y, m, d) => f"$y%04d-$m%02d-$d%02d" }.toSet
-      val prior = ledger.all()
-        .filter(e => e.status == "COMMITTED" && e.hour < 0 && dayKeys(e.day)).groupBy(_.day)
+      // the touched days' live base and delta rows before this write; the
+      // swap retired the deltas. Only a swap of an existing day retires
+      // any, so a merge that created its days skips the ledger parse.
+      val prior =
+        if (merge && !mergedExisting) Map.empty[String, Seq[PartitionLedgerEntry]]
+        else {
+          val dayKeys = touched.map { case (y, m, d) => f"$y%04d-$m%02d-$d%02d" }.toSet
+          ledger.all().filter(e => e.status != "DROPPED" && e.hour < 0 && dayKeys(e.day))
+            .groupBy(_.day)
+        }
       prior.valuesIterator.flatten.filter(_.symbol == "__DELTA__")
         .foreach(e => ledger.upsert(e.copy(status = "DROPPED")))
       // A non-merge rewrite of an ALREADY-COMMITTED day can shrink it:
@@ -476,6 +481,15 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
         .partitionBy("year", "month", "day")
         .option("compression", "zstd")
         .parquet(stageDir)
+      // announce each day (whole-day bounds) before its files land, so
+      // compaction still finds a patch that dies before its COMMITTED row
+      dayByYmd.foreach { case ((y, m, d), dayDir) =>
+        val start = java.time.LocalDate.of(y, m, d).toEpochDay * 86400000000L
+        val (lo, hi) = (LedgerBounds.iso(start), LedgerBounds.iso(start + 86399999999L))
+        ledger.upsert(PartitionLedgerEntry("__DELTA__", f"$y%04d-$m%02d-$d%02d", -2,
+          MinuteLakeWriter.deltaDirOf(dayDir), 0L, lo, hi, CanonicalSchema.schemaHash,
+          "PENDING", Instant.now.toString, patchMinTs = lo, patchMaxTs = hi))
+      }
       // each staged file lands by one single-file rename: a reader sees
       // a patch file whole or not at all
       DayDirs.ascending(fs, stageDir).foreach { staged =>
@@ -491,12 +505,8 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
 
     // ledger rows re-read the day's delta dir so the recorded bounds/hash
     // cover the day's WHOLE delta population (prior patches included) —
-    // the same surface auditPartitions recomputes. The two audit reads
-    // are INDEPENDENT jobs over the same small dirs (raw bytes for the
-    // tamper hash, decoded rows for the bounds): submit the hash from a
-    // helper thread while the bounds job runs, so the patch pays
-    // max(hash, bounds) instead of their sum (guide §2.6 — actions are
-    // only sequential because the driver calls them sequentially).
+    // the same surface auditPartitions recomputes. The hash (raw bytes)
+    // and bounds (decoded rows) jobs are independent and overlap.
     val deltaDirs = days.map(MinuteLakeWriter.deltaDirOf)
     val (hashes, bounds) = MinuteLakeWriter.overlap(
       MinuteLakeWriter.dayContentHashes(spark, deltaDirs)) {
@@ -535,13 +545,15 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
 
   /** Fold accumulated deltas back into the day-wide base — the
     * threshold companion of [[writeDeltaPatch]]: days (those with a
-    * COMMITTED `__DELTA__` ledger row — the lake is never walked)
-    * holding at least `minFilesPerDay` delta files are rewritten by one
-    * [[writeDaysWide]]`(merge = true)` of their collapsed deltas. That
-    * write reads each day as readers see it, so compaction never
-    * changes what a reader sees, and its day swap retires the folded
-    * deltas with the old base: there is no delete step, and a crash
-    * leaves each day wholly old or wholly new.
+    * COMMITTED or PENDING `__DELTA__` ledger row — the lake is never
+    * walked) holding at least `minFilesPerDay` delta files are rewritten
+    * by one day-wide merge write of their collapsed deltas over their
+    * base files, which is the readers' overlay, so compaction never
+    * changes what a reader sees. Its day swap retires the folded deltas
+    * with the old base: there is no delete step, and a crash leaves each
+    * day wholly old or wholly new. A PENDING row whose day holds no
+    * delta file (a patch that died before its files landed) is
+    * dropped.
     *
     * @return the `_delta` directories folded and retired */
   def compactWideDeltas(spark: SparkSession, minFilesPerDay: Int = 1): Seq[String] = {
@@ -574,20 +586,17 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
   private def compactWideDeltasWhere(spark: SparkSession)
                                     (due: (Int, Long) => Boolean): Seq[String] = {
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val eligible = ledger.all()
-      .filter(e => e.symbol == "__DELTA__" && e.status == "COMMITTED")
-      .flatMap(e => scala.util.Try(java.time.LocalDate.parse(e.day)).toOption)
-      .sortBy(_.toEpochDay)
-      .map { d =>
-        val day = dayDirOf(d)
-        day -> MinuteLakeReader.deltaFiles(fs, Seq(day))
-      }
-      .filter { case (_, files) =>
-        files.nonEmpty && due(files.length, files.map(_.getModificationTime).min)
-      }
+    val candidates = ledger.all()
+      .filter(e => e.symbol == "__DELTA__" && e.status != "DROPPED").sortBy(_.day)
+      .flatMap(e => scala.util.Try(dayDirOf(java.time.LocalDate.parse(e.day))).toOption
+        .map(day => (day, e, MinuteLakeReader.deltaFiles(fs, Seq(day)))))
+    candidates.filter { case (_, e, files) => files.isEmpty && e.status == "PENDING" }
+      .foreach { case (_, e, _) => ledger.upsert(e.copy(status = "DROPPED")) }
+    val eligible = candidates.collect { case (day, _, files)
+      if files.nonEmpty && due(files.length, files.map(_.getModificationTime).min) => day -> files }
     if (eligible.isEmpty) return Seq.empty
-    writeDaysWide(MinuteLakeReader.collapsedDeltas(spark,
-      eligible.flatMap(_._2).map(_.getPath.toString)), merge = true)
+    writeDays(MinuteLakeReader.collapsedDeltas(spark,
+      eligible.flatMap(_._2).map(_.getPath.toString)), merge = true, folding = true)
     eligible.map { case (day, _) => MinuteLakeWriter.deltaDirOf(day) }
   }
 }

@@ -153,7 +153,7 @@ object Retention {
     val cutoffDay = cutoff.atZone(ZoneOffset.UTC).toLocalDate
     val dropped = dropYmdTree(fs, lakeDir, cutoffDay)
     ledger.foreach { l =>
-      l.all().filter(e => e.status == "COMMITTED" &&
+      l.all().filter(e => e.status != "DROPPED" &&
           scala.util.Try(LocalDate.parse(e.day)).toOption.exists(_.isBefore(cutoffDay)))
         .foreach(e => l.upsert(e.copy(status = "DROPPED")))
     }

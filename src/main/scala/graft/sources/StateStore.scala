@@ -135,9 +135,10 @@ class PartitionLedger(dir: String, committer: CommitProtocol = RenameCommit) {
     // record the newest stamp among DROPPED superseded lines: change
     // detection reads the version log, and a reader whose high-water
     // predates this mark would otherwise see a log with holes and
-    // derive a too-narrow repair window (r16)
+    // derive a too-narrow repair window (r16). PENDING lines are not
+    // changes (change detection skips them), so dropping one leaves no hole.
     val kept = entries.toSet
-    val droppedMax = versions.filterNot(kept.contains)
+    val droppedMax = versions.filterNot(e => kept.contains(e) || e.status == "PENDING")
       .flatMap(e => scala.util.Try(java.time.Instant.parse(e.committedAtUtc)).toOption)
       .maxOption(Ordering.by[java.time.Instant, (Long, Int)](i =>
         (i.getEpochSecond, i.getNano)))

@@ -781,6 +781,25 @@ class AggregatorRunnerSpec extends SparkSpec {
     assert(scope(Some(since.plusSeconds(60))) == AggregatorRunner.ChangeUnknown)
   }
 
+  test("a PENDING delta row is no change: the tick snapshot and the ledger's dropped-through mark skip it") {
+    import graft.sources.{PartitionLedger, PartitionLedgerEntry}
+    val ledger = new PartitionLedger(tempDir("graft-pending-snap").toString)
+    def entry(symbol: String, hour: Int, status: String, at: String) = PartitionLedgerEntry(
+      symbol, "2026-01-10", hour, "p", 10, "2026-01-10T00:00:00Z", "2026-01-10T23:59:00Z",
+      "h", status, at, "c", patchMinTs = "2026-01-10T00:04:00Z", patchMaxTs = "2026-01-10T00:05:00Z")
+    ledger.upsert(entry("__ALL__", -1, "COMMITTED", "2026-01-10T10:00:00Z"))
+    val before = AggregatorRunner.sourceSnapshot(ledger).get
+    ledger.upsert(entry("__DELTA__", -2, "PENDING", "2026-01-10T11:00:00Z"))
+    val pending = AggregatorRunner.sourceSnapshot(ledger).get
+    assert((pending.token, pending.highWater, pending.versions) ==
+      (before.token, before.highWater, before.versions))
+    // the COMMITTED row supersedes it; compacting drops only the PENDING line
+    ledger.upsert(entry("__DELTA__", -2, "COMMITTED", "2026-01-10T11:00:01Z"))
+    assert(AggregatorRunner.sourceSnapshot(ledger).get.token != before.token)
+    assert(ledger.compact() == 2)
+    assert(ledger.droppedThrough().isEmpty)
+  }
+
   /** `n` dense canonical minutes of one symbol, generated by Spark. */
   private def denseMinutes(symbol: String, startIso: String, n: Long) = {
     val t = timestamp_seconds(lit(instant(startIso).getEpochSecond) + col("id") * 60)

@@ -85,6 +85,33 @@ class LakeWriterSpec extends SparkSpec {
     assert(v("price_impact_100k") == 0.0002)
   }
 
+  test("LIVE_ONLY columns a pending delta carries survive a writeDaysWide(merge = true) without live data") {
+    val (writer, reader, _) = newLake()
+    val hour = instant("2026-01-15T10:00:00Z")
+    val tsMs = ms("2026-01-15T10:03:00Z")
+    // the day's base has no live data; the live row lands as a delta
+    writer.writeHourPartition("BTCUSDT", hour, canonicalRow("2026-01-15T10:03:00Z", 100.0))
+    writer.writeHourPartition("BTCUSDT", hour,
+      canonicalRow("2026-01-15T10:03:00Z", 101.0, Map(
+        "has_ws_latency" -> true, "has_depth" -> true,
+        "event_time" -> (tsMs + 10), "update_id_start" -> 100L, "update_id_end" -> 110L,
+        "price_impact_100k" -> 0.0002)))
+    writer.writeDaysWide(canonicalRow("2026-01-15T10:03:00Z", 102.0, Map(
+        "has_ws_latency" -> false, "has_depth" -> false, "has_liq" -> false))
+      .withColumn("symbol", lit("BTCUSDT")), merge = true)
+    val r = reader.readWindow(spark, "BTCUSDT", hour, instant("2026-01-15T10:59:00Z"))
+      .collect().head
+    val cols = graft.schema.CanonicalSchema.columnNames
+    def v(c: String): Any = r.get(cols.indexOf(c))
+    assert(v("open") == 102.0)                       // the write wins
+    assert(v("has_ws_latency") == true)              // the delta's flags OR-preserved
+    assert(v("has_depth") == true)
+    assert(v("event_time") == tsMs + 10)             // the delta's live values coalesced back
+    assert(v("update_id_start") == 100L)
+    assert(v("update_id_end") == 110L)
+    assert(v("price_impact_100k") == 0.0002)
+  }
+
   test("DQ validator rejects duplicate timestamps and hard-required nulls (dq.py:22-63)") {
     val dup = canonicalRow("2026-01-15T10:00:00Z", 100.0)
       .unionByName(canonicalRow("2026-01-15T10:00:00Z", 101.0))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.AggregatorRunner
 import graft.operators.AggregatorRunner.AggregatorStateStore
 import graft.schema.Timeframes
-import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger}
+import graft.sources.{HtfLakeReader, HtfLakeWriter, LakeLayout, MinuteLakeReader, MinuteLakeWriter, PartitionLedger, PartitionLedgerEntry}
 
 /** The day-wide lake ([[LakeLayout]], the width-≥10k answer to the
   * width-10k probe's file-count wall, SURVEY §8.15) through the reader
@@ -24,9 +24,10 @@ class WideLakeSpec extends SparkSpec {
   /** Spark jobs of a one-day `writeDaysWide(merge = true)` and of a
     * one-day `compactWideDeltas`, measured on this suite's session. The
     * merge's base and delta reads name their schemas, so neither runs a
-    * footer job. */
+    * footer job, and the fold merges its collapsed deltas over the base
+    * files alone. */
   private val MergeWriteJobs = 14
-  private val CompactJobs = 15
+  private val CompactJobs = 14
 
   /** Multi-symbol canonical minutes spanning `hours` hours. */
   private def minutes(symbols: Seq[String], hours: Int,
@@ -1043,6 +1044,38 @@ class WideLakeSpec extends SparkSpec {
     assert(new MinuteLakeReader(wRoot).readWindow(spark, "AAAUSDT",
         Day1, instant("2026-01-15T00:59:00Z"))
       .agg(min("open"), max("open")).head.toSeq == Seq(900.0, 949.0))
+  }
+
+  test("a patch that dies before its COMMITTED ledger row is still folded by compaction") {
+    val wRoot = tempDir("graft-wide-pending").toString
+    val ledger = new PartitionLedger(s"$wRoot/_state")
+    val w = new MinuteLakeWriter(wRoot, ledger, LakeLayout.DayWide(filesPerDay = 2))
+    w.writeDaysWide(minutes(Seq("AAAUSDT", "BBBUSDT"), hours = 24))
+    // the process dies after the patch's files land, before its COMMITTED row
+    val dying = new PartitionLedger(s"$wRoot/_state") {
+      override def upsert(e: PartitionLedgerEntry): Unit =
+        if (e.symbol == "__DELTA__" && e.status == "COMMITTED")
+          throw new IllegalStateException("process died")
+        else super.upsert(e)
+    }
+    intercept[IllegalStateException](
+      new MinuteLakeWriter(wRoot, dying, LakeLayout.DayWide(filesPerDay = 2))
+        .writeDeltaPatch(minutes(Seq("AAAUSDT"), hours = 1, openBase = 700.0)))
+    val r = new MinuteLakeReader(wRoot)
+    def firstHour = r.readWindow(spark, "AAAUSDT", Day1, instant("2026-01-15T00:59:00Z"))
+      .agg(min("open"), max("open")).head.toSeq
+    def deltaStatus = ledger.all().filter(_.symbol == "__DELTA__").map(_.status)
+    assert(firstHour == Seq(700.0, 749.0)) // readers overlay the landed files
+    assert(deltaStatus == Seq("PENDING"))
+    assert(w.compactWideDeltas(spark).map(_.endsWith("/day=15/_delta")) == Seq(true))
+    assert(firstHour == Seq(700.0, 749.0))
+    assert(deltaStatus == Seq("DROPPED"))
+    val audit = w.auditPartitions(spark)
+    assert(audit.nonEmpty && audit.forall(_.ok), s"audit: $audit")
+    // a patch that died before its files landed: the PENDING row is dropped
+    ledger.upsert(ledger.all().find(_.symbol == "__DELTA__").get.copy(status = "PENDING"))
+    assert(w.compactWideDeltas(spark).isEmpty)
+    assert(deltaStatus == Seq("DROPPED"))
   }
 
   /** (all jobs, jobs whose tasks wrote output bytes) launched by `body`. */
