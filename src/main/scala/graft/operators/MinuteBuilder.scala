@@ -11,16 +11,23 @@ import graft.schema.CanonicalSchema
 
 /** Canonical 1-minute frame builder — Spark re-expression of the
   * reference's `MinuteTransformEngine.build_canonical_frame`
-  * (`transforms/minute_builder.py:75-123`): dense minute spine → 9
-  * left-joins of per-source minute aggregates → derived columns → fill
-  * policies → canonical schema finalize.
+  * (`transforms/minute_builder.py:75-123`): dense minute spine + per-source
+  * minute aggregates → derived columns → fill policies → canonical schema
+  * finalize.
   *
   * Inputs are DataFrames with the source-record schemas of FIXTURES.md §1
   * (epoch-ms longs for times). Each source prep is a narrow projection +
-  * one hash aggregation keyed by the truncated minute; the spine joins
-  * are broadcast-friendly (a builder invocation covers a bounded window,
-  * typically one hour per symbol — reference `pipeline/orchestrator.py`).
-  * At lake scale many builder calls run as independent partitions.
+  * one aggregation keyed by the truncated minute, so it yields at most one
+  * row per minute. Where the reference left-joins each prep onto the
+  * spine, the build unions the spine with every prep (cut to the window)
+  * and merges them in ONE `groupBy("timestamp")` that keeps each column's
+  * single non-null value: the same rows as the join chain, without one
+  * join (and one broadcast or shuffle stage) per source. A builder call
+  * covers a bounded window — an hour per symbol (reference
+  * `pipeline/orchestrator.py`), an API patch window, three hours in
+  * `mb_canonical_build` — so the spine and every source are read on ONE
+  * partition and the whole build is one stage with no exchange. At lake
+  * scale many builder calls run as independent partitions.
   */
 object MinuteBuilder {
 
@@ -54,39 +61,32 @@ object MinuteBuilder {
     * `minute_builder.py:195-259`): conditional buy/sell/whale/retail
     * splits, VWAP, per-minute log-return realized vol. */
   def aggTradeFrame(records: DataFrame): DataFrame = {
-    val notional = col("price") * col("qty")
+    val qty = col("qty")
+    val notional = col("price") * qty
     val isBuy = col("is_buyer_maker") === false
-    val w = Window.partitionBy("timestamp")
-      .orderBy(col("transact_time"), col("agg_trade_id"))
-    val trades = records
-      .withColumn("timestamp", toMinuteTs(col("transact_time")))
-      .withColumn("notional", notional)
-      .withColumn("buy_qty", when(isBuy, col("qty")).otherwise(0.0))
-      .withColumn("sell_qty", when(!isBuy, col("qty")).otherwise(0.0))
-      .withColumn("buy_whale_qty", when(isBuy && col("notional") >= 100000.0, col("qty")).otherwise(0.0))
-      .withColumn("sell_whale_qty", when(!isBuy && col("notional") >= 100000.0, col("qty")).otherwise(0.0))
-      .withColumn("buy_retail_qty", when(isBuy && col("notional") <= 1000.0, col("qty")).otherwise(0.0))
-      .withColumn("sell_retail_qty", when(!isBuy && col("notional") <= 1000.0, col("qty")).otherwise(0.0))
-      .withColumn("whale_trade", when(col("notional") >= 100000.0, 1L).otherwise(0L))
-      .withColumn("is_buy", when(isBuy, 1L).otherwise(0L))
-      .withColumn("is_sell", when(!isBuy, 1L).otherwise(0L))
-      .withColumn("log_return", log(col("price")) - log(lag(col("price"), 1).over(w)))
-
-    trades.groupBy("timestamp").agg(
-      max(col("transact_time")).as("transact_time"),
-      (sum(col("notional")) / sum(col("qty"))).as("vwap_1m"),
-      max(col("qty")).as("max_trade_size_btc"),
-      sum(col("buy_qty")).as("agg_buy_qty"),
-      sum(col("sell_qty")).as("agg_sell_qty"),
-      (sum(col("buy_qty")) - sum(col("sell_qty"))).as("net_taker_vol_btc"),
-      sum(col("is_buy")).as("count_buy_trades"),
-      sum(col("is_sell")).as("count_sell_trades"),
-      sum(col("buy_whale_qty")).as("vol_buy_whale_btc"),
-      sum(col("sell_whale_qty")).as("vol_sell_whale_btc"),
-      sum(col("buy_retail_qty")).as("vol_buy_retail_btc"),
-      sum(col("sell_retail_qty")).as("vol_sell_retail_btc"),
-      sum(col("whale_trade")).as("whale_trade_count"),
-      sqrt(sum(pow(coalesce(col("log_return"), lit(0.0)), 2))).as("realized_vol_1m"))
+    def qtyIf(c: Column): Column = sum(when(c, qty).otherwise(0.0))
+    def countIf(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+    val minute = toMinuteTs(col("transact_time"))
+    val w = Window.partitionBy(minute).orderBy(col("transact_time"), col("agg_trade_id"))
+    records
+      .select(minute.as("timestamp"), col("transact_time"), col("price"), qty,
+        col("is_buyer_maker"),
+        (log(col("price")) - log(lag(col("price"), 1).over(w))).as("log_return"))
+      .groupBy("timestamp").agg(
+        max(col("transact_time")).as("transact_time"),
+        (sum(notional) / sum(qty)).as("vwap_1m"),
+        max(qty).as("max_trade_size_btc"),
+        qtyIf(isBuy).as("agg_buy_qty"),
+        qtyIf(!isBuy).as("agg_sell_qty"),
+        (qtyIf(isBuy) - qtyIf(!isBuy)).as("net_taker_vol_btc"),
+        countIf(isBuy).as("count_buy_trades"),
+        countIf(!isBuy).as("count_sell_trades"),
+        qtyIf(isBuy && notional >= 100000.0).as("vol_buy_whale_btc"),
+        qtyIf(!isBuy && notional >= 100000.0).as("vol_sell_whale_btc"),
+        qtyIf(isBuy && notional <= 1000.0).as("vol_buy_retail_btc"),
+        qtyIf(!isBuy && notional <= 1000.0).as("vol_sell_retail_btc"),
+        countIf(notional >= 100000.0).as("whale_trade_count"),
+        sqrt(sum(pow(coalesce(col("log_return"), lit(0.0)), 2))).as("realized_vol_1m"))
   }
 
   /** bookTicker snapshots → per-minute spread/imbalance/depth features
@@ -96,12 +96,11 @@ object MinuteBuilder {
     val mid = (col("ask_price") + col("bid_price")) / 2.0
     val qtySum = col("bid_qty") + col("ask_qty")
     records
-      .withColumn("timestamp", toMinuteTs(col("event_time")))
-      .withColumn("spread", spread)
-      .withColumn("imbalance", (col("bid_qty") - col("ask_qty")) / qtySum)
-      .withColumn("spread_pct", spread / mid)
-      .withColumn("micro_price",
-        (col("bid_price") * col("ask_qty") + col("ask_price") * col("bid_qty")) / qtySum)
+      .select(toMinuteTs(col("event_time")).as("timestamp"), col("event_time"),
+        spread.as("spread"), ((col("bid_qty") - col("ask_qty")) / qtySum).as("imbalance"),
+        col("bid_qty"), col("ask_qty"), (spread / mid).as("spread_pct"),
+        ((col("bid_price") * col("ask_qty") + col("ask_price") * col("bid_qty")) / qtySum)
+          .as("micro_price"))
       .groupBy("timestamp").agg(
         avg(col("spread")).as("avg_spread_usdt"),
         avg(col("imbalance")).as("bid_ask_imbalance"),
@@ -165,27 +164,23 @@ object MinuteBuilder {
   def metricsFrame(records: DataFrame): DataFrame = {
     val cols = records.columns.toSet
     require(cols.contains("create_time"), "metrics rows need create_time")
-    val withTs =
+    val ts =
       if (records.schema("create_time").dataType == org.apache.spark.sql.types.StringType)
-        records.withColumn("timestamp",
-          date_trunc("minute", to_timestamp(col("create_time"), "yyyy-MM-dd HH:mm:ss")))
-      else records.withColumn("timestamp", toMinuteTs(col("create_time")))
-
-    val withOi =
-      if (cols.contains("oi_contracts") || cols.contains("oi_value_usdt")) {
-        Seq("oi_contracts", "oi_value_usdt").foldLeft(withTs) { (df, c) =>
-          if (df.columns.contains(c)) df
-          else df.withColumn(c, lit(null).cast("double"))
-        }
-      } else {
+        date_trunc("minute", to_timestamp(col("create_time"), "yyyy-MM-dd HH:mm:ss"))
+      else toMinuteTs(col("create_time"))
+    val oi =
+      if (cols.contains("oi_contracts") || cols.contains("oi_value_usdt"))
+        Seq("oi_contracts", "oi_value_usdt").map(c =>
+          if (cols.contains(c)) col(c) else lit(null).cast("double"))
+      else {
         val cnt = col("count_toptrader_long_short_ratio")
-        withTs
-          .withColumn("oi_contracts",
-            when(cnt > 0, col("sum_open_interest") / cnt))
-          .withColumn("oi_value_usdt",
-            when(cnt > 0, col("sum_open_interest_value") / cnt))
+        Seq(when(cnt > 0, col("sum_open_interest") / cnt),
+          when(cnt > 0, col("sum_open_interest_value") / cnt))
       }
-    dedupLastByTs(withOi, col("create_time"))
+    dedupLastByTs(
+      records.select(ts.as("timestamp"), col("create_time"),
+        oi(0).as("oi_contracts"), oi(1).as("oi_value_usdt")),
+      col("create_time"))
       .select("timestamp", "oi_contracts", "oi_value_usdt")
   }
 
@@ -195,51 +190,37 @@ object MinuteBuilder {
   def lsRatioFrame(spine: DataFrame, topTrader: Option[DataFrame],
                    global: Option[DataFrame]): DataFrame = {
     val tolMs = 30L * 60 * 1000
-
-    def prep(df: DataFrame, ratioCol: String, withPcts: Boolean): DataFrame = {
-      val base = df
-        .withColumn("data_timestamp", timestamp_millis(col("data_time").cast("long")))
-        .withColumn(ratioCol, col("ratio").cast("double"))
-      val pcts =
-        if (withPcts && df.columns.contains("long_account"))
-          base.withColumn("top_trader_long_pct", col("long_account").cast("double"))
-            .withColumn("top_trader_short_pct", col("short_account").cast("double"))
-        else if (withPcts)
-          base.withColumn("top_trader_long_pct", lit(null).cast("double"))
-            .withColumn("top_trader_short_pct", lit(null).cast("double"))
-        else base
-      pcts
-    }
+    val noValue = lit(null).cast("double")
 
     // bucketed form: same backward+tolerance semantics, but the window
     // shuffle is hash-distributed by tolerance-length time buckets — a
-    // bulk backfill over years of minutes never funnels into one task
-    val withTop = topTrader match {
-      case Some(df) =>
-        AsOf.asofJoinBackwardBucketed(spine,
-          prep(df, "top_trader_ls_ratio_acct", withPcts = true),
-          leftOn = "timestamp", rightOn = "data_timestamp",
-          valueCols = Seq("top_trader_ls_ratio_acct", "top_trader_long_pct", "top_trader_short_pct"),
-          toleranceMs = tolMs)
-      case None =>
-        spine.withColumn("top_trader_ls_ratio_acct", lit(null).cast("double"))
-          .withColumn("top_trader_long_pct", lit(null).cast("double"))
-          .withColumn("top_trader_short_pct", lit(null).cast("double"))
+    // bulk backfill over years of minutes never funnels into one task.
+    // `pcts` maps the series' percentage columns to their canonical names.
+    def asof(left: DataFrame, series: Option[DataFrame], ratioCol: String,
+             pcts: Seq[(String, String)]): DataFrame = {
+      val valueCols = ratioCol +: pcts.map(_._2)
+      series match {
+        case Some(df) =>
+          val hasPcts = df.columns.contains("long_account")
+          val prepped = df.select((
+            timestamp_millis(col("data_time").cast("long")).as("data_timestamp") +:
+              col("ratio").cast("double").as(ratioCol) +:
+              pcts.map { case (src, name) =>
+                (if (hasPcts) col(src).cast("double") else noValue).as(name) }): _*)
+          AsOf.asofJoinBackwardBucketed(left, prepped, leftOn = "timestamp",
+            rightOn = "data_timestamp", valueCols = valueCols, toleranceMs = tolMs)
+        case None => left.select(col("*") +: valueCols.map(noValue.as(_)): _*)
+      }
     }
-    val withGlobal = global match {
-      case Some(df) =>
-        AsOf.asofJoinBackwardBucketed(withTop, prep(df, "global_ls_ratio_acct", withPcts = false),
-          leftOn = "timestamp", rightOn = "data_timestamp",
-          valueCols = Seq("global_ls_ratio_acct"), toleranceMs = tolMs)
-      case None =>
-        withTop.withColumn("global_ls_ratio_acct", lit(null).cast("double"))
-    }
+    val withTop = asof(spine, topTrader, "top_trader_ls_ratio_acct",
+      Seq("long_account" -> "top_trader_long_pct", "short_account" -> "top_trader_short_pct"))
+    val withGlobal = asof(withTop, global, "global_ls_ratio_acct", Nil)
     val both = col("top_trader_ls_ratio_acct").isNotNull &&
       col("global_ls_ratio_acct").isNotNull
-    withGlobal
-      .withColumn("ls_ratio_divergence",
-        when(both, col("top_trader_ls_ratio_acct") - col("global_ls_ratio_acct")))
-      .withColumn("has_ls_ratio", both)
+    withGlobal.select(col("*"),
+      when(both, col("top_trader_ls_ratio_acct") - col("global_ls_ratio_acct"))
+        .as("ls_ratio_divergence"),
+      both.as("has_ls_ratio"))
   }
 
   /** Live WS per-minute feature snapshots → keep-last per minute
@@ -259,18 +240,22 @@ object MinuteBuilder {
       .select(("timestamp" +: valueCols).map(col): _*)
   }
 
-  /** Dense minute spine [start, end] inclusive. */
+  /** Dense minute spine [start, end] inclusive, on one partition. */
   def minuteSpine(spark: SparkSession, startMinute: Instant, endMinute: Instant): DataFrame = {
-    import org.apache.spark.sql.types._
-    if (endMinute.isBefore(startMinute))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("timestamp", TimestampType))))
-    else
-      spark.range(1).select(explode(sequence(
-        lit(java.sql.Timestamp.from(startMinute)),
-        lit(java.sql.Timestamp.from(endMinute)),
-        expr("interval 1 minute"))).as("timestamp"))
+    val n =
+      if (endMinute.isBefore(startMinute)) 0L
+      else java.time.Duration.between(startMinute, endMinute).toMinutes + 1
+    val startMicros = Math.addExact(
+      Math.multiplyExact(startMinute.getEpochSecond, 1000000L), startMinute.getNano / 1000L)
+    spark.range(0, n, 1, 1)
+      .select(timestamp_micros(col("id") * 60000000L + startMicros).as("timestamp"))
   }
+
+  /** Live columns that collide with earlier sources: the live prep
+    * carries them with a `_live` suffix and live wins via coalesce
+    * (reference `minute_builder.py:492-498`). */
+  private val LiveCollide =
+    Seq("predicted_funding", "next_funding_time", "has_ls_ratio", "transact_time")
 
   /** Full canonical-frame build. All sources optional; a `None` source
     * contributes its fill-policy defaults. */
@@ -292,58 +277,56 @@ object MinuteBuilder {
       maxFfillMinutes: Int = 60): DataFrame = {
 
     val spine = minuteSpine(spark, startMinute, endMinute)
+    // one partition per source: with the one-partition spine, every prep,
+    // the merge, the fill windows and the final sort need no exchange
+    def one(src: Option[DataFrame]): Option[DataFrame] = src.map(_.coalesce(1))
+    val inWindow = col("timestamp").between(
+      lit(java.sql.Timestamp.from(startMinute)), lit(java.sql.Timestamp.from(endMinute)))
 
-    def join(base: DataFrame, src: Option[DataFrame]): DataFrame = src match {
-      case Some(df) => base.join(df, Seq("timestamp"), "left")
-      case None => base
-    }
-
-    // live columns that collide with earlier sources get a _live suffix;
-    // live wins via coalesce (reference `minute_builder.py:492-498`)
-    val liveCollide = Seq("predicted_funding", "next_funding_time", "has_ls_ratio", "transact_time")
-    val livePrep = liveFeatures.map { lf =>
-      liveCollide.foldLeft(liveFrame(lf))((df, c) => df.withColumnRenamed(c, s"${c}_live"))
-    }
-
-    var frame = join(spine, klines.map(klinesFrame))
-    frame = join(frame, markPriceKlines.map(markPriceFrame))
-    frame = join(frame, indexPriceKlines.map(indexPriceFrame))
-    frame = join(frame, aggTrades.map(aggTradeFrame))
-    frame = join(frame, bookTickerSnapshots.map(bookTickerFrame))
-    frame = join(frame, fundingRates.map(fundingFrame))
-    frame = join(frame, premiumIndexSnapshots.map(premiumFrame))
-    frame = join(frame, metricsRows.map(metricsFrame))
-    frame =
+    val preps = Seq(
+      one(klines).map(klinesFrame),
+      one(markPriceKlines).map(markPriceFrame),
+      one(indexPriceKlines).map(indexPriceFrame),
+      one(aggTrades).map(aggTradeFrame),
+      one(bookTickerSnapshots).map(bookTickerFrame),
+      one(fundingRates).map(fundingFrame),
+      one(premiumIndexSnapshots).map(premiumFrame),
+      one(metricsRows).map(metricsFrame),
+      one(liveFeatures).map(lf => liveFrame(lf).withColumnsRenamed(
+        LiveCollide.map(c => c -> s"${c}_live").toMap))
+    ).flatten.map(_.where(inWindow))
+    val lsRatio =
       if (topTraderRatioRows.isDefined || globalRatioRows.isDefined)
-        frame.join(
-          lsRatioFrame(spine, topTraderRatioRows, globalRatioRows),
-          Seq("timestamp"), "left")
-      else frame
-    frame = join(frame, livePrep)
+        Some(lsRatioFrame(spine, one(topTraderRatioRows), one(globalRatioRows)))
+      else None
+    val parts = preps ++ lsRatio
 
-    frame = deriveColumns(frame)
-    frame = applyFillPolicies(frame, maxFfillMinutes)
-    finalizeSchema(frame)
+    // each part holds at most one row per minute and no column of another
+    // part, so per minute every column has at most one non-null value:
+    // the merge keeps it, as the reference's left joins did. The spine
+    // marker keeps exactly the spine's minutes, as the left joins did.
+    val valueCols = parts.flatMap(_.columns.filter(_ != "timestamp"))
+    require(valueCols.distinct.size == valueCols.size,
+      s"source parts share columns: ${valueCols.diff(valueCols.distinct).distinct.mkString(", ")}")
+    val OnSpine = "__on_spine"
+    val merged = parts
+      .foldLeft(spine.withColumn(OnSpine, lit(true)))(_.unionByName(_, allowMissingColumns = true))
+      .groupBy("timestamp")
+      .agg(max(col(OnSpine)).as(OnSpine),
+        valueCols.map(c => first(col(c), ignoreNulls = true).as(c)): _*)
+      .where(col(OnSpine))
+      .drop(OnSpine)
+
+    finalizeSchema(applyFillPolicies(deriveColumns(merged), maxFfillMinutes))
   }
 
   /** Derived columns + null-gating semantics (reference
-    * `minute_builder.py:491-622`). The deliberate 0-vs-NULL and
-    * False-vs-NULL gates (liq fields NULL unless has_liq, ws_latency_bad
-    * NULL unless has_ws_latency) are written as explicit when/otherwise —
-    * SURVEY §7.3 risk area. */
-  def deriveColumns(frameIn: DataFrame): DataFrame = {
-    var frame = frameIn
-    // live-wins coalesce for colliding columns
-    for (c <- Seq("predicted_funding", "next_funding_time", "has_ls_ratio", "transact_time")) {
-      val liveCol = s"${c}_live"
-      if (frame.columns.contains(liveCol)) {
-        frame =
-          (if (frame.columns.contains(c))
-             frame.withColumn(c, coalesce(col(liveCol), col(c)))
-           else frame.withColumn(c, col(liveCol))).drop(liveCol)
-      }
-    }
-
+    * `minute_builder.py:491-622`), in one projection. The deliberate
+    * 0-vs-NULL and False-vs-NULL gates (liq fields NULL unless has_liq,
+    * ws_latency_bad NULL unless has_ws_latency) are written as explicit
+    * when/otherwise — SURVEY §7.3 risk area. */
+  def deriveColumns(frame: DataFrame): DataFrame = {
+    val present = frame.columns.toSeq
     val defaults: Seq[(String, Column)] = Seq(
       "has_ws_latency" -> lit(false), "has_depth" -> lit(false),
       "has_liq" -> lit(false), "has_ls_ratio" -> lit(false),
@@ -374,81 +357,75 @@ object MinuteBuilder {
       "ls_ratio_divergence" -> lit(null).cast("double"),
       "top_trader_long_pct" -> lit(null).cast("double"),
       "top_trader_short_pct" -> lit(null).cast("double"))
-    for ((name, default) <- defaults)
-      if (!frame.columns.contains(name)) frame = frame.withColumn(name, default)
+    // each column's value before derivation: the input column, live-wins
+    // coalesce for the colliding columns, else the default
+    val live = LiveCollide.filter(c => present.contains(s"${c}_live")).map { c =>
+      c -> (if (present.contains(c)) coalesce(col(s"${c}_live"), col(c)) else col(s"${c}_live"))
+    }
+    val in: Map[String, Column] =
+      defaults.toMap ++ present.map(c => c -> col(c)) ++ live
+    def v(c: String): Column = in(c)
+    def orZero(c: String, zero: Any): (String, Column) = c -> coalesce(v(c), lit(zero))
 
-    val hasLiq = coalesce(col("has_liq"), lit(false))
-    val bothRatios = col("top_trader_ls_ratio_acct").isNotNull &&
-      col("global_ls_ratio_acct").isNotNull
+    val hasLiq = coalesce(v("has_liq"), lit(false))
+    def liq(c: String, zero: Any): (String, Column) = c -> when(hasLiq, coalesce(v(c), lit(zero)))
+    val bothRatios = v("top_trader_ls_ratio_acct").isNotNull &&
+      v("global_ls_ratio_acct").isNotNull
+    val derived: Seq[(String, Column)] = Seq(
+      "avg_trade_size_btc" ->
+        when(coalesce(v("trade_count"), lit(0L)) > 0, v("volume_btc") / v("trade_count"))
+          .otherwise(0.0),
+      "taker_buy_ratio" ->
+        when(v("agg_buy_qty") + v("agg_sell_qty") > 0,
+          v("agg_buy_qty") / (v("agg_buy_qty") + v("agg_sell_qty"))),
+      "premium_index" ->
+        when(v("index_price_close") =!= 0, v("mark_price_close") / v("index_price_close") - 1.0),
+      "funding_rate" -> coalesce(v("funding_rate"), v("premium_last_funding_rate")),
+      "vwap_1m" -> when(v("vwap_1m").isNull, v("close")).otherwise(v("vwap_1m")),
+      orZero("net_taker_vol_btc", 0.0), orZero("max_trade_size_btc", 0.0),
+      orZero("count_buy_trades", 0L), orZero("count_sell_trades", 0L),
+      orZero("vol_buy_whale_btc", 0.0), orZero("vol_sell_whale_btc", 0.0),
+      orZero("vol_buy_retail_btc", 0.0), orZero("vol_sell_retail_btc", 0.0),
+      orZero("whale_trade_count", 0L), orZero("realized_vol_1m", 0.0),
+      "has_ls_ratio" -> when(bothRatios, lit(true)).otherwise(coalesce(v("has_ls_ratio"), lit(false))),
+      orZero("has_ws_latency", false), orZero("has_depth", false), orZero("has_liq", false),
+      "ws_latency_bad" ->
+        when(coalesce(v("has_ws_latency"), lit(false)), coalesce(v("ws_latency_bad"), lit(false))),
+      "depth_degraded" ->
+        when(coalesce(v("has_depth"), lit(false)), coalesce(v("depth_degraded"), lit(false))),
+      liq("liq_unfilled_supported", false),
+      liq("liq_long_vol_usdt", 0.0), liq("liq_short_vol_usdt", 0.0),
+      liq("liq_long_count", 0L), liq("liq_short_count", 0L),
+      "liq_avg_fill_price" -> when(hasLiq, v("liq_avg_fill_price")),
+      "liq_unfilled_ratio" ->
+        when(hasLiq, when(v("liq_unfilled_supported") === true, v("liq_unfilled_ratio"))),
+      "ls_ratio_divergence" ->
+        when(bothRatios, v("top_trader_ls_ratio_acct") - v("global_ls_ratio_acct")))
 
-    frame
-      .withColumn("avg_trade_size_btc",
-        when(coalesce(col("trade_count"), lit(0L)) > 0,
-          col("volume_btc") / col("trade_count")).otherwise(0.0))
-      .withColumn("taker_buy_ratio",
-        when(col("agg_buy_qty") + col("agg_sell_qty") > 0,
-          col("agg_buy_qty") / (col("agg_buy_qty") + col("agg_sell_qty"))))
-      .withColumn("premium_index",
-        when(col("index_price_close") =!= 0,
-          col("mark_price_close") / col("index_price_close") - 1.0))
-      .withColumn("funding_rate",
-        coalesce(col("funding_rate"), col("premium_last_funding_rate")))
-      .withColumn("vwap_1m",
-        when(col("vwap_1m").isNull, col("close")).otherwise(col("vwap_1m")))
-      .withColumn("net_taker_vol_btc", coalesce(col("net_taker_vol_btc"), lit(0.0)))
-      .withColumn("max_trade_size_btc", coalesce(col("max_trade_size_btc"), lit(0.0)))
-      .withColumn("count_buy_trades", coalesce(col("count_buy_trades"), lit(0L)))
-      .withColumn("count_sell_trades", coalesce(col("count_sell_trades"), lit(0L)))
-      .withColumn("vol_buy_whale_btc", coalesce(col("vol_buy_whale_btc"), lit(0.0)))
-      .withColumn("vol_sell_whale_btc", coalesce(col("vol_sell_whale_btc"), lit(0.0)))
-      .withColumn("vol_buy_retail_btc", coalesce(col("vol_buy_retail_btc"), lit(0.0)))
-      .withColumn("vol_sell_retail_btc", coalesce(col("vol_sell_retail_btc"), lit(0.0)))
-      .withColumn("whale_trade_count", coalesce(col("whale_trade_count"), lit(0L)))
-      .withColumn("realized_vol_1m", coalesce(col("realized_vol_1m"), lit(0.0)))
-      .withColumn("has_ls_ratio",
-        when(bothRatios, lit(true)).otherwise(coalesce(col("has_ls_ratio"), lit(false))))
-      .withColumn("has_ws_latency", coalesce(col("has_ws_latency"), lit(false)))
-      .withColumn("has_depth", coalesce(col("has_depth"), lit(false)))
-      .withColumn("has_liq", coalesce(col("has_liq"), lit(false)))
-      .withColumn("ws_latency_bad",
-        when(coalesce(col("has_ws_latency"), lit(false)),
-          coalesce(col("ws_latency_bad"), lit(false))))
-      .withColumn("depth_degraded",
-        when(coalesce(col("has_depth"), lit(false)),
-          coalesce(col("depth_degraded"), lit(false))))
-      .withColumn("liq_unfilled_supported",
-        when(hasLiq, coalesce(col("liq_unfilled_supported"), lit(false))))
-      .withColumn("liq_long_vol_usdt", when(hasLiq, coalesce(col("liq_long_vol_usdt"), lit(0.0))))
-      .withColumn("liq_short_vol_usdt", when(hasLiq, coalesce(col("liq_short_vol_usdt"), lit(0.0))))
-      .withColumn("liq_long_count", when(hasLiq, coalesce(col("liq_long_count"), lit(0L))))
-      .withColumn("liq_short_count", when(hasLiq, coalesce(col("liq_short_count"), lit(0L))))
-      .withColumn("liq_avg_fill_price", when(hasLiq, col("liq_avg_fill_price")))
-      .withColumn("liq_unfilled_ratio",
-        when(hasLiq, when(col("liq_unfilled_supported") === true, col("liq_unfilled_ratio"))))
-      .withColumn("ls_ratio_divergence",
-        when(bothRatios, col("top_trader_ls_ratio_acct") - col("global_ls_ratio_acct")))
+    val liveNames = LiveCollide.map(c => s"${c}_live")
+    val names = (present.filterNot(liveNames.contains) ++ live.map(_._1) ++
+      defaults.map(_._1) ++ derived.map(_._1)).distinct
+    val out = in ++ derived
+    frame.select(names.map(c => out(c).as(c)): _*)
   }
 
   /** Bounded forward-fill of snapshot columns (reference
-    * `minute_builder.py:624-642`; limit = max_ffill_minutes). */
+    * `minute_builder.py:624-642`; limit = max_ffill_minutes), one window
+    * projection for every column present. */
   def applyFillPolicies(frame: DataFrame, maxFfillMinutes: Int): DataFrame = {
     val ffillCols = Seq("micro_price_close", "avg_spread_usdt", "bid_ask_imbalance",
       "avg_bid_depth", "avg_ask_depth", "spread_pct", "oi_contracts",
       "oi_value_usdt", "funding_rate")
-    ffillCols.filter(frame.columns.contains).foldLeft(frame) { (df, c) =>
-      df.withColumn(c,
-        Ops.boundedFfill(col(c), Seq(col("timestamp")), Some(maxFfillMinutes)))
-    }
+    frame.withColumns(ffillCols.filter(frame.columns.contains).map(c =>
+      c -> Ops.boundedFfill(col(c), Seq(col("timestamp")), Some(maxFfillMinutes))).toMap)
   }
 
   /** Strict canonical cast/select in registry order (reference
-    * `minute_builder.py:644-651`). */
-  def finalizeSchema(frameIn: DataFrame): DataFrame = {
-    var frame = frameIn
-    for (c <- CanonicalSchema.columnNames)
-      if (!frame.columns.contains(c)) frame = frame.withColumn(c, lit(null))
+    * `minute_builder.py:644-651`); a column the frame lacks is NULL. */
+  def finalizeSchema(frame: DataFrame): DataFrame = {
+    val present = frame.columns.toSet
     frame.select(CanonicalSchema.columns.map(c =>
-      col(c.name).cast(c.sparkType).as(c.name)): _*)
+      (if (present.contains(c.name)) col(c.name) else lit(null)).cast(c.sparkType).as(c.name)): _*)
       .orderBy("timestamp")
   }
 }

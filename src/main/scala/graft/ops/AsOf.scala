@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,9 +120,7 @@ object AsOf {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val lastRow = last(col(PACK), ignoreNulls = true).over(w)
     val ageOk = (unix_millis(col(TS)) - unix_millis(lastRow.getField(SRC_FIELD))) <= toleranceMs
-    val withVals = valueCols.foldLeft(unioned) { (df, c) =>
-      df.withColumn(c, when(ageOk, lastRow.getField(c)))
-    }
-    withVals.where(col(SIDE) === 1).drop(TS, SIDE, PACK, B)
+    unioned.withColumns(ListMap(valueCols.map(c => c -> when(ageOk, lastRow.getField(c))): _*))
+      .where(col(SIDE) === 1).drop(TS, SIDE, PACK, B)
   }
 }

@@ -23,8 +23,10 @@ import graft.sources.{CompactionPolicy, MinuteLakeWriter, WatermarkStore}
   * Source access goes through [[BandCollector]], so the loop is fully
   * fixture-testable offline (the reference injects fake providers the
   * same way). Each hour is one bounded builder invocation + one atomic
-  * partition write — at lake scale, hours/symbols parallelize as
-  * independent driver tasks while Spark parallelizes within each build.
+  * partition write. A symbol-hour builds on one partition in one stage
+  * (the builder merges its sources with a union and one aggregate, no
+  * exchange), so hours/symbols parallelize as independent partitions of
+  * whatever frame unions them.
   */
 object Orchestrator {
 
@@ -184,7 +186,7 @@ object Orchestrator {
                       band: Band): DataFrame = {
       // one minute past the window end, mirroring the reference's
       // window_end_inclusive fetch bound (orchestrator.py:331); the
-      // spine join drops the extra minute's records
+      // builder cuts every source to the window, dropping that minute
       val endInclusive = windowEnd.plus(1, ChronoUnit.MINUTES)
 
       def nonEmpty(o: Option[DataFrame]): Option[DataFrame] =

@@ -6,6 +6,7 @@ import java.time.{Instant, ZoneOffset}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Metadata, StructType}
 
 import graft.ops.Ops
 import graft.schema.CanonicalSchema
@@ -266,10 +267,14 @@ class MinuteLakeWriter(root: String, ledger: PartitionLedger,
     // recompute from the caller's plan, which for merge writes reads the
     // very days being replaced.
     val stageDir = s"$root/.tmp/${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    frame.select(MinuteLakeReader.FileSchema.fieldNames.toIndexedSeq.map(col): _*)
+    frame.select(MinuteLakeReader.FileSchema.fields.toIndexedSeq.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)): _*)
       .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(stageDir)
     try {
-      val staged = spark.read.parquet(stageDir)
+      // written as FileSchema just above, so read with it (no footer
+      // job), minus the column metadata, which would land in every footer
+      val staged = spark.read.schema(StructType(MinuteLakeReader.FileSchema.fields
+        .map(_.copy(metadata = Metadata.empty)))).parquet(stageDir)
       // ONE stats pass over the staged increment serves the touched-day
       // set, the per-day patch bounds, and the symbol registry (r20; the
       // symbol sets are width-bounded, as the registry already is)
